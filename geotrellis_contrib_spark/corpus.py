@@ -76,25 +76,42 @@ def synth_docs(spark: SparkSession, n_docs: int, media_per_doc: int = 2,
     )
 
 
+def _spans_of_kind(docs: DataFrame, kind: str) -> DataFrame:
+    """(doc_id, span_idx, span) for every span of ``kind``.
+
+    Only ``spans.kind`` is exploded; the matching span is then fetched by
+    position. Exploding the struct array itself lets Catalyst infer
+    ``size(spans) > 0`` (InferFiltersFromGenerate) and push that filter
+    below the projection that builds ``spans``, which then builds every
+    doc's array twice. Over an extracted field no filter is inferred."""
+    return (docs.select("doc_id", "spans",
+                        F.posexplode("spans.kind").alias("span_idx", "kind"))
+                .filter(F.col("kind") == kind)
+                .select("doc_id", "span_idx",
+                        F.element_at("spans", F.col("span_idx") + 1).alias("span")))
+
+
 def extract_anchors(docs: DataFrame) -> DataFrame:
     """Geo side-table: (doc_id, span_idx, lon, lat). ``spans`` is read, never
-    rewritten — posexplode + filter + split, all JVM. Docs without a geo span
-    simply have no row here (NULL-geometry semantics at the join)."""
-    s = docs.select("doc_id", F.posexplode("spans").alias("span_idx", "span"))
-    geo = s.filter(F.col("span.kind") == "geo")
-    parts = F.split(F.col("span.text"), ",")
-    return geo.select(
-        "doc_id", "span_idx",
-        F.element_at(parts, 1).cast("double").alias("lon"),
-        F.element_at(parts, 2).cast("double").alias("lat"),
-    )
+    rewritten, and evaluated once per doc (see ``_spans_of_kind``). Docs
+    without a geo span simply have no row here (NULL-geometry semantics at
+    the join).
+
+    The geo text is split once and lon/lat leave through a one-row
+    ``inline``: as generator outputs they cannot have a downstream
+    ``lon/lat IS NOT NULL`` guard (``pip_join_boxes``) pushed beneath
+    them, which would parse every text a second time inside the filter."""
+    geo = _spans_of_kind(docs, "geo").select(
+        "doc_id", "span_idx", F.split("span.text", ",").alias("parts"))
+    coords = F.struct(F.element_at("parts", 1).cast("double").alias("lon"),
+                      F.element_at("parts", 2).cast("double").alias("lat"))
+    return geo.select("doc_id", "span_idx", F.inline(F.array(coords)))
 
 
 def extract_media(docs: DataFrame) -> DataFrame:
     """Media side-table: (doc_id, span_idx, media_ref)."""
-    s = docs.select("doc_id", F.posexplode("spans").alias("span_idx", "span"))
-    return s.filter(F.col("span.kind") == "media") \
-            .select("doc_id", "span_idx", F.col("span.media_ref").alias("media_ref"))
+    return _spans_of_kind(docs, "media").select(
+        "doc_id", "span_idx", F.col("span.media_ref").alias("media_ref"))
 
 
 # The reference's canonical point fixture: 26 Pennsylvania stations,
@@ -700,10 +717,6 @@ def synth_friction_tiles(spark: SparkSession, tile_size: int = 64,
 DEM_BASINS = [(40, 70, 50, 90, 12.0, 3.0),      # rmin rmax cmin cmax d0 ds
               (150, 180, 130, 200, 25.0, 5.0)]
 DEM_HOLE = (200, 215, 20, 35)                    # rmin rmax cmin cmax
-
-
-def dem_pour_level(rmin: int, cmin: int) -> float:
-    return ((rmin - 1) + 2.0 * (cmin - 1)) * 0.25
 
 
 def synth_dem_tiles(spark: SparkSession, zoom: int = 6, n_tiles: int = 4,

@@ -110,31 +110,35 @@ def run_stage(spark: SparkSession, df: DataFrame, *, output_root: str,
     todo = [b for b in range(n_buckets) if b not in done]
 
     batches = [todo[i:i + batch_size] for i in range(0, len(todo), batch_size)]
-    for bi, batch in enumerate(batches):
-        if fail_after_batches is not None and bi >= fail_after_batches:
-            raise RuntimeError(f"simulated failure before batch {bi} of stage {stage}")
-        t0 = time.time()
-        part = work.filter(F.col("_bucket").isin(batch))
-        # per-bucket lineage metrics in the same pass family as the write
-        stats = {r["_bucket"]: r for r in
-                 part.groupBy("_bucket")
-                     .agg(F.count("*").alias("rows"), F.max(key.cast("string")).alias("max_key"))
-                     .collect()}
-        part.write.partitionBy("_bucket").mode("overwrite") \
-            .option("partitionOverwriteMode", "dynamic").parquet(out_path)
-        ms = int((time.time() - t0) * 1000)
-        wm = []
-        for b in batch:
-            r = stats.get(b)
-            wm.append({
-                "job_id": job_id, "stage": stage, "bucket": b,
-                "rows": int(r["rows"]) if r else 0,
-                "bytes": _dir_bytes(os.path.join(out_path, f"_bucket={b}")) if r else 0,
-                "ms": ms, "max_key": str(r["max_key"]) if r else None,
-            })
-        store.append(wm)
-    if persist_input:
-        work.unpersist()
+    try:
+        for bi, batch in enumerate(batches):
+            if fail_after_batches is not None and bi >= fail_after_batches:
+                raise RuntimeError(f"simulated failure before batch {bi} of stage {stage}")
+            t0 = time.time()
+            part = work.filter(F.col("_bucket").isin(batch))
+            # per-bucket lineage metrics in the same pass family as the write
+            stats = {r["_bucket"]: r for r in
+                     part.groupBy("_bucket")
+                         .agg(F.count("*").alias("rows"), F.max(key.cast("string")).alias("max_key"))
+                         .collect()}
+            part.write.partitionBy("_bucket").mode("overwrite") \
+                .option("partitionOverwriteMode", "dynamic").parquet(out_path)
+            ms = int((time.time() - t0) * 1000)
+            wm = []
+            for b in batch:
+                r = stats.get(b)
+                wm.append({
+                    "job_id": job_id, "stage": stage, "bucket": b,
+                    "rows": int(r["rows"]) if r else 0,
+                    "bytes": _dir_bytes(os.path.join(out_path, f"_bucket={b}")) if r else 0,
+                    "ms": ms, "max_key": str(r["max_key"]) if r else None,
+                })
+            store.append(wm)
+    finally:
+        # also on a raise: a cached input left behind would be reused
+        # silently by a same-session resume
+        if persist_input:
+            work.unpersist()
     return out_path
 
 

@@ -60,6 +60,21 @@ def test_kill_then_resume_equals_fresh(spark, data):
         assert m.groupby("bucket").size().max() == 1
 
 
+def test_killed_stage_releases_its_persisted_input(spark, data):
+    # a raise must not leave the stage input cached: a same-session resume
+    # would silently reuse it
+    def n_persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = n_persisted()
+    with tempfile.TemporaryDirectory() as root:
+        with pytest.raises(RuntimeError, match="simulated failure"):
+            cp.run_stage(spark, data, output_root=root, job_id="j1",
+                         stage="s1", key_col="cell_id", n_buckets=8,
+                         batch_size=2, fail_after_batches=2)
+    assert n_persisted() == before
+
+
 def test_resume_noop_when_complete(spark, data):
     with tempfile.TemporaryDirectory() as root:
         cp.run_stage(spark, data, output_root=root, job_id="j1", stage="s1",

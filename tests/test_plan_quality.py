@@ -3,9 +3,13 @@ must be visible in the executed plan (SURVEY.md §4, BENCH.md checklist).
 These catch regressions like a Python UDF sneaking into a hot path or a
 dimension join losing its broadcast."""
 
+import re
+
 import pytest
 
 import __spark_entry__ as entrymod
+from geotrellis_contrib_spark import corpus
+from geotrellis_contrib_spark.operators import spatial_join as sj
 from tests.conftest import SF_SMALL
 
 HOT_QUERIES = ["cell_encode", "tile_assign", "pip_join", "distance_join",
@@ -234,3 +238,21 @@ def test_quadtree_single_count_shuffle(spark):
     plan = _plan(spark, "quadtree")
     assert "Generate explode" in plan or "Explode" in plan
     assert "Python" not in plan
+
+
+def test_corpus_pipeline_builds_spans_and_parses_geo_once(spark):
+    # the flagship chain's corpus layer: exploding the span struct array
+    # lets Catalyst infer size(spans) > 0 and push it under the projection
+    # that builds the array (every doc's spans built twice), and a join
+    # guard lon/lat IS NOT NULL pushed under the parse splits and casts
+    # every geo text twice
+    boxes = spark.createDataFrame(
+        [("hot", -74.25, 40.45, -73.75, 40.95)],
+        "poly_id string, xmin double, ymin double, xmax double, ymax double")
+    hits = sj.pip_join_boxes(corpus.extract_anchors(corpus.synth_docs(spark, 1000)),
+                             boxes, zoom=6)
+    plan = hits._jdf.queryExecution().optimizedPlan().toString()
+    assert "size(" not in plan, "inferred size() filter rebuilds the span array"
+    assert not re.search(r"explode\(spans#\d+\)", plan), "Generate over the span struct"
+    assert plan.count("split(") == 1, "geo text split more than once"
+    assert plan.count("cast(element_at(") == 2, "lon/lat cast more than once each"
