@@ -45,11 +45,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geotrellis_contrib_spark.operators.focal import (
+    _NEIGHBORS, _assemble_frame, _halo_pieces, _ring_slot, _strip)
 from geotrellis_contrib_spark.operators.pixels import DTYPES, pack
+from geotrellis_contrib_spark.plans.iterate import (
+    border_doubling, fixpoint, flag_clear)
 from geotrellis_contrib_spark.util import compute_grouped, compute_spread
-
-_OFFS = [(dr, dc) for dr in (-1, 0, 1) for dc in (-1, 0, 1)
-         if not (dr == 0 and dc == 0)]
 
 _STATE_SCHEMA = ("source_id string, band int, col bigint, row bigint, "
                  "friction binary, cost binary, improved int")
@@ -69,7 +70,7 @@ def _relax(cost: np.ndarray, fric: np.ndarray, straight: float,
     h, w = cost.shape
     for _ in range(h * w + 1):
         nxt = cost.copy()
-        for dr, dc in _OFFS:
+        for dr, dc in _NEIGHBORS:
             dist = diag if (dr != 0 and dc != 0) else straight
             src_r = slice(max(dr, 0), h + min(dr, 0))
             src_c = slice(max(dc, 0), w + min(dc, 0))
@@ -156,13 +157,9 @@ def _solve(tiles: DataFrame,
                                      dtype=np.float64).reshape(t, t)
                 cost = np.frombuffer(row_t.cost,
                                      dtype=np.float64).reshape(t, t)
-                for dr, dc in _OFFS:
-                    rows = slice(None) if dr == 0 else (
-                        slice(-1, None) if dr == 1 else slice(0, 1))
-                    cols = slice(None) if dc == 0 else (
-                        slice(-1, None) if dc == 1 else slice(0, 1))
-                    fp = np.ascontiguousarray(fric[rows, cols])
-                    cp = np.ascontiguousarray(cost[rows, cols])
+                for dr, dc in _NEIGHBORS:
+                    fp = np.ascontiguousarray(_strip(fric, dr, dc, 1))
+                    cp = np.ascontiguousarray(_strip(cost, dr, dc, 1))
                     if not np.isfinite(cp).any():
                         continue  # nothing reachable to offer
                     out.append({"source_id": row_t.source_id,
@@ -199,15 +196,9 @@ def _solve(tiles: DataFrame,
             dr, dc = int(row_t.dr), int(row_t.dc)
             if dr == 0 and dc == 0:
                 center = row_t
-                fric[1:1 + t, 1:1 + t] = fa
-                cost[1:1 + t, 1:1 + t] = ca
-            else:
-                rows = slice(1, 1 + t) if dr == 0 else (
-                    slice(0, 1) if dr == 1 else slice(p - 1, p))
-                cols = slice(1, 1 + t) if dc == 0 else (
-                    slice(0, 1) if dc == 1 else slice(p - 1, p))
-                fric[rows, cols] = fa
-                cost[rows, cols] = ca
+            slot = _ring_slot(dr, dc, 1, t)
+            fric[slot] = fa
+            cost[slot] = ca
         if center is None:
             return pd.DataFrame(columns=[
                 "source_id", "band", "col", "row", "friction", "cost",
@@ -222,28 +213,15 @@ def _solve(tiles: DataFrame,
             "friction": center.friction, "cost": pack(new),
             "improved": improved}])
 
-    # ONE round per materialization: batching 2 cut+relax rounds per
-    # localCheckpoint was measured SLOWER (21s vs 17s at the gate —
-    # the relax stages dominate, not the sync job; same dead end as
-    # cluster.py rounds_per_sync=3, NOTES_r5).
-    # ONE driver job per round (r7): the convergence probe is an
-    # aggregate over the LAZY localCheckpoint, so the same job that
-    # materializes the round's state also answers "did any tile
-    # improve" — instead of an eager checkpoint job plus a probe job.
-    for _ in range(max_iter):
-        pieces = state.mapInPandas(cut, _PIECE_SCHEMA)
-        nxt = compute_grouped(pieces, "source_id", "band", "col", "row") \
-            .applyInPandas(relax_group, _STATE_SCHEMA) \
-            .localCheckpoint(eager=False)
-        changed = int(nxt.agg(F.max("improved")).collect()[0][0] or 0)
-        state = nxt
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"cost_distance did not reach a global fixpoint in "
-            f"{max_iter} rounds; raise max_iter")
-    return state
+    return fixpoint(
+        state, lambda st: compute_grouped(
+            st.mapInPandas(cut, _PIECE_SCHEMA),
+            "source_id", "band", "col", "row")
+        .applyInPandas(relax_group, _STATE_SCHEMA),
+        F.max("improved"), rounds=1, max_syncs=max_iter, stop=flag_clear,
+        name="cost_distance",
+        message=f"cost_distance did not reach a global fixpoint in "
+                f"{max_iter} rounds; raise max_iter")
 
 
 def _solve_scene(tiles: DataFrame, seed_predicate, tile_size: int,
@@ -499,9 +477,6 @@ def _lcp_dist(tiles: DataFrame, seed_predicate, targets,
     Identical output contract to the scene path: (source_id, band, tgr,
     tgc, path_len, cost_q2); path_len parity is bit-exact because cost,
     friction and the predecessor rule are all bit-identical."""
-    from geotrellis_contrib_spark.operators.focal import (
-        _assemble_frame, _halo_pieces)
-
     t = int(tile_size)
     p = t + 2
     state = _solve(tiles, seed_predicate, t, straight, diag, None,
@@ -606,58 +581,14 @@ def _lcp_dist(tiles: DataFrame, seed_predicate, targets,
     parts = compute_grouped(planes, "source_id", "band", "col", "row") \
         .applyInPandas(resolve, _LCP_PART).localCheckpoint(eager=True)
 
-    border = parts.filter(F.col("kind") == 1) \
-        .select("source_id", "band", "gid", "rep", "steps", "final")
-    # ONE driver job per doubling round (r7): lazy checkpoint + pending
-    # aggregate share one job (see focal._watershed_dist). The same
-    # probe also reads the border-table SIZE, which picks the per-round
-    # join strategy (size-adaptive, see cluster.strahler_order): the
-    # O(perimeter) lookup side broadcasts below the cap, keeping each
-    # doubling round a single exchange-free map stage.
-    _pending = F.sum(F.lit(1) - F.col("final"))
-    pending, n_border = [
-        int(v or 0) for v in border.agg(
-            _pending, F.count(F.lit(1))).collect()[0]]
-    bc = F.broadcast if n_border <= 2_000_000 else (lambda df: df)
-    settled = pending == 0
-
-    def _double_once(border):
-        todo = border.filter(F.col("final") == 0)
-        done = border.filter(F.col("final") == 1)
-        step = todo.alias("a").join(
-            bc(border.select(
-                "source_id", "band", F.col("gid").alias("g2"),
-                F.col("rep").alias("r2"), F.col("steps").alias("s2"),
-                F.col("final").alias("f2")).alias("b")),
-            on=[F.col("a.source_id") == F.col("b.source_id"),
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.rep") == F.col("b.g2")], how="left") \
-            .select(F.col("a.source_id").alias("source_id"),
-                    F.col("a.band").alias("band"),
-                    F.col("a.gid").alias("gid"),
-                    F.coalesce(F.col("b.r2"),
-                               F.col("a.rep")).alias("rep"),
-                    (F.col("a.steps") + F.coalesce(F.col("b.s2"),
-                                                   F.lit(0)))
-                    .alias("steps"),
-                    F.coalesce(F.col("b.f2"), F.lit(0)).alias("final"))
-        return done.unionByName(step)
-
-    # two doubling rounds per materialization (see focal._watershed_dist)
-    for _ in range(max_rounds):
-        if settled:
-            break
-        for _ in range(2):
-            border = _double_once(border)
-        border = border.localCheckpoint(eager=False)
-        pending = int(border.agg(_pending).collect()[0][0] or 0)
-        settled = pending == 0
-    if not settled:
-        raise RuntimeError(
-            f"least-cost-path border resolution did not settle in "
-            f"{max_rounds} rounds; a path crosses more than "
-            f"2^{max_rounds} tile boundaries or the border table "
-            f"dropped a link")
+    border, bc = border_doubling(
+        parts.filter(F.col("kind") == 1)
+        .select("source_id", "band", "gid", "rep", "steps", "final"),
+        summed=["steps"], max_syncs=max_rounds, name="least_cost_path",
+        message=f"least-cost-path border resolution did not settle in "
+                f"{max_rounds} rounds; a path crosses more than "
+                f"2^{max_rounds} tile boundaries or the border table "
+                f"dropped a link")
 
     tg = parts.filter(F.col("kind") == 2)
     tdone = tg.filter(F.col("final") == 1) \

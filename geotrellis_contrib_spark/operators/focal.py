@@ -39,20 +39,36 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark.operators.pixels import DTYPES, pack
+from geotrellis_contrib_spark.plans.iterate import (
+    border_doubling, fixpoint, flag_clear)
 from geotrellis_contrib_spark.util import compute_grouped
 
 _Q = 1048576.0  # 2^20 quantization for the order-independent checksum
 
 # fixed lexicographic neighbor order — the SQL oracle's chained-add order
 _OFFSETS = [(dr, dc) for dr in (-1, 0, 1) for dc in (-1, 0, 1)]
+_NEIGHBORS = [o for o in _OFFSETS if o != (0, 0)]
 
 
 def _strip(arr: np.ndarray, dr: int, dc: int, r: int) -> np.ndarray:
+    """The r-wide edge of ``arr`` that the neighbor at (dr, dc) needs."""
     rows = slice(None) if dr == 0 else (slice(-r, None) if dr == 1
                                         else slice(0, r))
     cols = slice(None) if dc == 0 else (slice(-r, None) if dc == 1
                                         else slice(0, r))
     return arr[rows, cols]
+
+
+def _ring_slot(dr: int, dc: int, r: int, t: int) -> tuple[slice, slice]:
+    """Where a piece sent with offset (dr, dc) lands in the receiver's
+    (t+2r)^2 padded frame: at the OPPOSITE edge (the center piece, (0,
+    0), fills the interior)."""
+    p = t + 2 * r
+    rows = slice(r, r + t) if dr == 0 else (
+        slice(0, r) if dr == 1 else slice(p - r, p))
+    cols = slice(r, r + t) if dc == 0 else (
+        slice(0, r) if dc == 1 else slice(p - r, p))
+    return rows, cols
 
 
 def _halo_pieces(tiles: DataFrame, r: int, t: int) -> DataFrame:
@@ -100,13 +116,7 @@ def _assemble_frame(pdf: pd.DataFrame, r: int, t: int):
         dr, dc = int(row_t.dr), int(row_t.dc)
         if dr == 0 and dc == 0:
             have_center = True
-        # a piece sent with offset (dr, dc) sits at the OPPOSITE edge
-        # of the receiver's padded frame
-        rows = slice(r, r + t) if dr == 0 else (
-            slice(0, r) if dr == 1 else slice(p - r, p))
-        cols = slice(r, r + t) if dc == 0 else (
-            slice(0, r) if dc == 1 else slice(p - r, p))
-        frame[rows, cols] = arr
+        frame[_ring_slot(dr, dc, r, t)] = arr
     if not have_center:
         return None
     frame[frame == nodata] = np.nan
@@ -901,16 +911,11 @@ def _flow_rounds_state(tiles: DataFrame, t: int,
                                    dtype=np.int8).reshape(t, t)
                 acc = np.frombuffer(row_t.acc,
                                     dtype=np.float64).reshape(t, t)
-                for dr, dc in [(a, b) for a in (-1, 0, 1)
-                               for b in (-1, 0, 1) if (a, b) != (0, 0)]:
-                    rows = slice(None) if dr == 0 else (
-                        slice(-1, None) if dr == 1 else slice(0, 1))
-                    cols = slice(None) if dc == 0 else (
-                        slice(-1, None) if dc == 1 else slice(0, 1))
-                    chp = np.ascontiguousarray(ch[rows, cols])
+                for dr, dc in _NEIGHBORS:
+                    chp = np.ascontiguousarray(_strip(ch, dr, dc, 1))
                     if not (chp >= 0).any():
                         continue  # no cell on this edge flows anywhere
-                    acp = np.ascontiguousarray(acc[rows, cols])
+                    acp = np.ascontiguousarray(_strip(acc, dr, dc, 1))
                     out.append({"source_id": row_t.source_id,
                                 "band": int(row_t.band),
                                 "col": int(row_t.col) + dc,
@@ -960,13 +965,9 @@ def _flow_rounds_state(tiles: DataFrame, t: int,
                    .reshape(int(row_t.h), int(row_t.w))
             ac = np.frombuffer(row_t.acc, dtype=np.float64) \
                    .reshape(int(row_t.h), int(row_t.w))
-            dr, dc = int(row_t.dr), int(row_t.dc)
-            rows = slice(1, 1 + t) if dr == 0 else (
-                slice(0, 1) if dr == 1 else slice(p - 1, p))
-            cols = slice(1, 1 + t) if dc == 0 else (
-                slice(0, 1) if dc == 1 else slice(p - 1, p))
-            chf[rows, cols] = ch
-            accf[rows, cols] = ac
+            slot = _ring_slot(int(row_t.dr), int(row_t.dc), 1, t)
+            chf[slot] = ch
+            accf[slot] = ac
         ring_b = _ring_store(accf)
         chring_b = _ring_store(chf)
         old = accf[1:1 + t, 1:1 + t].copy()
@@ -980,22 +981,15 @@ def _flow_rounds_state(tiles: DataFrame, t: int,
             "improved": improved, "ring": ring_b,
             "chring": chring_b}])
 
-    # ONE driver job per round (r7): lazy localCheckpoint + an aggregate
-    # probe — materialization and the convergence answer share one job.
-    for _ in range(max_iter):
-        pieces = state.mapInPandas(cut, _FLOW_PIECE)
-        nxt = compute_grouped(pieces, "source_id", "band", "col", "row") \
-            .applyInPandas(relax, _FLOW_STATE) \
-            .localCheckpoint(eager=False)
-        changed = int(nxt.agg(F.max("improved")).collect()[0][0] or 0)
-        state = nxt
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"flow_accumulation did not reach a global fixpoint in "
-            f"{max_iter} rounds; raise max_iter")
-    return state
+    return fixpoint(
+        state, lambda st: compute_grouped(
+            st.mapInPandas(cut, _FLOW_PIECE),
+            "source_id", "band", "col", "row")
+        .applyInPandas(relax, _FLOW_STATE),
+        F.max("improved"), rounds=1, max_syncs=max_iter, stop=flag_clear,
+        name="flow_accumulation",
+        message=f"flow_accumulation did not reach a global fixpoint in "
+                f"{max_iter} rounds; raise max_iter")
 
 
 def _flow_acc_rounds(tiles: DataFrame, t: int, max_iter: int) -> DataFrame:
@@ -1203,58 +1197,14 @@ def _watershed_dist(tiles: DataFrame, t: int, max_rounds: int) -> DataFrame:
                             "source_id", "band", "col", "row") \
         .applyInPandas(resolve, _WSHED_PART).localCheckpoint(eager=True)
 
-    border = parts.filter(F.col("kind") == 1) \
-        .select("source_id", "band", "gid", "rep", "final")
-    # ONE driver job per doubling round (r7): the pending count is an
-    # aggregate over the LAZY localCheckpoint of the next border table,
-    # so materialization and the loop condition share one job. The same
-    # probe reads the border SIZE, which picks the per-round join
-    # strategy (size-adaptive, see cluster.strahler_order): the
-    # O(perimeter) lookup side broadcasts below the cap.
-    _pending = F.sum(F.lit(1) - F.col("final"))
-    pending, n_border = [
-        int(v or 0) for v in border.agg(
-            _pending, F.count(F.lit(1))).collect()[0]]
-    bc = F.broadcast if n_border <= 2_000_000 else (lambda df: df)
-    settled = pending == 0
-
-    def _double_once(border):
-        todo = border.filter(F.col("final") == 0)
-        done = border.filter(F.col("final") == 1)
-        step = todo.alias("a").join(
-            bc(border.select(
-                "source_id", "band", F.col("gid").alias("g2"),
-                F.col("rep").alias("r2"), F.col("final").alias("f2"))
-               .alias("b")),
-            on=[F.col("a.source_id") == F.col("b.source_id"),
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.rep") == F.col("b.g2")], how="left") \
-            .select(F.col("a.source_id").alias("source_id"),
-                    F.col("a.band").alias("band"),
-                    F.col("a.gid").alias("gid"),
-                    F.coalesce(F.col("b.r2"),
-                               F.col("a.rep")).alias("rep"),
-                    F.coalesce(F.col("b.f2"), F.lit(0)).alias("final"))
-        return done.unionByName(step)
-
-    # TWO doubling rounds per materialization (r7): each application is
-    # the same monotone pointer jump (settled rows pass through the
-    # done branch untouched), so chaining quarters the driver syncs at
-    # identical fixpoints — the strahler-contraction batching argument.
-    for _ in range(max_rounds):
-        if settled:
-            break
-        for _ in range(2):
-            border = _double_once(border)
-        border = border.localCheckpoint(eager=False)
-        pending = int(border.agg(_pending).collect()[0][0] or 0)
-        settled = pending == 0
-    if not settled:
-        raise RuntimeError(
-            f"watershed border resolution did not settle in "
-            f"{max_rounds} rounds; a flow path crosses more than "
-            f"2^{max_rounds} tile boundaries or the border table "
-            f"dropped a link")
+    border, bc = border_doubling(
+        parts.filter(F.col("kind") == 1)
+        .select("source_id", "band", "gid", "rep", "final"),
+        max_syncs=max_rounds, name="watershed",
+        message=f"watershed border resolution did not settle in "
+                f"{max_rounds} rounds; a flow path crosses more than "
+                f"2^{max_rounds} tile boundaries or the border table "
+                f"dropped a link")
 
     groups = parts.filter(F.col("kind") == 0) \
         .select("source_id", "band", "col", "row", "rep", "cnt", "final")
@@ -1483,13 +1433,8 @@ def _fill_rounds(tiles: DataFrame, t: int, q_fill: float,
                     continue
                 w = np.frombuffer(row_t.w, dtype=np.float64) \
                       .reshape(t, t)
-                for dr, dc in [(a, b) for a in (-1, 0, 1)
-                               for b in (-1, 0, 1) if (a, b) != (0, 0)]:
-                    rows = slice(None) if dr == 0 else (
-                        slice(-1, None) if dr == 1 else slice(0, 1))
-                    cols = slice(None) if dc == 0 else (
-                        slice(-1, None) if dc == 1 else slice(0, 1))
-                    wp = np.ascontiguousarray(w[rows, cols])
+                for dr, dc in _NEIGHBORS:
+                    wp = np.ascontiguousarray(_strip(w, dr, dc, 1))
                     out.append({"source_id": row_t.source_id,
                                 "band": int(row_t.band),
                                 "col": int(row_t.col) + dc,
@@ -1529,12 +1474,7 @@ def _fill_rounds(tiles: DataFrame, t: int, q_fill: float,
         for row_t in strips:
             wv = np.frombuffer(row_t.wvals, dtype=np.float64) \
                    .reshape(int(row_t.h), int(row_t.w))
-            dr, dc = int(row_t.dr), int(row_t.dc)
-            rows = slice(1, 1 + t) if dr == 0 else (
-                slice(0, 1) if dr == 1 else slice(p - 1, p))
-            cols = slice(1, 1 + t) if dc == 0 else (
-                slice(0, 1) if dc == 1 else slice(p - 1, p))
-            wf[rows, cols] = wv
+            wf[_ring_slot(int(row_t.dr), int(row_t.dc), 1, t)] = wv
         ring_b = _ring_store(wf)
         z = np.frombuffer(center.dem, dtype=np.float64).reshape(t, t)
         valid = ~np.isnan(z)
@@ -1549,21 +1489,15 @@ def _fill_rounds(tiles: DataFrame, t: int, q_fill: float,
             "ring": ring_b}])
 
     piece_schema = _FILL_PIECE + ", dem binary"
-    # ONE driver job per round (r7): lazy localCheckpoint + an aggregate
-    # probe — materialization and the convergence answer share one job.
-    for _ in range(max_iter):
-        pieces = state.mapInPandas(cut, piece_schema)
-        nxt = compute_grouped(pieces, "source_id", "band", "col", "row") \
-            .applyInPandas(relax, _FILL_STATE) \
-            .localCheckpoint(eager=False)
-        changed = int(nxt.agg(F.max("improved")).collect()[0][0] or 0)
-        state = nxt
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"fill_sinks did not reach a global fixpoint in "
-            f"{max_iter} rounds; raise max_iter")
+    state = fixpoint(
+        state, lambda st: compute_grouped(
+            st.mapInPandas(cut, piece_schema),
+            "source_id", "band", "col", "row")
+        .applyInPandas(relax, _FILL_STATE),
+        F.max("improved"), rounds=1, max_syncs=max_iter, stop=flag_clear,
+        name="fill_sinks",
+        message=f"fill_sinks did not reach a global fixpoint in "
+                f"{max_iter} rounds; raise max_iter")
 
     def rollup(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1711,14 +1645,9 @@ def _stream_dist(tiles: DataFrame, t: int, thr: int,
                             "col": int(row_t.col), "row": int(row_t.row),
                             "dr": 0, "dc": 0, "h": t, "w": t,
                             "chosen": row_t.chosen, "acc": row_t.acc})
-                for dr, dc in [(a, b) for a in (-1, 0, 1)
-                               for b in (-1, 0, 1) if (a, b) != (0, 0)]:
-                    rows = slice(None) if dr == 0 else (
-                        slice(-1, None) if dr == 1 else slice(0, 1))
-                    cols = slice(None) if dc == 0 else (
-                        slice(-1, None) if dc == 1 else slice(0, 1))
-                    chp = np.ascontiguousarray(ch[rows, cols])
-                    acp = np.ascontiguousarray(acc[rows, cols])
+                for dr, dc in _NEIGHBORS:
+                    chp = np.ascontiguousarray(_strip(ch, dr, dc, 1))
+                    acp = np.ascontiguousarray(_strip(acc, dr, dc, 1))
                     out.append({"source_id": row_t.source_id,
                                 "band": int(row_t.band),
                                 "col": int(row_t.col) + dc,
@@ -1745,15 +1674,9 @@ def _stream_dist(tiles: DataFrame, t: int, thr: int,
             dr, dc = int(row_t.dr), int(row_t.dc)
             if dr == 0 and dc == 0:
                 center = True
-                chf[1:1 + t, 1:1 + t] = ch
-                accf[1:1 + t, 1:1 + t] = ac
-            else:
-                rows = slice(1, 1 + t) if dr == 0 else (
-                    slice(0, 1) if dr == 1 else slice(p - 1, p))
-                cols = slice(1, 1 + t) if dc == 0 else (
-                    slice(0, 1) if dc == 1 else slice(p - 1, p))
-                chf[rows, cols] = ch
-                accf[rows, cols] = ac
+            slot = _ring_slot(dr, dc, 1, t)
+            chf[slot] = ch
+            accf[slot] = ac
         if not center:
             return pd.DataFrame(columns=["source_id", "band", "col",
                                          "row", "n_stream", "n_heads",
@@ -1960,54 +1883,12 @@ def _flow_length_dist(tiles: DataFrame, t: int,
                             "source_id", "band", "col", "row") \
         .applyInPandas(resolve, _FLEN_PART).localCheckpoint(eager=True)
 
-    border = parts.filter(F.col("kind") == 1) \
-        .select("source_id", "band", "gid", "rep", "no", "nd", "final")
-    # ONE driver job per doubling round (r7): lazy checkpoint + pending
-    # aggregate share one job (see _watershed_dist).
-    _pending = F.sum(F.lit(1) - F.col("final"))
-    pending, n_border = [
-        int(v or 0) for v in border.agg(
-            _pending, F.count(F.lit(1))).collect()[0]]
-    bc = F.broadcast if n_border <= 2_000_000 else (lambda df: df)
-    settled = pending == 0
-
-    def _double_once(border):
-        todo = border.filter(F.col("final") == 0)
-        done = border.filter(F.col("final") == 1)
-        step = todo.alias("a").join(
-            bc(border.select(
-                "source_id", "band", F.col("gid").alias("g2"),
-                F.col("rep").alias("r2"), F.col("no").alias("no2"),
-                F.col("nd").alias("nd2"), F.col("final").alias("f2"))
-               .alias("b")),
-            on=[F.col("a.source_id") == F.col("b.source_id"),
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.rep") == F.col("b.g2")], how="left") \
-            .select(F.col("a.source_id").alias("source_id"),
-                    F.col("a.band").alias("band"),
-                    F.col("a.gid").alias("gid"),
-                    F.coalesce(F.col("b.r2"),
-                               F.col("a.rep")).alias("rep"),
-                    (F.col("a.no") + F.coalesce(F.col("b.no2"),
-                                                F.lit(0))).alias("no"),
-                    (F.col("a.nd") + F.coalesce(F.col("b.nd2"),
-                                                F.lit(0))).alias("nd"),
-                    F.coalesce(F.col("b.f2"), F.lit(0)).alias("final"))
-        return done.unionByName(step)
-
-    # two doubling rounds per materialization (see _watershed_dist)
-    for _ in range(max_rounds):
-        if settled:
-            break
-        for _ in range(2):
-            border = _double_once(border)
-        border = border.localCheckpoint(eager=False)
-        pending = int(border.agg(_pending).collect()[0][0] or 0)
-        settled = pending == 0
-    if not settled:
-        raise RuntimeError(
-            f"flow_length border resolution did not settle in "
-            f"{max_rounds} rounds")
+    border, bc = border_doubling(
+        parts.filter(F.col("kind") == 1)
+        .select("source_id", "band", "gid", "rep", "no", "nd", "final"),
+        summed=["no", "nd"], max_syncs=max_rounds, name="flow_length",
+        message=f"flow_length border resolution did not settle in "
+                f"{max_rounds} rounds")
 
     local = parts.filter(F.col("kind") == 2) \
         .select("source_id", "band", "col", "row",

@@ -1,7 +1,11 @@
 """Connected-components dedup clustering vs a tiny union-find oracle."""
 
-import numpy as np
+import logging
 
+import numpy as np
+import pytest
+
+from conftest import ITERATE_LOG, count_jobs, sync_probes
 from geotrellis_contrib_spark.operators import cluster as cl
 
 
@@ -70,18 +74,30 @@ def test_batched_rounds_halve_materializations(spark):
 
 
 def test_batched_rounds_match_single_round_labels(spark):
-    # batching must be result-identical to one round per sync (min-label
+    # batched rounds must give the oracle's labels (min-label
     # propagation is idempotent/order-free)
     rng = np.random.default_rng(7)
     edges = [(int(a), int(b)) for a, b in rng.integers(0, 80, size=(100, 2)) if a != b]
     df = spark.createDataFrame(edges, "src long, dst long")
-    one = {r.id: r.component
-           for r in cl.connected_components(df, rounds_per_sync=1,
-                                            small_graph_edges=0).collect()}
-    two = {r.id: r.component
-           for r in cl.connected_components(df, rounds_per_sync=2,
-                                            small_graph_edges=0).collect()}
-    assert one == two == _uf_oracle(edges)
+    got = {r.id: r.component
+           for r in cl.connected_components(
+               df, small_graph_edges=0).collect()}
+    assert got == _uf_oracle(edges)
+
+
+@pytest.mark.parametrize("run, match", [
+    (lambda df: cl.connected_components(df, max_iter=1,
+                                        small_graph_edges=0),
+     "connected_components did not converge in 1 sync"),
+    (lambda df: cl.kcore(df, max_rounds=1),
+     "kcore h-index iteration did not settle in 1 "),
+])
+def test_tiny_budget_fails_loud(spark, run, match):
+    # a 64-node chain needs several syncs for both loops
+    df = spark.createDataFrame([(i, i + 1) for i in range(64)],
+                               "src long, dst long")
+    with pytest.raises(RuntimeError, match=match):
+        run(df).collect()
 
 
 def test_small_graph_driver_path_matches_distributed(spark):
@@ -94,10 +110,14 @@ def test_small_graph_driver_path_matches_distributed(spark):
     df = spark.createDataFrame(edges, "src long, dst long")
     fast = {r.id: r.component
             for r in cl.connected_components(df).collect()}
-    dist = {r.id: r.component
-            for r in cl.connected_components(
-                df, small_graph_edges=0).collect()}
+    jobs, rows = count_jobs(spark, lambda: cl.connected_components(
+        df, small_graph_edges=0).collect())
+    dist = {r.id: r.component for r in rows}
     assert fast == dist == _uf_oracle(edges)
+    # driver syncs pinned. AQE submits this loop's shuffle-join stages
+    # asynchronously, so identical runs differ by a job or two (56-59
+    # observed); one more sync would add about 13 jobs.
+    assert abs(jobs - 57) <= 2
 
     sedges = [(f"d-{a:03d}", f"d-{b:03d}") for a, b in edges]
     sdf = spark.createDataFrame(sedges, "src string, dst string")
@@ -135,22 +155,38 @@ def _peel_coreness(edges):
     return core
 
 
-def test_kcore_fixture_vs_peeling(spark):
+def _assert_sums_decrease_then_repeat(caplog):
+    # the sum probe is sound only while h-index rounds are monotone:
+    # every sync's sum strictly decreases until the one repeat that
+    # ends the loop
+    sums = sync_probes(caplog, "kcore")
+    assert len(sums) >= 2 and sums[-1] == sums[-2]
+    assert all(a > b for a, b in zip(sums[:-2], sums[1:-1]))
+
+
+def test_kcore_fixture_vs_peeling(spark, caplog):
     from geotrellis_contrib_spark import corpus as corpus_mod
     from geotrellis_contrib_spark.operators.cluster import kcore
     edges = corpus_mod.synth_core_edges()
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r.coreness for r in kcore(df).collect()}
+    caplog.set_level(logging.INFO, logger=ITERATE_LOG)
+    jobs, rows = count_jobs(spark, lambda: kcore(df).collect())
+    assert jobs == 25
+    got = {r.node: r.coreness for r in rows}
     assert got == _peel_coreness(edges)
+    # three syncs here (sums 64, 63, 63)
+    _assert_sums_decrease_then_repeat(caplog)
     # structure pins: clique 5, ring 2, path/leaves 1, triangles 2;
     # bridges did NOT lift anything
     assert got[0] == 5 and got[12] == 2 and got[23] == 1 and got[42] == 2
 
 
-def test_kcore_dense_deterministic_graph(spark):
+def test_kcore_dense_deterministic_graph(spark, caplog):
     from geotrellis_contrib_spark.operators.cluster import kcore
     edges = [(a, b) for a in range(16) for b in range(a + 1, 16)
              if (a * 3 + b * 5) % 4 != 0]
     df = spark.createDataFrame(edges, "src long, dst long")
+    caplog.set_level(logging.INFO, logger=ITERATE_LOG)
     got = {r.node: r.coreness for r in kcore(df).collect()}
     assert got == _peel_coreness(edges)
+    _assert_sums_decrease_then_repeat(caplog)

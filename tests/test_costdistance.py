@@ -10,6 +10,7 @@ import math
 import numpy as np
 import pytest
 
+from conftest import count_jobs
 from geotrellis_contrib_spark import corpus
 from geotrellis_contrib_spark.operators import costdistance as CD
 
@@ -95,10 +96,12 @@ def test_varying_friction_matches_dijkstra(spark):
                            diag=math.sqrt(2.0)).collect()
     got = _surface_to_mosaic(rows, f"scene-{s}", band)
     # both strategies must be BIT-identical (same min-over-paths fixpoint)
-    rows_r = CD.cost_surface(tiles, pred, tile_size=T, straight=1.0,
-                             diag=math.sqrt(2.0), scene_max_px=0).collect()
+    jobs, rows_r = count_jobs(spark, lambda: CD.cost_surface(
+        tiles, pred, tile_size=T, straight=1.0, diag=math.sqrt(2.0),
+        scene_max_px=0).collect())
     got_r = _surface_to_mosaic(rows_r, f"scene-{s}", band)
     assert np.array_equal(got, got_r)
+    assert jobs == 18
 
     # untiled friction mosaic
     big = np.full((4 * T, 4 * T), np.nan)
@@ -267,11 +270,11 @@ def test_least_cost_path_dist_parity(spark):
     scene = {key(r): (r.path_len, r.cost_q2)
              for r in CD.least_cost_path(tiles, _seed_pred, tgt,
                                          tile_size=T).collect()}
-    dist = {key(r): (r.path_len, r.cost_q2)
-            for r in CD.least_cost_path(tiles, _seed_pred, tgt,
-                                        tile_size=T,
-                                        max_px=0).collect()}
+    jobs, rows = count_jobs(spark, lambda: CD.least_cost_path(
+        tiles, _seed_pred, tgt, tile_size=T, max_px=0).collect())
+    dist = {key(r): (r.path_len, r.cost_q2) for r in rows}
     assert scene == dist and len(dist) == 12
+    assert jobs == 22
 
     vtiles = corpus.synth_px_tiles(spark, tile_size=T)
     pred = lambda v, gr, gc: (gr % 120 == 70) & (gc % 110 == 50)  # noqa: E731
@@ -295,3 +298,18 @@ def test_least_cost_path_dist_unreachable_fail_loud(spark):
             tiles, lambda v, gr, gc: (gr == 1600) & (gc == 1250),
             lambda sid, band: [(1538, 1154)], tile_size=T,
             max_px=0).collect()
+
+
+def test_least_cost_path_dist_tiny_budget_fails_loud(spark):
+    # uniform friction across eight 4x4 tiles, seed at the west end: the
+    # target's path crosses seven tile boundaries, more than one sync of
+    # two doubling rounds resolves
+    from geotrellis_contrib_spark.operators.pixels import pack
+    tiles = _mk_tiles([("c", 0, 0, tc, 0, 0, "float64", -1.0,
+                        pack(np.ones((4, 4)))) for tc in range(8)])
+    with pytest.raises(RuntimeError,
+                       match="least-cost-path border resolution did not "
+                             "settle in 1 rounds"):
+        CD.least_cost_path(tiles, lambda v, gr, gc: (gr == 0) & (gc == 0),
+                           lambda sid, band: [(0, 31)], tile_size=4,
+                           max_px=0, max_rounds=1).collect()

@@ -4,6 +4,7 @@ exclusion both as target and as measured pixel, circle-vs-box cutoff."""
 import numpy as np
 import pytest
 
+from conftest import count_jobs
 from geotrellis_contrib_spark import corpus
 from geotrellis_contrib_spark.operators import focal as FO
 
@@ -326,10 +327,11 @@ def test_flow_accumulation_distributed_bit_parity(spark):
     tiles = corpus.synth_px_tiles(spark, tile_size=T)
     scene = {_rollup_key(r): (r.acc_sum, r.acc_max, r.n_valid)
              for r in FO.flow_accumulation(tiles, tile_size=T).collect()}
-    dist = {_rollup_key(r): (r.acc_sum, r.acc_max, r.n_valid)
-            for r in FO.flow_accumulation(
-                tiles, tile_size=T, scene_max_px=0).collect()}
+    jobs, rows = count_jobs(spark, lambda: FO.flow_accumulation(
+        tiles, tile_size=T, scene_max_px=0).collect())
+    dist = {_rollup_key(r): (r.acc_sum, r.acc_max, r.n_valid) for r in rows}
     assert scene == dist
+    assert jobs == 12
     assert len(scene) == 3 * 4 * 4 * 2
 
 
@@ -340,10 +342,12 @@ def test_watershed_distributed_bit_parity(spark):
     tiles = corpus.synth_px_tiles(spark, tile_size=T)
     scene = {_rollup_key(r): (r.basin_qsum, r.n_basins, r.n_valid)
              for r in FO.watershed_labels(tiles, tile_size=T).collect()}
+    jobs, rows = count_jobs(spark, lambda: FO.watershed_labels(
+        tiles, tile_size=T, scene_max_px=0).collect())
     dist = {_rollup_key(r): (r.basin_qsum, r.n_basins, r.n_valid)
-            for r in FO.watershed_labels(
-                tiles, tile_size=T, scene_max_px=0).collect()}
+            for r in rows}
     assert scene == dist
+    assert jobs == 13
     assert len(scene) == 3 * 4 * 4 * 2
 
 

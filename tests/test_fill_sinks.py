@@ -3,6 +3,7 @@ DEMs (nested basins, NoData drains), scene-vs-distributed parity on the
 seam-straddling basin fixture, plane-no-fill sanity."""
 import numpy as np
 
+from conftest import count_jobs
 from geotrellis_contrib_spark import corpus as corpus_mod
 from geotrellis_contrib_spark.operators import focal as FO
 from geotrellis_contrib_spark.operators.pixels import pack
@@ -100,6 +101,7 @@ def test_plane_never_fills(spark):
 def test_fixture_scene_vs_dist_parity(spark):
     tiles = corpus_mod.synth_dem_tiles(spark)
     a = _collect(FO.fill_sinks(tiles).filter("source_id = 'dem-1'"))
-    b = _collect(FO.fill_sinks(tiles, scene_max_px=0)
-                 .filter("source_id = 'dem-1'"))
+    jobs, b = count_jobs(spark, lambda: _collect(
+        FO.fill_sinks(tiles, scene_max_px=0).filter("source_id = 'dem-1'")))
     assert a == b and len(a) == 16
+    assert jobs == 15

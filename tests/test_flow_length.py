@@ -2,7 +2,9 @@
 cross-tile step accumulation on the valley fixture, scene-vs-distributed
 bit parity (exact by construction — integer step counts are order-free)."""
 import numpy as np
+import pytest
 
+from conftest import count_jobs
 from geotrellis_contrib_spark import corpus as corpus_mod
 from geotrellis_contrib_spark.operators import focal as FO
 from geotrellis_contrib_spark.operators.pixels import pack
@@ -78,7 +80,35 @@ def test_fixture_parity_scene_vs_dist(spark):
     tiles = corpus_mod.synth_px_tiles(spark, tile_size=64)
     a = _collect(FO.flow_length(tiles, tile_size=64)
                  .filter("source_id = 'scene-2' AND band = 1"))
-    b = _collect(FO.flow_length(tiles, tile_size=64, scene_max_px=0)
-                 .filter("source_id = 'scene-2' AND band = 1"))
+    jobs, b = count_jobs(spark, lambda: _collect(
+        FO.flow_length(tiles, tile_size=64, scene_max_px=0)
+        .filter("source_id = 'scene-2' AND band = 1")))
     assert a == b and len(a) == 16
+    assert jobs == 12
     assert any(v[2] > 0 for v in a.values())  # real diagonals exist
+
+
+@pytest.mark.parametrize("run, match", [
+    (lambda tiles: FO.flow_length(tiles, tile_size=4, scene_max_px=0,
+                                  max_rounds=1),
+     "flow_length border resolution did not settle in 1 rounds"),
+    (lambda tiles: FO.watershed_labels(tiles, tile_size=4, scene_max_px=0,
+                                       max_rounds=1),
+     "watershed border resolution did not settle in 1 rounds"),
+    (lambda tiles: FO.flow_accumulation(tiles, tile_size=4,
+                                        scene_max_px=0, max_iter=1),
+     "flow_accumulation did not reach a global fixpoint in 1 rounds"),
+    (lambda tiles: FO.fill_sinks(tiles, tile_size=4, scene_max_px=0,
+                                 max_iter=1),
+     "fill_sinks did not reach a global fixpoint in 1 rounds"),
+], ids=["flow_length", "watershed", "flow_accumulation", "fill_sinks"])
+def test_tiny_budget_fails_loud(spark, run, match):
+    # a valley (row 1, descending WEST) across eight 4x4 tiles: the
+    # eastern cells' paths cross seven tile boundaries, more than one
+    # sync of two doubling rounds resolves, and no halo loop settles
+    # in one round
+    r = np.arange(4).reshape(-1, 1)
+    c = np.arange(32).reshape(1, -1)
+    tiles = _tiles_from(spark, np.abs(r - 1) * 10.0 + c * 1.0, 4)
+    with pytest.raises(RuntimeError, match=match):
+        run(tiles).collect()
