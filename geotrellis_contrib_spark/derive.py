@@ -25,6 +25,8 @@ Distribution notes (scale design):
 
 from __future__ import annotations
 
+from geotrellis_contrib_spark.sources import tables
+
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
@@ -155,7 +157,7 @@ def load_base_views(spark, sf_dir: str) -> None:
     """Register the shared parquet tables as temp views (Catalyst prunes
     columns/partitions from these scans; no caching — scans are streamed)."""
     for t in TABLES:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
+        tables.read_parquet(spark, f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
 
 
 _REGISTERED: dict[str, tuple] = {}  # applicationId -> (sf_dir, names)

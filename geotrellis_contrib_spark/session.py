@@ -2,7 +2,19 @@
 
 Local mode here is a stand-in for a multi-executor cluster: every knob is
 chosen so the same code runs unchanged on 1000 executors (AQE, skew-join
-handling, Arrow batching, partition sizing)."""
+handling, Arrow batching, partition sizing).
+
+Python workers start from :mod:`geotrellis_contrib_spark.pyworker`, which
+runs Spark's own ``pyspark.daemon`` after two steps. It drops Spark's zipped
+PySpark and py4j copies from the worker path when the installed, unzipped
+PySpark has the same version, so workers import byte-compiled modules and
+each task's ``importlib.invalidate_caches()`` no longer re-reads every zip.
+Then it imports pandas, pyarrow and the Arrow serializers once, before any
+worker is forked. When no matching installed copy exists, the path stays as
+Spark set it; the preload still happens. Workers must be able to import
+``geotrellis_contrib_spark``, as the module-level UDF kernels already
+require (the repo root as the driver's working directory, or the package
+installed on the workers)."""
 
 from __future__ import annotations
 
@@ -46,6 +58,7 @@ def get_session(app_name: str = "geotrellis_contrib_spark",
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "geotrellis_contrib_spark.pyworker")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

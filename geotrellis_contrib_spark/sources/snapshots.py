@@ -44,6 +44,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geotrellis_contrib_spark.sources import tables
+
 
 def _meta(path: str) -> str:
     return os.path.join(path, "meta")
@@ -178,7 +180,7 @@ def delete_range(spark: SparkSession, path: str, lo, hi) -> int:
     new_entries = []
     if rewrite:
         paths = [os.path.join(_data(path), e["name"]) for e in rewrite]
-        kept = spark.read.parquet(*paths).filter(
+        kept = tables.read_parquet(spark, *paths).filter(
             ~F.col(key).between(F.lit(lo), F.lit(hi)))
         if kept.limit(1).count():
             new_entries = _write_files(kept, path, key)
@@ -199,8 +201,8 @@ def read_snapshot(spark: SparkSession, path: str,
                          "(expire_snapshots dropped its files)")
     if not m["files"]:
         raise ValueError(f"snapshot v{v} is empty")
-    return spark.read.parquet(
-        *[os.path.join(_data(path), e["name"]) for e in m["files"]])
+    return tables.read_parquet(
+        spark, *[os.path.join(_data(path), e["name"]) for e in m["files"]])
 
 
 def compact(spark: SparkSession, path: str,
@@ -215,8 +217,8 @@ def compact(spark: SparkSession, path: str,
     key = m["key_col"]
     if not m["files"]:
         raise ValueError("compact: snapshot is empty")
-    df = spark.read.parquet(
-        *[os.path.join(_data(path), e["name"]) for e in m["files"]])
+    df = tables.read_parquet(
+        spark, *[os.path.join(_data(path), e["name"]) for e in m["files"]])
     df = df.repartitionByRange(int(target_files), key) \
            .sortWithinPartitions(key)
     entries = _write_files(df, path, key)

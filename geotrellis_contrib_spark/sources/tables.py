@@ -20,13 +20,65 @@ Physical design (SURVEY.md §4 "physical layout decisions"):
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from geotrellis_contrib_spark.functions import cells as C
 
 BUCKET_ZOOM_DELTA = 3  # bucket = cell's ancestor 3 zooms up -> 64 tiles/bucket
+
+# Settings that change what schema Spark infers from the same parquet files.
+_PARQUET_READ_CONF = ("spark.sql.parquet.", "spark.sql.legacy.parquet.",
+                      "spark.sql.caseSensitive",
+                      "spark.sql.sources.partitionColumnTypeInference.")
+# Process-wide, so it outlives sessions: a new session over the same files
+# infers nothing. Oldest entries go first past _SCHEMAS_MAX.
+_SCHEMAS: dict[tuple, StructType] = {}
+_SCHEMAS_MAX = 1024
+
+
+def _schema_key(spark: SparkSession, paths: tuple[str, ...]) -> tuple | None:
+    """The files under ``paths`` (resolved path, size, mtime_ns of every
+    leaf file) and the session's parquet read settings; None for a path
+    that is not a plain local file or directory."""
+    files = []
+    for p in paths:
+        if urlparse(p).scheme or any(c in p for c in "*?[{") \
+                or not os.path.exists(p):
+            return None
+        p = os.path.realpath(p)
+        leaves = [p] if os.path.isfile(p) else sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(p) for f in fs)
+        for f in leaves:
+            st = os.stat(f)
+            files.append((f, st.st_size, st.st_mtime_ns))
+    # one JVM call: ``spark.conf.getAll`` costs a py4j round trip per entry
+    settings = spark._jsparkSession.conf().getAll().mkString("\x01")
+    conf = sorted(tuple(kv.split(" -> ", 1)) for kv in settings.split("\x01")
+                  if kv.startswith(_PARQUET_READ_CONF))
+    return tuple(files), tuple(conf)
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` that reuses the schema Spark already
+    inferred for the same local files under the same read settings.
+    Inferring a parquet schema runs one Spark job per read
+    (``SchemaMergeUtils.mergeSchemasInParallel``); a hit reads with the
+    recorded ``StructType`` and runs none. Any changed, added or removed
+    file, or changed setting, gives a new key and a fresh inference."""
+    key = _schema_key(spark, paths)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    if key is not None:
+        if len(_SCHEMAS) >= _SCHEMAS_MAX:
+            del _SCHEMAS[next(iter(_SCHEMAS))]
+        _SCHEMAS[key] = df.schema
+    return df
 
 
 def with_bucket(df: DataFrame, cell_col: str = "cell",

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark.sources import snapshots as SN
+from tests.conftest import count_jobs
 
 
 def _mk(spark, lo, hi):
@@ -49,6 +50,18 @@ def test_time_travel_and_cow(tmp_path, spark):
     assert [x["op"] for x in h] == ["create", "append", "append",
                                     "delete_range"]
     assert [x["n_rows"] for x in h] == [0, 100, 200, 190]
+
+
+def test_repeat_snapshot_read_runs_no_jobs(tmp_path, spark):
+    p = str(tmp_path / "t")
+    SN.create_table(p, key_col="doc_id")
+    SN.append(_mk(spark, 0, 100).repartitionByRange(4, "doc_id"), p)
+    jobs, first = count_jobs(spark, lambda: SN.read_snapshot(spark, p, 1))
+    assert jobs == 1                 # the one schema-inference job
+    jobs, again = count_jobs(spark, lambda: SN.read_snapshot(spark, p, 1))
+    assert jobs == 0                 # data files never change: schema reused
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
 
 
 def test_stats_pruning_counts(tmp_path, spark):

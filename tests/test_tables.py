@@ -1,13 +1,16 @@
 """Physical layout: partition pruning must reach the directory level."""
 
+import shutil
 import tempfile
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark import derive
 from geotrellis_contrib_spark.sources import tables
-from tests.conftest import SF_MED, SF_SMALL
+from tests.conftest import SF_MED, SF_SMALL, count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -180,3 +183,57 @@ def test_morton3_spark_matches_bit_reference(spark):
     assert ref(5, 9, 1000) < ref(6, 9, 1000)
     assert ref(5, 9, 1000) < ref(5, 10, 1000)
     assert ref(5, 9, 1000) < ref(5, 9, 1001)
+
+
+def _copy_tables(src, dst):
+    dst.mkdir()
+    for t in derive.TABLES:
+        shutil.copyfile(f"{src}/{t}.parquet", dst / f"{t}.parquet")
+    return str(dst)
+
+
+def test_register_views_reuses_inferred_schemas(spark, tmp_path):
+    sf = _copy_tables(SF_SMALL, tmp_path / "sf")
+    app = spark.sparkContext.applicationId
+    try:
+        derive._REGISTERED.pop(app, None)
+        jobs, _ = count_jobs(spark, lambda: derive.register_views(spark, sf))
+        assert jobs == len(derive.TABLES)        # one inference job per table
+        derive._REGISTERED.pop(app)
+        jobs, _ = count_jobs(spark, lambda: derive.register_views(spark, sf))
+        assert jobs == 0
+        region = f"{sf}/region.parquet"
+        t = pq.read_table(region)
+        pq.write_table(t.append_column("extra", pa.array(range(t.num_rows))),
+                       region)
+        derive._REGISTERED.pop(app)
+        jobs, _ = count_jobs(spark, lambda: derive.register_views(spark, sf))
+        assert jobs == 1
+        assert spark.table("region").columns[-1] == "extra"
+    finally:
+        derive._REGISTERED.pop(app, None)
+
+
+def test_memoized_schemas_equal_fresh_inference(spark):
+    for t in derive.TABLES:
+        path = f"{SF_MED}/{t}.parquet"
+        tables.read_parquet(spark, path)
+        jobs, memo = count_jobs(spark, lambda: tables.read_parquet(spark, path))
+        assert jobs == 0
+        assert memo.schema.json() == spark.read.parquet(path).schema.json(), t
+
+
+def test_read_parquet_memo_follows_read_settings(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.range(10).selectExpr("id", "cast(id as string) as s") \
+        .write.parquet(path)
+    tables.read_parquet(spark, path)
+    key = "spark.sql.parquet.binaryAsString"
+    spark.conf.set(key, "true")
+    try:
+        jobs, _ = count_jobs(spark, lambda: tables.read_parquet(spark, path))
+    finally:
+        spark.conf.unset(key)
+    assert jobs == 1
+    jobs, _ = count_jobs(spark, lambda: tables.read_parquet(spark, path))
+    assert jobs == 0
