@@ -160,11 +160,3 @@ def char_poly_hash(text) -> Column:
         F.lit(0).cast("long"),
         lambda acc, ch: (acc * FP_BASE + F.ascii(ch)) % FP_MOD,
     )
-
-
-def sql_char_poly_hash(text: str) -> str:
-    # DuckDB: list_reduce over the character list; seed with 0 via list_prepend
-    # ('' splits to [] in DuckDB -> reduce of [0] = 0, matching Spark).
-    return (f"LIST_REDUCE(LIST_PREPEND(CAST(0 AS BIGINT), "
-            f"[CAST(ASCII(c) AS BIGINT) for c in STRING_SPLIT({text}, '')]), "
-            f"(acc, ch) -> (acc * {FP_BASE} + ch) % {FP_MOD})")

@@ -560,18 +560,6 @@ def select_overview(resolutions, target_cell_size):
     return chosen
 
 
-def zoom_for_cell_size(target_cell_size_deg, tile_size=TILE_SIZE, max_zoom=22):
-    """Pyramid zoom whose cell size (deg/px on the lon axis) best serves a
-    target cell size under AutoHigherResolution (finest zoom whose cell size
-    <= target; zoom 0 when even it is too coarse is clamped to 0)."""
-    for z in range(max_zoom, -1, -1):
-        cell = 360.0 / (tile_size * (1 << z))
-        if cell <= target_cell_size_deg:
-            continue
-        return min(z + 1, max_zoom)
-    return 0
-
-
 # ---------------------------------------------------------------------------
 # Equal-area projections (WGS84/GRS80 ellipsoid): Lambert Azimuthal
 # Equal-Area (EPSG:3035 family) and Albers Equal-Area Conic (EPSG:5070

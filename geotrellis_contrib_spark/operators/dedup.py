@@ -43,17 +43,6 @@ def _char_hash(col) -> F.Column:
 SHINGLE_COMBINE = 8191
 
 
-def word_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """Explode each doc to its distinct word n-gram shingles as STRINGS
-    (doc_id, shingle). Kept for readability/debug; the hot path is
-    :func:`shingle_hashes` (no shingle strings ever materialize)."""
-    toks = F.split(F.col(text_col), " ")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
-    sh = F.transform(idx, lambda i: F.concat_ws(
-        " ", *[F.element_at(toks, (i + j).cast("int")) for j in range(n)]))
-    return df.select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
-
-
 def shingle_hashes(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """Distinct word n-gram shingle HASHES per doc: (doc_id, sh:long).
 

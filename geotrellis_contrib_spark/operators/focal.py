@@ -7,15 +7,25 @@ Reference parity: the reference's RasterSources feed GeoTrellis focal ops
 vlm/src/test/resources, RasterSourceSpec reads it); the contrib layer's
 job is exactly this tiling/halo plumbing.
 
-Spark-first plan (scale posture):
+Spark-first plan (scale posture), owned by ``focal_map``:
   1. ``mapInPandas`` strip extraction — each tile CUTS the r-wide edge
      strips its 8 neighbors need BEFORE the shuffle, so shuffle volume is
      ~(1 + 4r/T) x tile bytes, not 9x (no full-tile replication).
   2. ONE shuffle: ``groupBy(source, band, col, row).applyInPandas`` —
      assemble the (T+2r)^2 padded frame (missing neighbors / NoData ->
-     NaN), run the stencil, emit per-tile results.
+     NaN), run the operator's kernel, emit per-tile results.
 At 100 TB this is one co-partitioned shuffle of ~1.06x the raster bytes;
 the stencil itself is embarrassingly parallel per tile.
+
+Kernel contract: each per-tile checksum operator validates its
+parameters, binds them to a module-level ``k_<op>(frame, t, col, row,
+**params)`` with ``functools.partial`` and hands it to ``focal_map``. A
+kernel gets the receiving tile's (t+2r)^2 float64 frame (NaN = NoData or
+no neighbor; the tile itself is ``frame[r:r+t, r:r+t]``), the tile size
+and the tile's (col, row); it returns the tile's result columns as a
+dict, or None for "no row" (nothing hit). Halo-only groups — the
+receiving tile does not exist — never reach a kernel and emit no row.
+Quantize-first checksums go through ``_qsum``.
 
 Determinism contract (mirrored by the ``focal_stats`` SQL oracle in
 ``__spark_entry__.py`` — change one only with the other):
@@ -31,6 +41,7 @@ Determinism contract (mirrored by the ``focal_stats`` SQL oracle in
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator
 
 import numpy as np
@@ -123,6 +134,117 @@ def _assemble_frame(pdf: pd.DataFrame, r: int, t: int):
     return frame
 
 
+def _qsum(values: np.ndarray, mask: np.ndarray, scale: float = _Q) -> int:
+    """Quantize-first checksum over the ``mask`` cells: floor(v * scale
+    + 0.5) as int64, then an INTEGER sum (order-independent)."""
+    return int(np.floor(values[mask] * scale + 0.5).astype(np.int64).sum())
+
+
+def focal_map(tiles: DataFrame, r: int, t: int, kernel,
+              schema: str) -> DataFrame:
+    """The halo-stencil driver of every checksum operator (module
+    docstring): r-wide halo strips, ONE shuffle on the tile key, then
+    ``kernel(frame, t, col, row)`` per receiving tile. Emits the key
+    columns plus the kernel's dict as one row; halo-only groups and a
+    ``None`` result emit nothing. ``schema`` is the output DDL."""
+
+    def stencil(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        source_id, band, col, row = key
+        frame = _assemble_frame(pdf, r, t)
+        out = None if frame is None else kernel(frame, t, int(col),
+                                                int(row))
+        if out is None:
+            return pd.DataFrame()
+        return pd.DataFrame([{"source_id": source_id, "band": int(band),
+                              "col": int(col), "row": int(row), **out}])
+
+    return compute_grouped(
+        _halo_pieces(tiles, r, t), "source_id", "band", "col", "row") \
+        .applyInPandas(stencil, schema)
+
+
+def k_focal_stats(frame, t, col, row, *, r, op, offsets, classify_div):
+    """:func:`focal_stats` per tile: ``op`` over the ``offsets``
+    neighborhood, checksummed over cells with a valid neighbor."""
+    if classify_div is not None:
+        # majority filter runs on RECLASSIFIED cells (GeoTrellis Mode
+        # is for categorical rasters) — floor(v/div), NoData stays NaN
+        frame = np.floor(frame / classify_div)
+    valid = ~np.isnan(frame)
+    acc = np.zeros((t, t))
+    acc2 = np.zeros((t, t))
+    cnt = np.zeros((t, t), dtype=np.int64)
+    ext = None
+    wins = []
+    for dr, dc in offsets:
+        win = frame[r + dr:r + dr + t, r + dc:r + dc + t]
+        vw = valid[r + dr:r + dr + t, r + dc:r + dc + t]
+        if op in ("mean", "sum"):
+            acc = acc + np.where(vw, win, 0.0)
+        elif op == "stddev":
+            # sum AND sum-of-squares in the same fixed chained-add
+            # order; the fixture's quarter-multiples make both EXACT
+            acc = acc + np.where(vw, win, 0.0)
+            acc2 = acc2 + np.where(vw, win * win, 0.0)
+        elif op in ("median", "mode"):
+            wins.append(np.where(vw, win, np.nan))
+        else:
+            cur = np.where(vw, win, np.nan)
+            ext = cur if ext is None else (
+                np.fmax(ext, cur) if op == "max" else np.fmin(ext, cur))
+        cnt = cnt + vw
+    any_valid = cnt > 0
+    if op == "mean":
+        focal = np.where(any_valid, acc / np.maximum(cnt, 1), np.nan)
+    elif op == "sum":
+        focal = np.where(any_valid, acc, np.nan)
+    elif op == "stddev":
+        # population stddev: ONE division each for mean and mean-of-
+        # squares, var = m2 - m*m clamped at 0 (float dust), sqrt —
+        # mirrored op-for-op by the focal_stddev SQL oracle
+        n = np.maximum(cnt, 1).astype(np.float64)
+        m = acc / n
+        m2 = acc2 / n
+        var = np.maximum(m2 - m * m, 0.0)
+        focal = np.where(any_valid, np.sqrt(var), np.nan)
+    elif op == "mode":
+        # majority vote over the valid window, SMALLEST value on ties
+        # (deterministic categorical rule). Exact: class values are
+        # small integers, equality is exact. O(k^2) vectorized over
+        # the k=(2r+1)^2 window slices.
+        stack = np.stack(wins, axis=-1)
+        best_v = np.full((t, t), np.nan)
+        best_c = np.zeros((t, t), dtype=np.int64)
+        for j in range(stack.shape[-1]):
+            vj = stack[..., j]
+            with np.errstate(invalid="ignore"):
+                cj = np.nansum(
+                    (stack == vj[..., None]).astype(np.int64), axis=-1)
+            ok_j = ~np.isnan(vj)
+            take = ok_j & ((cj > best_c)
+                           | ((cj == best_c)
+                              & ~(np.isnan(best_v) | (vj >= best_v))))
+            best_v = np.where(take, vj, best_v)
+            best_c = np.where(take, cj, best_c)
+        focal = best_v
+    elif op == "median":
+        # rank-based, so EXACT: sort (NaN last), take the two middle
+        # order statistics of the valid prefix, (lo + hi)/2.0 — for an
+        # odd count lo == hi and (x + x)/2.0 is bitwise x; the SQL
+        # oracle mirrors with list_sort/list_filter + 1-based picks
+        srt = np.sort(np.stack(wins, axis=-1), axis=-1)
+        il = np.maximum((cnt - 1) // 2, 0)
+        ih = cnt // 2
+        lo = np.take_along_axis(srt, il[..., None], axis=-1)[..., 0]
+        hi = np.take_along_axis(srt, ih[..., None], axis=-1)[..., 0]
+        with np.errstate(invalid="ignore"):
+            focal = np.where(any_valid, (lo + hi) / 2.0, np.nan)
+    else:
+        focal = ext
+    return {"focal_sum": _qsum(focal, any_valid),
+            "focal_count": int(any_valid.sum())}
+
+
 def focal_stats(tiles: DataFrame, op: str = "mean", radius: int = 1,
                 tile_size: int = 64,
                 classify_div: float | None = None,
@@ -196,110 +318,51 @@ def focal_stats(tiles: DataFrame, op: str = "mean", radius: int = 1,
 
         offsets = [(a, b) for a, b in offsets
                    if a * a + b * b <= r * r and in_arc(a, b)]
-    pieces = _halo_pieces(tiles, r, t)
-
-    def stencil(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band, col, row = key
-        frame = _assemble_frame(pdf, r, t)
-        if frame is None:
-            return pd.DataFrame(columns=["source_id", "band", "col", "row",
-                                         "focal_sum", "focal_count"])
-        if classify_div is not None:
-            # majority filter runs on RECLASSIFIED cells (GeoTrellis Mode
-            # is for categorical rasters) — floor(v/div), NoData stays NaN
-            frame = np.floor(frame / classify_div)
-        valid = ~np.isnan(frame)
-        acc = np.zeros((t, t))
-        acc2 = np.zeros((t, t))
-        cnt = np.zeros((t, t), dtype=np.int64)
-        ext = None
-        wins = []
-        for dr, dc in offsets:
-            win = frame[r + dr:r + dr + t, r + dc:r + dc + t]
-            vw = valid[r + dr:r + dr + t, r + dc:r + dc + t]
-            if op in ("mean", "sum"):
-                acc = acc + np.where(vw, win, 0.0)
-            elif op == "stddev":
-                # sum AND sum-of-squares in the same fixed chained-add
-                # order; the fixture's quarter-multiples make both EXACT
-                acc = acc + np.where(vw, win, 0.0)
-                acc2 = acc2 + np.where(vw, win * win, 0.0)
-            elif op in ("median", "mode"):
-                wins.append(np.where(vw, win, np.nan))
-            else:
-                cur = np.where(vw, win, np.nan)
-                ext = cur if ext is None else (
-                    np.fmax(ext, cur) if op == "max" else np.fmin(ext, cur))
-            cnt = cnt + vw
-        any_valid = cnt > 0
-        if op == "mean":
-            focal = np.where(any_valid, acc / np.maximum(cnt, 1), np.nan)
-        elif op == "sum":
-            focal = np.where(any_valid, acc, np.nan)
-        elif op == "stddev":
-            # population stddev: ONE division each for mean and mean-of-
-            # squares, var = m2 - m*m clamped at 0 (float dust), sqrt —
-            # mirrored op-for-op by the focal_stddev SQL oracle
-            n = np.maximum(cnt, 1).astype(np.float64)
-            m = acc / n
-            m2 = acc2 / n
-            var = np.maximum(m2 - m * m, 0.0)
-            focal = np.where(any_valid, np.sqrt(var), np.nan)
-        elif op == "mode":
-            # majority vote over the valid window, SMALLEST value on ties
-            # (deterministic categorical rule). Exact: class values are
-            # small integers, equality is exact. O(k^2) vectorized over
-            # the k=(2r+1)^2 window slices.
-            stack = np.stack(wins, axis=-1)
-            best_v = np.full((t, t), np.nan)
-            best_c = np.zeros((t, t), dtype=np.int64)
-            for j in range(stack.shape[-1]):
-                vj = stack[..., j]
-                with np.errstate(invalid="ignore"):
-                    cj = np.nansum(
-                        (stack == vj[..., None]).astype(np.int64), axis=-1)
-                ok_j = ~np.isnan(vj)
-                take = ok_j & ((cj > best_c)
-                               | ((cj == best_c)
-                                  & ~(np.isnan(best_v) | (vj >= best_v))))
-                best_v = np.where(take, vj, best_v)
-                best_c = np.where(take, cj, best_c)
-            focal = best_v
-        elif op == "median":
-            # rank-based, so EXACT: sort (NaN last), take the two middle
-            # order statistics of the valid prefix, (lo + hi)/2.0 — for an
-            # odd count lo == hi and (x + x)/2.0 is bitwise x; the SQL
-            # oracle mirrors with list_sort/list_filter + 1-based picks
-            srt = np.sort(np.stack(wins, axis=-1), axis=-1)
-            il = np.maximum((cnt - 1) // 2, 0)
-            ih = cnt // 2
-            lo = np.take_along_axis(srt, il[..., None], axis=-1)[..., 0]
-            hi = np.take_along_axis(srt, ih[..., None], axis=-1)[..., 0]
-            with np.errstate(invalid="ignore"):
-                focal = np.where(any_valid, (lo + hi) / 2.0, np.nan)
-        else:
-            focal = ext
-        q = np.floor(focal[any_valid] * _Q + 0.5).astype(np.int64)
-        return pd.DataFrame([{
-            "source_id": source_id, "band": int(band),
-            "col": int(col), "row": int(row),
-            "focal_sum": int(q.sum()), "focal_count": int(any_valid.sum()),
-        }])
-
-    return compute_grouped(
-        pieces, "source_id", "band", "col", "row").applyInPandas(
-        stencil, "source_id string, band bigint, col bigint, row bigint, "
-                 "focal_sum bigint, focal_count bigint")
+    return focal_map(
+        tiles, r, t, partial(k_focal_stats, r=r, op=op, offsets=offsets,
+                             classify_div=classify_div),
+        "source_id string, band bigint, col bigint, row bigint, "
+        "focal_sum bigint, focal_count bigint")
 
 
 def _nb9(frame: np.ndarray, t: int):
     """The nine 3x3-neighborhood slices (a..i, row-major: a=NW, e=center,
-    i=SE) of a radius-1 padded frame — shared by the Horn/GDALDEM kernels."""
-    return (frame[0:t, 0:t], frame[0:t, 1:t + 1], frame[0:t, 2:t + 2],
-            frame[1:t + 1, 0:t], frame[1:t + 1, 1:t + 1],
-            frame[1:t + 1, 2:t + 2],
-            frame[2:t + 2, 0:t], frame[2:t + 2, 1:t + 1],
-            frame[2:t + 2, 2:t + 2])
+    i=SE) of a radius-1 padded frame and the mask of cells whose nine are
+    all valid (the GDAL edge rule) — shared by the Horn/GDALDEM kernels."""
+    a, b, c, d, e, f, g, h, i = nb = (
+        frame[0:t, 0:t], frame[0:t, 1:t + 1], frame[0:t, 2:t + 2],
+        frame[1:t + 1, 0:t], frame[1:t + 1, 1:t + 1],
+        frame[1:t + 1, 2:t + 2],
+        frame[2:t + 2, 0:t], frame[2:t + 2, 1:t + 1],
+        frame[2:t + 2, 2:t + 2])
+    return nb, ~np.isnan(a + b + c + d + e + f + g + h + i)
+
+
+def _horn_pq(frame: np.ndarray, t: int, dx: float, dy: float):
+    """HORN (1981) p/q derivatives of a radius-1 padded frame (formulas
+    in :func:`terrain_stats`) and its all-9-valid mask."""
+    (a, b, c, d, _, f, g, h, i), ok = _nb9(frame, t)
+    with np.errstate(invalid="ignore"):
+        p = ((c + 2.0 * f + i) - (a + 2.0 * d + g)) / (8.0 * dx)
+        q = ((g + 2.0 * h + i) - (a + 2.0 * b + c)) / (8.0 * dy)
+    return p, q, ok
+
+
+def k_tri_stats(frame, t, col, row):
+    """:func:`tri_stats` per tile: TRI, TPI and roughness checksums."""
+    (a, b, c, d, e, f, g, h, i), ok = _nb9(frame, t)
+    with np.errstate(invalid="ignore"):
+        tri = (np.abs(e - a) + np.abs(e - b) + np.abs(e - c)
+               + np.abs(e - d) + np.abs(e - f) + np.abs(e - g)
+               + np.abs(e - h) + np.abs(e - i)) / 8.0
+        tpi = e - (a + b + c + d + f + g + h + i) / 8.0
+        mx = np.fmax(np.fmax(np.fmax(np.fmax(a, b), np.fmax(c, d)),
+                             np.fmax(np.fmax(e, f), np.fmax(g, h))), i)
+        mn = np.fmin(np.fmin(np.fmin(np.fmin(a, b), np.fmin(c, d)),
+                             np.fmin(np.fmin(e, f), np.fmin(g, h))), i)
+        rough = mx - mn
+    return {"tri_sum": _qsum(tri, ok), "tpi_sum": _qsum(tpi, ok),
+            "rough_sum": _qsum(rough, ok), "tri_count": int(ok.sum())}
 
 
 def tri_stats(tiles: DataFrame, tile_size: int = 64) -> DataFrame:
@@ -321,43 +384,21 @@ def tri_stats(tiles: DataFrame, tile_size: int = 64) -> DataFrame:
     Reference parity: the reference's aspect-tiled.tif fixture family
     (vlm/src/test/resources, RasterSourceSpec) — the contrib tier owns the
     tiling/halo plumbing these kernels ride."""
-    t = int(tile_size)
-    pieces = _halo_pieces(tiles, 1, t)
+    return focal_map(
+        tiles, 1, int(tile_size), k_tri_stats,
+        "source_id string, band bigint, col bigint, row bigint, "
+        "tri_sum bigint, tpi_sum bigint, rough_sum bigint, tri_count bigint")
 
-    def kern(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band, col, row = key
-        cols = ["source_id", "band", "col", "row",
-                "tri_sum", "tpi_sum", "rough_sum", "tri_count"]
-        frame = _assemble_frame(pdf, 1, t)
-        if frame is None:
-            return pd.DataFrame(columns=cols)
-        a, b, c, d, e, f, g, h, i = _nb9(frame, t)
-        ok = ~np.isnan(a + b + c + d + e + f + g + h + i)
-        with np.errstate(invalid="ignore"):
-            tri = (np.abs(e - a) + np.abs(e - b) + np.abs(e - c)
-                   + np.abs(e - d) + np.abs(e - f) + np.abs(e - g)
-                   + np.abs(e - h) + np.abs(e - i)) / 8.0
-            tpi = e - (a + b + c + d + f + g + h + i) / 8.0
-            mx = np.fmax(np.fmax(np.fmax(np.fmax(a, b), np.fmax(c, d)),
-                                 np.fmax(np.fmax(e, f), np.fmax(g, h))), i)
-            mn = np.fmin(np.fmin(np.fmin(np.fmin(a, b), np.fmin(c, d)),
-                                 np.fmin(np.fmin(e, f), np.fmin(g, h))), i)
-            rough = mx - mn
-        qt = np.floor(tri[ok] * _Q + 0.5).astype(np.int64)
-        qp = np.floor(tpi[ok] * _Q + 0.5).astype(np.int64)
-        qr = np.floor(rough[ok] * _Q + 0.5).astype(np.int64)
-        return pd.DataFrame([{
-            "source_id": source_id, "band": int(band),
-            "col": int(col), "row": int(row),
-            "tri_sum": int(qt.sum()), "tpi_sum": int(qp.sum()),
-            "rough_sum": int(qr.sum()), "tri_count": int(ok.sum()),
-        }])
 
-    return compute_grouped(
-        pieces, "source_id", "band", "col", "row").applyInPandas(
-        kern, "source_id string, band bigint, col bigint, row bigint, "
-              "tri_sum bigint, tpi_sum bigint, rough_sum bigint, "
-              "tri_count bigint")
+def k_terrain_stats(frame, t, col, row, *, dx, dy):
+    """:func:`terrain_stats` per tile: Horn slope and aspect checksums."""
+    p, q, ok = _horn_pq(frame, t, dx, dy)
+    with np.errstate(invalid="ignore"):
+        slope = np.degrees(np.arctan(np.sqrt(p * p + q * q)))
+        aspect = (np.degrees(np.arctan2(q, -p)) + 360.0) % 360.0
+        aspect = np.where((p == 0.0) & (q == 0.0), 0.0, aspect)
+    return {"slope_sum": _qsum(slope, ok), "aspect_sum": _qsum(aspect, ok),
+            "terrain_count": int(ok.sum())}
 
 
 def terrain_stats(tiles: DataFrame, dx: float = 30.0, dy: float = 30.0,
@@ -378,37 +419,36 @@ def terrain_stats(tiles: DataFrame, dx: float = 30.0, dy: float = 30.0,
     — floor(v * 2^20 + 0.5) summed as int64, order-independent. The
     ``terrain_stats`` SQL oracle mirrors this arithmetic term-for-term —
     change one only with the other."""
-    t = int(tile_size)
-    pieces = _halo_pieces(tiles, 1, t)
+    return focal_map(
+        tiles, 1, int(tile_size), partial(k_terrain_stats, dx=dx, dy=dy),
+        "source_id string, band bigint, col bigint, row bigint, "
+        "slope_sum bigint, aspect_sum bigint, terrain_count bigint")
 
-    def horn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band, col, row = key
-        cols = ["source_id", "band", "col", "row",
-                "slope_sum", "aspect_sum", "terrain_count"]
-        frame = _assemble_frame(pdf, 1, t)
-        if frame is None:
-            return pd.DataFrame(columns=cols)
-        a, b, c, d, e, f, g, h, i = _nb9(frame, t)
-        ok = ~np.isnan(a + b + c + d + e + f + g + h + i)
-        with np.errstate(invalid="ignore"):
-            p = ((c + 2.0 * f + i) - (a + 2.0 * d + g)) / (8.0 * dx)
-            q = ((g + 2.0 * h + i) - (a + 2.0 * b + c)) / (8.0 * dy)
-            slope = np.degrees(np.arctan(np.sqrt(p * p + q * q)))
-            aspect = (np.degrees(np.arctan2(q, -p)) + 360.0) % 360.0
-            aspect = np.where((p == 0.0) & (q == 0.0), 0.0, aspect)
-        qs = np.floor(slope[ok] * _Q + 0.5).astype(np.int64)
-        qa = np.floor(aspect[ok] * _Q + 0.5).astype(np.int64)
-        return pd.DataFrame([{
-            "source_id": source_id, "band": int(band),
-            "col": int(col), "row": int(row),
-            "slope_sum": int(qs.sum()), "aspect_sum": int(qa.sum()),
-            "terrain_count": int(ok.sum()),
-        }])
 
-    return compute_grouped(
-        pieces, "source_id", "band", "col", "row").applyInPandas(
-        horn, "source_id string, band bigint, col bigint, row bigint, "
-              "slope_sum bigint, aspect_sum bigint, terrain_count bigint")
+def k_curvature_stats(frame, t, col, row, *, L):
+    """:func:`curvature_stats` per tile: Zevenbergen-Thorne profile,
+    plan and total curvature checksums (cell size ``L``)."""
+    (a, b, c, d, e, f, g, h, i), ok = _nb9(frame, t)
+    l2 = L * L
+    with np.errstate(invalid="ignore"):
+        D = ((d + f) / 2.0 - e) / l2
+        E = ((b + h) / 2.0 - e) / l2
+        Fc = (-a + c + g - i) / (4.0 * l2)
+        G = (-d + f) / (2.0 * L)
+        H = (b - h) / (2.0 * L)
+        den = G * G + H * H
+        total = -2.0 * (D + E) * 100.0
+        safe = np.where(den > 0.0, den, 1.0)
+        prof = np.where(
+            den > 0.0,
+            -2.0 * (D * G * G + E * H * H + Fc * G * H)
+            / safe * 100.0, 0.0)
+        plan = np.where(
+            den > 0.0,
+            2.0 * (D * H * H + E * G * G - Fc * G * H)
+            / safe * 100.0, 0.0)
+    return {"prof_sum": _qsum(prof, ok), "plan_sum": _qsum(plan, ok),
+            "total_sum": _qsum(total, ok), "curv_count": int(ok.sum())}
 
 
 def curvature_stats(tiles: DataFrame, cell: float = 30.0,
@@ -428,53 +468,23 @@ def curvature_stats(tiles: DataFrame, cell: float = 30.0,
     quantize-first integer checksums. The ``curvature_stats`` SQL oracle
     mirrors every expression term-for-term — change one only with the
     other."""
-    t = int(tile_size)
-    L = float(cell)
-    pieces = _halo_pieces(tiles, 1, t)
+    return focal_map(
+        tiles, 1, int(tile_size), partial(k_curvature_stats, L=float(cell)),
+        "source_id string, band bigint, col bigint, row bigint, "
+        "prof_sum bigint, plan_sum bigint, total_sum bigint, "
+        "curv_count bigint")
 
-    def zt(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band, col, row = key
-        cols = ["source_id", "band", "col", "row", "prof_sum",
-                "plan_sum", "total_sum", "curv_count"]
-        frame = _assemble_frame(pdf, 1, t)
-        if frame is None:
-            return pd.DataFrame(columns=cols)
-        a, b, c, d, e, f, g, h, i = _nb9(frame, t)
-        ok = ~np.isnan(a + b + c + d + e + f + g + h + i)
-        l2 = L * L
-        with np.errstate(invalid="ignore"):
-            D = ((d + f) / 2.0 - e) / l2
-            E = ((b + h) / 2.0 - e) / l2
-            Fc = (-a + c + g - i) / (4.0 * l2)
-            G = (-d + f) / (2.0 * L)
-            H = (b - h) / (2.0 * L)
-            den = G * G + H * H
-            total = -2.0 * (D + E) * 100.0
-            safe = np.where(den > 0.0, den, 1.0)
-            prof = np.where(
-                den > 0.0,
-                -2.0 * (D * G * G + E * H * H + Fc * G * H)
-                / safe * 100.0, 0.0)
-            plan = np.where(
-                den > 0.0,
-                2.0 * (D * H * H + E * G * G - Fc * G * H)
-                / safe * 100.0, 0.0)
-        return pd.DataFrame([{
-            "source_id": source_id, "band": int(band),
-            "col": int(col), "row": int(row),
-            "prof_sum": int(np.floor(prof[ok] * _Q + 0.5)
-                            .astype(np.int64).sum()),
-            "plan_sum": int(np.floor(plan[ok] * _Q + 0.5)
-                            .astype(np.int64).sum()),
-            "total_sum": int(np.floor(total[ok] * _Q + 0.5)
-                             .astype(np.int64).sum()),
-            "curv_count": int(ok.sum())}])
 
-    return compute_grouped(
-        pieces, "source_id", "band", "col", "row").applyInPandas(
-        zt, "source_id string, band bigint, col bigint, row bigint, "
-            "prof_sum bigint, plan_sum bigint, total_sum bigint, "
-            "curv_count bigint")
+def k_hillshade_stats(frame, t, col, row, *, zen, az, dx, dy):
+    """:func:`hillshade_stats` per tile (``zen``/``az`` in radians)."""
+    p, q, ok = _horn_pq(frame, t, dx, dy)
+    with np.errstate(invalid="ignore"):
+        slope = np.arctan(np.sqrt(p * p + q * q))
+        aspect = np.arctan2(q, -p)
+        sh = 255.0 * np.maximum(
+            0.0, np.cos(zen) * np.cos(slope)
+            + np.sin(zen) * np.sin(slope) * np.cos(az - aspect))
+    return {"shade_sum": _qsum(sh, ok), "shade_count": int(ok.sum())}
 
 
 def hillshade_stats(tiles: DataFrame, azimuth: float = 315.0,
@@ -487,39 +497,36 @@ def hillshade_stats(tiles: DataFrame, azimuth: float = 315.0,
     aspect_rad = atan2(q, -p) in the same frame. Same halo machinery and
     all-9-valid edge rule as terrain_stats; per-tile quantized checksums
     ``(source_id, band, col, row, shade_sum, shade_count)``."""
-    t = int(tile_size)
     zen = np.radians(np.float64(90.0 - altitude))
     az = np.radians(np.float64(azimuth))
-    pieces = _halo_pieces(tiles, 1, t)
+    return focal_map(
+        tiles, 1, int(tile_size),
+        partial(k_hillshade_stats, zen=zen, az=az, dx=dx, dy=dy),
+        "source_id string, band bigint, col bigint, row bigint, "
+        "shade_sum bigint, shade_count bigint")
 
-    def shade(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band, col, row = key
-        cols = ["source_id", "band", "col", "row",
-                "shade_sum", "shade_count"]
-        frame = _assemble_frame(pdf, 1, t)
-        if frame is None:
-            return pd.DataFrame(columns=cols)
-        a, b, c, d, e, f, g, h, i = _nb9(frame, t)
-        ok = ~np.isnan(a + b + c + d + e + f + g + h + i)
-        with np.errstate(invalid="ignore"):
-            p = ((c + 2.0 * f + i) - (a + 2.0 * d + g)) / (8.0 * dx)
-            q = ((g + 2.0 * h + i) - (a + 2.0 * b + c)) / (8.0 * dy)
-            slope = np.arctan(np.sqrt(p * p + q * q))
-            aspect = np.arctan2(q, -p)
-            sh = 255.0 * np.maximum(
-                0.0, np.cos(zen) * np.cos(slope)
-                + np.sin(zen) * np.sin(slope) * np.cos(az - aspect))
-        qs = np.floor(sh[ok] * _Q + 0.5).astype(np.int64)
-        return pd.DataFrame([{
-            "source_id": source_id, "band": int(band),
-            "col": int(col), "row": int(row),
-            "shade_sum": int(qs.sum()), "shade_count": int(ok.sum()),
-        }])
 
-    return compute_grouped(
-        pieces, "source_id", "band", "col", "row").applyInPandas(
-        shade, "source_id string, band bigint, col bigint, row bigint, "
-               "shade_sum bigint, shade_count bigint")
+def k_convolve_stats(frame, t, col, row, *, r, weights):
+    """:func:`convolve_stats` per tile: the NoData-renormalizing
+    convolution with the (2r+1)^2 ``weights``."""
+    valid = ~np.isnan(frame)
+    acc = np.zeros((t, t))
+    wacc = np.zeros((t, t))
+    cnt = np.zeros((t, t), dtype=np.int64)
+    for dr in range(-r, r + 1):
+        for dc in range(-r, r + 1):
+            w = float(weights[dr + r][dc + r])
+            win = frame[r + dr:r + dr + t, r + dc:r + dc + t]
+            vw = valid[r + dr:r + dr + t, r + dc:r + dc + t]
+            acc = acc + np.where(vw, w * win, 0.0)
+            wacc = wacc + np.where(vw, w, 0.0)
+            cnt = cnt + vw
+    any_valid = cnt > 0
+    with np.errstate(invalid="ignore", divide="ignore"):
+        focal = np.where(any_valid, acc / np.where(wacc == 0.0, 1.0,
+                                                   wacc), np.nan)
+    return {"conv_sum": _qsum(focal, any_valid),
+            "conv_count": int(any_valid.sum())}
 
 
 def convolve_stats(tiles: DataFrame,
@@ -547,42 +554,36 @@ def convolve_stats(tiles: DataFrame,
     t = int(tile_size)
     if r < 1 or r >= t:
         raise ValueError(f"kernel radius must be in 1..{t - 1}: {r}")
-    pieces = _halo_pieces(tiles, r, t)
+    return focal_map(
+        tiles, r, t, partial(k_convolve_stats, r=r, weights=kernel),
+        "source_id string, band bigint, col bigint, row bigint, "
+        "conv_sum bigint, conv_count bigint")
 
-    def conv(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band, col, row = key
-        cols = ["source_id", "band", "col", "row",
-                "conv_sum", "conv_count"]
-        frame = _assemble_frame(pdf, r, t)
-        if frame is None:
-            return pd.DataFrame(columns=cols)
-        valid = ~np.isnan(frame)
-        acc = np.zeros((t, t))
-        wacc = np.zeros((t, t))
-        cnt = np.zeros((t, t), dtype=np.int64)
-        for dr in range(-r, r + 1):
-            for dc in range(-r, r + 1):
-                w = float(kernel[dr + r][dc + r])
-                win = frame[r + dr:r + dr + t, r + dc:r + dc + t]
-                vw = valid[r + dr:r + dr + t, r + dc:r + dc + t]
-                acc = acc + np.where(vw, w * win, 0.0)
-                wacc = wacc + np.where(vw, w, 0.0)
-                cnt = cnt + vw
-        any_valid = cnt > 0
-        with np.errstate(invalid="ignore", divide="ignore"):
-            focal = np.where(any_valid, acc / np.where(wacc == 0.0, 1.0,
-                                                       wacc), np.nan)
-        q = np.floor(focal[any_valid] * _Q + 0.5).astype(np.int64)
-        return pd.DataFrame([{
-            "source_id": source_id, "band": int(band),
-            "col": int(col), "row": int(row),
-            "conv_sum": int(q.sum()), "conv_count": int(any_valid.sum()),
-        }])
 
-    return compute_grouped(
-        pieces, "source_id", "band", "col", "row").applyInPandas(
-        conv, "source_id string, band bigint, col bigint, row bigint, "
-              "conv_sum bigint, conv_count bigint")
+def _mask_frame(frame, t, col, row, r, mask_predicate):
+    """Global pixel coords (gr, gc) of a padded frame and the mask of its
+    valid cells that satisfy ``mask_predicate(values, gr, gc)``."""
+    p = t + 2 * r
+    gr = (row * t - r + np.arange(p).reshape(-1, 1)) \
+        + np.zeros((1, p), dtype=np.int64)
+    gc = np.zeros((p, 1), dtype=np.int64) \
+        + (col * t - r + np.arange(p).reshape(1, -1))
+    return gr, gc, mask_predicate(frame, gr, gc) & ~np.isnan(frame)
+
+
+def k_euclidean_distance(frame, t, col, row, *, r, mask_predicate, offs):
+    """:func:`euclidean_distance` per tile; None when no valid cell
+    has a mask cell within range."""
+    _, _, mask = _mask_frame(frame, t, col, row, r, mask_predicate)
+    dist = np.full((t, t), np.inf)
+    for dr, dc, d in offs:
+        win = mask[r + dr:r + dr + t, r + dc:r + dc + t]
+        np.copyto(dist, np.minimum(dist, d), where=win)
+    valid = ~np.isnan(frame[r:r + t, r:r + t])
+    hit = valid & np.isfinite(dist)
+    if not hit.any():
+        return None
+    return {"dist_qsum": _qsum(dist, hit), "n_within": int(hit.sum())}
 
 
 def euclidean_distance(tiles: DataFrame, mask_predicate,
@@ -604,42 +605,14 @@ def euclidean_distance(tiles: DataFrame, mask_predicate,
     r, t = int(radius), int(tile_size)
     if r < 1 or r >= tile_size:
         raise ValueError(f"radius must be in 1..{tile_size - 1}: {r}")
-    pieces = _halo_pieces(tiles, r, t)
     offs = [(dr, dc, float(np.sqrt(float(dr * dr + dc * dc))))
             for dr in range(-r, r + 1) for dc in range(-r, r + 1)
             if dr * dr + dc * dc <= r * r]
-
-    def scan(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band, col, row = key
-        frame = _assemble_frame(pdf, r, t)
-        if frame is None:
-            return pd.DataFrame(columns=["source_id", "band", "col",
-                                         "row", "dist_qsum", "n_within"])
-        p = t + 2 * r
-        gr = (int(row) * t - r + np.arange(p).reshape(-1, 1)) \
-            + np.zeros((1, p), dtype=np.int64)
-        gc = np.zeros((p, 1), dtype=np.int64) \
-            + (int(col) * t - r + np.arange(p).reshape(1, -1))
-        mask = mask_predicate(frame, gr, gc) & ~np.isnan(frame)
-        dist = np.full((t, t), np.inf)
-        for dr, dc, d in offs:
-            win = mask[r + dr:r + dr + t, r + dc:r + dc + t]
-            np.copyto(dist, np.minimum(dist, d), where=win)
-        valid = ~np.isnan(frame[r:r + t, r:r + t])
-        hit = valid & np.isfinite(dist)
-        if not hit.any():
-            return pd.DataFrame(columns=["source_id", "band", "col",
-                                         "row", "dist_qsum", "n_within"])
-        q = np.floor(dist[hit] * 1048576.0 + 0.5).astype(np.int64)
-        return pd.DataFrame([{
-            "source_id": source_id, "band": int(band),
-            "col": int(col), "row": int(row),
-            "dist_qsum": int(q.sum()), "n_within": int(hit.sum())}])
-
-    return compute_grouped(
-        pieces, "source_id", "band", "col", "row").applyInPandas(
-        scan, "source_id string, band int, col bigint, row bigint, "
-              "dist_qsum bigint, n_within bigint")
+    return focal_map(
+        tiles, r, t, partial(k_euclidean_distance, r=r,
+                             mask_predicate=mask_predicate, offs=offs),
+        "source_id string, band int, col bigint, row bigint, "
+        "dist_qsum bigint, n_within bigint")
 
 
 _D8_SQRT2 = 1.4142135623730951
@@ -649,6 +622,26 @@ _D8_SQRT2 = 1.4142135623730951
 _D8 = [(-1, -1, _D8_SQRT2, 32), (-1, 0, 1.0, 64), (-1, 1, _D8_SQRT2, 128),
        (0, -1, 1.0, 16), (0, 1, 1.0, 1),
        (1, -1, _D8_SQRT2, 8), (1, 0, 1.0, 4), (1, 1, _D8_SQRT2, 2)]
+
+
+def k_flow_direction(frame, t, col, row):
+    """:func:`flow_direction` per tile: D8 code sum, pits, valid cells."""
+    z = frame[1:1 + t, 1:1 + t]
+    valid = ~np.isnan(z)
+    rates = []
+    best = np.full((t, t), -np.inf)
+    for dr, dc, dist, code in _D8:
+        zn = frame[1 + dr:1 + dr + t, 1 + dc:1 + dc + t]
+        rate = np.where(~np.isnan(zn), (z - zn) / dist, -np.inf)
+        rates.append(rate)
+        best = np.maximum(best, rate)
+    code_sum = np.zeros((t, t), dtype=np.int64)
+    for (dr, dc, dist, code), rate in zip(_D8, rates):
+        code_sum += np.where((rate == best) & (best > 0.0), code, 0)
+    code_sum = np.where(valid, code_sum, 0)
+    pits = valid & (best <= 0.0)
+    return {"dir_sum": int(code_sum.sum()), "n_pits": int(pits.sum()),
+            "n_valid": int(valid.sum())}
 
 
 def flow_direction(tiles: DataFrame, tile_size: int = 64) -> DataFrame:
@@ -663,40 +656,10 @@ def flow_direction(tiles: DataFrame, tile_size: int = 64) -> DataFrame:
     Determinism: rates are identical arithmetic on both sides, the max
     is order-free, and codes are exact integers — the per-tile rollup
     (dir_sum, n_pits, n_valid) needs no quantization."""
-    t = int(tile_size)
-    pieces = _halo_pieces(tiles, 1, t)
-
-    def d8(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band, col, row = key
-        frame = _assemble_frame(pdf, 1, t)
-        if frame is None:
-            return pd.DataFrame(columns=["source_id", "band", "col",
-                                         "row", "dir_sum", "n_pits",
-                                         "n_valid"])
-        z = frame[1:1 + t, 1:1 + t]
-        valid = ~np.isnan(z)
-        rates = []
-        best = np.full((t, t), -np.inf)
-        for dr, dc, dist, code in _D8:
-            zn = frame[1 + dr:1 + dr + t, 1 + dc:1 + dc + t]
-            rate = np.where(~np.isnan(zn), (z - zn) / dist, -np.inf)
-            rates.append(rate)
-            best = np.maximum(best, rate)
-        code_sum = np.zeros((t, t), dtype=np.int64)
-        for (dr, dc, dist, code), rate in zip(_D8, rates):
-            code_sum += np.where((rate == best) & (best > 0.0), code, 0)
-        code_sum = np.where(valid, code_sum, 0)
-        pits = valid & (best <= 0.0)
-        return pd.DataFrame([{
-            "source_id": source_id, "band": int(band),
-            "col": int(col), "row": int(row),
-            "dir_sum": int(code_sum.sum()),
-            "n_pits": int(pits.sum()), "n_valid": int(valid.sum())}])
-
-    return compute_grouped(
-        pieces, "source_id", "band", "col", "row").applyInPandas(
-        d8, "source_id string, band int, col bigint, row bigint, "
-            "dir_sum bigint, n_pits bigint, n_valid bigint")
+    return focal_map(
+        tiles, 1, int(tile_size), k_flow_direction,
+        "source_id string, band int, col bigint, row bigint, "
+        "dir_sum bigint, n_pits bigint, n_valid bigint")
 
 
 def _d8_chosen(zp: np.ndarray) -> np.ndarray:
@@ -2000,6 +1963,36 @@ def morans_moments(tiles: DataFrame, tile_size: int = 64,
         F.sum("sv").alias("sv"), F.sum("svv").alias("svv"))
 
 
+def k_euclidean_allocation(frame, t, col, row, *, r, mask_predicate, offs):
+    """:func:`euclidean_allocation` per tile; None when no valid cell
+    has a mask cell within range."""
+    gr, gc, mask = _mask_frame(frame, t, col, row, r, mask_predicate)
+    # the packed key d2*2^24 + (gr*4096 + gc) is only injective
+    # while global pixel coords stay below 4096 — fail loud on
+    # oversize mosaics instead of silently corrupting the MIN
+    # ordering and the decode (r6 ADVICE)
+    if int(gr.max()) >= 4096 or int(gc.max()) >= 4096:
+        raise ValueError(
+            "euclidean_allocation: global pixel coords exceed the "
+            "4096 packing limit — re-derive the pack shift from the "
+            "mosaic extent")
+    gidf = gr * 4096 + gc
+    big = np.iinfo(np.int64).max
+    key = np.full((t, t), big, dtype=np.int64)
+    for dr, dc, d2 in offs:
+        sl = (slice(r + dr, r + dr + t), slice(r + dc, r + dc + t))
+        cand = d2 * 16777216 + gidf[sl]
+        np.copyto(key, np.minimum(key, cand), where=mask[sl])
+    valid = ~np.isnan(frame[r:r + t, r:r + t])
+    hit = valid & (key < big)
+    if not hit.any():
+        return None
+    kv = key[hit]
+    return {"n_within": int(hit.sum()),
+            "d2_sum": int((kv // 16777216).sum()),
+            "alloc_sum": int((kv % 16777216).sum())}
+
+
 def euclidean_allocation(tiles: DataFrame, mask_predicate,
                          radius: int = 5, tile_size: int = 64) -> DataFrame:
     """Bounded-radius EUCLIDEAN ALLOCATION across tile boundaries (the
@@ -2019,56 +2012,38 @@ def euclidean_allocation(tiles: DataFrame, mask_predicate,
     r, t = int(radius), int(tile_size)
     if r < 1 or r >= tile_size:
         raise ValueError(f"radius must be in 1..{tile_size - 1}: {r}")
-    pieces = _halo_pieces(tiles, r, t)
     offs = [(dr, dc, dr * dr + dc * dc)
             for dr in range(-r, r + 1) for dc in range(-r, r + 1)
             if dr * dr + dc * dc <= r * r]
-    big = np.iinfo(np.int64).max
-    cols = ["source_id", "band", "col", "row", "n_within", "d2_sum",
-            "alloc_sum"]
+    return focal_map(
+        tiles, r, t, partial(k_euclidean_allocation, r=r,
+                             mask_predicate=mask_predicate, offs=offs),
+        "source_id string, band bigint, col bigint, row bigint, "
+        "n_within bigint, d2_sum bigint, alloc_sum bigint")
 
-    def scan(key_t: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band, col, row = key_t
-        frame = _assemble_frame(pdf, r, t)
-        if frame is None:
-            return pd.DataFrame(columns=cols)
-        p = t + 2 * r
-        gr = (int(row) * t - r + np.arange(p).reshape(-1, 1)) \
-            + np.zeros((1, p), dtype=np.int64)
-        gc = np.zeros((p, 1), dtype=np.int64) \
-            + (int(col) * t - r + np.arange(p).reshape(1, -1))
-        mask = mask_predicate(frame, gr, gc) & ~np.isnan(frame)
-        # the packed key d2*2^24 + (gr*4096 + gc) is only injective
-        # while global pixel coords stay below 4096 — fail loud on
-        # oversize mosaics instead of silently corrupting the MIN
-        # ordering and the decode (r6 ADVICE)
-        if int(gr.max()) >= 4096 or int(gc.max()) >= 4096:
-            raise ValueError(
-                "euclidean_allocation: global pixel coords exceed the "
-                "4096 packing limit — re-derive the pack shift from the "
-                "mosaic extent")
-        gidf = gr * 4096 + gc
-        key = np.full((t, t), big, dtype=np.int64)
-        for dr, dc, d2 in offs:
-            sl = (slice(r + dr, r + dr + t), slice(r + dc, r + dc + t))
-            cand = d2 * 16777216 + gidf[sl]
-            np.copyto(key, np.minimum(key, cand), where=mask[sl])
-        valid = ~np.isnan(frame[r:r + t, r:r + t])
-        hit = valid & (key < big)
-        if not hit.any():
-            return pd.DataFrame(columns=cols)
-        kv = key[hit]
-        return pd.DataFrame([{
-            "source_id": source_id, "band": int(band),
-            "col": int(col), "row": int(row),
-            "n_within": int(hit.sum()),
-            "d2_sum": int((kv // 16777216).sum()),
-            "alloc_sum": int((kv % 16777216).sum())}])
 
-    return compute_grouped(
-        pieces, "source_id", "band", "col", "row").applyInPandas(
-        scan, "source_id string, band bigint, col bigint, row bigint, "
-              "n_within bigint, d2_sum bigint, alloc_sum bigint")
+def k_tpi_roughness(frame, t, col, row, *, q_tpi):
+    """:func:`tpi_roughness` per tile; None when no cell has a fully
+    valid 3x3."""
+    wins, _ = _nb9(frame, t)
+    ok = np.ones((t, t), dtype=bool)
+    for w in wins:
+        ok &= ~np.isnan(w)
+    if not ok.any():
+        return None
+    center = wins[4]
+    nsum = np.zeros((t, t))
+    mx = np.full((t, t), -np.inf)
+    mn = np.full((t, t), np.inf)
+    for i, w in enumerate(wins):
+        if i != 4:
+            nsum = nsum + np.where(ok, w, 0.0)
+        mx = np.maximum(mx, np.where(ok, w, -np.inf))
+        mn = np.minimum(mn, np.where(ok, w, np.inf))
+    tpi = center - nsum / 8.0
+    rough = mx - mn
+    return {"n_valid9": int(ok.sum()), "tpi_qsum": _qsum(tpi, ok, q_tpi),
+            "rough_q4sum": _qsum(rough, ok, 4.0)}
 
 
 def tpi_roughness(tiles: DataFrame, tile_size: int = 64,
@@ -2085,44 +2060,7 @@ def tpi_roughness(tiles: DataFrame, tile_size: int = 64,
     subtraction of quarter-grid values); TPI quantizes its single
     division. Same halo machinery, ONE co-partitioned shuffle. Output
     per tile: (n_valid9, tpi_qsum, rough_q4sum)."""
-    t = int(tile_size)
-    cols = ["source_id", "band", "col", "row", "n_valid9", "tpi_qsum",
-            "rough_q4sum"]
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band, col, row = key
-        frame = _assemble_frame(pdf, 1, t)
-        if frame is None:
-            return pd.DataFrame(columns=cols)
-        wins = [frame[1 + dr:1 + dr + t, 1 + dc:1 + dc + t]
-                for dr in (-1, 0, 1) for dc in (-1, 0, 1)]
-        ok = np.ones((t, t), dtype=bool)
-        for w in wins:
-            ok &= ~np.isnan(w)
-        if not ok.any():
-            return pd.DataFrame(columns=cols)
-        center = frame[1:1 + t, 1:1 + t]
-        nsum = np.zeros((t, t))
-        mx = np.full((t, t), -np.inf)
-        mn = np.full((t, t), np.inf)
-        for i, w in enumerate(wins):
-            if i != 4:
-                nsum = nsum + np.where(ok, w, 0.0)
-            mx = np.maximum(mx, np.where(ok, w, -np.inf))
-            mn = np.minimum(mn, np.where(ok, w, np.inf))
-        tpi = center - nsum / 8.0
-        rough = mx - mn
-        return pd.DataFrame([{
-            "source_id": source_id, "band": int(band),
-            "col": int(col), "row": int(row),
-            "n_valid9": int(ok.sum()),
-            "tpi_qsum": int(np.floor(tpi * q_tpi + 0.5)[ok]
-                            .astype(np.int64).sum()),
-            "rough_q4sum": int(np.floor(rough * 4.0 + 0.5)[ok]
-                               .astype(np.int64).sum())}])
-
-    return compute_grouped(_halo_pieces(tiles, 1, t),
-                           "source_id", "band", "col", "row") \
-        .applyInPandas(run, "source_id string, band bigint, col bigint, "
-                            "row bigint, n_valid9 bigint, "
-                            "tpi_qsum bigint, rough_q4sum bigint")
+    return focal_map(
+        tiles, 1, int(tile_size), partial(k_tpi_roughness, q_tpi=q_tpi),
+        "source_id string, band bigint, col bigint, row bigint, "
+        "n_valid9 bigint, tpi_qsum bigint, rough_q4sum bigint")

@@ -35,8 +35,6 @@ from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark.util import ensure_min_parallelism
 
-# single-table default (back-compat); the scale path is L x P multi-table
-N_PLANES = 8
 _PLANE_MOD = 10007
 # multi-table defaults: 4 tables x 12 planes = 4096 buckets per table --
 # high-cardinality keys (no quadratic bucket blocks) with recall
@@ -119,22 +117,6 @@ def norm_col(a: str, dims: int) -> Column:
     return F.expr(f"SQRT({sql_norm2(a, dims)})")
 
 
-def _fold_dot(a, b, dims: int | None = None) -> Column:
-    """HOF fallback for unknown dims (interpreted per element — slow path;
-    the engine always knows its embedding width and uses the text builders)."""
-    if dims is not None and isinstance(a, str) and isinstance(b, str):
-        return dot_col(a, b, dims)
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _fold_norm2(a, dims: int | None = None) -> Column:
-    if dims is not None and isinstance(a, str):
-        return F.expr(sql_norm2(a, dims))
-    return F.aggregate(a, F.lit(0.0),
-                       lambda acc, v: acc + v.cast("double") * v.cast("double"))
-
-
 def cosine_cols(a: str, b: str, dims: int) -> Column:
     """cos = dot / (sqrt(|a|^2) * sqrt(|b|^2)) — the list_cosine_similarity
     op order, for bitwise oracle parity. ``a``/``b`` are column names."""
@@ -170,26 +152,6 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int,
     return (cand.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("query_id", "vec_id", F.col("rank").cast("int").alias("rank"), "cos"))
-
-
-def _sql_bucket(vec_col: str, dims: int, n_planes: int, plane_base: int) -> str:
-    """Bucket key for one table: sum over planes of (dot(v, w_p) >= 0) << p,
-    planes ``plane_base .. plane_base + n_planes - 1``. One SQL string."""
-    terms = []
-    for p in range(n_planes):
-        ws = plane_weights(plane_base + p, dims)
-        terms.append(f"(CASE WHEN {sql_dot_weights(vec_col, ws)} >= 0 "
-                     f"THEN CAST({1 << p} AS BIGINT) ELSE CAST(0 AS BIGINT) END)")
-    return " + ".join(terms)
-
-
-def lsh_buckets(corpus: DataFrame, dims: int, n_planes: int = N_PLANES,
-                id_col="vec_id", vec_col="embedding",
-                plane_base: int = 0) -> DataFrame:
-    """Single-table random-hyperplane LSH: bucket = sum over planes of
-    (dot(v, w_p) >= 0) << p. One narrow JVM stage. Output: (vec_id, bucket)."""
-    bucket = F.expr(_sql_bucket(vec_col, dims, n_planes, plane_base))
-    return corpus.select(F.col(id_col).alias("vec_id"), bucket.alias("bucket"))
 
 
 def lsh_tables(corpus: DataFrame, dims: int,

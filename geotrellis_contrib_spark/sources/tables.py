@@ -175,11 +175,6 @@ def read_tiles(spark: SparkSession, path: str, zoom: int | None = None,
     return df
 
 
-def input_files(df: DataFrame) -> list[str]:
-    """Files the plan will actually read (partition-pruning evidence)."""
-    return df.inputFiles()
-
-
 def write_doc_table(docs: DataFrame, path: str, n_partitions: int = 64) -> None:
     """Document table layout: range-partitioned by doc_id (append-friendly,
     balanced); spans stay opaque."""

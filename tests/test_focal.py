@@ -99,11 +99,37 @@ def test_focal_radius2_boundary(spark):
     assert got[("scene-1", 0, 20, 24)] == (want, int(m.sum()))
 
 
-def test_focal_single_shuffle_plan(spark):
+# the ten per-tile checksum operators, each built as fn(tiles, pred, t)
+# with ``pred`` the euclidean operators' mask predicate
+FOCAL_OPS = {
+    "focal_stats": lambda tiles, pred, t: FO.focal_stats(
+        tiles, op="mean", radius=1, tile_size=t),
+    "tri_stats": lambda tiles, pred, t: FO.tri_stats(tiles, tile_size=t),
+    "terrain_stats": lambda tiles, pred, t: FO.terrain_stats(
+        tiles, tile_size=t),
+    "curvature_stats": lambda tiles, pred, t: FO.curvature_stats(
+        tiles, tile_size=t),
+    "hillshade_stats": lambda tiles, pred, t: FO.hillshade_stats(
+        tiles, tile_size=t),
+    "convolve_stats": lambda tiles, pred, t: FO.convolve_stats(
+        tiles, tile_size=t),
+    "euclidean_distance": lambda tiles, pred, t: FO.euclidean_distance(
+        tiles, pred, radius=2, tile_size=t),
+    "flow_direction": lambda tiles, pred, t: FO.flow_direction(
+        tiles, tile_size=t),
+    "euclidean_allocation": lambda tiles, pred, t: FO.euclidean_allocation(
+        tiles, pred, radius=2, tile_size=t),
+    "tpi_roughness": lambda tiles, pred, t: FO.tpi_roughness(
+        tiles, tile_size=t),
+}
+
+
+@pytest.mark.parametrize("op", list(FOCAL_OPS))
+def test_focal_single_shuffle_plan(spark, op):
     # scale posture: exactly ONE exchange (the groupBy on tile keys) —
     # strip extraction must not add a shuffle
     tiles = corpus.synth_px_tiles(spark, tile_size=T)
-    plan = FO.focal_stats(tiles, op="mean", radius=1) \
+    plan = FOCAL_OPS[op](tiles, lambda v, gr, gc: gr % 2 == 0, T) \
         ._jdf.queryExecution().executedPlan().toString()
     n_exchange = plan.count("Exchange")
     assert n_exchange - plan.count("ReusedExchange") <= 1, plan
@@ -605,3 +631,46 @@ def test_tpi_roughness_numpy_replay(spark):
                            int(np.floor(rough[sl] * 4.0 + 0.5)[o]
                                .astype(np.int64).sum()))
                     assert got[key] == exp
+
+
+CT = 8  # row-contract mosaic: 3x3 tiles of CT px, cols 10..12, rows 20..22
+ABSENT, ALL_NODATA = (11, 21), (12, 21)
+PRESENT = {(c, r) for c in (10, 11, 12) for r in (20, 21, 22)} - {ABSENT}
+# which tiles emit a row: every present tile for the seven row-always
+# operators; only tiles with a hit for the three that emit none without
+# one (the one mask cell, at the SE corner of tile (10, 20), reaches its
+# E and S neighbors within radius 2; every valid tile has a full 3x3)
+ROW_KEYS = {op: PRESENT for op in FOCAL_OPS}
+ROW_KEYS["euclidean_distance"] = {(10, 20), (11, 20), (10, 21)}
+ROW_KEYS["euclidean_allocation"] = {(10, 20), (11, 20), (10, 21)}
+ROW_KEYS["tpi_roughness"] = PRESENT - {ALL_NODATA}
+
+
+@pytest.mark.parametrize("op", list(FOCAL_OPS))
+def test_focal_row_contract(spark, op):
+    """Halo-only groups (the ring around the mosaic, the absent tile)
+    never emit a row; the all-NoData tile emits one exactly for the
+    row-always operators."""
+    from geotrellis_contrib_spark.operators.pixels import pack
+    r = np.arange(CT).reshape(-1, 1)
+    c = np.arange(CT).reshape(1, -1)
+    rows = []
+    for col, row in sorted(PRESENT):
+        a = (col * 7.0 + row * 3.0 + r * 0.5 + c * 0.25
+             + ((r * 31 + c * 17) % 13))
+        if (col, row) == ALL_NODATA:
+            a = np.full((CT, CT), NOD)
+        rows.append(("s", 0, 6, col, row, 0, "float64", NOD, pack(a)))
+    tiles = spark.createDataFrame(
+        rows, "source_id string, source_idx int, zoom int, col bigint, "
+              "row bigint, band int, dtype string, nodata double, "
+              "px binary")
+    seed = (20 * CT + CT - 1, 10 * CT + CT - 1)
+    got = FOCAL_OPS[op](
+        tiles, lambda v, gr, gc: (gr == seed[0]) & (gc == seed[1]),
+        CT).collect()
+    keys = {(x["col"], x["row"]) for x in got}
+    assert len(keys) == len(got)
+    assert keys <= PRESENT and ABSENT not in keys
+    assert keys == ROW_KEYS[op]
+    assert {(x["source_id"], x["band"]) for x in got} == {("s", 0)}
