@@ -1878,10 +1878,11 @@ def q_stream_network(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_stream_network_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAM NETWORK, FORCED-DISTRIBUTED (scene_max_px=0): one more
-    halo pass over the converged _flow_rounds_state — (chosen, acc)
-    strips exchange UNCONDITIONALLY (a non-flowing neighbor cell can
-    still be a stream TARGET: a pit past the threshold), then the same
-    local stream/head/link arrays. Bit-identical to the scene path by
+    halo pass over the converged flow_accumulation state of the
+    focal.halo_rounds driver, with the driver's strip cut and frame
+    assembly — (chosen, acc) strips exchange UNCONDITIONALLY (a
+    non-flowing neighbor cell can still be a stream TARGET: a pit past
+    the threshold), then the same local stream/head/link arrays. Bit-identical to the scene path by
     construction; same oracle."""
     from geotrellis_contrib_spark import corpus as corpus_mod
     from geotrellis_contrib_spark.operators import focal as FO

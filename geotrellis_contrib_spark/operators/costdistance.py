@@ -8,15 +8,17 @@ for orthogonal moves, ``diag`` for diagonal — GeoTrellis uses the
 physical cell distances; the gate fixture uses dyadic 1.0/1.5 so sums
 are exact). NoData friction cells are impassable.
 
-Spark-first plan — synchronous tile rounds with halo exchange (the
-iterative sibling of the focal stencil in ``operators/focal.py``):
+Spark-first plan — synchronous tile rounds with halo exchange on
+``focal.halo_rounds`` (the iterative sibling of ``focal.focal_map``):
   round 0: per tile, seed cells get cost 0 and an in-tile vectorized
     8-way min-relaxation runs to its LOCAL fixpoint (``mapInPandas``,
-    zero shuffle);
-  round k: every tile cuts the 1-px edge strips of (cost, friction) its
-    8 neighbors need, plus its own full state, into ONE
-    ``groupBy(source,band,col,row).applyInPandas`` shuffle; each tile
-    re-relaxes against the neighbor costs and reports whether anything
+    zero shuffle — cost needs no halo);
+  round k: the driver cuts the 1-px edge strips of (cost, friction) of
+    every tile that improved last round, plus each tile's own state,
+    into ONE ``groupBy(source,band,col,row).applyInPandas`` shuffle; the
+    relax kernel ``k_cost_relax`` re-relaxes each (t+2)^2 frame against
+    the neighbor costs (a memory-less ring: NaN friction, +inf cost
+    where no strip arrived) and the driver reports whether anything
     improved. Rounds repeat until a global fixpoint (no tile improved),
     fail-loud at ``max_iter``.
 Per-round shuffle volume is ~2.1x tile bytes (cost+friction center +
@@ -38,6 +40,7 @@ int64 — exact on dyadic costs) then sums integers."""
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Callable, Iterator
 
 import numpy as np
@@ -46,17 +49,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark.operators.focal import (
-    _NEIGHBORS, _assemble_frame, _halo_pieces, _ring_slot, _strip)
+    _KEY_DDL, _NEIGHBORS, _assemble_frame, _halo_pieces, _mosaic,
+    _scene_small, _span, halo_rounds)
 from geotrellis_contrib_spark.operators.pixels import DTYPES, pack
-from geotrellis_contrib_spark.plans.iterate import (
-    border_doubling, fixpoint, flag_clear)
+from geotrellis_contrib_spark.plans.iterate import border_doubling
 from geotrellis_contrib_spark.util import compute_grouped, compute_spread
-
-_STATE_SCHEMA = ("source_id string, band int, col bigint, row bigint, "
-                 "friction binary, cost binary, improved int")
-_PIECE_SCHEMA = ("source_id string, band int, col bigint, row bigint, "
-                 "dr int, dc int, h int, w int, friction binary, "
-                 "cost binary")
 
 
 def _relax(cost: np.ndarray, fric: np.ndarray, straight: float,
@@ -91,13 +88,30 @@ def _relax(cost: np.ndarray, fric: np.ndarray, straight: float,
     return np.where(valid, cost, np.inf)
 
 
-def _solve(tiles: DataFrame,
-           seed_predicate: Callable[[np.ndarray, np.ndarray,
-                                     np.ndarray], np.ndarray],
-           tile_size: int, straight: float, diag: float,
-           max_cost: float | None, max_iter: int) -> DataFrame:
-    """Run the synchronous tile rounds to the global fixpoint; returns
-    the converged state DataFrame (cost tiles as float64 binary)."""
+def k_cost_relax(frames, t, *, straight, diag, max_cost):
+    """A cost_distance round: re-relax the tile against the neighbor
+    (cost, friction) strips in its ring."""
+    return {"cost": _relax(frames["cost"], frames["friction"], straight,
+                           diag, max_cost)[1:1 + t, 1:1 + t]}
+
+
+# (friction, cost) travel over a memory-less ring (NaN friction, +inf
+# cost: a missing strip offers nothing); a strip offers something when
+# one of its costs is finite
+_COST_ROUNDS = dict(
+    strips={"friction": np.float64, "cost": np.float64},
+    ring={"friction": (np.nan, False), "cost": (np.inf, False)},
+    offers=lambda piece: bool(np.isfinite(piece["cost"]).any()))
+
+
+def _cost_rounds(tiles: DataFrame,
+                 seed_predicate: Callable[[np.ndarray, np.ndarray,
+                                           np.ndarray], np.ndarray],
+                 tile_size: int, straight: float, diag: float,
+                 max_cost: float | None, max_iter: int) -> DataFrame:
+    """Run the synchronous tile rounds (:func:`halo_rounds`) to the
+    global fixpoint; returns the converged state DataFrame (cost tiles
+    as float64 binary)."""
     t = int(tile_size)
     if straight <= 0 or diag <= 0:
         raise ValueError("step distances must be positive")
@@ -124,104 +138,17 @@ def _solve(tiles: DataFrame,
                 out.append({"source_id": row_t.source_id,
                             "band": int(row_t.band),
                             "col": int(row_t.col), "row": int(row_t.row),
-                            "friction": pack(fric), "cost": pack(cost),
-                            "improved": 1})
+                            "friction": pack(fric), "cost": pack(cost)})
             yield pd.DataFrame(out, columns=[
-                "source_id", "band", "col", "row", "friction", "cost",
-                "improved"])
+                "source_id", "band", "col", "row", "friction", "cost"])
 
-    state = compute_spread(tiles).mapInPandas(init, _STATE_SCHEMA) \
-                                 .localCheckpoint(eager=True)
-
-    def cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                out.append({"source_id": row_t.source_id,
-                            "band": int(row_t.band),
-                            "col": int(row_t.col), "row": int(row_t.row),
-                            "dr": 0, "dc": 0, "h": t, "w": t,
-                            "friction": row_t.friction,
-                            "cost": row_t.cost})
-                # delta propagation (r7, guide §2.3): a tile that did
-                # NOT improve last round would re-offer the exact strips
-                # it already offered — min-relaxation is idempotent in
-                # its offers, so skipping them is EXACT (the receiving
-                # tile integrated the same values in an earlier round;
-                # a missing strip leaves inf ring cells, which offer
-                # nothing). Shuffle volume and relax work shrink to the
-                # active wavefront instead of the whole mosaic.
-                if not int(row_t.improved):
-                    continue
-                fric = np.frombuffer(row_t.friction,
-                                     dtype=np.float64).reshape(t, t)
-                cost = np.frombuffer(row_t.cost,
-                                     dtype=np.float64).reshape(t, t)
-                for dr, dc in _NEIGHBORS:
-                    fp = np.ascontiguousarray(_strip(fric, dr, dc, 1))
-                    cp = np.ascontiguousarray(_strip(cost, dr, dc, 1))
-                    if not np.isfinite(cp).any():
-                        continue  # nothing reachable to offer
-                    out.append({"source_id": row_t.source_id,
-                                "band": int(row_t.band),
-                                "col": int(row_t.col) + dc,
-                                "row": int(row_t.row) + dr,
-                                "dr": dr, "dc": dc,
-                                "h": fp.shape[0], "w": fp.shape[1],
-                                "friction": pack(fp), "cost": pack(cp)})
-            yield pd.DataFrame(out, columns=[
-                "source_id", "band", "col", "row", "dr", "dc", "h", "w",
-                "friction", "cost"])
-
-    def relax_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        p = t + 2
-        # pass-through fast path (r7): no incoming strips means no new
-        # offers — the tile's min-cost state cannot change, so skip the
-        # frame assembly and the relaxation sweeps entirely (exact: see
-        # the delta-propagation note in `cut`)
-        if len(pdf) == 1 and int(pdf["dr"].iat[0]) == 0 \
-                and int(pdf["dc"].iat[0]) == 0:
-            out = pdf.iloc[[0]][["source_id", "band", "col", "row",
-                                 "friction", "cost"]].copy()
-            out["improved"] = 0
-            return out
-        fric = np.full((p, p), np.nan)
-        cost = np.full((p, p), np.inf)
-        center = None
-        for row_t in pdf.itertuples(index=False):
-            fa = np.frombuffer(row_t.friction, dtype=np.float64) \
-                   .reshape(int(row_t.h), int(row_t.w))
-            ca = np.frombuffer(row_t.cost, dtype=np.float64) \
-                   .reshape(int(row_t.h), int(row_t.w))
-            dr, dc = int(row_t.dr), int(row_t.dc)
-            if dr == 0 and dc == 0:
-                center = row_t
-            slot = _ring_slot(dr, dc, 1, t)
-            fric[slot] = fa
-            cost[slot] = ca
-        if center is None:
-            return pd.DataFrame(columns=[
-                "source_id", "band", "col", "row", "friction", "cost",
-                "improved"])
-        old = cost[1:1 + t, 1:1 + t].copy()
-        new = _relax(cost, fric, straight, diag, max_cost)[1:1 + t,
-                                                           1:1 + t]
-        improved = int(bool(np.any(new < old)))
-        return pd.DataFrame([{
-            "source_id": center.source_id, "band": int(center.band),
-            "col": int(center.col), "row": int(center.row),
-            "friction": center.friction, "cost": pack(new),
-            "improved": improved}])
-
-    return fixpoint(
-        state, lambda st: compute_grouped(
-            st.mapInPandas(cut, _PIECE_SCHEMA),
-            "source_id", "band", "col", "row")
-        .applyInPandas(relax_group, _STATE_SCHEMA),
-        F.max("improved"), rounds=1, max_syncs=max_iter, stop=flag_clear,
-        name="cost_distance",
-        message=f"cost_distance did not reach a global fixpoint in "
-                f"{max_iter} rounds; raise max_iter")
+    state = compute_spread(tiles).mapInPandas(
+        init, f"{_KEY_DDL}, friction binary, cost binary")
+    return halo_rounds(
+        state, t, **_COST_ROUNDS,
+        relax=partial(k_cost_relax, straight=straight, diag=diag,
+                      max_cost=max_cost),
+        max_iter=max_iter, name="cost_distance")
 
 
 def _solve_scene(tiles: DataFrame, seed_predicate, tile_size: int,
@@ -236,25 +163,14 @@ def _solve_scene(tiles: DataFrame, seed_predicate, tile_size: int,
 
     def solve_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         source_id, band = key[0], int(key[1])
-        cols = pdf["col"].to_numpy()
-        rows = pdf["row"].to_numpy()
-        c0, r0 = int(cols.min()), int(rows.min())
-        nc, nr = int(cols.max()) - c0 + 1, int(rows.max()) - r0 + 1
-        fric = np.full((nr * t, nc * t), np.nan)
-        for row_t in pdf.itertuples(index=False):
-            arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                    .reshape(t, t).astype(np.float64)
-            arr = np.where(np.isnan(arr) | (arr == row_t.nodata),
-                           np.nan, arr)
-            fric[(int(row_t.row) - r0) * t:(int(row_t.row) - r0 + 1) * t,
-                 (int(row_t.col) - c0) * t:(int(row_t.col) - c0 + 1) * t] \
-                = arr
+        fric, r0, c0 = _mosaic(pdf, t)
         if not np.all(np.isnan(fric)) and float(np.nanmin(fric)) <= 0.0:
             raise ValueError("friction must be positive")
-        gr = (r0 * t + np.arange(nr * t).reshape(-1, 1)) \
-            + np.zeros((1, nc * t), dtype=np.int64)
-        gc = np.zeros((nr * t, 1), dtype=np.int64) \
-            + (c0 * t + np.arange(nc * t).reshape(1, -1))
+        H, W = fric.shape
+        gr = (r0 * t + np.arange(H).reshape(-1, 1)) \
+            + np.zeros((1, W), dtype=np.int64)
+        gc = np.zeros((H, 1), dtype=np.int64) \
+            + (c0 * t + np.arange(W).reshape(1, -1))
         seed = seed_predicate(fric, gr, gc) & ~np.isnan(fric)
         cost = np.where(seed, 0.0, np.inf)
         cost = _relax(cost, fric, straight, diag, max_cost)
@@ -264,37 +180,25 @@ def _solve_scene(tiles: DataFrame, seed_predicate, tile_size: int,
             tx = (int(row_t.col) - c0) * t
             out.append({"source_id": source_id, "band": band,
                         "col": int(row_t.col), "row": int(row_t.row),
-                        "friction": b"", "cost": pack(
-                            np.ascontiguousarray(
-                                cost[ty:ty + t, tx:tx + t])),
-                        "improved": 0})
+                        "cost": pack(cost[ty:ty + t, tx:tx + t])})
         return pd.DataFrame(out, columns=[
-            "source_id", "band", "col", "row", "friction", "cost",
-            "improved"])
+            "source_id", "band", "col", "row", "cost"])
 
     return compute_grouped(tiles, "source_id", "band").applyInPandas(
-        solve_group, _STATE_SCHEMA)
+        solve_group, f"{_KEY_DDL}, cost binary")
 
 
 def _adaptive_state(tiles: DataFrame, seed_predicate, t: int,
                     straight: float, diag: float,
                     max_cost: float | None, max_iter: int,
                     scene_max_px: int) -> DataFrame:
-    """Pick scene-solve vs synchronous rounds: one cheap agg job reads
-    the largest scene footprint; ``scene_max_px=0`` forces rounds."""
-    small = False
-    if scene_max_px:
-        ext = tiles.groupBy("source_id", "band").agg(
-            ((F.max("col") - F.min("col") + 1) * t).alias("w"),
-            ((F.max("row") - F.min("row") + 1) * t).alias("h")) \
-            .agg(F.max(F.greatest("w", "h")).alias("m")).collect()
-        small = bool(ext) and ext[0]["m"] is not None \
-            and int(ext[0]["m"]) <= int(scene_max_px)
-    if small:
+    """Pick scene-solve vs synchronous rounds (``focal._scene_small``;
+    ``scene_max_px=0`` forces rounds)."""
+    if _scene_small(tiles, t, scene_max_px):
         return _solve_scene(tiles, seed_predicate, t, straight, diag,
                             max_cost)
-    return _solve(tiles, seed_predicate, t, straight, diag, max_cost,
-                  max_iter)
+    return _cost_rounds(tiles, seed_predicate, t, straight, diag,
+                        max_cost, max_iter)
 
 
 def cost_distance(tiles: DataFrame,
@@ -369,21 +273,10 @@ def _lcp_scene(tiles: DataFrame, seed_predicate, targets,
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         source_id, band = key[0], int(key[1])
-        cols = pdf["col"].to_numpy()
-        rows = pdf["row"].to_numpy()
-        c0, r0 = int(cols.min()), int(rows.min())
-        nc, nr = int(cols.max()) - c0 + 1, int(rows.max()) - r0 + 1
-        if nc * t > max_px or nr * t > max_px:
+        if _span(pdf, t) > max_px:
             raise ValueError(f"scene {source_id} exceeds max_px={max_px}")
-        fric = np.full((nr * t, nc * t), np.nan)
-        for row_t in pdf.itertuples(index=False):
-            arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                    .reshape(t, t).astype(np.float64)
-            fric[(int(row_t.row) - r0) * t:(int(row_t.row) - r0 + 1) * t,
-                 (int(row_t.col) - c0) * t:(int(row_t.col) - c0 + 1) * t] \
-                = np.where(np.isnan(arr) | (arr == row_t.nodata),
-                           np.nan, arr)
-        # same guard as _solve/_solve_scene: with zero friction the exact
+        fric, r0, c0 = _mosaic(pdf, t)
+        # same guard as _cost_rounds/_solve_scene: with zero friction the exact
         # optimality equation holds in both directions and the backtrack
         # can ping-pong between equal-cost cells (r5 ADVICE)
         if not np.all(np.isnan(fric)) and float(np.nanmin(fric)) <= 0.0:
@@ -459,7 +352,8 @@ def _lcp_dist(tiles: DataFrame, seed_predicate, targets,
     contraction pattern applied to the backtrack):
 
     1. The converged cost surface comes from the synchronous halo-rounds
-       solver (`_solve` — bit-identical to the scene fixpoint), so the
+       solver (`_cost_rounds` on `focal.halo_rounds` — bit-identical to
+       the scene fixpoint), so the
        exact optimality equality holds across tile boundaries.
     2. ONE halo shuffle ships each tile its 1-px (cost, friction)
        neighbor strips; per tile, every cell's predecessor (FIRST
@@ -479,8 +373,8 @@ def _lcp_dist(tiles: DataFrame, seed_predicate, targets,
     friction and the predecessor rule are all bit-identical."""
     t = int(tile_size)
     p = t + 2
-    state = _solve(tiles, seed_predicate, t, straight, diag, None,
-                   max_iter)
+    state = _cost_rounds(tiles, seed_predicate, t, straight, diag, None,
+                         max_iter)
     nan = float("nan")
     planes = None
     for plane, src in ((0, "cost"), (1, "friction")):
@@ -635,15 +529,7 @@ def least_cost_path(tiles: DataFrame, seed_predicate, targets,
     ``max_px=0`` forces distributed. Both paths are bit-identical
     (pytest parity on multi-tile fixtures)."""
     t = int(tile_size)
-    small = False
-    if max_px:
-        ext = tiles.groupBy("source_id", "band").agg(
-            ((F.max("col") - F.min("col") + 1) * t).alias("w"),
-            ((F.max("row") - F.min("row") + 1) * t).alias("h")) \
-            .agg(F.max(F.greatest("w", "h")).alias("m")).collect()
-        small = bool(ext) and ext[0]["m"] is not None \
-            and int(ext[0]["m"]) <= int(max_px)
-    if small:
+    if _scene_small(tiles, t, max_px):
         return _lcp_scene(tiles, seed_predicate, targets, t, straight,
                           diag, max_px)
     return _lcp_dist(tiles, seed_predicate, targets, t, straight, diag,

@@ -27,6 +27,21 @@ dict, or None for "no row" (nothing hit). Halo-only groups — the
 receiving tile does not exist — never reach a kernel and emit no row.
 Quantize-first checksums go through ``_qsum``.
 
+Iterative operators (cost_distance, flow_accumulation, fill_sinks) run
+on ``halo_rounds``, the synchronous-rounds sibling of ``focal_map``: the
+operator builds its round-0 state (key columns plus one binary t x t
+plane per column) and hands over a spec — which planes travel as 1-px
+strips, which stay home, each strip plane's ring fill and whether the
+tile keeps ring memory, an ``offers(piece)`` test for strips worth
+sending — and a module-level relax kernel ``k_<op>_relax(frames, t)``.
+The kernel gets one (t+2)^2 frame per plane (interior = the tile,
+ring = neighbor strips, ring memory or the fill; a home plane's ring is
+NaN) and returns the new t x t interiors of the planes it updates;
+frames may be changed in place. Per round the driver cuts the strips of
+tiles that improved last round, shuffles once on the tile key, passes
+through tiles that received no strip, and stops at the first round in
+which no tile improved (``improved = any(new != old)``).
+
 Determinism contract (mirrored by the ``focal_stats`` SQL oracle in
 ``__spark_entry__.py`` — change one only with the other):
   * the 3x3 accumulation adds the 9 neighbor terms in FIXED lexicographic
@@ -161,6 +176,220 @@ def focal_map(tiles: DataFrame, r: int, t: int, kernel,
     return compute_grouped(
         _halo_pieces(tiles, r, t), "source_id", "band", "col", "row") \
         .applyInPandas(stencil, schema)
+
+
+_KEY = ("source_id", "band", "col", "row")
+_KEY_DDL = "source_id string, band int, col bigint, row bigint"
+
+
+def _ring_store(frame: np.ndarray) -> bytes:
+    """Serialize a (p, p) frame's 1-px ring (top row, bottom row, left
+    column, right column — corners ride the rows) for ring memory."""
+    return np.ascontiguousarray(np.concatenate(
+        [frame[0, :], frame[-1, :],
+         frame[1:-1, 0], frame[1:-1, -1]])).tobytes()
+
+
+def _ring_load(frame: np.ndarray, buf: bytes, dtype) -> None:
+    p = frame.shape[0]
+    a = np.frombuffer(buf, dtype=dtype)
+    frame[0, :] = a[:p]
+    frame[-1, :] = a[p:2 * p]
+    frame[1:-1, 0] = a[2 * p:3 * p - 2]
+    frame[1:-1, -1] = a[3 * p - 2:]
+
+
+def _piece_ddl(strips: dict, carry=()) -> str:
+    return ", ".join([_KEY_DDL, "dr int, dc int, h int, w int",
+                      *(f"{c} binary" for c in (*strips, *carry))])
+
+
+def _halo_cut(t: int, strips: dict, carry=(), offers=None,
+              every: bool = False):
+    """The strip cut of a halo round (a ``mapInPandas`` body over the
+    state): every tile emits its center piece (the ``strips`` planes
+    plus the ``carry`` columns) and the 1-px strips of its ``strips``
+    planes that each of its 8 neighbors needs, keyed by the receiving
+    tile. ``offers(piece)`` drops a strip that cannot change its
+    receiver; ``every`` cuts unimproved tiles too."""
+    cols = [*_KEY, "dr", "dc", "h", "w", *strips, *carry]
+
+    def cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for row_t in pdf.itertuples(index=False):
+                key = {"source_id": row_t.source_id,
+                       "band": int(row_t.band),
+                       "col": int(row_t.col), "row": int(row_t.row)}
+                out.append({**key, "dr": 0, "dc": 0, "h": t, "w": t,
+                            **{c: getattr(row_t, c)
+                               for c in (*strips, *carry)}})
+                # delta propagation (r7): a tile that did NOT
+                # improve last round would re-offer the exact strips it
+                # already offered; its receivers hold them in ring memory
+                # or, with a memory-less ring, integrated them already
+                # and relaxation is idempotent in its offers — so
+                # skipping them is exact, and shuffle volume and relax
+                # work shrink to the active wavefront
+                if not (every or int(row_t.improved)):
+                    continue
+                arrs = {k: np.frombuffer(getattr(row_t, k), dtype=dt)
+                        .reshape(t, t) for k, dt in strips.items()}
+                for dr, dc in _NEIGHBORS:
+                    piece = {k: np.ascontiguousarray(_strip(a, dr, dc, 1))
+                             for k, a in arrs.items()}
+                    if offers is not None and not offers(piece):
+                        continue
+                    out.append({**key, "col": key["col"] + dc,
+                                "row": key["row"] + dr, "dr": dr, "dc": dc,
+                                "h": 1 if dr else t, "w": 1 if dc else t,
+                                **{k: v.tobytes() for k, v in piece.items()},
+                                **dict.fromkeys(carry)})
+            yield pd.DataFrame(out, columns=cols)
+
+    return cut
+
+
+def _split_center(pdf: pd.DataFrame):
+    """A receiving tile's pieces -> (center row or None for a halo-only
+    group, list of strip rows)."""
+    center, pieces = None, []
+    for row_t in pdf.itertuples(index=False):
+        if int(row_t.dr) == 0 and int(row_t.dc) == 0:
+            center = row_t
+        else:
+            pieces.append(row_t)
+    return center, pieces
+
+
+def _halo_frames(center, pieces, t: int, planes: dict, ring: dict) -> dict:
+    """One (t+2)^2 frame per plane: the ring starts at the plane's fill
+    (``ring[plane] = (fill, memory)``; NaN for a plane not in ``ring``)
+    or, with memory, at the center row's ``ring_<plane>``; the center
+    fills the interior and each strip its ring slot."""
+    p = t + 2
+    frames = {}
+    for k, dt in planes.items():
+        fill, memory = ring.get(k, (np.nan, False))
+        frame = np.full((p, p), fill, dtype=dt)
+        if memory:
+            _ring_load(frame, getattr(center, f"ring_{k}"), dt)
+        frame[1:1 + t, 1:1 + t] = np.frombuffer(
+            getattr(center, k), dtype=dt).reshape(t, t)
+        frames[k] = frame
+    for row_t in pieces:
+        slot = _ring_slot(int(row_t.dr), int(row_t.dc), 1, t)
+        for k in ring:
+            frames[k][slot] = np.frombuffer(
+                getattr(row_t, k), dtype=planes[k]).reshape(
+                    int(row_t.h), int(row_t.w))
+    return frames
+
+
+def _halo_round(t: int, *, strips: dict, home=None, ring: dict, offers,
+                relax):
+    """One round of :func:`halo_rounds` as plain pandas functions:
+    (round-0 columns, cut, relax_tile, piece DDL, state DDL). ``cut`` is
+    the ``mapInPandas`` body and ``relax_tile`` the grouped-map body on
+    the tile key."""
+    home = home or {}
+    planes = {**home, **strips}
+    memory = [k for k, (_, keep) in ring.items() if keep]
+    kept = [f"ring_{k}" for k in memory]
+    cols = [*_KEY, *planes, "improved", *kept]
+    state_ddl = ", ".join([_KEY_DDL, *(f"{c} binary" for c in planes),
+                           "improved int", *(f"{c} binary" for c in kept)])
+    carry = [*kept, *home]
+    p = t + 2
+    start = {"improved": 1, **{
+        f"ring_{k}": np.full(4 * p - 4, ring[k][0],
+                             dtype=strips[k]).tobytes() for k in memory}}
+
+    def relax_tile(pdf: pd.DataFrame) -> pd.DataFrame:
+        center, pieces = _split_center(pdf)
+        if center is None:
+            return pd.DataFrame(columns=cols)
+        out = {c: getattr(center, c) for c in cols if c != "improved"}
+        if not pieces:
+            # pass-through (r7 delta propagation): no new strips means
+            # an unchanged ring, so the tile's fixpoint cannot move
+            out["improved"] = 0
+            return pd.DataFrame([out], columns=cols)
+        frames = _halo_frames(center, pieces, t, planes, ring)
+        out.update({f"ring_{k}": _ring_store(frames[k]) for k in memory})
+        improved = False
+        for k, new in relax(frames, t).items():
+            old = np.frombuffer(getattr(center, k), dtype=planes[k])
+            improved |= bool(np.any(new != old.reshape(t, t)))
+            out[k] = pack(new)
+        out["improved"] = int(improved)
+        return pd.DataFrame([out], columns=cols)
+
+    return (start, _halo_cut(t, strips, carry, offers), relax_tile,
+            _piece_ddl(strips, carry), state_ddl)
+
+
+def halo_rounds(state: DataFrame, t: int, *, strips: dict, home=None,
+                ring: dict, offers, relax, max_iter: int,
+                name: str) -> DataFrame:
+    """The halo-rounds driver of every iterative raster operator (module
+    docstring). ``state`` is the round-0 state: the key columns plus one
+    binary t x t plane per key of ``strips`` (planes that travel as 1-px
+    strips) and ``home`` (planes that stay home), each a {plane: dtype}
+    map. ``ring`` maps each strip plane to (ring fill, ring memory);
+    ``offers(piece)`` (None: always) tests a {plane: strip} piece.
+    ``relax(frames, t)`` returns {plane: new interior}. Returns the
+    converged state; fail-loud after ``max_iter`` rounds."""
+    start, cut, relax_tile, piece_ddl, state_ddl = _halo_round(
+        t, strips=strips, home=home, ring=ring, offers=offers, relax=relax)
+    state = state.withColumns({c: F.lit(v) for c, v in start.items()}) \
+        .localCheckpoint(eager=True)
+    return fixpoint(
+        state, lambda st: compute_grouped(
+            st.mapInPandas(cut, piece_ddl), *_KEY)
+        .applyInPandas(relax_tile, state_ddl),
+        F.max("improved"), rounds=1, max_syncs=max_iter, stop=flag_clear,
+        name=name,
+        message=f"{name} did not reach a global fixpoint in "
+                f"{max_iter} rounds; raise max_iter")
+
+
+def _scene_small(tiles: DataFrame, t: int, scene_max_px: int) -> bool:
+    """Adaptive chooser of every scene-or-distributed operator: one cheap
+    agg job reads the largest scene footprint; ``scene_max_px=0`` forces
+    the distributed path."""
+    if not scene_max_px:
+        return False
+    ext = tiles.groupBy("source_id", "band").agg(
+        ((F.max("col") - F.min("col") + 1) * t).alias("w"),
+        ((F.max("row") - F.min("row") + 1) * t).alias("h")) \
+        .agg(F.max(F.greatest("w", "h")).alias("m")).collect()
+    return bool(ext) and ext[0]["m"] is not None \
+        and int(ext[0]["m"]) <= int(scene_max_px)
+
+
+def _span(pdf: pd.DataFrame, t: int) -> int:
+    """The longer side, in pixels, of a (source_id, band) group's tile
+    footprint — what the in-task ``max_px`` guards check before
+    :func:`_mosaic` allocates it."""
+    return t * (1 + max(int(pdf["col"].max() - pdf["col"].min()),
+                        int(pdf["row"].max() - pdf["row"].min())))
+
+
+def _mosaic(pdf: pd.DataFrame, t: int):
+    """A scene solver's (source_id, band) tiles as one float64 mosaic,
+    NaN on NoData and absent tiles: (z, r0, c0), (r0, c0) = the tile
+    coordinates of its top-left corner."""
+    c0, r0 = int(pdf["col"].min()), int(pdf["row"].min())
+    nc = int(pdf["col"].max()) - c0 + 1
+    nr = int(pdf["row"].max()) - r0 + 1
+    z = np.full((nr * t, nc * t), np.nan)
+    for row_t in pdf.itertuples(index=False):
+        arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
+                .reshape(t, t).astype(np.float64)
+        ty, tx = (int(row_t.row) - r0) * t, (int(row_t.col) - c0) * t
+        z[ty:ty + t, tx:tx + t] = np.where(arr == row_t.nodata, np.nan, arr)
+    return z, r0, c0
 
 
 def k_focal_stats(frame, t, col, row, *, r, op, offsets, classify_div):
@@ -624,17 +853,27 @@ _D8 = [(-1, -1, _D8_SQRT2, 32), (-1, 0, 1.0, 64), (-1, 1, _D8_SQRT2, 128),
        (1, -1, _D8_SQRT2, 8), (1, 0, 1.0, 4), (1, 1, _D8_SQRT2, 2)]
 
 
-def k_flow_direction(frame, t, col, row):
-    """:func:`flow_direction` per tile: D8 code sum, pits, valid cells."""
-    z = frame[1:1 + t, 1:1 + t]
-    valid = ~np.isnan(z)
+def _d8_rates(zp: np.ndarray):
+    """The D8 drop rates of every cell of a 1-px-NaN-padded elevation
+    frame ``zp``: (rates in _D8 order, their max ``best``). A rate is
+    (z - z_n) / dist toward a valid neighbor, -inf toward a NaN one.
+    Shared by flow_direction and ``_d8_chosen``."""
+    H, W = zp.shape[0] - 2, zp.shape[1] - 2
+    z = zp[1:1 + H, 1:1 + W]
+    best = np.full((H, W), -np.inf)
     rates = []
-    best = np.full((t, t), -np.inf)
-    for dr, dc, dist, code in _D8:
-        zn = frame[1 + dr:1 + dr + t, 1 + dc:1 + dc + t]
+    for dr, dc, dist, _ in _D8:
+        zn = zp[1 + dr:1 + dr + H, 1 + dc:1 + dc + W]
         rate = np.where(~np.isnan(zn), (z - zn) / dist, -np.inf)
         rates.append(rate)
         best = np.maximum(best, rate)
+    return rates, best
+
+
+def k_flow_direction(frame, t, col, row):
+    """:func:`flow_direction` per tile: D8 code sum, pits, valid cells."""
+    valid = ~np.isnan(frame[1:1 + t, 1:1 + t])
+    rates, best = _d8_rates(frame)
     code_sum = np.zeros((t, t), dtype=np.int64)
     for (dr, dc, dist, code), rate in zip(_D8, rates):
         code_sum += np.where((rate == best) & (best > 0.0), code, 0)
@@ -670,21 +909,12 @@ def _d8_chosen(zp: np.ndarray) -> np.ndarray:
     order (ties resolve first — the SQL oracle's CASE cascade order).
     Shared by the scene solvers AND the distributed halo paths, so both
     compute bit-identical directions from the same local arithmetic."""
-    H, W = zp.shape[0] - 2, zp.shape[1] - 2
-    z = zp[1:1 + H, 1:1 + W]
-    valid = ~np.isnan(z)
-    best = np.full((H, W), -np.inf)
-    rates = []
-    for dr, dc, dist, code in _D8:
-        zn = zp[1 + dr:1 + dr + H, 1 + dc:1 + dc + W]
-        rate = np.where(~np.isnan(zn), (z - zn) / dist, -np.inf)
-        rates.append(rate)
-        best = np.maximum(best, rate)
-    chosen = np.full((H, W), -1, dtype=np.int64)
+    rates, best = _d8_rates(zp)
+    chosen = np.full(best.shape, -1, dtype=np.int64)
     for idx in range(len(_D8) - 1, -1, -1):
         sel = (rates[idx] == best) & (best > 0.0)
         chosen[sel] = idx
-    chosen[~valid] = -2
+    chosen[np.isnan(zp[1:-1, 1:-1])] = -2
     return chosen
 
 
@@ -715,50 +945,8 @@ def _acc_fixpoint(accf: np.ndarray, chf: np.ndarray,
     return accf
 
 
-def _scene_small(tiles: DataFrame, t: int, scene_max_px: int) -> bool:
-    """Adaptive chooser (the cost_distance template): one cheap agg job
-    reads the largest scene footprint; ``scene_max_px=0`` forces the
-    distributed path."""
-    if not scene_max_px:
-        return False
-    ext = tiles.groupBy("source_id", "band").agg(
-        ((F.max("col") - F.min("col") + 1) * t).alias("w"),
-        ((F.max("row") - F.min("row") + 1) * t).alias("h")) \
-        .agg(F.max(F.greatest("w", "h")).alias("m")).collect()
-    return bool(ext) and ext[0]["m"] is not None \
-        and int(ext[0]["m"]) <= int(scene_max_px)
-
-
 _ACC_SCHEMA = ("source_id string, band int, col bigint, row bigint, "
                "acc_sum bigint, acc_max bigint, n_valid bigint")
-_FLOW_STATE = ("source_id string, band int, col bigint, row bigint, "
-               "chosen binary, acc binary, improved int, "
-               "ring binary, chring binary")
-_FLOW_PIECE = ("source_id string, band int, col bigint, row bigint, "
-               "dr int, dc int, h int, w int, chosen binary, acc binary, "
-               "ring binary, chring binary")
-
-
-def _ring_store(frame: np.ndarray) -> bytes:
-    """Serialize a (p, p) frame's 1-px ring (top row, bottom row, left
-    column, right column — corners ride the rows) for the delta-
-    propagation state (r7): retaining the last-received ring lets a
-    round skip strips from tiles that did not improve, shrinking the
-    per-round shuffle to the active wavefront while staying bit-exact
-    (an unimproved neighbor's strip would carry the values already
-    stored)."""
-    return np.ascontiguousarray(np.concatenate(
-        [frame[0, :], frame[-1, :],
-         frame[1:-1, 0], frame[1:-1, -1]])).tobytes()
-
-
-def _ring_load(frame: np.ndarray, buf: bytes, dtype) -> None:
-    p = frame.shape[0]
-    a = np.frombuffer(buf, dtype=dtype)
-    frame[0, :] = a[:p]
-    frame[-1, :] = a[p:2 * p]
-    frame[1:-1, 0] = a[2 * p:3 * p - 2]
-    frame[1:-1, -1] = a[3 * p - 2:]
 
 
 def _acc_rollup_rows(source_id, band, row_t, up, va):
@@ -775,17 +963,7 @@ def _flow_acc_scene(tiles: DataFrame, t: int) -> DataFrame:
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         source_id, band = key[0], int(key[1])
-        cols = pdf["col"].to_numpy()
-        rows = pdf["row"].to_numpy()
-        c0, r0 = int(cols.min()), int(rows.min())
-        nc, nr = int(cols.max()) - c0 + 1, int(rows.max()) - r0 + 1
-        z = np.full((nr * t, nc * t), np.nan)
-        for row_t in pdf.itertuples(index=False):
-            arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                    .reshape(t, t).astype(np.float64)
-            z[(int(row_t.row) - r0) * t:(int(row_t.row) - r0 + 1) * t,
-              (int(row_t.col) - c0) * t:(int(row_t.col) - c0 + 1) * t] \
-                = np.where(arr == row_t.nodata, np.nan, arr)
+        z, r0, c0 = _mosaic(pdf, t)
         H, W = z.shape
         valid = ~np.isnan(z)
         chosen = _d8_chosen(np.pad(z, 1, constant_values=np.nan))
@@ -809,150 +987,54 @@ def _flow_acc_scene(tiles: DataFrame, t: int) -> DataFrame:
         run, _ACC_SCHEMA)
 
 
+def k_acc_init(frame, t, col, row):
+    """Round 0 of the flow_accumulation rounds (a ``focal_map`` kernel):
+    D8 directions from the 1-px elevation halo and the in-tile
+    accumulation fixpoint with zero boundary inflow."""
+    chosen = _d8_chosen(frame)
+    base = (chosen >= -1).astype(np.float64)
+    accf = _acc_fixpoint(np.zeros((t + 2, t + 2)),
+                         np.pad(chosen, 1, constant_values=-1), base)
+    return {"chosen": chosen.astype(np.int8).tobytes(),
+            "acc": pack(accf[1:1 + t, 1:1 + t])}
+
+
+def k_acc_relax(frames, t):
+    """A flow_accumulation round: re-sweep the in-tile accumulation
+    fixpoint against the neighbors' frozen (acc, chosen) ring."""
+    chf = frames["chosen"]
+    base = (chf[1:1 + t, 1:1 + t] >= -1).astype(np.float64)
+    return {"acc": _acc_fixpoint(frames["acc"], chf, base)[1:1 + t,
+                                                          1:1 + t]}
+
+
+# (acc, chosen) travel; the ring keeps memory, starting as zero inflow
+# from a no-flow ring; a strip offers something when an edge cell flows
+_ACC_ROUNDS = dict(strips={"chosen": np.int8, "acc": np.float64},
+                   ring={"acc": (0.0, True), "chosen": (-1, True)},
+                   offers=lambda piece: bool((piece["chosen"] >= 0).any()),
+                   relax=k_acc_relax)
+
+
 def _flow_rounds_state(tiles: DataFrame, t: int,
                        max_iter: int) -> DataFrame:
-    """Converged distributed flow state (the cost_distance
-    synchronous-rounds template, r5 verdict task 1): NO scene-size
-    bound. Round 0 computes each tile's D8 directions from a 1-px
-    elevation halo (one shuffle) and its in-tile accumulation fixpoint
-    with zero boundary inflow; each subsequent round exchanges 1-px
-    (acc, chosen) edge strips and re-sweeps the in-tile fixpoint
-    against the neighbors' frozen acc. Values only INCREASE toward the
-    true accumulation (monotone inflow fixpoint over an acyclic
-    graph), so the global no-tile-improved fixpoint is exact and
-    bit-identical to the scene solve; round count is bounded by the
+    """Converged distributed flow state on :func:`halo_rounds`: NO
+    scene-size bound. Round 0 (``k_acc_init``, one halo shuffle)
+    computes each tile's D8 directions and its in-tile accumulation
+    fixpoint with zero boundary inflow; each round (``k_acc_relax``)
+    exchanges 1-px (acc, chosen) edge strips and re-sweeps the in-tile
+    fixpoint against the neighbors' frozen acc. Values only INCREASE
+    toward the true accumulation (monotone inflow fixpoint over an
+    acyclic graph), so the global no-tile-improved fixpoint is exact
+    and bit-identical to the scene solve; round count is bounded by the
     max number of tile-boundary crossings of any flow path, fail-loud
-    at ``max_iter``. Per-round shuffle volume is ~1.06x the acc bytes —
-    strips only, never full-tile replication. Returns the per-tile
-    (chosen, acc) state — consumed by the accumulation rollup and by
-    :func:`stream_network`'s distributed path."""
-
-    def init(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band, col, row = key
-        frame = _assemble_frame(pdf, 1, t)
-        if frame is None:
-            return pd.DataFrame(columns=["source_id", "band", "col",
-                                         "row", "chosen", "acc",
-                                         "improved", "ring", "chring"])
-        chosen = _d8_chosen(frame)
-        base = (chosen >= -1).astype(np.float64)
-        accf = _acc_fixpoint(np.zeros((t + 2, t + 2)),
-                             np.pad(chosen, 1, constant_values=-1), base)
-        p = t + 2
-        return pd.DataFrame([{
-            "source_id": source_id, "band": int(band),
-            "col": int(col), "row": int(row),
-            "chosen": chosen.astype(np.int8).tobytes(),
-            "acc": pack(np.ascontiguousarray(accf[1:1 + t, 1:1 + t])),
-            "improved": 1,
-            # round-0 ring state: zero boundary inflow, no-flow ring
-            "ring": np.zeros(4 * p - 4).tobytes(),
-            "chring": np.full(4 * p - 4, -1, dtype=np.int8).tobytes()}])
-
-    state = compute_grouped(_halo_pieces(tiles, 1, t),
-                            "source_id", "band", "col", "row") \
-        .applyInPandas(init, _FLOW_STATE).localCheckpoint(eager=True)
-
-    def cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                out.append({"source_id": row_t.source_id,
-                            "band": int(row_t.band),
-                            "col": int(row_t.col), "row": int(row_t.row),
-                            "dr": 0, "dc": 0, "h": t, "w": t,
-                            "chosen": row_t.chosen, "acc": row_t.acc,
-                            "ring": row_t.ring, "chring": row_t.chring})
-                # delta propagation (r7): an unimproved tile's edge
-                # strips are unchanged since it last sent them — every
-                # neighbor already holds those exact values in its ring
-                # state, so skipping them is bit-exact and the shuffle
-                # shrinks to the active wavefront
-                if not int(row_t.improved):
-                    continue
-                ch = np.frombuffer(row_t.chosen,
-                                   dtype=np.int8).reshape(t, t)
-                acc = np.frombuffer(row_t.acc,
-                                    dtype=np.float64).reshape(t, t)
-                for dr, dc in _NEIGHBORS:
-                    chp = np.ascontiguousarray(_strip(ch, dr, dc, 1))
-                    if not (chp >= 0).any():
-                        continue  # no cell on this edge flows anywhere
-                    acp = np.ascontiguousarray(_strip(acc, dr, dc, 1))
-                    out.append({"source_id": row_t.source_id,
-                                "band": int(row_t.band),
-                                "col": int(row_t.col) + dc,
-                                "row": int(row_t.row) + dr,
-                                "dr": dr, "dc": dc,
-                                "h": chp.shape[0], "w": chp.shape[1],
-                                "chosen": chp.tobytes(),
-                                "acc": pack(acp),
-                                "ring": None, "chring": None})
-            yield pd.DataFrame(out, columns=[
-                "source_id", "band", "col", "row", "dr", "dc", "h", "w",
-                "chosen", "acc", "ring", "chring"])
-
-    def relax(pdf: pd.DataFrame) -> pd.DataFrame:
-        p = t + 2
-        center = None
-        strips = []
-        for row_t in pdf.itertuples(index=False):
-            if int(row_t.dr) == 0 and int(row_t.dc) == 0:
-                center = row_t
-            else:
-                strips.append(row_t)
-        if center is None:
-            return pd.DataFrame(columns=["source_id", "band", "col",
-                                         "row", "chosen", "acc",
-                                         "improved", "ring", "chring"])
-        if not strips:
-            # pass-through (r7 delta propagation): no new strips means
-            # the frozen ring is unchanged, so the in-tile fixpoint —
-            # a pure function of (ring, chosen, base) — cannot move
-            return pd.DataFrame([{
-                "source_id": center.source_id, "band": int(center.band),
-                "col": int(center.col), "row": int(center.row),
-                "chosen": center.chosen, "acc": center.acc,
-                "improved": 0, "ring": center.ring,
-                "chring": center.chring}])
-        chf = np.empty((p, p), dtype=np.int8)
-        accf = np.empty((p, p))
-        _ring_load(chf, center.chring, np.int8)
-        _ring_load(accf, center.ring, np.float64)
-        chf[1:1 + t, 1:1 + t] = np.frombuffer(
-            center.chosen, dtype=np.int8).reshape(t, t)
-        accf[1:1 + t, 1:1 + t] = np.frombuffer(
-            center.acc, dtype=np.float64).reshape(t, t)
-        for row_t in strips:
-            ch = np.frombuffer(row_t.chosen, dtype=np.int8) \
-                   .reshape(int(row_t.h), int(row_t.w))
-            ac = np.frombuffer(row_t.acc, dtype=np.float64) \
-                   .reshape(int(row_t.h), int(row_t.w))
-            slot = _ring_slot(int(row_t.dr), int(row_t.dc), 1, t)
-            chf[slot] = ch
-            accf[slot] = ac
-        ring_b = _ring_store(accf)
-        chring_b = _ring_store(chf)
-        old = accf[1:1 + t, 1:1 + t].copy()
-        base = (chf[1:1 + t, 1:1 + t] >= -1).astype(np.float64)
-        new = _acc_fixpoint(accf, chf, base)[1:1 + t, 1:1 + t]
-        improved = int(bool(np.any(new != old)))
-        return pd.DataFrame([{
-            "source_id": center.source_id, "band": int(center.band),
-            "col": int(center.col), "row": int(center.row),
-            "chosen": center.chosen, "acc": pack(new),
-            "improved": improved, "ring": ring_b,
-            "chring": chring_b}])
-
-    return fixpoint(
-        state, lambda st: compute_grouped(
-            st.mapInPandas(cut, _FLOW_PIECE),
-            "source_id", "band", "col", "row")
-        .applyInPandas(relax, _FLOW_STATE),
-        F.max("improved"), rounds=1, max_syncs=max_iter, stop=flag_clear,
-        name="flow_accumulation",
-        message=f"flow_accumulation did not reach a global fixpoint in "
-                f"{max_iter} rounds; raise max_iter")
+    at ``max_iter``. Returns the per-tile (chosen, acc) state — consumed
+    by the accumulation rollup and by :func:`stream_network`'s
+    distributed path."""
+    state = focal_map(tiles, 1, t, k_acc_init,
+                      f"{_KEY_DDL}, chosen binary, acc binary")
+    return halo_rounds(state, t, **_ACC_ROUNDS, max_iter=max_iter,
+                       name="flow_accumulation")
 
 
 def _flow_acc_rounds(tiles: DataFrame, t: int, max_iter: int) -> DataFrame:
@@ -1025,17 +1107,7 @@ def _watershed_scene(tiles: DataFrame, t: int) -> DataFrame:
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         source_id, band = key[0], int(key[1])
-        cols = pdf["col"].to_numpy()
-        rows = pdf["row"].to_numpy()
-        c0, r0 = int(cols.min()), int(rows.min())
-        nc, nr = int(cols.max()) - c0 + 1, int(rows.max()) - r0 + 1
-        z = np.full((nr * t, nc * t), np.nan)
-        for row_t in pdf.itertuples(index=False):
-            arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                    .reshape(t, t).astype(np.float64)
-            z[(int(row_t.row) - r0) * t:(int(row_t.row) - r0 + 1) * t,
-              (int(row_t.col) - c0) * t:(int(row_t.col) - c0 + 1) * t] \
-                = np.where(arr == row_t.nodata, np.nan, arr)
+        z, r0, c0 = _mosaic(pdf, t)
         H, W = z.shape
         valid = ~np.isnan(z)
         chosen = _d8_chosen(np.pad(z, 1, constant_values=np.nan))
@@ -1234,10 +1306,6 @@ def watershed_labels(tiles: DataFrame, tile_size: int = 64,
 
 _FILL_SCHEMA = ("source_id string, band int, col bigint, row bigint, "
                 "n_valid bigint, n_filled bigint, q_fill_sum bigint")
-_FILL_STATE = ("source_id string, band int, col bigint, row bigint, "
-               "dem binary, w binary, improved int, ring binary")
-_FILL_PIECE = ("source_id string, band int, col bigint, row bigint, "
-               "dr int, dc int, h int, w int, wvals binary, ring binary")
 
 
 def _fill_gs(wf: np.ndarray, z: np.ndarray, valid: np.ndarray) -> None:
@@ -1306,17 +1374,7 @@ def _fill_scene(tiles: DataFrame, t: int, q_fill: float) -> DataFrame:
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         source_id, band = key[0], int(key[1])
-        cols = pdf["col"].to_numpy()
-        rows = pdf["row"].to_numpy()
-        c0, r0 = int(cols.min()), int(rows.min())
-        nc, nr = int(cols.max()) - c0 + 1, int(rows.max()) - r0 + 1
-        z = np.full((nr * t, nc * t), np.nan)
-        for row_t in pdf.itertuples(index=False):
-            arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                    .reshape(t, t).astype(np.float64)
-            z[(int(row_t.row) - r0) * t:(int(row_t.row) - r0 + 1) * t,
-              (int(row_t.col) - c0) * t:(int(row_t.col) - c0 + 1) * t] \
-                = np.where(arr == row_t.nodata, np.nan, arr)
+        z, r0, c0 = _mosaic(pdf, t)
         valid = ~np.isnan(z)
         wf = np.full((z.shape[0] + 2, z.shape[1] + 2), -np.inf)
         wf[1:-1, 1:-1] = np.where(valid, np.inf, -np.inf)
@@ -1338,129 +1396,49 @@ def _fill_scene(tiles: DataFrame, t: int, q_fill: float) -> DataFrame:
         run, _FILL_SCHEMA)
 
 
+def k_fill_init(frame, t, col, row):
+    """Round 0 of the fill_sinks rounds (a ``focal_map`` kernel): the
+    tile's local fixpoint with +inf (unknown) on data-neighbor ring
+    cells and -inf (outlet) on absent/NoData ring cells."""
+    z = frame[1:1 + t, 1:1 + t]
+    valid = ~np.isnan(z)
+    wf = np.where(np.isnan(frame), -np.inf, np.inf)
+    wf[1:1 + t, 1:1 + t] = np.where(valid, np.inf, -np.inf)
+    _fill_gs(wf, z, valid)
+    return {"dem": pack(z), "water": pack(wf[1:1 + t, 1:1 + t])}
+
+
+def k_fill_relax(frames, t):
+    """A fill_sinks round: re-sweep the in-tile fixpoint against the
+    neighbors' frozen W ring."""
+    z = frames["dem"][1:1 + t, 1:1 + t]
+    wf = frames["water"]
+    _fill_gs(wf, z, ~np.isnan(z))
+    return {"water": wf[1:1 + t, 1:1 + t]}
+
+
+# W travels, the dem stays home; the ring keeps memory, starting as
+# -inf (outlet) everywhere: every EXISTING neighbor sends its strips in
+# round 1 (all tiles start improved), absent neighbors stay outlets
+_FILL_ROUNDS = dict(strips={"water": np.float64}, home={"dem": np.float64},
+                    ring={"water": (-np.inf, True)}, offers=None,
+                    relax=k_fill_relax)
+
+
 def _fill_rounds(tiles: DataFrame, t: int, q_fill: float,
                  max_iter: int) -> DataFrame:
-    """Distributed path (the cost_distance / flow_accumulation
-    synchronous-rounds template): NO scene-size bound. Round 0 solves
-    each tile's local fixpoint with +inf (unknown) on data-neighbor
-    ring cells and -inf (outlet) on absent/NoData ring cells; each
-    round exchanges 1-px W edge strips and re-sweeps against the
-    neighbors' frozen W. Ring inputs only DECREASE per round, so the
-    in-tile fixpoints decrease monotonically to the global fixpoint —
-    exact, bit-identical to the scene solve (selection only, no
-    arithmetic). Per-round shuffle is O(perimeter) strips."""
-
-    def init(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band, col, row = key
-        frame = _assemble_frame(pdf, 1, t)
-        if frame is None:
-            return pd.DataFrame(columns=["source_id", "band", "col",
-                                         "row", "dem", "w", "improved",
-                                         "ring"])
-        z = frame[1:1 + t, 1:1 + t]
-        valid = ~np.isnan(z)
-        wf = np.where(np.isnan(frame), -np.inf, np.inf)
-        wf[1:1 + t, 1:1 + t] = np.where(valid, np.inf, -np.inf)
-        _fill_gs(wf, z, valid)
-        return pd.DataFrame([{
-            "source_id": source_id, "band": int(band),
-            "col": int(col), "row": int(row),
-            "dem": pack(np.ascontiguousarray(z)),
-            "w": pack(np.ascontiguousarray(wf[1:1 + t, 1:1 + t])),
-            "improved": 1,
-            # round-0 ring memory = the old per-round assembly default
-            # (-inf everywhere): every EXISTING neighbor sends its
-            # strips in round 1 (improved=1 out of init), absent
-            # neighbors are outlets (-inf) forever
-            "ring": np.full(4 * (t + 2) - 4, -np.inf).tobytes()}])
-
-    state = compute_grouped(_halo_pieces(tiles, 1, t),
-                            "source_id", "band", "col", "row") \
-        .applyInPandas(init, _FILL_STATE).localCheckpoint(eager=True)
-
-    def cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                out.append({"source_id": row_t.source_id,
-                            "band": int(row_t.band),
-                            "col": int(row_t.col), "row": int(row_t.row),
-                            "dr": 0, "dc": 0, "h": t, "w": t,
-                            "wvals": row_t.w, "dem": row_t.dem,
-                            "ring": row_t.ring})
-                # delta propagation (r7): unimproved tiles' strips are
-                # unchanged since last sent — receivers hold them in
-                # ring memory, so skipping is bit-exact (see
-                # _flow_rounds_state)
-                if not int(row_t.improved):
-                    continue
-                w = np.frombuffer(row_t.w, dtype=np.float64) \
-                      .reshape(t, t)
-                for dr, dc in _NEIGHBORS:
-                    wp = np.ascontiguousarray(_strip(w, dr, dc, 1))
-                    out.append({"source_id": row_t.source_id,
-                                "band": int(row_t.band),
-                                "col": int(row_t.col) + dc,
-                                "row": int(row_t.row) + dr,
-                                "dr": dr, "dc": dc,
-                                "h": wp.shape[0], "w": wp.shape[1],
-                                "wvals": pack(wp), "dem": b"",
-                                "ring": None})
-            yield pd.DataFrame(out, columns=[
-                "source_id", "band", "col", "row", "dr", "dc",
-                "h", "w", "wvals", "dem", "ring"])
-
-    def relax(pdf: pd.DataFrame) -> pd.DataFrame:
-        p = t + 2
-        center = None
-        strips = []
-        for row_t in pdf.itertuples(index=False):
-            if int(row_t.dr) == 0 and int(row_t.dc) == 0:
-                center = row_t
-            else:
-                strips.append(row_t)
-        if center is None:
-            return pd.DataFrame(columns=["source_id", "band", "col",
-                                         "row", "dem", "w", "improved",
-                                         "ring"])
-        if not strips:
-            # pass-through (r7): unchanged ring => unchanged fixpoint
-            return pd.DataFrame([{
-                "source_id": center.source_id, "band": int(center.band),
-                "col": int(center.col), "row": int(center.row),
-                "dem": center.dem, "w": center.wvals,
-                "improved": 0, "ring": center.ring}])
-        wf = np.empty((p, p))
-        _ring_load(wf, center.ring, np.float64)
-        wf[1:1 + t, 1:1 + t] = np.frombuffer(
-            center.wvals, dtype=np.float64).reshape(t, t)
-        for row_t in strips:
-            wv = np.frombuffer(row_t.wvals, dtype=np.float64) \
-                   .reshape(int(row_t.h), int(row_t.w))
-            wf[_ring_slot(int(row_t.dr), int(row_t.dc), 1, t)] = wv
-        ring_b = _ring_store(wf)
-        z = np.frombuffer(center.dem, dtype=np.float64).reshape(t, t)
-        valid = ~np.isnan(z)
-        old = wf[1:1 + t, 1:1 + t].copy()
-        _fill_gs(wf, z, valid)
-        new = wf[1:1 + t, 1:1 + t]
-        return pd.DataFrame([{
-            "source_id": center.source_id, "band": int(center.band),
-            "col": int(center.col), "row": int(center.row),
-            "dem": center.dem, "w": pack(np.ascontiguousarray(new)),
-            "improved": int(bool(np.any(new != old))),
-            "ring": ring_b}])
-
-    piece_schema = _FILL_PIECE + ", dem binary"
-    state = fixpoint(
-        state, lambda st: compute_grouped(
-            st.mapInPandas(cut, piece_schema),
-            "source_id", "band", "col", "row")
-        .applyInPandas(relax, _FILL_STATE),
-        F.max("improved"), rounds=1, max_syncs=max_iter, stop=flag_clear,
-        name="fill_sinks",
-        message=f"fill_sinks did not reach a global fixpoint in "
-                f"{max_iter} rounds; raise max_iter")
+    """Distributed path on :func:`halo_rounds`: NO scene-size bound.
+    Round 0 (``k_fill_init``) solves each tile's local fixpoint; each
+    round (``k_fill_relax``) exchanges 1-px W edge strips and re-sweeps
+    against the neighbors' frozen W. Ring inputs only DECREASE per
+    round, so the in-tile fixpoints decrease monotonically to the
+    global fixpoint — exact, bit-identical to the scene solve
+    (selection only, no arithmetic). Per-round shuffle is O(perimeter)
+    strips."""
+    state = focal_map(tiles, 1, t, k_fill_init,
+                      f"{_KEY_DDL}, dem binary, water binary")
+    state = halo_rounds(state, t, **_FILL_ROUNDS, max_iter=max_iter,
+                        name="fill_sinks")
 
     def rollup(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1468,7 +1446,7 @@ def _fill_rounds(tiles: DataFrame, t: int, q_fill: float,
             for row_t in pdf.itertuples(index=False):
                 z = np.frombuffer(row_t.dem,
                                   dtype=np.float64).reshape(t, t)
-                w = np.frombuffer(row_t.w,
+                w = np.frombuffer(row_t.water,
                                   dtype=np.float64).reshape(t, t)
                 valid = ~np.isnan(z)
                 out.append(_fill_rollup_row(
@@ -1544,17 +1522,7 @@ def _stream_link_terms(stream, streamf, ch, GR, GC):
 def _stream_scene(tiles: DataFrame, t: int, thr: int) -> DataFrame:
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         source_id, band = key[0], int(key[1])
-        cols = pdf["col"].to_numpy()
-        rows = pdf["row"].to_numpy()
-        c0, r0 = int(cols.min()), int(rows.min())
-        nc, nr = int(cols.max()) - c0 + 1, int(rows.max()) - r0 + 1
-        z = np.full((nr * t, nc * t), np.nan)
-        for row_t in pdf.itertuples(index=False):
-            arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                    .reshape(t, t).astype(np.float64)
-            z[(int(row_t.row) - r0) * t:(int(row_t.row) - r0 + 1) * t,
-              (int(row_t.col) - c0) * t:(int(row_t.col) - c0 + 1) * t] \
-                = np.where(arr == row_t.nodata, np.nan, arr)
+        z, r0, c0 = _mosaic(pdf, t)
         H, W = z.shape
         chosen = _d8_chosen(np.pad(z, 1, constant_values=np.nan))
         base = np.where(~np.isnan(z), 1.0, 0.0)
@@ -1589,62 +1557,27 @@ def _stream_scene(tiles: DataFrame, t: int, thr: int) -> DataFrame:
 def _stream_dist(tiles: DataFrame, t: int, thr: int,
                  max_iter: int) -> DataFrame:
     """Distributed path: ONE more halo pass over the converged
-    :func:`_flow_rounds_state` — (chosen, acc) strips exchange
-    UNCONDITIONALLY (unlike the accumulation cut, a non-flowing
-    neighbor cell can still be a stream TARGET: a pit with acc past
-    the threshold), then the same local stream/head/link arrays."""
+    :func:`_flow_rounds_state` with the :func:`halo_rounds` cut and
+    frame assembly — (chosen, acc) strips exchange UNCONDITIONALLY
+    (unlike the accumulation rounds, a non-flowing neighbor cell can
+    still be a stream TARGET: a pit with acc past the threshold), over a
+    memory-less no-data ring — then the same local stream/head/link
+    arrays."""
     state = _flow_rounds_state(tiles, t, max_iter)
-
-    def cut_all(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                ch = np.frombuffer(row_t.chosen,
-                                   dtype=np.int8).reshape(t, t)
-                acc = np.frombuffer(row_t.acc,
-                                    dtype=np.float64).reshape(t, t)
-                out.append({"source_id": row_t.source_id,
-                            "band": int(row_t.band),
-                            "col": int(row_t.col), "row": int(row_t.row),
-                            "dr": 0, "dc": 0, "h": t, "w": t,
-                            "chosen": row_t.chosen, "acc": row_t.acc})
-                for dr, dc in _NEIGHBORS:
-                    chp = np.ascontiguousarray(_strip(ch, dr, dc, 1))
-                    acp = np.ascontiguousarray(_strip(acc, dr, dc, 1))
-                    out.append({"source_id": row_t.source_id,
-                                "band": int(row_t.band),
-                                "col": int(row_t.col) + dc,
-                                "row": int(row_t.row) + dr,
-                                "dr": dr, "dc": dc,
-                                "h": chp.shape[0], "w": chp.shape[1],
-                                "chosen": chp.tobytes(),
-                                "acc": pack(acp)})
-            yield pd.DataFrame(out, columns=[
-                "source_id", "band", "col", "row", "dr", "dc", "h", "w",
-                "chosen", "acc"])
+    strips = _ACC_ROUNDS["strips"]
+    ring = {"chosen": (-2, False), "acc": (0.0, False)}
 
     def rollup(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         source_id, band, col, row = key
-        p = t + 2
-        chf = np.full((p, p), -2, dtype=np.int64)
-        accf = np.zeros((p, p))
-        center = False
-        for row_t in pdf.itertuples(index=False):
-            ch = np.frombuffer(row_t.chosen, dtype=np.int8) \
-                   .reshape(int(row_t.h), int(row_t.w))
-            ac = np.frombuffer(row_t.acc, dtype=np.float64) \
-                   .reshape(int(row_t.h), int(row_t.w))
-            dr, dc = int(row_t.dr), int(row_t.dc)
-            if dr == 0 and dc == 0:
-                center = True
-            slot = _ring_slot(dr, dc, 1, t)
-            chf[slot] = ch
-            accf[slot] = ac
-        if not center:
+        center, pieces = _split_center(pdf)
+        if center is None:
             return pd.DataFrame(columns=["source_id", "band", "col",
                                          "row", "n_stream", "n_heads",
                                          "link_qsum"])
-        stream, heads, streamf = _stream_cell_arrays(chf, accf, thr)
+        frames = _halo_frames(center, pieces, t, strips, ring)
+        chf = frames["chosen"]
+        stream, heads, streamf = _stream_cell_arrays(chf, frames["acc"],
+                                                     thr)
         GR = (np.arange(t) + int(row) * t).reshape(-1, 1) \
             + np.zeros((1, t), dtype=np.int64)
         GC = (np.arange(t) + int(col) * t).reshape(1, -1) \
@@ -1658,13 +1591,9 @@ def _stream_dist(tiles: DataFrame, t: int, thr: int,
             "n_heads": int(heads.sum()),
             "link_qsum": int(terms.sum())}])
 
-    # cut_all ships no ring memory (one-shot pass over the converged
-    # state) — its pieces use the ring-less schema
-    piece_schema = ("source_id string, band int, col bigint, "
-                    "row bigint, dr int, dc int, h int, w int, "
-                    "chosen binary, acc binary")
-    return compute_grouped(state.mapInPandas(cut_all, piece_schema),
-                           "source_id", "band", "col", "row") \
+    return compute_grouped(
+        state.mapInPandas(_halo_cut(t, strips, every=True),
+                          _piece_ddl(strips)), *_KEY) \
         .applyInPandas(rollup, _STREAM_SCHEMA)
 
 
@@ -1721,17 +1650,7 @@ def _ptr_double_counts(ptr, no, nd):
 def _flow_length_scene(tiles: DataFrame, t: int) -> DataFrame:
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         source_id, band = key[0], int(key[1])
-        cols = pdf["col"].to_numpy()
-        rows = pdf["row"].to_numpy()
-        c0, r0 = int(cols.min()), int(rows.min())
-        nc, nr = int(cols.max()) - c0 + 1, int(rows.max()) - r0 + 1
-        z = np.full((nr * t, nc * t), np.nan)
-        for row_t in pdf.itertuples(index=False):
-            arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                    .reshape(t, t).astype(np.float64)
-            z[(int(row_t.row) - r0) * t:(int(row_t.row) - r0 + 1) * t,
-              (int(row_t.col) - c0) * t:(int(row_t.col) - c0 + 1) * t] \
-                = np.where(arr == row_t.nodata, np.nan, arr)
+        z, r0, c0 = _mosaic(pdf, t)
         H, W = z.shape
         valid = ~np.isnan(z)
         chosen = _d8_chosen(np.pad(z, 1, constant_values=np.nan))

@@ -63,7 +63,7 @@ def _salt_map_expr(salts: dict[int, int]):
     for c, s in salts.items():
         pairs.extend([F.lit(int(c)).cast("long"), F.lit(int(s))])
     m = F.create_map(*pairs)
-    return F.coalesce(m.getItem(F.col("cell")), F.lit(1))
+    return F.coalesce(m[F.col("cell")], F.lit(1))
 
 
 def salted_key_fact(df: DataFrame, row_key: str, salts: dict[int, int],

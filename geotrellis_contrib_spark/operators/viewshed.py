@@ -33,6 +33,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from geotrellis_contrib_spark.operators.focal import (
+    _mosaic, _scene_small, _span)
 from geotrellis_contrib_spark.operators.pixels import DTYPES
 
 
@@ -46,22 +48,11 @@ def _vs_scene(tiles: DataFrame, observer_fn, height: float,
 
     def sweep(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         source_id, band = key[0], int(key[1])
-        cols = pdf["col"].to_numpy()
-        rows = pdf["row"].to_numpy()
-        c0, r0 = int(cols.min()), int(rows.min())
-        nc, nr = int(cols.max()) - c0 + 1, int(rows.max()) - r0 + 1
-        if nc * t > max_px or nr * t > max_px:
+        if _span(pdf, t) > max_px:
             raise ValueError(
                 f"scene {source_id} exceeds max_px={max_px}; crop by "
                 "max_radius before viewshed")
-        z = np.full((nr * t, nc * t), np.nan)
-        for row_t in pdf.itertuples(index=False):
-            arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                    .reshape(t, t).astype(np.float64)
-            arr = np.where(arr == row_t.nodata, np.nan, arr)
-            z[(int(row_t.row) - r0) * t:(int(row_t.row) - r0 + 1) * t,
-              (int(row_t.col) - c0) * t:(int(row_t.col) - c0 + 1) * t] \
-                = arr
+        z, r0, c0 = _mosaic(pdf, t)
         ogr, ogc = observer_fn(source_id, band)
         oy, ox = int(ogr) - r0 * t, int(ogc) - c0 * t
         if not (0 <= oy < z.shape[0] and 0 <= ox < z.shape[1]) \
@@ -375,16 +366,7 @@ def viewshed(tiles: DataFrame, observer_fn, height: float = 2.0,
     total; the distributed path spreads it as ~m*sqrt(m) bounded pair
     tasks per m-tile scene instead of one scene task."""
     t = int(tile_size)
-    small = False
-    if max_px:
-        from pyspark.sql import functions as F
-        ext = tiles.groupBy("source_id", "band").agg(
-            ((F.max("col") - F.min("col") + 1) * t).alias("w"),
-            ((F.max("row") - F.min("row") + 1) * t).alias("h")) \
-            .agg(F.max(F.greatest("w", "h")).alias("m")).collect()
-        small = bool(ext) and ext[0]["m"] is not None \
-            and int(ext[0]["m"]) <= int(max_px)
-    if small:
+    if _scene_small(tiles, t, max_px):
         return _vs_scene(tiles, observer_fn, height, t, max_px,
                          block_rows)
     return _vs_dist(tiles, observer_fn, height, t)

@@ -78,7 +78,8 @@ def test_parse_proj4_dispatch_and_guards():
         "+ellps=WGS84 +units=m +no_defs")
     x, y = fwd(np.array([-58.0]), np.array([33.0]))
     lo, la = inv(x, y)
-    assert abs(float(lo) + 58.0) < 1e-11 and abs(float(la) - 33.0) < 1e-11
+    assert abs(float(lo[0]) + 58.0) < 1e-11 \
+        and abs(float(la[0]) - 33.0) < 1e-11
     with pytest.raises(ValueError, match="k_0"):
         GR.parse_proj4("+proj=aeqd +lat_0=32 +lon_0=-60 +k_0=2 "
                        "+ellps=WGS84 +units=m +no_defs")

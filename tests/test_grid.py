@@ -244,7 +244,8 @@ def test_utm_round_trip():
     assert float(fn[0]) == 10000000.0
     e, n = grid.lonlat_to_utm(-75.8, -33.9, 18)
     lon3, lat3 = grid.utm_to_lonlat(e, n + fn, 18, northern=False)
-    assert abs(float(lon3) + 75.8) < 1e-9 and abs(float(lat3) + 33.9) < 1e-9
+    assert abs(float(lon3[0]) + 75.8) < 1e-9 \
+        and abs(float(lat3[0]) + 33.9) < 1e-9
 
 
 def test_morton_column_matches_numpy(spark):

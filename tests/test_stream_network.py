@@ -3,6 +3,7 @@ threshold boundary, scene-vs-distributed parity incl. cross-tile links,
 zero-stream tiles present."""
 import numpy as np
 
+from conftest import count_jobs
 from geotrellis_contrib_spark import corpus as corpus_mod
 from geotrellis_contrib_spark.operators import focal as FO
 from geotrellis_contrib_spark.operators.pixels import pack
@@ -71,6 +72,8 @@ def test_fixture_parity_and_zero_tiles(spark):
     tiles = corpus_mod.synth_px_tiles(spark, tile_size=64)
     a = _collect(FO.stream_network(tiles, tile_size=64)
                  .filter("source_id = 'scene-2' AND band = 1"))
-    b = _collect(FO.stream_network(tiles, tile_size=64, scene_max_px=0)
-                 .filter("source_id = 'scene-2' AND band = 1"))
+    jobs, b = count_jobs(spark, lambda: _collect(
+        FO.stream_network(tiles, tile_size=64, scene_max_px=0)
+        .filter("source_id = 'scene-2' AND band = 1")))
     assert a == b and len(a) == 16  # every tile present, even 0-stream
+    assert jobs == 13
