@@ -1738,11 +1738,11 @@ def q_flow_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_flow_length_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLOW LENGTH, FORCED-DISTRIBUTED (scene_max_px=0): the
     _watershed_dist contraction with ADDITIVE integer counts riding
-    the pointer doubling — per-tile local sums (kind-2 row) + GROUP
-    rows (dest, cell count) + the O(perimeter) border table whose
-    counts ADD each doubling round; tile total = local Σ + Σ cnt ·
-    resolved(dest). Bit-identical (integer addition is associative);
-    same oracle."""
+    the pointer doubling (``focal.contract``) — GROUP rows (chain end,
+    cell count, local step sums) + the O(perimeter) border table whose
+    counts ADD each doubling round; tile total = Σ_groups (local sums +
+    cnt · resolved(end)). Bit-identical (integer addition is
+    associative); same oracle."""
     from geotrellis_contrib_spark import corpus as corpus_mod
     from geotrellis_contrib_spark.operators import focal as FO
 

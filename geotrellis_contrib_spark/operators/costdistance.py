@@ -50,9 +50,8 @@ from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark.operators.focal import (
     _KEY_DDL, _NEIGHBORS, _assemble_frame, _halo_pieces, _mosaic,
-    _scene_small, _span, halo_rounds)
+    _scene_small, _span, contract, halo_rounds)
 from geotrellis_contrib_spark.operators.pixels import DTYPES, pack
-from geotrellis_contrib_spark.plans.iterate import border_doubling
 from geotrellis_contrib_spark.util import compute_grouped, compute_spread
 
 
@@ -259,9 +258,28 @@ def cost_surface(tiles: DataFrame, seed_predicate,
     return state.select("source_id", "band", "col", "row", "cost")
 
 
-# fixed backtrack order (row-major, the SQL twin's CASE cascade order)
-_LCP_DIRS = [(-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1),
-             (1, -1), (1, 0), (1, 1)]
+def _lcp_walk(cost: np.ndarray, fric: np.ndarray, i: int, j: int,
+              straight: float, diag: float) -> int:
+    """The scene backtrack: steps from (i, j) to a seed, moving each step
+    to the FIRST ``_NEIGHBORS`` neighbor (row-major, the SQL twin's CASE
+    cascade order) that satisfies the exact optimality equation."""
+    H, W = cost.shape
+    steps = 0
+    while cost[i, j] != 0.0:
+        for dr, dc in _NEIGHBORS:
+            x, y = i + dr, j + dc
+            if 0 <= x < H and 0 <= y < W and np.isfinite(cost[x, y]):
+                dist = diag if (dr != 0 and dc != 0) else straight
+                step = dist * (fric[i, j] + fric[x, y]) / 2.0
+                if cost[i, j] == cost[x, y] + step:
+                    i, j = x, y
+                    break
+        else:  # pragma: no cover - optimality guarantees a pred
+            raise RuntimeError("no optimal predecessor found")
+        steps += 1
+        if steps > H * W:  # pragma: no cover
+            raise RuntimeError("path did not terminate")
+    return steps
 
 
 def _lcp_scene(tiles: DataFrame, seed_predicate, targets,
@@ -297,27 +315,11 @@ def _lcp_scene(tiles: DataFrame, seed_predicate, targets,
                 raise ValueError(
                     f"target ({tgr},{tgc}) unreachable in "
                     f"{source_id}/{band}")
-            cq2 = int(np.floor(cost[i, j] * 2.0 + 0.5))
-            steps = 0
-            while cost[i, j] != 0.0:
-                for dr, dc in _LCP_DIRS:
-                    x, y = i + dr, j + dc
-                    if 0 <= x < H and 0 <= y < W \
-                            and np.isfinite(cost[x, y]):
-                        dist = (diag if (dr != 0 and dc != 0)
-                                else straight)
-                        step = dist * (fric[i, j] + fric[x, y]) / 2.0
-                        if cost[i, j] == cost[x, y] + step:
-                            i, j = x, y
-                            break
-                else:  # pragma: no cover - optimality guarantees a pred
-                    raise RuntimeError("no optimal predecessor found")
-                steps += 1
-                if steps > H * W:  # pragma: no cover
-                    raise RuntimeError("path did not terminate")
             out.append({"source_id": source_id, "band": band,
                         "tgr": int(tgr), "tgc": int(tgc),
-                        "path_len": steps, "cost_q2": cq2})
+                        "path_len": _lcp_walk(cost, fric, i, j, straight,
+                                              diag),
+                        "cost_q2": int(np.floor(cost[i, j] * 2.0 + 0.5))})
         return pd.DataFrame(out, columns=["source_id", "band", "tgr",
                                           "tgc", "path_len", "cost_q2"])
 
@@ -326,44 +328,75 @@ def _lcp_scene(tiles: DataFrame, seed_predicate, targets,
              "path_len bigint, cost_q2 bigint")
 
 
-def _ptr_double_steps(ptr: np.ndarray, steps: np.ndarray):
-    """Pointer doubling with hop accumulation: invariant steps[i] = hops
-    from i to ptr[i]; terminals self-point with 0 hops, so the extra
-    composition after convergence adds zero. Fail-loud at 64 rounds."""
-    for _ in range(64):
-        nxt = ptr[ptr]
-        steps = steps + steps[ptr]
-        if np.array_equal(nxt, ptr):
-            return nxt, steps
-        ptr = nxt
-    raise RuntimeError(  # pragma: no cover
-        "least-cost-path pointer doubling did not settle")
-
-
-_LCP_PART = ("source_id string, band int, col bigint, row bigint, "
-             "kind int, gid bigint, rep bigint, steps bigint, "
-             "final int, q2 bigint")
+def k_lcp_tile(pdf, t, source_id, band, col, row, *, targets, straight,
+               diag):
+    """Contraction kernel of the distributed least-cost path: per cell
+    the FIRST ``_NEIGHBORS`` predecessor satisfying the exact equality
+    (the scene walk's rule, vectorized) over the tile's (cost, friction)
+    frames (pieces tagged ``plane`` 0 and 1); live = reached cells; one
+    named row per target inside the tile, with its quantized cost."""
+    p = t + 2
+    cframe = _assemble_frame(pdf[pdf["plane"] == 0], 1, t)
+    fric = _assemble_frame(pdf[pdf["plane"] == 1], 1, t)
+    if cframe is None or fric is None:
+        return None
+    cost = np.where(np.isnan(cframe), np.inf, cframe)
+    if not np.all(np.isnan(fric)) and float(np.nanmin(fric)) <= 0.0:
+        raise ValueError("friction must be positive")
+    finite = np.isfinite(cost)
+    interior = np.zeros((p, p), dtype=bool)
+    interior[1:1 + t, 1:1 + t] = True
+    remaining = finite & (cost != 0.0) & interior
+    chosen = np.full((p, p), -1, dtype=np.int64)
+    for k, (dr, dc) in enumerate(_NEIGHBORS):
+        nco = np.full((p, p), np.inf)
+        nfr = np.full((p, p), np.nan)
+        rs = slice(max(0, dr), p + min(0, dr))
+        rd = slice(max(0, -dr), p + min(0, -dr))
+        cs = slice(max(0, dc), p + min(0, dc))
+        cd = slice(max(0, -dc), p + min(0, -dc))
+        nco[rd, cd] = cost[rs, cs]
+        nfr[rd, cd] = fric[rs, cs]
+        dist = diag if (dr != 0 and dc != 0) else straight
+        with np.errstate(invalid="ignore"):
+            eq = (remaining & np.isfinite(nco)
+                  & (cost == nco + dist * (fric + nfr) / 2.0))
+        chosen[eq] = k
+        remaining &= ~eq
+    if remaining.any():  # pragma: no cover - optimality guarantees
+        raise RuntimeError("no optimal predecessor found")
+    named = {"cell": [], "q2": [], "tgr": [], "tgc": []}
+    for tgr, tgc in targets(source_id, band):
+        i, j = int(tgr) - row * t + 1, int(tgc) - col * t + 1
+        if not (1 <= i <= t and 1 <= j <= t):
+            continue  # another tile owns this target
+        if not finite[i, j]:
+            raise ValueError(
+                f"target ({tgr},{tgc}) unreachable in {source_id}/{band}")
+        named["cell"].append(i * p + j)
+        named["q2"].append(int(np.floor(cost[i, j] * 2.0 + 0.5)))
+        named["tgr"].append(int(tgr))
+        named["tgc"].append(int(tgc))
+    return chosen, finite, named
 
 
 def _lcp_dist(tiles: DataFrame, seed_predicate, targets,
               tile_size: int, straight: float, diag: float,
               max_iter: int, max_rounds: int) -> DataFrame:
     """Distributed least-cost-path (NO scene-size bound — the watershed
-    contraction pattern applied to the backtrack):
+    contraction, ``focal.contract``, applied to the backtrack):
 
     1. The converged cost surface comes from the synchronous halo-rounds
        solver (`_cost_rounds` on `focal.halo_rounds` — bit-identical to
        the scene fixpoint), so the
        exact optimality equality holds across tile boundaries.
     2. ONE halo shuffle ships each tile its 1-px (cost, friction)
-       neighbor strips; per tile, every cell's predecessor (FIRST
-       `_LCP_DIRS` neighbor satisfying the exact equality — the same
-       rule the scene walk applies one cell at a time) is computed
-       vectorized, and LOCAL pointer doubling with hop accumulation
-       collapses every in-tile chain to either a seed (terminal) or the
-       first out-of-tile cell, carrying the EXACT in-tile step count.
-       Emitted per tile: O(perimeter) border rows + one row per target
-       inside the tile (with its quantized cost).
+       neighbor strips; ``k_lcp_tile`` picks every cell's predecessor,
+       and the driver's LOCAL pointer doubling collapses every in-tile
+       chain to either a seed (terminal) or the first out-of-tile cell,
+       carrying the EXACT in-tile step count. Emitted per tile:
+       O(perimeter) border rows + one row per target inside the tile
+       (its coordinates and quantized cost).
     3. Distributed pointer doubling on the border table — log2(tile
        crossings) tiny self-joins, steps summed exactly, fail-loud at
        ``max_rounds`` — then one join resolves targets through it.
@@ -372,7 +405,6 @@ def _lcp_dist(tiles: DataFrame, seed_predicate, targets,
     tgc, path_len, cost_q2); path_len parity is bit-exact because cost,
     friction and the predecessor rule are all bit-identical."""
     t = int(tile_size)
-    p = t + 2
     state = _cost_rounds(tiles, seed_predicate, t, straight, diag, None,
                          max_iter)
     nan = float("nan")
@@ -385,125 +417,18 @@ def _lcp_dist(tiles: DataFrame, seed_predicate, targets,
             .withColumn("plane", F.lit(plane))
         planes = cut if planes is None else planes.unionByName(cut)
 
-    def resolve(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band = key[0], int(key[1])
-        col, row = int(key[2]), int(key[3])
-        cols = ["source_id", "band", "col", "row", "kind", "gid", "rep",
-                "steps", "final", "q2"]
-        cframe = _assemble_frame(pdf[pdf["plane"] == 0], 1, t)
-        fframe = _assemble_frame(pdf[pdf["plane"] == 1], 1, t)
-        if cframe is None or fframe is None:
-            return pd.DataFrame(columns=cols)
-        cost = np.where(np.isnan(cframe), np.inf, cframe)
-        fric = fframe
-        if not np.all(np.isnan(fric)) \
-                and float(np.nanmin(fric)) <= 0.0:
-            raise ValueError("friction must be positive")
-        interior = np.zeros((p, p), dtype=bool)
-        interior[1:1 + t, 1:1 + t] = True
-        finite = np.isfinite(cost)
-        nonseed = finite & (cost != 0.0) & interior
-        # FIRST-match predecessor in the scene walk's fixed order
-        chosen = np.full((p, p), -1, dtype=np.int64)
-        remaining = nonseed.copy()
-        for k, (dr, dc) in enumerate(_LCP_DIRS):
-            nco = np.full((p, p), np.inf)
-            nfr = np.full((p, p), np.nan)
-            rs = slice(max(0, dr), p + min(0, dr))
-            rd = slice(max(0, -dr), p + min(0, -dr))
-            cs = slice(max(0, dc), p + min(0, dc))
-            cd = slice(max(0, -dc), p + min(0, -dc))
-            nco[rd, cd] = cost[rs, cs]
-            nfr[rd, cd] = fric[rs, cs]
-            dist = diag if (dr != 0 and dc != 0) else straight
-            with np.errstate(invalid="ignore"):
-                eq = (remaining & np.isfinite(nco)
-                      & (cost == nco + dist * (fric + nfr) / 2.0))
-            chosen[eq] = k
-            remaining &= ~eq
-        if remaining.any():  # pragma: no cover - optimality guarantees
-            raise RuntimeError("no optimal predecessor found")
-        idxs = np.arange(p * p, dtype=np.int64)
-        ptr = idxs.copy()
-        steps0 = np.zeros(p * p, dtype=np.int64)
-        flat_ch = chosen.ravel()
-        for k, (dr, dc) in enumerate(_LCP_DIRS):
-            sel = flat_ch == k
-            ptr[sel] = idxs[sel] + dr * p + dc
-            steps0[sel] = 1
-        ptr, steps0 = _ptr_double_steps(ptr, steps0)
-        # same global-pixel encoding as the watershed border table
-        g_row = int(row) * t + (idxs // p) - 1
-        g_col = int(col) * t + (idxs % p) - 1
-        gid_of = g_row * 4096 + g_col
-        int_flat = interior.ravel()
-        fin_flat = finite.ravel()
-        out = []
-        fi = idxs.reshape(p, p)
-        ring = np.concatenate([fi[1, 1:1 + t], fi[t, 1:1 + t],
-                               fi[2:t, 1], fi[2:t, t]]) if t > 1 \
-            else fi[1:2, 1]
-        for cell in np.asarray(ring).ravel():
-            if not fin_flat[cell]:
-                continue
-            d = ptr[cell]
-            out.append({"source_id": source_id, "band": band,
-                        "col": col, "row": row, "kind": 1,
-                        "gid": int(gid_of[cell]), "rep": int(gid_of[d]),
-                        "steps": int(steps0[cell]),
-                        "final": int(bool(int_flat[d])), "q2": 0})
-        for tgr, tgc in targets(source_id, band):
-            i = int(tgr) - row * t + 1
-            j = int(tgc) - col * t + 1
-            if not (1 <= i <= t and 1 <= j <= t):
-                continue  # another tile owns this target
-            cell = i * p + j
-            if not fin_flat[cell]:
-                raise ValueError(
-                    f"target ({tgr},{tgc}) unreachable in "
-                    f"{source_id}/{band}")
-            d = ptr[cell]
-            out.append({"source_id": source_id, "band": band,
-                        "col": col, "row": row, "kind": 2,
-                        "gid": int(gid_of[cell]), "rep": int(gid_of[d]),
-                        "steps": int(steps0[cell]),
-                        "final": int(bool(int_flat[d])),
-                        "q2": int(np.floor(cost.ravel()[cell] * 2.0
-                                           + 0.5))})
-        return pd.DataFrame(out, columns=cols)
-
-    parts = compute_grouped(planes, "source_id", "band", "col", "row") \
-        .applyInPandas(resolve, _LCP_PART).localCheckpoint(eager=True)
-
-    border, bc = border_doubling(
-        parts.filter(F.col("kind") == 1)
-        .select("source_id", "band", "gid", "rep", "steps", "final"),
-        summed=["steps"], max_syncs=max_rounds, name="least_cost_path",
+    rows = contract(
+        planes, t, partial(k_lcp_tile, targets=targets, straight=straight,
+                           diag=diag),
+        hops={"steps": [1] * len(_NEIGHBORS)}, each=("q2", "tgr", "tgc"),
+        max_rounds=max_rounds, name="least_cost_path",
         message=f"least-cost-path border resolution did not settle in "
                 f"{max_rounds} rounds; a path crosses more than "
                 f"2^{max_rounds} tile boundaries or the border table "
                 f"dropped a link")
-
-    tg = parts.filter(F.col("kind") == 2)
-    tdone = tg.filter(F.col("final") == 1) \
-        .select("source_id", "band", "gid", "steps", "q2")
-    ttodo = tg.filter(F.col("final") == 0).alias("g").join(
-        bc(border.select("source_id", "band", F.col("gid").alias("bgid"),
-                         F.col("steps").alias("bsteps")).alias("m")),
-        on=[F.col("g.source_id") == F.col("m.source_id"),
-            F.col("g.band") == F.col("m.band"),
-            F.col("g.rep") == F.col("m.bgid")]) \
-        .select(F.col("g.source_id").alias("source_id"),
-                F.col("g.band").alias("band"),
-                F.col("g.gid").alias("gid"),
-                (F.col("g.steps") + F.col("m.bsteps")).alias("steps"),
-                F.col("g.q2").alias("q2"))
-    return tdone.unionByName(ttodo).select(
-        "source_id", "band",
-        (F.col("gid") / F.lit(4096)).cast("long").alias("tgr"),
-        F.pmod(F.col("gid"), F.lit(4096)).alias("tgc"),
-        F.col("steps").alias("path_len"),
-        F.col("q2").alias("cost_q2"))
+    return rows.select("source_id", "band", "tgr", "tgc",
+                       F.col("steps").alias("path_len"),
+                       F.col("q2").alias("cost_q2"))
 
 
 def least_cost_path(tiles: DataFrame, seed_predicate, targets,

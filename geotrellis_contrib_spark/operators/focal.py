@@ -42,6 +42,16 @@ tiles that improved last round, shuffles once on the tile key, passes
 through tiles that received no strip, and stops at the first round in
 which no tile improved (``improved = any(new != old)``).
 
+The pointer-chain operators (watershed, flow_length, the distributed
+least-cost path) run on ``contract``, the tile-contraction driver: a
+kernel turns each tile's halo pieces into a direction plane over its
+(t+2)^2 frame (``_NEIGHBORS`` index per cell, anything else a chain
+end); ``_collapse`` pointer-doubles the chains inside the frame,
+carrying additive per-hop weights; the tile emits one border row per
+live cell of its own 1-px ring and its rows to resolve, all keyed by the
+injective ``_gid``; ``border_doubling`` resolves the O(perimeter) border
+table and each row joins it at its chain end.
+
 Determinism contract (mirrored by the ``focal_stats`` SQL oracle in
 ``__spark_entry__.py`` — change one only with the other):
   * the 3x3 accumulation adds the 9 neighbor terms in FIXED lexicographic
@@ -97,10 +107,10 @@ def _ring_slot(dr: int, dc: int, r: int, t: int) -> tuple[slice, slice]:
     return rows, cols
 
 
-def _halo_pieces(tiles: DataFrame, r: int, t: int) -> DataFrame:
-    """Stage 1 of the stencil pattern: every tile cuts the r-wide edge
-    strips its 8 neighbors need BEFORE the shuffle (no full-tile
-    replication); keyed by the RECEIVING tile."""
+def _piece_cut(r: int, t: int):
+    """Stage 1 of the stencil pattern (a ``mapInPandas`` body): every
+    tile cuts the r-wide edge strips its 8 neighbors need BEFORE the
+    shuffle (no full-tile replication); keyed by the RECEIVING tile."""
 
     def cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -122,9 +132,14 @@ def _halo_pieces(tiles: DataFrame, r: int, t: int) -> DataFrame:
                 "source_id", "band", "col", "row", "dr", "dc", "nodata",
                 "h", "w", "px"])
 
+    return cut
+
+
+def _halo_pieces(tiles: DataFrame, r: int, t: int) -> DataFrame:
     return tiles.mapInPandas(
-        cut, "source_id string, band int, col bigint, row bigint, "
-             "dr int, dc int, nodata double, h int, w int, px binary")
+        _piece_cut(r, t),
+        "source_id string, band int, col bigint, row bigint, "
+        "dr int, dc int, nodata double, h int, w int, px binary")
 
 
 def _assemble_frame(pdf: pd.DataFrame, r: int, t: int):
@@ -352,6 +367,143 @@ def halo_rounds(state: DataFrame, t: int, *, strips: dict, home=None,
         name=name,
         message=f"{name} did not reach a global fixpoint in "
                 f"{max_iter} rounds; raise max_iter")
+
+
+def _gid(gr, gc):
+    """The contraction's global cell key: injective for any scene up to
+    2^32 pixels wide (the public watershed label is not)."""
+    return (gr << 32) + gc
+
+
+def _collapse(chosen: np.ndarray, hops=None):
+    """Collapse the pointer chains of a direction plane. ``chosen`` holds
+    per cell the index of its successor's offset in ``_NEIGHBORS`` (the
+    ``_D8`` order, also the least-cost backtrack order); any other value
+    (a terminal, an invalid or a halo cell) self-points. ``hops`` maps a
+    name to per-direction integer hop weights. Pointer doubling to the
+    fixpoint returns (flat chain end per cell, {name: weights summed
+    along the chain}); integer sums are exact in any association, and
+    self-pointing ends carry 0, so a composition past the fixpoint adds
+    nothing. Fail-loud at 64 rounds."""
+    h, w = chosen.shape
+    flat = chosen.ravel()
+    ptr = np.arange(h * w, dtype=np.int64)
+    moves = (flat >= 0) & (flat < len(_NEIGHBORS))
+    k = flat[moves]
+    ptr[moves] += np.array([dr * w + dc for dr, dc in _NEIGHBORS])[k]
+    acc = {}
+    for name, weights in (hops or {}).items():
+        acc[name] = np.zeros(h * w, dtype=np.int64)
+        acc[name][moves] = np.asarray(weights, dtype=np.int64)[k]
+    for _ in range(64):
+        nxt = ptr[ptr]
+        if np.array_equal(nxt, ptr):
+            return ptr, acc
+        acc = {name: a + a[ptr] for name, a in acc.items()}
+        ptr = nxt
+    raise RuntimeError(  # pragma: no cover
+        "pointer doubling did not settle")
+
+
+def _contract_tile(t: int, kernel, hops: dict, each=()):
+    """Per-tile body of :func:`contract` as a plain pandas function:
+    (resolve(key, pdf), parts DDL). ``resolve`` returns the tile's
+    kind-1 BORDER rows (one per live cell of its own 1-px ring: gid,
+    chain end ``rep``, hop sums, ``final`` = the end is in-tile) and its
+    kind-0 rows to resolve: one per (cell, payload) the kernel names, or,
+    without names, the live interior cells contracted by chain end (cnt =
+    cells, summed hops; a tile with none emits one zero row)."""
+    p = t + 2
+    fr, fc = np.divmod(np.arange(p * p, dtype=np.int64), p)
+    interior = (fr >= 1) & (fr <= t) & (fc >= 1) & (fc <= t)
+    ring = interior & ~((fr >= 2) & (fr < t) & (fc >= 2) & (fc < t))
+    cols = [*_KEY, "kind", "gid", "rep", "cnt", "final", *hops, *each]
+    ddl = ", ".join([_KEY_DDL, "kind int, gid bigint, rep bigint, "
+                     "cnt bigint, final int",
+                     *(f"{c} bigint" for c in (*hops, *each))])
+
+    def resolve(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        source_id, band, col, row = key
+        out = kernel(pdf, t, source_id, int(band), int(col), int(row))
+        if out is None:
+            return pd.DataFrame(columns=cols)
+        chosen, live, named = out
+        live = live.ravel()
+        ptr, acc = _collapse(chosen, hops)
+        gid = _gid(int(row) * t + fr - 1, int(col) * t + fc - 1)
+        if named is None:
+            cells = interior & live
+            dest, inv, cnt = np.unique(ptr[cells], return_inverse=True,
+                                       return_counts=True)
+            # bincount sums small integers in float64: exact
+            sums = {c: np.bincount(inv, weights=a[cells],
+                                   minlength=len(dest)).astype(np.int64)
+                    for c, a in acc.items()}
+            if not len(dest):  # no live cell: one zero row keeps the tile
+                dest, cnt = np.array([p + 1]), np.zeros(1, np.int64)
+                sums = {c: cnt for c in hops}
+        else:
+            cells = np.asarray(named["cell"], dtype=np.int64)
+            dest, cnt = ptr[cells], np.ones(len(cells), np.int64)
+            sums = {c: a[cells] for c, a in acc.items()}
+        final = interior[dest]
+        edge = np.flatnonzero(ring & live)
+        n0, n1 = len(dest), len(edge)
+        zeros = np.zeros(n1, np.int64)
+        return pd.DataFrame({
+            "source_id": source_id, "band": band, "col": col, "row": row,
+            "kind": np.repeat(np.array([0, 1], np.int32), [n0, n1]),
+            "gid": np.concatenate([np.zeros(n0, np.int64), gid[edge]]),
+            "rep": np.concatenate([gid[dest], gid[ptr[edge]]]),
+            "cnt": np.concatenate([cnt, zeros]),
+            "final": np.concatenate([final, interior[ptr[edge]]])
+            .astype(np.int32),
+            **{c: np.concatenate([sums[c], acc[c][edge]]) for c in hops},
+            **{c: np.concatenate([np.asarray(named[c], np.int64), zeros])
+               for c in each}}, columns=cols)
+
+    return resolve, ddl
+
+
+def contract(pieces: DataFrame, t: int, kernel, *, hops=None, each=(),
+             max_rounds: int, name: str, message: str) -> DataFrame:
+    """The tile-contraction driver of watershed, flow_length and the
+    least-cost path (module docstring). ``pieces`` is a halo-piece table
+    keyed by the receiving tile; per tile, ``kernel(pdf, t, source_id,
+    band, col, row)`` returns None (halo-only group) or (direction plane,
+    live mask, named) over the (t+2)^2 frame; ``named`` is None or
+    {"cell": flat frame indices, **payload columns in ``each``}. Chains
+    collapse in the tile (``_collapse``), the border table
+    pointer-doubles across tiles (``border_doubling``), and each kind-0
+    row joins the border at its chain end. Returns the resolved rows:
+    key, rep (the chain's global end key), cnt, the ``hops`` sums (own
+    sum + cnt x the end's) and the ``each`` payload."""
+    hops = hops or {}
+    resolve, ddl = _contract_tile(t, kernel, hops, each)
+    parts = compute_grouped(pieces, *_KEY).applyInPandas(resolve, ddl) \
+        .localCheckpoint(eager=True)
+    border, bc = border_doubling(
+        parts.filter(F.col("kind") == 1)
+        .select("source_id", "band", "gid", "rep", *hops, "final"),
+        summed=list(hops), max_syncs=max_rounds, name=name,
+        message=message)
+    rows = parts.filter(F.col("kind") == 0) \
+        .select(*_KEY, "rep", "cnt", *hops, *each, "final")
+    done = rows.filter(F.col("final") == 1).drop("final")
+    todo = rows.filter(F.col("final") == 0).alias("g").join(
+        bc(border.select("source_id", "band", F.col("gid").alias("bgid"),
+                         F.col("rep").alias("brep"),
+                         *(F.col(c).alias(f"b{c}") for c in hops))
+           .alias("m")),
+        on=[F.col("g.source_id") == F.col("m.source_id"),
+            F.col("g.band") == F.col("m.band"),
+            F.col("g.rep") == F.col("m.bgid")]) \
+        .select(*(F.col(f"g.{c}").alias(c) for c in _KEY),
+                F.col("m.brep").alias("rep"), F.col("g.cnt").alias("cnt"),
+                *((F.col(f"g.{c}") + F.col("g.cnt") * F.col(f"m.b{c}"))
+                  .alias(c) for c in hops),
+                *(F.col(f"g.{c}").alias(c) for c in each))
+    return done.unionByName(todo)
 
 
 def _scene_small(tiles: DataFrame, t: int, scene_max_px: int) -> bool:
@@ -1085,18 +1237,6 @@ def flow_accumulation(tiles: DataFrame, tile_size: int = 64,
     return _flow_acc_rounds(tiles, t, max_iter)
 
 
-def _ptr_double(ptr: np.ndarray) -> np.ndarray:
-    """Pointer doubling to the fixpoint (log(depth) rounds of
-    ptr = ptr[ptr]); fail-loud at 64 rounds."""
-    for _ in range(64):
-        nxt = ptr[ptr]
-        if np.array_equal(nxt, ptr):
-            return nxt
-        ptr = nxt
-    raise RuntimeError(  # pragma: no cover
-        "watershed pointer doubling did not settle")
-
-
 _WSHED_SCHEMA = ("source_id string, band int, col bigint, row bigint, "
                  "basin_qsum bigint, n_basins bigint, n_valid bigint")
 
@@ -1110,16 +1250,7 @@ def _watershed_scene(tiles: DataFrame, t: int) -> DataFrame:
         z, r0, c0 = _mosaic(pdf, t)
         H, W = z.shape
         valid = ~np.isnan(z)
-        chosen = _d8_chosen(np.pad(z, 1, constant_values=np.nan))
-        # flat pointer array: terminal cells point to themselves
-        n = H * W
-        idxs = np.arange(n, dtype=np.int64)
-        ptr = idxs.copy()
-        flat_ch = chosen.ravel()
-        for k, (dr, dc, _, _) in enumerate(_D8):
-            sel = flat_ch == k
-            ptr[sel] = idxs[sel] + dr * W + dc
-        ptr = _ptr_double(ptr)
+        ptr, _ = _collapse(_d8_chosen(np.pad(z, 1, constant_values=np.nan)))
         gi = (r0 * t + (ptr // W)) * 4096 + (c0 * t + (ptr % W))
         labels = np.where(valid.ravel(), gi, -1).reshape(H, W)
         out = []
@@ -1141,122 +1272,37 @@ def _watershed_scene(tiles: DataFrame, t: int) -> DataFrame:
         run, _WSHED_SCHEMA)
 
 
-_WSHED_PART = ("source_id string, band int, col bigint, row bigint, "
-               "kind int, gid bigint, rep bigint, cnt bigint, final int")
+def k_d8_tile(pdf, t, source_id, band, col, row):
+    """Contraction kernel of watershed and flow_length: D8 directions
+    from the tile's 1-px elevation halo (the scene solvers'
+    ``_d8_chosen``); every valid cell is live."""
+    frame = _assemble_frame(pdf, 1, t)
+    if frame is None:
+        return None
+    chosen = np.pad(_d8_chosen(frame), 1, constant_values=-2)
+    return chosen, chosen >= -1, None
 
 
 def _watershed_dist(tiles: DataFrame, t: int, max_rounds: int) -> DataFrame:
-    """Distributed path (r5 verdict task 1 — the pointer doubling lifted
-    OUT of the scene task onto a label table): NO scene-size bound.
-
-    1. ONE halo shuffle per tile computes D8 directions from the 1-px
-       elevation halo and resolves every in-tile cell by LOCAL pointer
-       doubling to either an in-tile terminal (final label) or its first
-       out-of-tile cell (a border cell of the neighbor tile). Emitted:
-       per-tile (rep, count) GROUP rows — cells contracted by shared
-       destination — plus a border-resolution row for each of the
-       tile's own ring cells (O(perimeter) per tile, a 16x contraction
-       at t=64; the label table a 100-TB run pointer-doubles is the
-       PERIMETER table, not the pixel table).
-    2. Distributed pointer doubling on the border table: non-final rows
-       self-join rep -> gid each round, so resolved-hop count doubles —
-       log2(max tile-boundary crossings) rounds of a tiny-table join,
-       fail-loud at ``max_rounds`` (a dropped invariant leaves rows
-       non-final forever, which the cap surfaces).
-    3. Group rows join the resolved border labels; per-tile rollups are
-       pure JVM aggregation (sum(rep*cnt), countDistinct, sum(cnt)).
-
-    Bit-identical to the scene solve: directions come from the same
-    _d8_chosen arithmetic, labels use the same gr*4096+gc encoding, and
-    basin paths are followed exactly (no approximation anywhere)."""
-    p = t + 2
-
-    def resolve(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band, col, row = key
-        cols = ["source_id", "band", "col", "row", "kind", "gid", "rep",
-                "cnt", "final"]
-        frame = _assemble_frame(pdf, 1, t)
-        if frame is None:
-            return pd.DataFrame(columns=cols)
-        chosen = _d8_chosen(frame)
-        valid = chosen >= -1
-        # frame-local pointer array: halo ring + terminals self-point
-        idxs = np.arange(p * p, dtype=np.int64)
-        ptr = idxs.copy()
-        interior = np.zeros((p, p), dtype=bool)
-        interior[1:1 + t, 1:1 + t] = True
-        chf = np.full((p, p), -2, dtype=np.int64)
-        chf[1:1 + t, 1:1 + t] = chosen
-        flat_ch = chf.ravel()
-        for k, (dr, dc, _, _) in enumerate(_D8):
-            sel = flat_ch == k
-            ptr[sel] = idxs[sel] + dr * p + dc
-        ptr = _ptr_double(ptr)
-        # global pixel id of a frame coordinate (same encoding as the
-        # scene solve): (row*t + fr-1)*4096 + (col*t + fc-1)
-        g_row = int(row) * t + (idxs // p) - 1
-        g_col = int(col) * t + (idxs % p) - 1
-        gid_of = g_row * 4096 + g_col
-        dest = ptr[interior.ravel()]                 # per interior cell
-        va = valid.ravel()
-        dest_final = interior.ravel()[dest]          # settled in-tile?
-        out = []
-        # GROUP rows: interior valid cells contracted by destination
-        dv, cv = np.unique(
-            np.stack([dest[va], dest_final[va].astype(np.int64)], axis=1),
-            axis=0, return_counts=True)
-        for (d, fin), cnt in zip(dv, cv):
-            out.append({"source_id": source_id, "band": int(band),
-                        "col": int(col), "row": int(row), "kind": 0,
-                        "gid": 0, "rep": int(gid_of[d]),
-                        "cnt": int(cnt), "final": int(fin)})
-        # BORDER rows: the tile's own 1-px ring (what neighbors can
-        # point into), valid cells only
-        fi = idxs.reshape(p, p)
-        ring = np.concatenate([fi[1, 1:1 + t], fi[t, 1:1 + t],
-                               fi[2:t, 1], fi[2:t, t]]) if t > 1 \
-            else fi[1:2, 1]
-        for cell in np.asarray(ring).ravel():
-            li = cell // p - 1, cell % p - 1
-            if not valid[li[0], li[1]]:
-                continue
-            d = ptr[cell]
-            out.append({"source_id": source_id, "band": int(band),
-                        "col": int(col), "row": int(row), "kind": 1,
-                        "gid": int(gid_of[cell]), "rep": int(gid_of[d]),
-                        "cnt": 0,
-                        "final": int(bool(interior.ravel()[d]))})
-        return pd.DataFrame(out, columns=cols)
-
-    parts = compute_grouped(_halo_pieces(tiles, 1, t),
-                            "source_id", "band", "col", "row") \
-        .applyInPandas(resolve, _WSHED_PART).localCheckpoint(eager=True)
-
-    border, bc = border_doubling(
-        parts.filter(F.col("kind") == 1)
-        .select("source_id", "band", "gid", "rep", "final"),
-        max_syncs=max_rounds, name="watershed",
+    """Distributed path on :func:`contract` (r5 verdict task 1 — the
+    pointer doubling lifted OUT of the scene task onto the O(perimeter)
+    border table, a 16x contraction at t=64): each tile's valid cells,
+    contracted by chain end, take their basin's key from the resolved
+    border; per-tile rollups are pure JVM aggregation (sum(label*cnt),
+    countDistinct, sum(cnt)). Bit-identical to the scene solve while
+    gc < 4096: directions come from the same _d8_chosen arithmetic and
+    the public label gr*4096+gc is computed once, here, from the
+    injective key."""
+    rows = contract(
+        _halo_pieces(tiles, 1, t), t, k_d8_tile, max_rounds=max_rounds,
+        name="watershed",
         message=f"watershed border resolution did not settle in "
                 f"{max_rounds} rounds; a flow path crosses more than "
                 f"2^{max_rounds} tile boundaries or the border table "
                 f"dropped a link")
-
-    groups = parts.filter(F.col("kind") == 0) \
-        .select("source_id", "band", "col", "row", "rep", "cnt", "final")
-    gdone = groups.filter(F.col("final") == 1) \
-        .select("source_id", "band", "col", "row",
-                F.col("rep").alias("label"), "cnt")
-    gtodo = groups.filter(F.col("final") == 0).alias("g").join(
-        bc(border.select("source_id", "band", F.col("gid").alias("bgid"),
-                         F.col("rep").alias("label")).alias("m")),
-        on=[F.col("g.source_id") == F.col("m.source_id"),
-            F.col("g.band") == F.col("m.band"),
-            F.col("g.rep") == F.col("m.bgid")]) \
-        .select(F.col("g.source_id").alias("source_id"),
-                F.col("g.band").alias("band"),
-                F.col("g.col").alias("col"), F.col("g.row").alias("row"),
-                "label", F.col("g.cnt").alias("cnt"))
-    return gdone.unionByName(gtodo) \
+    label = F.shiftright("rep", 32) * 4096 \
+        + F.col("rep").bitwiseAND(F.lit(0xFFFFFFFF))
+    return rows.select(*_KEY, label.alias("label"), "cnt") \
         .groupBy("source_id", "band", "col", "row") \
         .agg(F.sum(F.col("label") * F.col("cnt")).alias("basin_qsum"),
              F.countDistinct(F.when(F.col("cnt") > 0,
@@ -1275,11 +1321,19 @@ def watershed_labels(tiles: DataFrame, tile_size: int = 64,
     Adaptive strategy (the cost_distance template): scenes fitting
     ``scene_max_px`` on a side solve in ONE pointer-doubling task;
     otherwise — or with ``scene_max_px=0`` forcing it — the distributed
-    contraction path runs: in-tile pointer doubling to the tile border,
-    then distributed pointer doubling over the O(perimeter) border
-    table (bit-identical labels, r5 verdict task 1). Output per tile:
-    (source_id, band, col, row, basin_qsum = exact int64 sum of labels,
-    n_basins = distinct basins touching the tile, n_valid)."""
+    contraction path runs (:func:`contract`): in-tile pointer doubling
+    to the tile border, then distributed pointer doubling over the
+    O(perimeter) border table (bit-identical labels, r5 verdict task 1).
+    Output per tile: (source_id, band, col, row, basin_qsum = exact int64
+    sum of labels, n_basins = distinct basins touching the tile,
+    n_valid).
+
+    Bound: the label is the SQL oracle's encoding and is unique only
+    while every global pixel column gc < 4096; past it two terminals can
+    share a label, so n_basins can count two basins as one (basin_qsum
+    stays the exact sum of the labels). Both paths still follow every
+    flow path exactly (the distributed one keys its border table
+    injectively)."""
     t = int(tile_size)
     if _scene_small(tiles, t, scene_max_px):
         return _watershed_scene(tiles, t)
@@ -1625,26 +1679,9 @@ def stream_network(tiles: DataFrame, tile_size: int = 64,
 
 _FLEN_SCHEMA = ("source_id string, band int, col bigint, row bigint, "
                 "n_valid bigint, orth_sum bigint, diag_sum bigint")
-_FLEN_PART = ("source_id string, band int, col bigint, row bigint, "
-              "kind int, gid bigint, rep bigint, cnt bigint, "
-              "no bigint, nd bigint, final int")
-_D8_DIAG = [1 if dr != 0 and dc != 0 else 0
-            for dr, dc, _, _ in _D8]
-
-
-def _ptr_double_counts(ptr, no, nd):
-    """Pointer doubling carrying ADDITIVE integer step counts:
-    (ptr, no, nd) -> fixpoint of ptr'=ptr[ptr], n'=n+n[ptr]. Exact —
-    integer addition is associative, unlike the float path length."""
-    for _ in range(64):
-        nxt = ptr[ptr]
-        if np.array_equal(nxt, ptr):
-            return ptr, no, nd
-        no = no + no[ptr]
-        nd = nd + nd[ptr]
-        ptr = nxt
-    raise RuntimeError(  # pragma: no cover
-        "flow_length pointer doubling did not settle")
+# per-direction hop weights of flow_length: (orthogonal, diagonal) steps
+_FLEN_HOPS = {"no": [int(not (dr and dc)) for dr, dc in _NEIGHBORS],
+              "nd": [int(bool(dr and dc)) for dr, dc in _NEIGHBORS]}
 
 
 def _flow_length_scene(tiles: DataFrame, t: int) -> DataFrame:
@@ -1653,12 +1690,9 @@ def _flow_length_scene(tiles: DataFrame, t: int) -> DataFrame:
         z, r0, c0 = _mosaic(pdf, t)
         H, W = z.shape
         valid = ~np.isnan(z)
-        chosen = _d8_chosen(np.pad(z, 1, constant_values=np.nan))
-        chf = np.full((H + 2, W + 2), -2, dtype=np.int64)
-        chf[1:1 + H, 1:1 + W] = chosen
-        _, no, nd = _flen_init_rect(chf, H + 2, W + 2)
-        no = no.reshape(H + 2, W + 2)[1:1 + H, 1:1 + W]
-        nd = nd.reshape(H + 2, W + 2)[1:1 + H, 1:1 + W]
+        _, acc = _collapse(_d8_chosen(np.pad(z, 1, constant_values=np.nan)),
+                           _FLEN_HOPS)
+        no, nd = acc["no"].reshape(H, W), acc["nd"].reshape(H, W)
         out = []
         for row_t in pdf.itertuples(index=False):
             ty = (int(row_t.row) - r0) * t
@@ -1678,124 +1712,23 @@ def _flow_length_scene(tiles: DataFrame, t: int) -> DataFrame:
         run, _FLEN_SCHEMA)
 
 
-def _flen_init_rect(chf: np.ndarray, ph: int, pw: int):
-    """Rectangular variant of :func:`_flen_init` (row stride pw)."""
-    idxs = np.arange(ph * pw, dtype=np.int64)
-    ptr = idxs.copy()
-    no = np.zeros(ph * pw, dtype=np.int64)
-    nd = np.zeros(ph * pw, dtype=np.int64)
-    flat_ch = chf.ravel()
-    for k, (dr, dc, _, _) in enumerate(_D8):
-        sel = flat_ch == k
-        ptr[sel] = idxs[sel] + dr * pw + dc
-        if _D8_DIAG[k]:
-            nd[sel] = 1
-        else:
-            no[sel] = 1
-    return _ptr_double_counts(ptr, no, nd)
-
-
 def _flow_length_dist(tiles: DataFrame, t: int,
                       max_rounds: int) -> DataFrame:
     """Distributed path (the _watershed_dist contraction with ADDITIVE
-    integer step counts riding the pointer doubling): per tile, local
-    doubling resolves every cell to an in-tile terminal or its first
-    out-of-tile cell; a kind-2 row carries the tile's Σ local counts,
-    kind-0 GROUP rows carry (dest, cell count), and the O(perimeter)
-    border table pointer-doubles with counts ADDING each round (exact —
-    integer addition is associative). Tile total = local Σ + Σ_groups
-    cnt · resolved(dest)."""
-    p = t + 2
-
-    def resolve(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band, col, row = key
-        cols = ["source_id", "band", "col", "row", "kind", "gid",
-                "rep", "cnt", "no", "nd", "final"]
-        frame = _assemble_frame(pdf, 1, t)
-        if frame is None:
-            return pd.DataFrame(columns=cols)
-        chosen = _d8_chosen(frame)
-        valid = chosen >= -1
-        chf = np.full((p, p), -2, dtype=np.int64)
-        chf[1:1 + t, 1:1 + t] = chosen
-        ptr, no, nd = _flen_init_rect(chf, p, p)
-        interior = np.zeros((p, p), dtype=bool)
-        interior[1:1 + t, 1:1 + t] = True
-        idxs = np.arange(p * p, dtype=np.int64)
-        g_row = int(row) * t + (idxs // p) - 1
-        g_col = int(col) * t + (idxs % p) - 1
-        gid_of = g_row * 4096 + g_col
-        intmask = interior.ravel()
-        vmask = np.zeros(p * p, dtype=bool)
-        vmask[intmask] = valid.ravel()
-        dest = ptr[vmask]
-        dest_final = intmask[dest]
-        out = [{"source_id": source_id, "band": int(band),
-                "col": int(col), "row": int(row), "kind": 2,
-                "gid": 0, "rep": 0, "cnt": int(valid.sum()),
-                "no": int(no[vmask].sum()), "nd": int(nd[vmask].sum()),
-                "final": 1}]
-        dv, cv = np.unique(
-            np.stack([dest, dest_final.astype(np.int64)], axis=1),
-            axis=0, return_counts=True)
-        for (d, fin), cnt in zip(dv, cv):
-            out.append({"source_id": source_id, "band": int(band),
-                        "col": int(col), "row": int(row), "kind": 0,
-                        "gid": 0, "rep": int(gid_of[d]),
-                        "cnt": int(cnt), "no": 0, "nd": 0,
-                        "final": int(fin)})
-        fi = idxs.reshape(p, p)
-        ring = np.concatenate([fi[1, 1:1 + t], fi[t, 1:1 + t],
-                               fi[2:t, 1], fi[2:t, t]]) if t > 1 \
-            else fi[1:2, 1]
-        for cell in np.asarray(ring).ravel():
-            li = cell // p - 1, cell % p - 1
-            if not valid[li[0], li[1]]:
-                continue
-            d = ptr[cell]
-            out.append({"source_id": source_id, "band": int(band),
-                        "col": int(col), "row": int(row), "kind": 1,
-                        "gid": int(gid_of[cell]), "rep": int(gid_of[d]),
-                        "cnt": 0, "no": int(no[cell]),
-                        "nd": int(nd[cell]),
-                        "final": int(bool(intmask[d]))})
-        return pd.DataFrame(out, columns=cols)
-
-    parts = compute_grouped(_halo_pieces(tiles, 1, t),
-                            "source_id", "band", "col", "row") \
-        .applyInPandas(resolve, _FLEN_PART).localCheckpoint(eager=True)
-
-    border, bc = border_doubling(
-        parts.filter(F.col("kind") == 1)
-        .select("source_id", "band", "gid", "rep", "no", "nd", "final"),
-        summed=["no", "nd"], max_syncs=max_rounds, name="flow_length",
+    integer step counts riding the pointer doubling): each group of a
+    tile's cells with one chain end carries its cell count and its local
+    step sums; the border table pointer-doubles with counts ADDING each
+    round (exact — integer addition is associative). Tile total =
+    Σ_groups (local sums + cnt · resolved(end))."""
+    rows = contract(
+        _halo_pieces(tiles, 1, t), t, k_d8_tile, hops=_FLEN_HOPS,
+        max_rounds=max_rounds, name="flow_length",
         message=f"flow_length border resolution did not settle in "
                 f"{max_rounds} rounds")
-
-    local = parts.filter(F.col("kind") == 2) \
-        .select("source_id", "band", "col", "row",
-                F.col("cnt").alias("n_valid"),
-                F.col("no").alias("orth_sum"),
-                F.col("nd").alias("diag_sum"))
-    groups = parts.filter((F.col("kind") == 0) & (F.col("final") == 0))
-    gres = groups.alias("g").join(
-        bc(border.select("source_id", "band", F.col("gid").alias("bgid"),
-                         F.col("no").alias("bno"),
-                         F.col("nd").alias("bnd")).alias("m")),
-        on=[F.col("g.source_id") == F.col("m.source_id"),
-            F.col("g.band") == F.col("m.band"),
-            F.col("g.rep") == F.col("m.bgid")]) \
-        .select(F.col("g.source_id").alias("source_id"),
-                F.col("g.band").alias("band"),
-                F.col("g.col").alias("col"), F.col("g.row").alias("row"),
-                F.lit(0).alias("n_valid"),
-                (F.col("g.cnt") * F.col("m.bno")).alias("orth_sum"),
-                (F.col("g.cnt") * F.col("m.bnd")).alias("diag_sum"))
-    return local.unionByName(gres) \
-        .groupBy("source_id", "band", "col", "row") \
-        .agg(F.sum("n_valid").alias("n_valid"),
-             F.sum("orth_sum").alias("orth_sum"),
-             F.sum("diag_sum").alias("diag_sum"))
+    return rows.groupBy("source_id", "band", "col", "row") \
+        .agg(F.sum("cnt").alias("n_valid"),
+             F.sum("no").alias("orth_sum"),
+             F.sum("nd").alias("diag_sum"))
 
 
 def flow_length(tiles: DataFrame, tile_size: int = 64,

@@ -1311,54 +1311,58 @@ def kernel_density(points: DataFrame, zoom: int, radius_px: float = 4.0,
             .withColumn("ty", F.explode(F.sequence("_ty0", "_ty1")))
             .drop("_tx0", "_tx1", "_ty0", "_ty1"))
 
-    def _stamp_tile(pdf: pd.DataFrame) -> dict | None:
-        # ALL points of the tile at once (no per-point Python loop):
-        # fixed K-wide windows per point, one bincount accumulate.
-        # Contributions are quantized per (pixel, point) BEFORE the sum
-        # exactly as the scalar loop did — bincount's float64 partial
-        # sums of 2^20-scale integers are exact far past any realistic
-        # per-pixel point count (2^53 headroom).
-        col, row = int(pdf.tx.iloc[0]), int(pdf.ty.iloc[0])
-        bx, by = col * t, row * t
-        gx = pdf.gx.to_numpy()
-        gy = pdf.gy.to_numpy()
-        K = int(np.floor(2.0 * r)) + 1  # max window span (clamps shrink)
-        p0 = np.maximum(bx, np.ceil(gx - 0.5 - r)).astype(np.int64)
-        p1 = np.minimum(bx + t - 1, np.floor(gx - 0.5 + r)).astype(np.int64)
-        q0 = np.maximum(by, np.ceil(gy - 0.5 - r)).astype(np.int64)
-        q1 = np.minimum(by + t - 1, np.floor(gy - 0.5 + r)).astype(np.int64)
-        off = np.arange(K, dtype=np.int64)
-        px_i = p0[:, None] + off                      # (N, K)
-        py_i = q0[:, None] + off
-        okx = px_i <= p1[:, None]
-        oky = py_i <= q1[:, None]
-        dx = px_i.astype(np.float64) + 0.5 - gx[:, None]
-        dy = py_i.astype(np.float64) + 0.5 - gy[:, None]
-        w = np.maximum(0.0, 1.0 - np.sqrt(
-            dy[:, :, None] ** 2 + dx[:, None, :] ** 2) / r)  # (N, Ky, Kx)
-        qv = np.floor(w * 1048576.0 + 0.5)
-        valid = oky[:, :, None] & okx[:, None, :]
-        flat = (py_i - by)[:, :, None] * t + (px_i - bx)[:, None, :]
-        grid = np.bincount(flat[valid], weights=qv[valid],
-                           minlength=t * t).astype(np.int64).reshape(t, t)
-        total = int(grid.sum())
-        if total == 0:
-            return None
-        return {"zoom": zoom, "col": col, "row": row,
-                "density_sum": total, "n_nonzero": int((grid > 0).sum()),
-                "px": grid.tobytes()}
+    K = int(np.floor(2.0 * r)) + 1  # max window span (clamps shrink)
+    off = np.arange(K, dtype=np.int64)
+    # rows per stamp pass: each (rows, K, K) float64 temporary <= 8 MB
+    chunk = max(1, (1 << 20) // (K * K))
 
     def stamp(pdf: pd.DataFrame) -> pd.DataFrame:
-        # SUPERGROUP dispatcher (r7): one applyInPandas group per 4x4
-        # tile block instead of per tile — grouped-map pays a fixed
-        # pandas/Arrow cost PER GROUP, and a world-spread point set
-        # lands in thousands of sparse tiles; the inner per-tile stamp
-        # (and its quantized integer sums) is byte-identical.
-        rows = [r for _, sub in pdf.groupby(["tx", "ty"], sort=False)
-                for r in [_stamp_tile(sub)] if r is not None]
-        return pd.DataFrame(rows, columns=["zoom", "col", "row",
-                                           "density_sum", "n_nonzero",
-                                           "px"])
+        # ONE stamp over every tile of a 4x4 SUPERGROUP (r7: grouped-map
+        # pays a fixed pandas/Arrow cost PER GROUP, and a world-spread
+        # point set lands in thousands of sparse tiles): fixed K-wide
+        # windows per (point, tile) row, one bincount over tile x pixel,
+        # in row chunks that bound the temporaries.
+        # Contributions are quantized per (pixel, point) BEFORE the sum;
+        # bincount's float64 partial sums of 2^20-scale integers are
+        # exact far past any realistic per-pixel point count (2^53
+        # headroom).
+        keys, tile = np.unique(pdf[["tx", "ty"]].to_numpy(np.int64),
+                               axis=0, return_inverse=True)
+        tile = tile.ravel()
+        acc = np.zeros(len(keys) * t * t)
+        gxs, gys = pdf.gx.to_numpy(), pdf.gy.to_numpy()
+        for s in range(0, len(tile), chunk):
+            k, gx, gy = (a[s:s + chunk] for a in (tile, gxs, gys))
+            bx, by = keys[k, 0] * t, keys[k, 1] * t
+            p0 = np.maximum(bx, np.ceil(gx - 0.5 - r)).astype(np.int64)
+            p1 = np.minimum(bx + t - 1,
+                            np.floor(gx - 0.5 + r)).astype(np.int64)
+            q0 = np.maximum(by, np.ceil(gy - 0.5 - r)).astype(np.int64)
+            q1 = np.minimum(by + t - 1,
+                            np.floor(gy - 0.5 + r)).astype(np.int64)
+            px_i = p0[:, None] + off                      # (N, K)
+            py_i = q0[:, None] + off
+            dx = px_i.astype(np.float64) + 0.5 - gx[:, None]
+            dy = py_i.astype(np.float64) + 0.5 - gy[:, None]
+            w = np.maximum(0.0, 1.0 - np.sqrt(
+                dy[:, :, None] ** 2 + dx[:, None, :] ** 2) / r)
+            qv = np.floor(w * 1048576.0 + 0.5)            # (N, Ky, Kx)
+            valid = (py_i <= q1[:, None])[:, :, None] \
+                & (px_i <= p1[:, None])[:, None, :]
+            flat = (k[:, None, None] * t * t
+                    + (py_i - by[:, None])[:, :, None] * t
+                    + (px_i - bx[:, None])[:, None, :])
+            acc += np.bincount(flat[valid], weights=qv[valid],
+                               minlength=acc.size)
+        grid = acc.astype(np.int64).reshape(-1, t, t)
+        total = grid.sum(axis=(1, 2))
+        keep = total > 0
+        return pd.DataFrame({
+            "zoom": np.full(int(keep.sum()), zoom),
+            "col": keys[keep, 0], "row": keys[keep, 1],
+            "density_sum": total[keep],
+            "n_nonzero": (grid[keep] > 0).sum(axis=(1, 2)),
+            "px": [g.tobytes() for g in grid[keep]]})
 
     return (cand.withColumn("_sx", F.shiftright("tx", 2))
             .withColumn("_sy", F.shiftright("ty", 2))

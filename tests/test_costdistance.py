@@ -313,3 +313,29 @@ def test_least_cost_path_dist_tiny_budget_fails_loud(spark):
         CD.least_cost_path(tiles, lambda v, gr, gc: (gr == 0) & (gc == 0),
                            lambda sid, band: [(0, 31)], tile_size=4,
                            max_px=0, max_rounds=1).collect()
+
+
+def test_least_cost_path_dist_past_column_4096(spark):
+    """The parity fixture shifted 60 tile columns east (global pixel
+    columns 4992..5439): the distributed path must return the scene
+    walk's targets, lengths and costs — its border keys and its target
+    coordinates must not wrap at column 4096."""
+    from pyspark.sql import functions as F
+
+    shift = 60
+    key = lambda r: (r.source_id, r.band, r.tgr, r.tgc)  # noqa: E731
+    tiles = corpus.synth_friction_tiles(spark) \
+        .withColumn("col", F.col("col") + shift)
+    pred = lambda v, gr, gc: ((gr % 97 == 5)  # noqa: E731
+                              & ((gc - shift * T) % 89 == 7))
+    tgt = lambda sid, band: [  # noqa: E731
+        (1789, (18 + shift + int(sid.split("-")[1])) * 64 + 253),
+        (1538, (18 + shift + int(sid.split("-")[1])) * 64 + 2)]
+    scene = {key(r): (r.path_len, r.cost_q2)
+             for r in CD.least_cost_path(tiles, pred, tgt,
+                                         tile_size=T).collect()}
+    dist = {key(r): (r.path_len, r.cost_q2)
+            for r in CD.least_cost_path(tiles, pred, tgt, tile_size=T,
+                                        max_px=0).collect()}
+    assert len(scene) == 12 and min(k[3] for k in scene) > 4096
+    assert dist == scene

@@ -112,3 +112,38 @@ def test_tiny_budget_fails_loud(spark, run, match):
     tiles = _tiles_from(spark, np.abs(r - 1) * 10.0 + c * 1.0, 4)
     with pytest.raises(RuntimeError, match=match):
         run(tiles).collect()
+
+
+def _lcp_scene_one(spark):
+    from geotrellis_contrib_spark.operators import costdistance as CD
+
+    tiles = corpus_mod.synth_friction_tiles(spark) \
+        .filter("source_id = 'scene-1' AND band = 0")
+    return CD.least_cost_path(
+        tiles, lambda v, gr, gc: (gr % 97 == 5) & (gc % 89 == 7),
+        lambda sid, band: [(1789, 19 * 64 + 253), (1538, 19 * 64 + 2)],
+        tile_size=64, max_px=0)
+
+
+@pytest.mark.parametrize("run", [
+    lambda spark, tiles: FO.watershed_labels(tiles, tile_size=64,
+                                             scene_max_px=0),
+    lambda spark, tiles: FO.flow_length(tiles, tile_size=64,
+                                        scene_max_px=0),
+    lambda spark, tiles: _lcp_scene_one(spark),
+], ids=["watershed", "flow_length", "least_cost_path"])
+def test_dist_rows_independent_of_shuffle_partitions(spark, run):
+    # the contraction's border doubling and rollups run on
+    # spark.sql.shuffle.partitions; the rows must not depend on it
+    tiles = corpus_mod.synth_px_tiles(spark, tile_size=64) \
+        .filter("source_id = 'scene-2' AND band = 1")
+    conf = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(conf)
+    runs = []
+    try:
+        for n in (3, 17):
+            spark.conf.set(conf, str(n))
+            runs.append(sorted(tuple(r) for r in run(spark, tiles).collect()))
+    finally:
+        spark.conf.set(conf, prev)
+    assert runs[0] and runs[0] == runs[1]

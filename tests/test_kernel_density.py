@@ -106,3 +106,20 @@ def test_kernel_density_fail_loud(spark):
         px.kernel_density(df, zoom=ZOOM, radius_px=0.0, tile_size=T)
     with pytest.raises(ValueError):
         px.kernel_density(df, zoom=ZOOM, radius_px=40.0, tile_size=T)
+
+
+def test_kernel_density_dense_supergroup_matches_bruteforce(spark):
+    # 20,000 points over a 2x2-tile block of ONE 4x4 supergroup: with the
+    # kernels that spill across tile edges that is over 21,399 (point,
+    # tile) rows, so the stamp (K = 7) takes two row chunks
+    rng = np.random.default_rng(5)
+    gx = rng.uniform(4 * T - 6, 6 * T + 6, 20000)
+    gy = rng.uniform(4 * T + 1, 6 * T - 1, 20000)
+    lon = gx / NPX * 360.0 - 180.0
+    lat = np.degrees(np.arctan(np.sinh((1.0 - 2.0 * gy / NPX) * math.pi)))
+    pts = [(float(a), float(b)) for a, b in zip(lon, lat)]
+    df = spark.createDataFrame(pts, "lon double, lat double")
+    got = {(r["col"], r["row"]): (r["density_sum"], r["n_nonzero"])
+           for r in px.kernel_density(df, zoom=ZOOM, radius_px=R,
+                                      tile_size=T).collect()}
+    assert got == _brute(pts)
