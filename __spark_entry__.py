@@ -2589,7 +2589,7 @@ def q_raster_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear-in-degrees-within-tile convention), so membership reduces to
     exact integer global-pixel ranges the SQL twin recomputes with zero
     transcendentals. Engine: zero-shuffle closed-over-dimension Arrow
-    map (no-hit tiles never deserialize pixels), both modes unioned
+    map (no-hit tiles skip the pixel test), both modes unioned
     under a mode column, per-tile NoData-aware sums (quarter-multiple
     values -> order-free float64). Oracle: the closed-form fixture field
     with CASE range membership per mode."""

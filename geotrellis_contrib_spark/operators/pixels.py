@@ -2,12 +2,25 @@
 
 The tile table carries packed pixel windows as ``binary`` columns
 (row-major, dtype-tagged), the engine analog of the reference's
-``Raster[MultibandTile]`` (SURVEY.md §1.1). Everything here is
-batch-vectorized numpy inside ``mapInPandas`` / ``applyInPandas``; kernels
-are composed in Python and registered as ONE UDF per stage so a
-reproject∘resample∘convert chain costs a single Arrow hop — the engine's
-version of GDAL warp-option fusion
+``Raster[MultibandTile]`` (SURVEY.md §1.1).
+
+One driver: every narrow per-tile operator here and in ``render.py`` is
+a module-level numpy kernel ``k_<op>(row, **params)`` bound with
+``functools.partial`` and run by :func:`map_tiles` — ONE ``mapInPandas``
+stage that owns the Arrow batch loop, the ``px`` unpack/pack and the row
+assembly (:func:`tile_batch`). A payload unpacks to ``h`` x ``w`` when
+its row carries them (a window), else to the square its byte length
+gives; a ``tile_size`` argument places keys and windows, never the
+unpack. Kernels compose in Python, so a
+reproject∘resample∘convert chain (:func:`k_warp`) costs a single Arrow
+hop — the engine's version of GDAL warp-option fusion
 (/root/reference/gdal/.../GDALRasterSource.scala:114-126, SURVEY.md §2.4).
+Grouped operators (merge, retile assemble, overview assemble, polygon
+burn, the point stamps) stay ``applyInPandas``.
+
+One NoData rule (:func:`valid_px`): a pixel is valid iff it is not NaN
+and not EXACTLY the tile's nodata — the rule the SQL oracles spell
+``val <> nodata``.
 
 Semantics ported from observable reference behavior:
   - convert: dtype cast with unsigned-byte clamp+round
@@ -25,13 +38,18 @@ Semantics ported from observable reference behavior:
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable, Iterator
+from functools import lru_cache, partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from geotrellis_contrib_spark import geom as GM
+from geotrellis_contrib_spark import grid as G
 from geotrellis_contrib_spark.grid import TILE_SIZE
 
 DTYPES = {"uint8": np.uint8, "int16": np.int16, "int32": np.int32,
@@ -47,6 +65,21 @@ def pack(arr: np.ndarray) -> bytes:
 
 def unpack(blob: bytes, dtype: str, size: int = TILE_SIZE) -> np.ndarray:
     return np.frombuffer(blob, dtype=DTYPES[dtype]).reshape(size, size)
+
+
+def valid_px(arr: np.ndarray, nodata: float) -> np.ndarray:
+    """The raster tier's one NoData rule: valid iff not NaN and not
+    exactly ``nodata`` (a NaN nodata leaves only the NaN test)."""
+    return ~np.isnan(arr) & (arr != nodata)
+
+
+def pixel_centers(xmin: float, ymin: float, xmax: float, ymax: float,
+                  t: int) -> tuple[np.ndarray, np.ndarray]:
+    """(gx, gy) lon/lat grids of a t x t tile's pixel centers, linear in
+    degrees within the tile (row 0 at ``ymax``)."""
+    base = np.arange(t) + 0.5
+    return np.meshgrid(xmin + base * (xmax - xmin) / t,
+                       ymax - base * (ymax - ymin) / t)
 
 
 # ---------------------------------------------------------------------------
@@ -187,9 +220,7 @@ def _k_resample_agg(kind: str):
                 f"{rows}x{cols} -> {out_rows}x{out_cols}")
         fr, fc = rows // out_rows, cols // out_cols
         a = arr.astype(np.float64)
-        invalid = np.isnan(a) if np.isnan(nodata) else \
-            (np.isnan(a) | (a == nodata))
-        a = np.where(invalid, np.nan, a)
+        a = np.where(valid_px(a, nodata), a, np.nan)
         blocks = a.reshape(out_rows, fr, out_cols, fc)
         if kind == "mode":
             # most frequent valid value, smallest value on ties
@@ -302,19 +333,18 @@ def k_merge(stack: list[np.ndarray], nodatas: list[float],
     reference semantics, MosaicRasterSource.scala:121-131);
     'mean' / 'max' / 'min' — composites over the valid sources per pixel
     (engine extensions for cloud-free mosaicking-style pipelines)."""
+    stack = [a.astype(np.float64) for a in stack]
     if strategy == "first":
-        out = stack[0].astype(np.float64).copy()
-        filled = ~np.isclose(out, nodatas[0]) & ~np.isnan(out)
-        for arr, nd in zip(stack[1:], nodatas[1:]):
-            a = arr.astype(np.float64)
-            good = ~np.isclose(a, nd) & ~np.isnan(a) & ~filled
+        out = stack[0].copy()
+        filled = valid_px(out, nodatas[0])
+        for a, nd in zip(stack[1:], nodatas[1:]):
+            good = valid_px(a, nd) & ~filled
             out[good] = a[good]
             filled |= good
         return out
     import warnings
 
-    layers = np.stack([np.where(np.isclose(a.astype(np.float64), nd), np.nan,
-                                a.astype(np.float64))
+    layers = np.stack([np.where(valid_px(a, nd), a, np.nan)
                        for a, nd in zip(stack, nodatas)])
     with np.errstate(invalid="ignore"), warnings.catch_warnings():
         # nanmean/max/min over an all-NoData pixel is a legal NoData
@@ -332,35 +362,96 @@ def k_merge(stack: list[np.ndarray], nodatas: list[float],
 
 
 # ---------------------------------------------------------------------------
-# Spark operators (one Arrow hop per stage; kernels fused in Python)
+# The per-tile driver (one Arrow hop per stage; kernels fused in Python)
 # ---------------------------------------------------------------------------
 
-def map_tiles(tiles: DataFrame, kernel: Callable[[np.ndarray, pd.Series], np.ndarray],
-              out_dtype: str | None = None, tile_size: int = TILE_SIZE) -> DataFrame:
-    """Apply a fused numpy kernel to every tile payload via ONE mapInPandas
-    stage (narrow; composes with Catalyst pruning upstream)."""
-    schema = tiles.schema
+def _payload(row: dict) -> np.ndarray:
+    """A row's ``px`` as a read-only numpy view: (h, w) for a window row,
+    square for a tile (its side follows from the byte length)."""
+    a = np.frombuffer(row["px"], dtype=DTYPES[row["dtype"]])
+    if "h" in row:
+        return a.reshape(int(row["h"]), int(row["w"]))
+    t = math.isqrt(a.size)
+    return a.reshape(t, t)
+
+
+def tile_batch(pdf: pd.DataFrame, kernel: Callable, names: list[str]) -> pd.DataFrame:
+    """One Arrow batch through ``kernel`` — the body of :func:`map_tiles`,
+    callable on any pandas frame. Each row reaches the kernel as a dict of
+    its columns with ``px`` unpacked; the kernel returns a dict (one output
+    row), a list of dicts (fan-out) or None (drop). An output column the
+    kernel does not set is copied from the input row by name; an array
+    ``px`` is packed and names the ``dtype``."""
+    out = []
+    for row in pdf.to_dict("records"):
+        if "px" in row:
+            row["px"] = _payload(row)
+        res = kernel(row)
+        if res is None:
+            continue
+        for r in res if isinstance(res, list) else [res]:
+            rec = {c: r[c] if c in r else row[c] for c in names}
+            if isinstance(rec.get("px"), np.ndarray):
+                if "dtype" in rec:
+                    rec["dtype"] = rec["px"].dtype.name
+                rec["px"] = pack(rec["px"])
+            out.append(rec)
+    return pd.DataFrame(out, columns=names)
+
+
+def map_tiles(tiles: DataFrame, kernel: Callable, schema: StructType | str) -> DataFrame:
+    """THE narrow per-tile driver: ONE mapInPandas stage that runs
+    ``kernel`` over every row (:func:`tile_batch`) and declares ``schema``
+    (a StructType or a DDL string). Narrow, so Catalyst prunes upstream."""
+    names = (schema if isinstance(schema, StructType)
+             else StructType.fromDDL(schema)).names
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if len(pdf):
-                px, dt = [], []
-                # itertuples, never iterrows: no per-row Series materialization
-                for r in pdf.itertuples(index=False):
-                    arr = unpack(r.px, r.dtype, tile_size)
-                    out = kernel(arr, r)
-                    px.append(pack(out))
-                    dt.append(out_dtype or str(out.dtype))
-                pdf = pdf.assign(px=px, dtype=dt)
-            yield pdf
+            yield tile_batch(pdf, kernel, names)
 
     return tiles.mapInPandas(run, schema)
 
 
+def k_warp(row: dict, target: str | None = None, out_size: int | None = None,
+           method: str = "nearest", mercator: bool = False) -> dict:
+    """convert -> resample -> region-reproject(4326->3857) of one tile,
+    each step optional: ``target`` dtype (:func:`k_convert`), ``out_size``
+    px by ResampleMethod ``method``, then with ``mercator`` the tile's own
+    footprint (txmin..tymax) resampled uniformly in meters, each target
+    center back-transformed to lon/lat and gather-sampled (nearest), with
+    its mercator extent added as mx_min..my_max."""
+    arr, nd = row["px"], row["nodata"]
+    if target is not None:
+        arr = k_convert(arr, nd, target)
+    if out_size is not None:
+        if method in RESAMPLE_AGG_KERNELS:
+            arr = RESAMPLE_AGG_KERNELS[method](arr, out_size, out_size, nd)
+        else:
+            arr = RESAMPLE_KERNELS[method](arr, out_size, out_size)
+    if not mercator:
+        return {"px": arr}
+    src = (row["txmin"], row["tymin"], row["txmax"], row["tymax"])
+    x0, y0 = G.lonlat_to_mercator(src[0], src[1])
+    x1, y1 = G.lonlat_to_mercator(src[2], src[3])
+    dst = (float(x0), float(y0), float(x1), float(y1))
+    out = k_reproject_nearest(arr.astype(np.float64), src, dst, arr.shape,
+                              G.mercator_to_lonlat, nd)
+    return {"px": out, "mx_min": dst[0], "my_min": dst[1],
+            "mx_max": dst[2], "my_max": dst[3]}
+
+
+def _known_method(method: str) -> str:
+    """``method`` if it names a ResampleMethod: an unknown one fails at plan
+    build, not in a Python worker."""
+    if method not in RESAMPLE_KERNELS and method not in RESAMPLE_AGG_KERNELS:
+        raise ValueError(f"unknown resample method {method!r}")
+    return method
+
+
 def convert(tiles: DataFrame, target: str, tile_size: int = TILE_SIZE) -> DataFrame:
     """Lazy cellType convert over the whole table (RasterSourceF.scala:165-184)."""
-    return map_tiles(tiles, lambda a, r: k_convert(a, r.nodata, target),
-                     out_dtype=target, tile_size=tile_size)
+    return map_tiles(tiles, partial(k_warp, target=target), tiles.schema)
 
 
 def resample(tiles: DataFrame, out_size: int, tile_size: int = TILE_SIZE,
@@ -371,18 +462,33 @@ def resample(tiles: DataFrame, out_size: int, tile_size: int = TILE_SIZE,
     ('average' | 'mode' | 'median' | 'max' | 'min' | 'sum', integer
     downscale factors, NoData-excluding — aggregate results carry
     nodata=NaN since empty blocks come back NaN)."""
+    out = map_tiles(tiles, partial(k_warp, out_size=out_size,
+                                   method=_known_method(method)), tiles.schema)
     if method in RESAMPLE_AGG_KERNELS:
-        kern = RESAMPLE_AGG_KERNELS[method]
-        return map_tiles(tiles,
-                         lambda a, r: kern(a, out_size, out_size,
-                                           r.nodata),
-                         out_dtype="float64",
-                         tile_size=tile_size).withColumn(
-            "nodata", F.lit(float("nan")))
-    kern = RESAMPLE_KERNELS[method]
-    out_dtype = None if method == "nearest" else "float64"
-    return map_tiles(tiles, lambda a, r: kern(a, out_size, out_size),
-                     out_dtype=out_dtype, tile_size=tile_size)
+        return out.withColumn("nodata", F.lit(float("nan")))
+    return out
+
+
+def _merge_group(strategy: str, multires: bool) -> Callable:
+    """The grouped body of merge_tiles and merge_tiles_multires: one tile
+    key's per-pixel composite, sources ordered by source_idx;
+    ``multires`` first resamples (nearest) every source onto the group's
+    finest grid."""
+    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("source_idx")
+        arrs = [_payload(r) for r in pdf[["px", "dtype"]].to_dict("records")]
+        first = pdf.iloc[0]
+        out = {"zoom": first.zoom, "col": first.col, "row": first.row,
+               "band": first.band, "dtype": "float64", "nodata": first.nodata}
+        if multires:
+            n = max(a.shape[0] for a in arrs)
+            arrs = [a if a.shape[0] == n else k_resample_nearest(a, n, n)
+                    for a in arrs]
+            out["tile_size"] = n
+        out["px"] = pack(k_merge(arrs, list(pdf.nodata), strategy))
+        return pd.DataFrame([out])
+
+    return merge_group
 
 
 def merge_tiles(tiles: DataFrame, tile_size: int = TILE_SIZE,
@@ -392,19 +498,8 @@ def merge_tiles(tiles: DataFrame, tile_size: int = TILE_SIZE,
     semantics; 'mean'/'max'/'min' composites). One shuffle on the tile key —
     the cell-partitioned grouped-map pattern of the north_star
     raster<->vector paths."""
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("source_idx")
-        arrs = [unpack(b, d, tile_size) for b, d in zip(pdf.px, pdf["dtype"])]
-        merged = k_merge(arrs, list(pdf.nodata), strategy)
-        first = pdf.iloc[0]
-        return pd.DataFrame([{
-            "zoom": first.zoom, "col": first.col, "row": first.row,
-            "band": first.band, "dtype": "float64",
-            "nodata": first.nodata, "px": pack(merged),
-        }])
-
     return tiles.groupBy("zoom", "col", "row", "band").applyInPandas(
-        merge_group,
+        _merge_group(strategy, multires=False),
         "zoom int, col bigint, row bigint, band int, dtype string, nodata double, px binary")
 
 
@@ -417,28 +512,18 @@ def merge_tiles_multires(tiles: DataFrame, strategy: str = "first") -> DataFrame
     (MosaicRasterSource.scala:121-146; cell-size mismatch is resolved by
     resample, only EXTENT mismatch raises GeoAttrsError). One shuffle on the
     tile key. Output dtype float64, tile_size = the group's finest."""
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("source_idx")
-        target = int(pdf.tile_size.max())
-        arrs = []
-        for blob, dt, ts in zip(pdf["px"].to_numpy(), pdf["dtype"].to_numpy(),
-                                pdf["tile_size"].to_numpy()):
-            a = unpack(blob, dt, int(ts))
-            if int(ts) != target:
-                a = k_resample_nearest(a, target, target)
-            arrs.append(a)
-        merged = k_merge(arrs, list(pdf.nodata), strategy)
-        first = pdf.iloc[0]
-        return pd.DataFrame([{
-            "zoom": first.zoom, "col": first.col, "row": first.row,
-            "band": first.band, "dtype": "float64",
-            "nodata": first.nodata, "tile_size": target, "px": pack(merged),
-        }])
-
     return tiles.groupBy("zoom", "col", "row", "band").applyInPandas(
-        merge_group,
+        _merge_group(strategy, multires=True),
         "zoom int, col bigint, row bigint, band int, dtype string, "
         "nodata double, tile_size int, px binary")
+
+
+def k_px_sum(row: dict) -> dict:
+    """NoData-aware float64 pixel sum and count of one payload; a window
+    (no nodata column) counts its non-NaN pixels."""
+    arr = row["px"].astype(np.float64)
+    m = valid_px(arr, row.get("nodata", np.nan))
+    return {"px_sum": float(arr[m].sum()), "px_count": int(m.sum())}
 
 
 def tile_stats(tiles: DataFrame, keys=("col", "row", "band"),
@@ -446,25 +531,8 @@ def tile_stats(tiles: DataFrame, keys=("col", "row", "band"),
     """Per-tile NoData-aware pixel sum/count keyed by ``keys`` — the
     readCells checksum at tile granularity (SubsceneReadingIT.scala:51
     generalized); one narrow mapInPandas, no shuffle."""
-    keys = list(keys)
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            kcols = [pdf[k].to_numpy() for k in keys]
-            for i, (blob, dt, nd, ts) in enumerate(zip(
-                    pdf["px"].to_numpy(), pdf["dtype"].to_numpy(),
-                    pdf["nodata"].to_numpy(), pdf[tile_size_col].to_numpy())):
-                arr = unpack(blob, dt, int(ts)).astype(np.float64)
-                valid = ~np.isclose(arr, nd) & ~np.isnan(arr)
-                row = {k: kc[i] for k, kc in zip(keys, kcols)}
-                row["px_sum"] = float(arr[valid].sum())
-                row["px_count"] = int(valid.sum())
-                out.append(row)
-            yield pd.DataFrame(out, columns=keys + ["px_sum", "px_count"])
-
     key_schema = ", ".join(f"{k} bigint" for k in keys)
-    return tiles.mapInPandas(stats, f"{key_schema}, px_sum double, px_count bigint")
+    return map_tiles(tiles, k_px_sum, f"{key_schema}, px_sum double, px_count bigint")
 
 
 def reproject_to_mercator(tiles: DataFrame, tile_size: int = TILE_SIZE) -> DataFrame:
@@ -473,45 +541,10 @@ def reproject_to_mercator(tiles: DataFrame, tile_size: int = TILE_SIZE) -> DataF
     uniformly in meters; each target pixel center back-transforms to lon/lat
     and gather-samples the source (nearest) — the
     GeoTiffReprojectRasterSource per-window pipeline (§2.4), one
-    mapInPandas stage. Output schema: input + x/y mercator extent columns."""
-    from geotrellis_contrib_spark import grid as G
-    from geotrellis_contrib_spark.functions import cells as C
-
-    t = (tiles
-         .withColumn("txmin", C.tile_xmin(F.col("zoom"), F.col("col")))
-         .withColumn("txmax", C.tile_xmax(F.col("zoom"), F.col("col")))
-         .withColumn("tymin", C.tile_ymin(F.col("zoom"), F.col("row")))
-         .withColumn("tymax", C.tile_ymax(F.col("zoom"), F.col("row"))))
-
-    out_schema = (", ".join(f"{f.name} {f.dataType.simpleString()}" for f in t.schema)
-                  + ", mx_min double, my_min double, mx_max double, my_max double")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            px_out, bounds = [], []
-            for blob, dt, nd, tx0, ty0, tx1, ty1 in zip(
-                    pdf["px"].to_numpy(), pdf["dtype"].to_numpy(),
-                    pdf["nodata"].to_numpy(), pdf["txmin"].to_numpy(),
-                    pdf["tymin"].to_numpy(), pdf["txmax"].to_numpy(),
-                    pdf["tymax"].to_numpy()):
-                arr = unpack(blob, dt, tile_size).astype(np.float64)
-                x0, y0 = G.lonlat_to_mercator(tx0, ty0)
-                x1, y1 = G.lonlat_to_mercator(tx1, ty1)
-                dst_ext = (float(x0), float(y0), float(x1), float(y1))
-                out = k_reproject_nearest(
-                    arr, (tx0, ty0, tx1, ty1), dst_ext,
-                    (tile_size, tile_size),
-                    lambda mx, my: G.mercator_to_lonlat(mx, my), nd)
-                px_out.append(pack(out))
-                bounds.append(dst_ext)
-            pdf = pdf.assign(px=px_out, dtype="float64")
-            pdf["mx_min"] = [b[0] for b in bounds]
-            pdf["my_min"] = [b[1] for b in bounds]
-            pdf["mx_max"] = [b[2] for b in bounds]
-            pdf["my_max"] = [b[3] for b in bounds]
-            yield pdf
-
-    return t.mapInPandas(run, out_schema)
+    mapInPandas stage. Output schema: input + x/y mercator extent columns.
+    The warp chain with an identity convert (float64) and resample
+    (nearest, same size)."""
+    return warp_chain_to_mercator(tiles, "float64", tile_size, "nearest")
 
 
 def warp_chain_to_mercator(tiles: DataFrame, target_dtype: str, out_size: int,
@@ -524,45 +557,54 @@ def warp_chain_to_mercator(tiles: DataFrame, target_dtype: str, out_size: int,
     convert(target_dtype) |> resample(out_size, method) |>
     reproject_to_mercator. Output: input columns (px at out_size, dtype
     float64) + mercator extent columns."""
-    from geotrellis_contrib_spark import grid as G
-    from geotrellis_contrib_spark.functions import cells as C
+    from geotrellis_contrib_spark.operators.tiling import tile_extent_cols
 
-    resample_k = RESAMPLE_KERNELS[method]
-    t = (tiles
-         .withColumn("txmin", C.tile_xmin(F.col("zoom"), F.col("col")))
-         .withColumn("txmax", C.tile_xmax(F.col("zoom"), F.col("col")))
-         .withColumn("tymin", C.tile_ymin(F.col("zoom"), F.col("row")))
-         .withColumn("tymax", C.tile_ymax(F.col("zoom"), F.col("row"))))
-    out_schema = (", ".join(f"{f.name} {f.dataType.simpleString()}" for f in t.schema)
-                  + ", mx_min double, my_min double, mx_max double, my_max double")
+    kernel = partial(k_warp, target=target_dtype, out_size=out_size,
+                     method=_known_method(method), mercator=True)
+    t = tile_extent_cols(tiles)
+    schema = (", ".join(f"{f.name} {f.dataType.simpleString()}" for f in t.schema)
+              + ", mx_min double, my_min double, mx_max double, my_max double")
+    return map_tiles(t, kernel, schema)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            px_out, bounds = [], []
-            for blob, dt, nd, tx0, ty0, tx1, ty1 in zip(
-                    pdf["px"].to_numpy(), pdf["dtype"].to_numpy(),
-                    pdf["nodata"].to_numpy(), pdf["txmin"].to_numpy(),
-                    pdf["tymin"].to_numpy(), pdf["txmax"].to_numpy(),
-                    pdf["tymax"].to_numpy()):
-                arr = unpack(blob, dt, tile_size)
-                arr = k_convert(arr, nd, target_dtype)
-                arr = resample_k(arr, out_size, out_size).astype(np.float64)
-                x0, y0 = G.lonlat_to_mercator(tx0, ty0)
-                x1, y1 = G.lonlat_to_mercator(tx1, ty1)
-                dst_ext = (float(x0), float(y0), float(x1), float(y1))
-                out = k_reproject_nearest(
-                    arr, (tx0, ty0, tx1, ty1), dst_ext, (out_size, out_size),
-                    lambda mx, my: G.mercator_to_lonlat(mx, my), nd)
-                px_out.append(pack(out))
-                bounds.append(dst_ext)
-            pdf = pdf.assign(px=px_out, dtype="float64")
-            pdf["mx_min"] = [b[0] for b in bounds]
-            pdf["my_min"] = [b[1] for b in bounds]
-            pdf["mx_max"] = [b[2] for b in bounds]
-            pdf["my_max"] = [b[3] for b in bounds]
-            yield pdf
 
-    return t.mapInPandas(run, out_schema)
+_WINDOW_DDL = ("source_id string, band int, px_col_min bigint, px_row_min bigint, "
+               "h int, w int, dtype string, px binary")
+
+
+def k_reproject_grid(row: dict, target, kern: Callable, to_dst: Callable,
+                     fwd: Callable) -> dict | None:
+    """The target-grid window one tile owns (reproject_to_grid): its
+    footprint's covered window, outset one pixel, its pixel centers
+    back-transformed (``fwd``) and sampled by ``kern``; None when the
+    footprint misses the target region."""
+    tx0, ty0, tx1, ty1 = row["txmin"], row["tymin"], row["txmax"], row["tymax"]
+    # Footprint bbox from the SAMPLED TILE BOUNDARY, not two corners: UTM
+    # (and any non-axis-monotone dst) puts easting/northing extremes
+    # mid-edge (min northing sits on the central meridian when the tile
+    # crosses it), so a corner bbox can under-cover by more than the 1px
+    # outset and drop owned pixels as NaN holes. Extremes of these
+    # conformal projections over a lon/lat rectangle lie on its boundary,
+    # so edge sampling + the outset is sufficient.
+    es = np.linspace(0.0, 1.0, 9)
+    bx = np.concatenate([tx0 + (tx1 - tx0) * es, tx0 + (tx1 - tx0) * es,
+                         np.full(9, tx0), np.full(9, tx1)])
+    by = np.concatenate([np.full(9, ty0), np.full(9, ty1),
+                         ty0 + (ty1 - ty0) * es, ty0 + (ty1 - ty0) * es])
+    fx, fy = to_dst(bx, by)
+    fx0, fx1 = float(np.min(fx)), float(np.max(fx))
+    fy0, fy1 = float(np.min(fy)), float(np.max(fy))
+    cw, ch = target.cellwidth, target.cellheight
+    c0 = max(int(np.floor((fx0 - target.xmin) / cw)) - 1, 0)
+    c1 = min(int(np.floor((fx1 - target.xmin) / cw)) + 1, target.cols - 1)
+    r0 = max(int(np.floor((target.ymax - fy1) / ch)) - 1, 0)
+    r1 = min(int(np.floor((target.ymax - fy0) / ch)) + 1, target.rows - 1)
+    if c0 > c1 or r0 > r1:
+        return None
+    win = kern(row["px"].astype(np.float64), (tx0, ty0, tx1, ty1),
+               target.bounds_to_extent(c0, r0, c1, r1),
+               (r1 - r0 + 1, c1 - c0 + 1), fwd, np.nan)
+    return {"px_col_min": c0, "px_row_min": r0,
+            "h": win.shape[0], "w": win.shape[1], "px": win}
 
 
 def reproject_to_grid(tiles: DataFrame, target, method: str = "nearest",
@@ -588,87 +630,35 @@ def reproject_to_grid(tiles: DataFrame, target, method: str = "nearest",
 
     Output rows in TARGET pixel space: (source_id, band, px_col_min,
     px_row_min, h, w, dtype='float64', px)."""
-    from geotrellis_contrib_spark import grid as GR
-    from geotrellis_contrib_spark.functions import cells as C
+    from geotrellis_contrib_spark.operators.tiling import tile_extent_cols
 
     if isinstance(dst_crs, str):
         # proj4 string: arbitrary parallels/centers dispatched onto the
         # same Snyder/Krueger kernels the named registry uses
-        to_dst, fwd = GR.parse_proj4(dst_crs)
+        to_dst, fwd = G.parse_proj4(dst_crs)
     elif dst_crs == 3857:
-        fwd = GR.mercator_to_lonlat        # dst -> src
-        to_dst = GR.lonlat_to_mercator     # src -> dst (footprint corners)
+        fwd = G.mercator_to_lonlat        # dst -> src
+        to_dst = G.lonlat_to_mercator     # src -> dst (footprint corners)
     elif dst_crs == 4326:
         fwd = to_dst = lambda x, y: (np.asarray(x, dtype=np.float64),
                                      np.asarray(y, dtype=np.float64))
     elif 32601 <= dst_crs <= 32760 and dst_crs % 100 <= 60:
         zone, south = dst_crs % 100, dst_crs >= 32701
         fn = 10000000.0 if south else 0.0
-        fwd = lambda e, n: GR.utm_to_lonlat(e, n, zone, northern=not south)  # noqa: E731
+        fwd = lambda e, n: G.utm_to_lonlat(e, n, zone, northern=not south)  # noqa: E731
         def to_dst(lon, lat):
-            e, n = GR.lonlat_to_utm(lon, lat, zone)
+            e, n = G.lonlat_to_utm(lon, lat, zone)
             return e, n + fn
-    elif dst_crs in GR.NAMED_CRS:
+    elif dst_crs in G.NAMED_CRS:
         # LAEA/Albers/LCC (Snyder ellipsoidal forms, grid.NAMED_CRS)
-        to_dst, fwd = GR.NAMED_CRS[dst_crs][0], GR.NAMED_CRS[dst_crs][1]
+        to_dst, fwd = G.NAMED_CRS[dst_crs][0], G.NAMED_CRS[dst_crs][1]
     else:
         raise ValueError(
             f"unsupported dst CRS {dst_crs} (4326-keyed tiles -> 3857 | 4326 | "
-            f"UTM 326xx/327xx | {sorted(GR.NAMED_CRS)})")
-    kern = REPROJECT_KERNELS[method]
-    cw, ch = target.cellwidth, target.cellheight
-    tcols, trows = target.cols, target.rows
-    txmin_t, tymax_t = target.xmin, target.ymax
-
-    t = (tiles
-         .withColumn("txmin", C.tile_xmin(F.col("zoom"), F.col("col")))
-         .withColumn("txmax", C.tile_xmax(F.col("zoom"), F.col("col")))
-         .withColumn("tymin", C.tile_ymin(F.col("zoom"), F.col("row")))
-         .withColumn("tymax", C.tile_ymax(F.col("zoom"), F.col("row"))))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                # Footprint bbox from the SAMPLED TILE BOUNDARY, not two
-                # corners: UTM (and any non-axis-monotone dst) puts easting/
-                # northing extremes mid-edge (min northing sits on the
-                # central meridian when the tile crosses it), so a corner
-                # bbox can under-cover by more than the 1px outset and drop
-                # owned pixels as NaN holes. Extremes of these conformal
-                # projections over a lon/lat rectangle lie on its boundary,
-                # so edge sampling + the outset is sufficient.
-                es = np.linspace(0.0, 1.0, 9)
-                bx = np.concatenate([r.txmin + (r.txmax - r.txmin) * es,
-                                     r.txmin + (r.txmax - r.txmin) * es,
-                                     np.full(9, r.txmin), np.full(9, r.txmax)])
-                by = np.concatenate([np.full(9, r.tymin), np.full(9, r.tymax),
-                                     r.tymin + (r.tymax - r.tymin) * es,
-                                     r.tymin + (r.tymax - r.tymin) * es])
-                fx, fy = to_dst(bx, by)
-                fx0, fx1 = float(np.min(fx)), float(np.max(fx))
-                fy0, fy1 = float(np.min(fy)), float(np.max(fy))
-                # covered target window, outset one pixel (ownership trims)
-                c0 = max(int(np.floor((fx0 - txmin_t) / cw)) - 1, 0)
-                c1 = min(int(np.floor((fx1 - txmin_t) / cw)) + 1, tcols - 1)
-                r0 = max(int(np.floor((tymax_t - fy1) / ch)) - 1, 0)
-                r1 = min(int(np.floor((tymax_t - fy0) / ch)) + 1, trows - 1)
-                if c0 > c1 or r0 > r1:
-                    continue  # tile footprint outside the target region
-                arr = unpack(r.px, r.dtype, tile_size).astype(np.float64)
-                dst_ext = target.bounds_to_extent(c0, r0, c1, r1)
-                win = kern(arr, (r.txmin, r.tymin, r.txmax, r.tymax), dst_ext,
-                           (r1 - r0 + 1, c1 - c0 + 1), fwd, np.nan)
-                out.append({"source_id": r.source_id, "band": int(r.band),
-                            "px_col_min": c0, "px_row_min": r0,
-                            "h": win.shape[0], "w": win.shape[1],
-                            "dtype": "float64", "px": pack(win)})
-            yield pd.DataFrame(out, columns=["source_id", "band", "px_col_min",
-                                             "px_row_min", "h", "w", "dtype", "px"])
-
-    return t.mapInPandas(
-        run, "source_id string, band int, px_col_min bigint, px_row_min bigint, "
-             "h int, w int, dtype string, px binary")
+            f"UTM 326xx/327xx | {sorted(G.NAMED_CRS)})")
+    kernel = partial(k_reproject_grid, target=target, kern=REPROJECT_KERNELS[method],
+                     to_dst=to_dst, fwd=fwd)
+    return map_tiles(tile_extent_cols(tiles), kernel, _WINDOW_DDL)
 
 
 def window_stats(windows: DataFrame, keys=("source_id", "band")) -> DataFrame:
@@ -676,44 +666,23 @@ def window_stats(windows: DataFrame, keys=("source_id", "band")) -> DataFrame:
     partial-aggregated per ``keys`` — NaN marks not-owned pixels (another
     tile's territory), so summing windows equals summing the assembled
     target exactly once. One narrow mapInPandas + one tiny shuffle."""
-    keys = list(keys)
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            kcols = [pdf[k].to_numpy() for k in keys]
-            for i, (blob, dt, h, w) in enumerate(zip(
-                    pdf["px"].to_numpy(), pdf["dtype"].to_numpy(),
-                    pdf["h"].to_numpy(), pdf["w"].to_numpy())):
-                arr = np.frombuffer(blob, dtype=DTYPES[dt]).reshape(int(h), int(w))
-                m = ~np.isnan(arr)
-                row = {k: kc[i] for k, kc in zip(keys, kcols)}
-                row["px_sum"] = float(arr[m].sum())
-                row["px_count"] = int(m.sum())
-                out.append(row)
-            yield pd.DataFrame(out, columns=keys + ["px_sum", "px_count"])
-
     key_schema = ", ".join(
         f"{k} string" if k == "source_id" else f"{k} bigint" for k in keys)
-    per_win = windows.mapInPandas(stats, f"{key_schema}, px_sum double, px_count bigint")
+    per_win = map_tiles(windows, k_px_sum, f"{key_schema}, px_sum double, px_count bigint")
     return per_win.groupBy(*keys).agg(
         F.sum("px_sum").alias("px_sum"), F.sum("px_count").alias("px_count"))
 
 
-def assemble_target(rows, target) -> "np.ndarray":
-    """Driver-side helper: overlay reproject_to_grid output rows (one
-    source+band) onto the full target grid. NaN where no tile owned the
-    pixel; later rows never overwrite earlier non-NaN values (the outputs
-    partition the grid, so order is irrelevant)."""
-    out = np.full((target.rows, target.cols), np.nan)
-    for r in rows:
-        dtype = r.asDict()["dtype"]
-        win = np.frombuffer(r.px, dtype=DTYPES[dtype]).reshape(r.h, r.w)
-        view = out[r.px_row_min: r.px_row_min + r.h,
-                   r.px_col_min: r.px_col_min + r.w]
-        m = ~np.isnan(win)
-        view[m] = win[m]
-    return out
+def k_crop(row: dict, bounds: tuple[int, int, int, int], t: int) -> dict:
+    """The part of one t-px tile inside the GLOBAL pixel window
+    ``bounds`` (read_window)."""
+    cmin, rmin, cmax, rmax = bounds
+    gx0, gy0 = row["col"] * t, row["row"] * t
+    c0, c1 = max(cmin - gx0, 0), min(cmax - gx0, t - 1)
+    r0, r1 = max(rmin - gy0, 0), min(rmax - gy0, t - 1)
+    sub = row["px"][r0:r1 + 1, c0:c1 + 1]
+    return {"px_col_min": gx0 + c0, "px_row_min": gy0 + r0,
+            "h": sub.shape[0], "w": sub.shape[1], "px": sub}
 
 
 def read_window(tiles: DataFrame, bounds: tuple[int, int, int, int],
@@ -734,99 +703,29 @@ def read_window(tiles: DataFrame, bounds: tuple[int, int, int, int],
 
     if grid_bounds is not None:
         inter = bounds_intersection(bounds, grid_bounds)
-        if inter is None:
-            if not clamp:
-                raise ValueError(f"window {bounds} is disjoint from footprint {grid_bounds}")
-            inter = None
+        if inter is None and not clamp:
+            raise ValueError(f"window {bounds} is disjoint from footprint {grid_bounds}")
         bounds = inter if inter is not None else (0, 0, -1, -1)
     cmin, rmin, cmax, rmax = bounds
     if cmin > cmax or rmin > rmax:
-        return tiles.sparkSession.createDataFrame(
-            [], "source_id string, band int, px_col_min bigint, px_row_min bigint, "
-                "h int, w int, dtype string, px binary")
+        return tiles.sparkSession.createDataFrame([], _WINDOW_DDL)
 
     tc0, tc1 = cmin // tile_size, cmax // tile_size
     tr0, tr1 = rmin // tile_size, rmax // tile_size
     hit = tiles.filter((F.col("col") >= tc0) & (F.col("col") <= tc1)
                        & (F.col("row") >= tr0) & (F.col("row") <= tr1))
-
-    def crop(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, band, col, row, dt, blob in zip(
-                    pdf["source_id"].to_numpy(), pdf["band"].to_numpy(),
-                    pdf["col"].to_numpy(), pdf["row"].to_numpy(),
-                    pdf["dtype"].to_numpy(), pdf["px"].to_numpy()):
-                arr = unpack(blob, dt, tile_size)
-                gx0, gy0 = int(col) * tile_size, int(row) * tile_size
-                c0 = max(cmin - gx0, 0)
-                c1 = min(cmax - gx0, tile_size - 1)
-                r0 = max(rmin - gy0, 0)
-                r1 = min(rmax - gy0, tile_size - 1)
-                sub = arr[r0:r1 + 1, c0:c1 + 1]
-                rows.append({"source_id": sid, "band": int(band),
-                             "px_col_min": gx0 + c0, "px_row_min": gy0 + r0,
-                             "h": sub.shape[0], "w": sub.shape[1],
-                             "dtype": dt, "px": pack(sub)})
-            yield pd.DataFrame(rows, columns=["source_id", "band", "px_col_min",
-                                              "px_row_min", "h", "w", "dtype", "px"])
-
-    return hit.mapInPandas(
-        crop, "source_id string, band int, px_col_min bigint, px_row_min bigint, "
-              "h int, w int, dtype string, px binary")
+    return map_tiles(hit, partial(k_crop, bounds=bounds, t=tile_size), _WINDOW_DDL)
 
 
-def assemble_window(rows, bounds) -> "np.ndarray":
-    """Driver-side helper: stitch read_window output rows (one source+band)
-    into a single numpy array over ``bounds`` (NaN where no tile)."""
-    cmin, rmin, cmax, rmax = bounds
-    out = np.full((rmax - rmin + 1, cmax - cmin + 1), np.nan)
-    for r in rows:
-        dtype = r.asDict()["dtype"]  # Row attribute access would hit Row.dtype
-        arr = np.frombuffer(r.px, dtype=DTYPES[dtype]).reshape(r.h, r.w)
-        out[r.px_row_min - rmin: r.px_row_min - rmin + r.h,
-            r.px_col_min - cmin: r.px_col_min - cmin + r.w] = arr
-    return out
-
-
-def build_pixel_pyramid_level(tiles: DataFrame, tile_size: int = TILE_SIZE) -> DataFrame:
-    """One pixel-level overview up: the 2x2 child tiles of each parent key
-    are mosaicked into one tile_size panel and 2x downsampled (NoData-aware
-    mean of each 2x2 pixel block) — the materialized version of the
-    reference's overview pyramid (GeoTiffRasterSource.scala:59-61), built as
-    one applyInPandas over parent-key groups. Missing children become NoData
-    quadrants. Output: parent tiles at zoom-1, dtype float64."""
-    keyed = tiles.withColumn("p_col", F.floor(F.col("col") / 2.0)) \
-                 .withColumn("p_row", F.floor(F.col("row") / 2.0))
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        first = pdf.iloc[0]
-        nd = float(first.nodata)
-        half = tile_size // 2
-        panel = np.full((tile_size, tile_size), np.nan)
-        for blob, dt, nd_i, col, row in zip(
-                pdf["px"].to_numpy(), pdf["dtype"].to_numpy(),
-                pdf["nodata"].to_numpy(), pdf["col"].to_numpy(),
-                pdf["row"].to_numpy()):
-            arr = unpack(blob, dt, tile_size).astype(np.float64)
-            arr = np.where(np.isclose(arr, nd_i), np.nan, arr)
-            # NoData-aware 2x downsample of the child into its quadrant
-            blocks = arr.reshape(half, 2, half, 2)
-            with np.errstate(invalid="ignore"):
-                ds = np.nanmean(blocks, axis=(1, 3))
-            qr = int(row % 2) * half
-            qc = int(col % 2) * half
-            panel[qr:qr + half, qc:qc + half] = ds
-        out = np.where(np.isnan(panel), nd, panel)
-        return pd.DataFrame([{
-            "zoom": int(first.zoom) - 1, "col": int(first.p_col),
-            "row": int(first.p_row), "band": int(first.band),
-            "dtype": "float64", "nodata": nd, "px": pack(out),
-        }])
-
-    return keyed.groupBy("zoom", "p_col", "p_row", "band", "source_id").applyInPandas(
-        fold, "zoom int, col bigint, row bigint, band int, dtype string, "
-              "nodata double, px binary")
+def k_split(row: dict, k: int, dz: int) -> list[dict]:
+    """One tile cut into its k x k subtiles, keys moved dz zooms down
+    (retile split)."""
+    arr = row["px"]
+    s = arr.shape[0] // k
+    return [{"zoom": row["zoom"] + dz, "col": row["col"] * k + i,
+             "row": row["row"] * k + j,
+             "px": arr[j * s:(j + 1) * s, i * s:(i + 1) * s]}
+            for i in range(k) for j in range(k)]
 
 
 def retile(tiles: DataFrame, ts_from: int, ts_to: int) -> DataFrame:
@@ -853,28 +752,8 @@ def retile(tiles: DataFrame, ts_from: int, ts_to: int) -> DataFrame:
             # silently truncate and corrupt every (zoom, col, row) key
             raise ValueError(
                 f"tile sizes must nest by a power of two: {ts_from} -> {ts_to}")
-        dz = int(_m.log2(k))
-
-        def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out = []
-                for r in pdf.itertuples(index=False):
-                    arr = unpack(r.px, r.dtype, ts_from)
-                    for i in range(k):
-                        for j in range(k):
-                            sub = arr[j * ts_to:(j + 1) * ts_to,
-                                      i * ts_to:(i + 1) * ts_to]
-                            out.append({
-                                "source_id": r.source_id, "source_idx": int(r.source_idx),
-                                "zoom": int(r.zoom) + dz,
-                                "col": int(r.col) * k + i, "row": int(r.row) * k + j,
-                                "band": int(r.band), "dtype": r.dtype,
-                                "nodata": float(r.nodata), "px": pack(sub)})
-                yield pd.DataFrame(out, columns=["source_id", "source_idx", "zoom",
-                                                 "col", "row", "band", "dtype",
-                                                 "nodata", "px"])
-
-        return tiles.mapInPandas(split, out_schema)
+        return map_tiles(tiles, partial(k_split, k=k, dz=int(_m.log2(k))),
+                         out_schema)
 
     k = ts_to // ts_from  # assemble: k^2 children -> one parent
     if k * ts_from != ts_to or (k & (k - 1)) != 0:
@@ -908,123 +787,108 @@ def read_cells_checksum(tiles: DataFrame, tile_size: int = TILE_SIZE) -> DataFra
     """Force-evaluate every pixel and aggregate (sum + count, NoData-aware) —
     the readCells full-scan checksum (SubsceneReadingIT.scala:51), used as
     the bit-parity probe for pixel pipelines."""
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for sid, blob, dt, nd in zip(
-                    pdf["source_id"].to_numpy(), pdf["px"].to_numpy(),
-                    pdf["dtype"].to_numpy(), pdf["nodata"].to_numpy()):
-                arr = unpack(blob, dt, tile_size).astype(np.float64)
-                valid = ~np.isclose(arr, nd) & ~np.isnan(arr)
-                out.append({"source_id": sid,
-                            "px_sum": float(arr[valid].sum()),
-                            "px_count": int(valid.sum())})
-            yield pd.DataFrame(out, columns=["source_id", "px_sum", "px_count"])
-
-    per_tile = tiles.mapInPandas(stats, "source_id string, px_sum double, px_count bigint")
+    per_tile = map_tiles(tiles, k_px_sum, "source_id string, px_sum double, px_count bigint")
     return per_tile.groupBy("source_id").agg(
         F.sum("px_sum").alias("px_sum"), F.sum("px_count").alias("px_count"))
 
 
-def zonal_stats_pixels(tiles: DataFrame, boxes: DataFrame,
-                       tile_size: int = TILE_SIZE) -> DataFrame:
-    """Pixel-exact zonal statistics (raster->vector): broadcast-join tiles to
-    candidate boxes via tile bbox overlap, then mask each tile's pixel
-    centers against the box inside a single mapInPandas — masked-numpy stats,
-    partial-aggregated per (poly_id, band)."""
-    from geotrellis_contrib_spark.operators.raster import tile_center_cols  # noqa: F401
-    from geotrellis_contrib_spark.functions import cells as C
+@lru_cache(maxsize=1024)
+def _rings(wkb: bytes) -> list:
+    return GM.wkb_decode(wkb)["coords"]
 
-    t = (tiles
-         .withColumn("txmin", C.tile_xmin(F.col("zoom"), F.col("col")))
-         .withColumn("txmax", C.tile_xmax(F.col("zoom"), F.col("col")))
-         .withColumn("tymin", C.tile_ymin(F.col("zoom"), F.col("row")))
-         .withColumn("tymax", C.tile_ymax(F.col("zoom"), F.col("row"))))
-    cand = t.join(F.broadcast(boxes),
-                  (F.col("txmin") < F.col("xmax")) & (F.col("txmax") > F.col("xmin"))
-                  & (F.col("tymin") < F.col("ymax")) & (F.col("tymax") > F.col("ymin")),
-                  "inner")
 
-    def px_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        base = np.arange(tile_size) + 0.5
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = unpack(r.px, r.dtype, tile_size).astype(np.float64)
-                xs = r.txmin + base * (r.txmax - r.txmin) / tile_size
-                ys = r.tymax - base * (r.tymax - r.tymin) / tile_size
-                gx, gy = np.meshgrid(xs, ys)
-                m = ((gx >= r.xmin) & (gx < r.xmax) & (gy >= r.ymin) & (gy < r.ymax)
-                     & ~np.isclose(arr, r.nodata) & ~np.isnan(arr))
-                if m.any():
-                    v = arr[m]
-                    rows.append({"poly_id": r.poly_id, "band": int(r.band),
-                                 "cnt": int(m.sum()), "sum_val": float(v.sum()),
-                                 "min_val": float(v.min()), "max_val": float(v.max())})
-            yield pd.DataFrame(rows, columns=["poly_id", "band", "cnt", "sum_val",
-                                              "min_val", "max_val"])
+def _polygon_mask(gx: np.ndarray, gy: np.ndarray, wkb: bytes) -> np.ndarray:
+    """Crossing-number membership of the pixel centers (gx, gy) in a WKB
+    polygon (holes and concavity respected)."""
+    return GM.point_in_polygon(gx.ravel(), gy.ravel(),
+                               _rings(bytes(wkb))).reshape(gx.shape)
 
-    per_tile = cand.mapInPandas(
-        px_stats, "poly_id string, band int, cnt bigint, sum_val double, "
-                  "min_val double, max_val double")
+
+def _in_box(gx: np.ndarray, gy: np.ndarray, xmin: float, ymin: float,
+            xmax: float, ymax: float) -> np.ndarray:
+    """The half-open [xmin,xmax) x [ymin,ymax) pixel-center rule."""
+    return (gx >= xmin) & (gx < xmax) & (gy >= ymin) & (gy < ymax)
+
+
+def _box_zone(gx: np.ndarray, gy: np.ndarray, row: dict) -> np.ndarray:
+    return _in_box(gx, gy, row["xmin"], row["ymin"], row["xmax"], row["ymax"])
+
+
+def _polygon_zone(gx: np.ndarray, gy: np.ndarray, row: dict) -> np.ndarray:
+    return _polygon_mask(gx, gy, row["wkb"])
+
+
+def k_zonal(row: dict, zone: Callable) -> dict | None:
+    """Stats of one tile's valid pixels whose CENTERS lie in the joined
+    zone (``zone(gx, gy, row)`` -> mask); None when there are none."""
+    arr = row["px"].astype(np.float64)
+    gx, gy = pixel_centers(row["txmin"], row["tymin"], row["txmax"],
+                           row["tymax"], arr.shape[0])
+    m = zone(gx, gy, row) & valid_px(arr, row["nodata"])
+    if not m.any():
+        return None
+    v = arr[m]
+    return {"cnt": int(m.sum()), "sum_val": float(v.sum()),
+            "min_val": float(v.min()), "max_val": float(v.max())}
+
+
+def _zonal(tiles: DataFrame, zones: DataFrame, zone: Callable) -> DataFrame:
+    """Pixel-exact zonal statistics: broadcast-join tiles to candidate zones
+    via tile bbox overlap, mask each tile's pixel centers with ``zone``
+    inside ONE mapInPandas, partial-aggregate per (poly_id, band)."""
+    from geotrellis_contrib_spark.operators.tiling import tile_extent_cols
+
+    cand = tile_extent_cols(tiles).join(
+        F.broadcast(zones),
+        (F.col("txmin") < F.col("xmax")) & (F.col("txmax") > F.col("xmin"))
+        & (F.col("tymin") < F.col("ymax")) & (F.col("tymax") > F.col("ymin")),
+        "inner")
+    per_tile = map_tiles(
+        cand, partial(k_zonal, zone=zone),
+        "poly_id string, band int, cnt bigint, sum_val double, "
+        "min_val double, max_val double")
     return per_tile.groupBy("poly_id", "band").agg(
         F.sum("cnt").alias("cnt"), F.sum("sum_val").alias("sum_val"),
         F.min("min_val").alias("min_val"), F.max("max_val").alias("max_val"),
         (F.sum("sum_val") / F.sum("cnt")).alias("mean_val"))
+
+
+def zonal_stats_pixels(tiles: DataFrame, boxes: DataFrame,
+                       tile_size: int = TILE_SIZE) -> DataFrame:
+    """Pixel-exact zonal statistics (raster->vector) against boxes, by the
+    half-open pixel-center rule."""
+    return _zonal(tiles, boxes, _box_zone)
 
 
 def zonal_stats_pixels_wkb(tiles: DataFrame, polygons: DataFrame,
                            tile_size: int = TILE_SIZE) -> DataFrame:
     """Pixel-exact zonal statistics against ARBITRARY polygons (holes,
-    concavity): coarse bbox join, then each tile's pixel centers are masked
-    by the crossing-number kernel inside mapInPandas. ``polygons`` needs
-    poly_id + bbox columns + a WKB column (the reference's polygonal-summary
-    path generalized; geom.point_in_polygon is the oracle-tested kernel)."""
-    from geotrellis_contrib_spark import geom as GM
-    from geotrellis_contrib_spark.functions import cells as C
+    concavity): pixel centers masked by the crossing-number kernel.
+    ``polygons`` needs poly_id + bbox columns + a WKB column (the
+    reference's polygonal-summary path generalized; geom.point_in_polygon
+    is the oracle-tested kernel)."""
+    return _zonal(tiles, polygons, _polygon_zone)
 
-    t = (tiles
-         .withColumn("txmin", C.tile_xmin(F.col("zoom"), F.col("col")))
-         .withColumn("txmax", C.tile_xmax(F.col("zoom"), F.col("col")))
-         .withColumn("tymin", C.tile_ymin(F.col("zoom"), F.col("row")))
-         .withColumn("tymax", C.tile_ymax(F.col("zoom"), F.col("row"))))
-    cand = t.join(F.broadcast(polygons),
-                  (F.col("txmin") < F.col("xmax")) & (F.col("txmax") > F.col("xmin"))
-                  & (F.col("tymin") < F.col("ymax")) & (F.col("tymax") > F.col("ymin")),
-                  "inner")
 
-    def px_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        poly_cache: dict[bytes, list] = {}
-        base = np.arange(tile_size) + 0.5
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                blob = bytes(r.wkb)
-                rings = poly_cache.get(blob)
-                if rings is None:
-                    rings = GM.wkb_decode(blob)["coords"]
-                    poly_cache[blob] = rings
-                arr = unpack(r.px, r.dtype, tile_size).astype(np.float64)
-                xs = r.txmin + base * (r.txmax - r.txmin) / tile_size
-                ys = r.tymax - base * (r.tymax - r.tymin) / tile_size
-                gx, gy = np.meshgrid(xs, ys)
-                m = GM.point_in_polygon(gx.ravel(), gy.ravel(), rings).reshape(gx.shape)
-                m &= ~np.isclose(arr, r.nodata) & ~np.isnan(arr)
-                if m.any():
-                    v = arr[m]
-                    rows.append({"poly_id": r.poly_id, "band": int(r.band),
-                                 "cnt": int(m.sum()), "sum_val": float(v.sum()),
-                                 "min_val": float(v.min()), "max_val": float(v.max())})
-            yield pd.DataFrame(rows, columns=["poly_id", "band", "cnt", "sum_val",
-                                              "min_val", "max_val"])
-
-    per_tile = cand.mapInPandas(
-        px_stats, "poly_id string, band int, cnt bigint, sum_val double, "
-                  "min_val double, max_val double")
-    return per_tile.groupBy("poly_id", "band").agg(
-        F.sum("cnt").alias("cnt"), F.sum("sum_val").alias("sum_val"),
-        F.min("min_val").alias("min_val"), F.max("max_val").alias("max_val"),
-        (F.sum("sum_val") / F.sum("cnt")).alias("mean_val"))
+def k_mask(row: dict, boxes: list[tuple], inverse: bool) -> dict:
+    """One tile masked to the pixels whose CENTERS fall inside any of
+    ``boxes`` (inverse: outside all of them); the rest become NoData. A
+    tile whose bbox misses every box is passed through (inverse) or
+    returned all-NoData (mask) without a pixel test."""
+    txmin, tymin, txmax, tymax = (
+        float(v) for v in G.tile_extent(row["zoom"], row["col"], row["row"]))
+    arr, nd = row["px"], row["nodata"]
+    hit = [b for b in boxes
+           if b[0] < txmax and b[2] > txmin and b[1] < tymax and b[3] > tymin]
+    if not hit:
+        return {} if inverse else {"px": np.full(arr.shape, nd, dtype=arr.dtype)}
+    gx, gy = pixel_centers(txmin, tymin, txmax, tymax, arr.shape[0])
+    m = np.zeros(gx.shape, dtype=bool)
+    for b in hit:
+        m |= _in_box(gx, gy, *b)
+    out = arr.copy()
+    out[m if inverse else ~m] = nd
+    return {"px": out}
 
 
 def mask_tiles(tiles: DataFrame, boxes: DataFrame, tile_size: int = TILE_SIZE,
@@ -1041,10 +905,8 @@ def mask_tiles(tiles: DataFrame, boxes: DataFrame, tile_size: int = TILE_SIZE,
 
     Plan shape: the AOI table is a constant-small dimension — collected
     ONCE (fail-loud past ``max_boxes``; the IVF-centroid pattern) and
-    closed over a narrow Arrow map. ZERO shuffle at any corpus size, and
-    a tile whose bbox misses every box never deserializes its pixels:
-    inverse passes the blob through untouched, mask emits a cached
-    constant all-NoData tile. Output schema = input schema."""
+    closed over a narrow Arrow map. ZERO shuffle at any corpus size.
+    Output schema = input schema."""
     rows = boxes.select("xmin", "ymin", "xmax", "ymax") \
                 .limit(max_boxes + 1).collect()
     if len(rows) > max_boxes:
@@ -1054,55 +916,8 @@ def mask_tiles(tiles: DataFrame, boxes: DataFrame, tile_size: int = TILE_SIZE,
             "broadcast-join path, not the closed-over-dimension path")
     bx = [(float(r.xmin), float(r.ymin), float(r.xmax), float(r.ymax))
           for r in rows]
-    inv = bool(inverse)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        base = np.arange(tile_size) + 0.5
-        nod_cache: dict[tuple, bytes] = {}
-        for pdf in batches:
-            out_px = []
-            for r in pdf.itertuples(index=False):
-                n = float(1 << int(r.zoom))
-                col, row = int(r.col), int(r.row)
-                txmin = col / n * 360.0 - 180.0
-                txmax = (col + 1) / n * 360.0 - 180.0
-                tymax = float(np.degrees(np.arctan(
-                    np.sinh(np.pi * (1 - 2 * row / n)))))
-                tymin = float(np.degrees(np.arctan(
-                    np.sinh(np.pi * (1 - 2 * (row + 1) / n)))))
-                hit = [b for b in bx
-                       if b[0] < txmax and b[2] > txmin
-                       and b[1] < tymax and b[3] > tymin]
-                if not hit:
-                    if inv:
-                        out_px.append(r.px)
-                    else:
-                        key = (r.dtype, float(r.nodata))
-                        blob = nod_cache.get(key)
-                        if blob is None:
-                            blob = pack(np.full(
-                                (tile_size, tile_size), r.nodata,
-                                dtype=np.dtype(r.dtype)))
-                            nod_cache[key] = blob
-                        out_px.append(blob)
-                    continue
-                xs = txmin + base * (txmax - txmin) / tile_size
-                ys = tymax - base * (tymax - tymin) / tile_size
-                gx, gy = np.meshgrid(xs, ys)
-                m = np.zeros(gx.shape, dtype=bool)
-                for bxmin, bymin, bxmax, bymax in hit:
-                    m |= ((gx >= bxmin) & (gx < bxmax)
-                          & (gy >= bymin) & (gy < bymax))
-                if inv:
-                    m = ~m
-                arr = unpack(r.px, r.dtype, tile_size).copy()
-                arr[~m] = r.nodata
-                out_px.append(pack(arr))
-            pdf = pdf.copy()
-            pdf["px"] = out_px
-            yield pdf
-
-    return tiles.mapInPandas(run, tiles.schema)
+    return map_tiles(tiles, partial(k_mask, boxes=bx, inverse=bool(inverse)),
+                     tiles.schema)
 
 
 def rasterize_polygons(polygons: DataFrame, zoom: int, tile_size: int = TILE_SIZE,
@@ -1114,7 +929,6 @@ def rasterize_polygons(polygons: DataFrame, zoom: int, tile_size: int = TILE_SIZ
     attribute value; overlaps resolve last-writer by ascending poly_id
     (deterministic). ``polygons``: poly_id + bbox + wkb + ``value_col``.
     Output: (zoom, col, row, px binary float64, n_burned)."""
-    from geotrellis_contrib_spark import geom as GM
     from geotrellis_contrib_spark.functions import cells as C
     from geotrellis_contrib_spark.operators.spatial_join import with_cover_cells_wkb
 
@@ -1124,24 +938,16 @@ def rasterize_polygons(polygons: DataFrame, zoom: int, tile_size: int = TILE_SIZ
            .withColumn("cell_col", C.cell_col(F.col("cell")))
            .withColumn("cell_row", C.cell_row(F.col("cell")))
            .drop("cell"))
-    n = float(1 << zoom)
 
     def burn(pdf: pd.DataFrame) -> pd.DataFrame:
         col = int(pdf.cell_col.iloc[0])
         row = int(pdf.cell_row.iloc[0])
-        xmin = col / n * 360.0 - 180.0
-        xmax = (col + 1) / n * 360.0 - 180.0
-        ymax = float(np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * row / n)))))
-        ymin = float(np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * (row + 1) / n)))))
-        xs = xmin + (np.arange(tile_size) + 0.5) * (xmax - xmin) / tile_size
-        ys = ymax - (np.arange(tile_size) + 0.5) * (ymax - ymin) / tile_size
-        gx, gy = np.meshgrid(xs, ys)
+        gx, gy = pixel_centers(*(float(v) for v in G.tile_extent(zoom, col, row)),
+                               tile_size)
         out = np.full((tile_size, tile_size), nodata)
         s = pdf.sort_values("poly_id")
         for blob, v in zip(s["wkb"].to_numpy(), s[value_col].to_numpy()):
-            rings = GM.wkb_decode(bytes(blob))["coords"]
-            m = GM.point_in_polygon(gx.ravel(), gy.ravel(), rings).reshape(gx.shape)
-            out[m] = float(v)
+            out[_polygon_mask(gx, gy, blob)] = float(v)
         return pd.DataFrame([{
             "zoom": zoom, "col": col, "row": row,
             "px": pack(out), "n_burned": int((out != nodata).sum()),
@@ -1222,38 +1028,6 @@ def rasterize_lines(segs: DataFrame, zoom: int, tile_size: int = TILE_SIZE,
                  .filter((F.col("cx") >= 0) & (F.col("cx") < npx)
                          & (F.col("cy") >= 0) & (F.col("cy") < npx)))
     return cells
-
-
-def rasterize_points_pixels(points: DataFrame, zoom: int, tile_size: int = TILE_SIZE,
-                            lon="lon", lat="lat") -> DataFrame:
-    """Pixel-level rasterize (vector->raster): bin points into per-tile
-    pixel-count grids via applyInPandas over cell-partitioned groups
-    (the north_star vector->raster path). Output: one binary tile per key."""
-    from geotrellis_contrib_spark.functions import cells as C
-
-    n = float(1 << zoom)
-    pts = (points.filter(F.col(lon).isNotNull() & F.col(lat).isNotNull())
-           .withColumn("col", C.tile_col(F.col(lon), zoom))
-           .withColumn("row", C.tile_row(F.col(lat), zoom))
-           .select("col", "row", F.col(lon).alias("x"), F.col(lat).alias("y")))
-
-    def burn(pdf: pd.DataFrame) -> pd.DataFrame:
-        col, row = int(pdf.col.iloc[0]), int(pdf.row.iloc[0])
-        xmin = col / n * 360.0 - 180.0
-        xmax = (col + 1) / n * 360.0 - 180.0
-        ymax = np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * row / n))))
-        ymin = np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * (row + 1) / n))))
-        ci = np.clip(((pdf.x.to_numpy() - xmin) / (xmax - xmin) * tile_size).astype(np.int64),
-                     0, tile_size - 1)
-        ri = np.clip(((ymax - pdf.y.to_numpy()) / (ymax - ymin) * tile_size).astype(np.int64),
-                     0, tile_size - 1)
-        grid = np.zeros((tile_size, tile_size), dtype=np.int32)
-        np.add.at(grid, (ri, ci), 1)
-        return pd.DataFrame([{"zoom": zoom, "col": col, "row": row,
-                              "n_points": int(len(pdf)), "px": pack(grid)}])
-
-    return pts.groupBy("col", "row").applyInPandas(
-        burn, "zoom int, col bigint, row bigint, n_points bigint, px binary")
 
 
 def kernel_density(points: DataFrame, zoom: int, radius_px: float = 4.0,
@@ -1556,10 +1330,7 @@ def k_downsample2(arr: np.ndarray, nodata: float,
     a11 = arr[1::2, 1::2]
     if method == "nearest":
         return a00.copy()
-    v00 = ~np.isnan(a00) & (a00 != nodata)
-    v01 = ~np.isnan(a01) & (a01 != nodata)
-    v10 = ~np.isnan(a10) & (a10 != nodata)
-    v11 = ~np.isnan(a11) & (a11 != nodata)
+    v00, v01, v10, v11 = (valid_px(a, nodata) for a in (a00, a01, a10, a11))
     cnt = (v00.astype(np.int64) + v01.astype(np.int64)
            + v10.astype(np.int64) + v11.astype(np.int64))
     if method == "max":
@@ -1575,6 +1346,16 @@ def k_downsample2(arr: np.ndarray, nodata: float,
     return np.where(cnt > 0, num / np.maximum(cnt, 1), nodata)
 
 
+def k_shrink(row: dict, method: str) -> dict:
+    """One child tile downsampled 2x (:func:`k_downsample2`) and keyed by
+    its parent tile and quadrant (build_overview_px)."""
+    return {"source_idx": row.get("source_idx", 0), "zoom": row["zoom"] - 1,
+            "col": row["col"] // 2, "row": row["row"] // 2,
+            "qr": row["row"] % 2, "qc": row["col"] % 2,
+            "px": k_downsample2(row["px"].astype(np.float64), row["nodata"],
+                                method)}
+
+
 def build_overview_px(tiles: DataFrame, method: str = "average",
                       tile_size: int = TILE_SIZE) -> DataFrame:
     """Pixel-level overview (pyramid) build, zoom z -> z-1: each child
@@ -1586,32 +1367,11 @@ def build_overview_px(tiles: DataFrame, method: str = "average",
     t = int(tile_size)
     if method not in ("average", "nearest", "max"):
         raise ValueError(f"unsupported overview method {method!r}")
-
-    def shrink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                        .reshape(t, t).astype(np.float64)
-                small = k_downsample2(arr, row_t.nodata, method)
-                out.append({
-                    "source_id": row_t.source_id,
-                    "source_idx": int(getattr(row_t, "source_idx", 0)),
-                    "zoom": int(row_t.zoom) - 1,
-                    "col": int(row_t.col) // 2,
-                    "row": int(row_t.row) // 2,
-                    "band": int(row_t.band),
-                    "qr": int(row_t.row) % 2, "qc": int(row_t.col) % 2,
-                    "dtype": "float64", "nodata": float(row_t.nodata),
-                    "px": pack(small)})
-            yield pd.DataFrame(out, columns=[
-                "source_id", "source_idx", "zoom", "col", "row", "band",
-                "qr", "qc", "dtype", "nodata", "px"])
-
-    pieces = tiles.mapInPandas(
-        shrink, "source_id string, source_idx int, zoom int, col bigint, "
-                "row bigint, band int, qr int, qc int, dtype string, "
-                "nodata double, px binary")
+    pieces = map_tiles(
+        tiles, partial(k_shrink, method=method),
+        "source_id string, source_idx int, zoom int, col bigint, "
+        "row bigint, band int, qr int, qc int, dtype string, "
+        "nodata double, px binary")
     h = t // 2
 
     def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:

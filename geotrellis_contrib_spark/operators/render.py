@@ -30,15 +30,14 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
+from functools import partial
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from geotrellis_contrib_spark.operators.pixels import DTYPES
+from geotrellis_contrib_spark.operators.pixels import map_tiles, valid_px
 
 # an 8-stop elevation-style ramp (deep blue -> water blue -> greens ->
 # yellows -> browns -> white); deliberately self-defined literals
@@ -66,41 +65,39 @@ def _ramp_channels(arr: np.ndarray, vmin: float, vmax: float,
     return out
 
 
+def _pixels(row: dict) -> tuple[np.ndarray, np.ndarray]:
+    """(float64 pixels, validity) of one tile under the shared NoData rule
+    (NaN pixels are invalid even where nodata is NaN — letting NaN through
+    the ramp would cast to an undefined int64 index)."""
+    arr = row["px"].astype(np.float64)
+    return arr, valid_px(arr, row["nodata"])
+
+
+def _ramp_rgb(row: dict, vmin: float, vmax: float, ramp):
+    """(valid, r, g, b) of one tile through the ramp."""
+    arr, valid = _pixels(row)
+    return (valid, *_ramp_channels(np.where(valid, arr, vmin), vmin, vmax,
+                                   ramp))
+
+
+def k_render_stats(row: dict, vmin: float, vmax: float, ramp) -> dict:
+    """Packed-RGBA checksum of one tile's valid pixels (render_stats)."""
+    valid, r, g, b = _ramp_rgb(row, vmin, vmax, ramp)
+    packed = (r * 16777216 + g * 65536 + b * 256 + 255)
+    return {"rgba_sum": int(packed[valid].sum()),
+            "rgba_count": int(valid.sum())}
+
+
 def render_stats(tiles: DataFrame, vmin: float, vmax: float,
                  ramp=TERRAIN_RAMP, tile_size: int = 64) -> DataFrame:
     """Color-ramp render checksum per tile: each valid pixel maps through
     the linear ramp to (r, g, b, 255), packed as r*2^24 + g*2^16 + b*2^8
     + 255 (an exact integer), summed per tile. NoData pixels are excluded
     (transparent). Zero shuffles."""
-    t = int(tile_size)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                        .reshape(t, t).astype(np.float64)
-                # shared validity rule: NaN pixels (including nodata=NaN
-                # catalogs, where NaN != NaN is always True) are invalid —
-                # letting NaN through the ramp would cast to an undefined
-                # int64 index (r5 ADVICE)
-                valid = ~np.isnan(arr) & (arr != row_t.nodata)
-                r, g, b = _ramp_channels(np.where(valid, arr, vmin),
-                                         vmin, vmax, ramp)
-                packed = (r * 16777216 + g * 65536 + b * 256 + 255)
-                out.append({
-                    "source_id": row_t.source_id, "band": int(row_t.band),
-                    "col": int(row_t.col), "row": int(row_t.row),
-                    "rgba_sum": int(packed[valid].sum()),
-                    "rgba_count": int(valid.sum()),
-                })
-            yield pd.DataFrame(out, columns=[
-                "source_id", "band", "col", "row", "rgba_sum",
-                "rgba_count"])
-
-    return tiles.mapInPandas(
-        run, "source_id string, band bigint, col bigint, row bigint, "
-             "rgba_sum bigint, rgba_count bigint")
+    return map_tiles(
+        tiles, partial(k_render_stats, vmin=vmin, vmax=vmax, ramp=ramp),
+        "source_id string, band bigint, col bigint, row bigint, "
+        "rgba_sum bigint, rgba_count bigint")
 
 
 def encode_png_rgba(rgba: np.ndarray) -> bytes:
@@ -156,38 +153,36 @@ def decode_png_rgba(payload: bytes) -> np.ndarray:
     return out.astype(np.int64)
 
 
+def k_render_png(row: dict, vmin: float, vmax: float, ramp) -> dict:
+    """One tile rendered through the ramp as an RGBA PNG, NoData fully
+    transparent (render_png_tiles)."""
+    valid, r, g, b = _ramp_rgb(row, vmin, vmax, ramp)
+    rgba = np.zeros((*valid.shape, 4), dtype=np.uint8)
+    for ch, c in enumerate((r, g, b, 255)):
+        rgba[..., ch] = np.where(valid, c, 0)
+    return {"png": encode_png_rgba(rgba)}
+
+
 def render_png_tiles(tiles: DataFrame, vmin: float, vmax: float,
                      ramp=TERRAIN_RAMP, tile_size: int = 64) -> DataFrame:
     """Render each tile through the ramp and PNG-encode it (RGBA, NoData
     -> fully transparent). Zero shuffles; output
     (source_id, band, col, row, png binary)."""
-    t = int(tile_size)
+    return map_tiles(
+        tiles, partial(k_render_png, vmin=vmin, vmax=vmax, ramp=ramp),
+        "source_id string, band bigint, col bigint, row bigint, png binary")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                        .reshape(t, t).astype(np.float64)
-                valid = ~np.isnan(arr) & (arr != row_t.nodata)
-                r, g, b = _ramp_channels(np.where(valid, arr, vmin),
-                                         vmin, vmax, ramp)
-                rgba = np.zeros((t, t, 4), dtype=np.uint8)
-                rgba[..., 0] = np.where(valid, r, 0)
-                rgba[..., 1] = np.where(valid, g, 0)
-                rgba[..., 2] = np.where(valid, b, 0)
-                rgba[..., 3] = np.where(valid, 255, 0)
-                out.append({
-                    "source_id": row_t.source_id, "band": int(row_t.band),
-                    "col": int(row_t.col), "row": int(row_t.row),
-                    "png": encode_png_rgba(rgba),
-                })
-            yield pd.DataFrame(out, columns=[
-                "source_id", "band", "col", "row", "png"])
 
-    return tiles.mapInPandas(
-        run, "source_id string, band bigint, col bigint, row bigint, "
-             "png binary")
+def _buckets(v: np.ndarray, vmin: float, vmax: float, nb: int) -> np.ndarray:
+    return np.clip(np.floor((v - vmin) / (vmax - vmin) * nb),
+                   0.0, float(nb - 1)).astype(np.int64)
+
+
+def k_histogram(row: dict, vmin: float, vmax: float, nb: int) -> list[dict]:
+    """One tile's nonzero fixed-bucket counts (histogram_stats)."""
+    arr, valid = _pixels(row)
+    cnt = np.bincount(_buckets(arr[valid], vmin, vmax, nb), minlength=nb)
+    return [{"bucket": int(bk), "cnt": int(cnt[bk])} for bk in np.nonzero(cnt)[0]]
 
 
 def histogram_stats(tiles: DataFrame, vmin: float, vmax: float,
@@ -196,30 +191,10 @@ def histogram_stats(tiles: DataFrame, vmin: float, vmax: float,
     clip(floor((v - vmin)/(vmax - vmin)*nbins), 0, nbins-1) counted
     per tile INSIDE the Arrow batch (numpy bincount), then ONE shuffle of
     only (source, band, bucket, count) rows — map-side combine."""
-    t = int(tile_size)
-    nb = int(nbins)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                        .reshape(t, t).astype(np.float64)
-                v = arr[~np.isnan(arr) & (arr != row_t.nodata)]
-                bucket = np.clip(
-                    np.floor((v - vmin) / (vmax - vmin) * nb),
-                    0.0, float(nb - 1)).astype(np.int64)
-                cnt = np.bincount(bucket, minlength=nb)
-                for bk in np.nonzero(cnt)[0]:
-                    out.append({"source_id": row_t.source_id,
-                                "band": int(row_t.band),
-                                "bucket": int(bk), "cnt": int(cnt[bk])})
-            yield pd.DataFrame(out, columns=["source_id", "band",
-                                             "bucket", "cnt"])
-
-    partial = tiles.mapInPandas(
-        run, "source_id string, band bigint, bucket bigint, cnt bigint")
-    return partial.groupBy("source_id", "band", "bucket") \
+    counts = map_tiles(
+        tiles, partial(k_histogram, vmin=vmin, vmax=vmax, nb=int(nbins)),
+        "source_id string, band bigint, bucket bigint, cnt bigint")
+    return counts.groupBy("source_id", "band", "bucket") \
         .agg(F.sum("cnt").alias("cnt"))
 
 
@@ -253,6 +228,30 @@ def quantile_breaks(hist: DataFrame, vmin: float, vmax: float,
                                "break_value")
 
 
+def _logistic_norm(alpha: float, beta: float) -> tuple[float, float]:
+    """(anchor, denom) normalizing the logistic onto g(0)=0, g(1)=1;
+    fails loud on a degenerate (alpha, beta)."""
+    anchor = 1.0 / (1.0 + np.exp(beta * alpha))
+    denom = 1.0 / (1.0 + np.exp(beta * (alpha - 1.0))) - anchor
+    if denom == 0.0:
+        raise ValueError("sigmoidal_contrast: degenerate (alpha, beta) — "
+                         "the normalizing denominator is zero")
+    return anchor, denom
+
+
+def k_sigmoidal(row: dict, vmin: float, vmax: float, alpha: float,
+                beta: float, levels: int) -> dict:
+    """One tile through the normalized logistic (sigmoidal_contrast)."""
+    anchor, denom = _logistic_norm(alpha, beta)
+    arr, valid = _pixels(row)
+    res = np.full(arr.shape, row["nodata"], dtype=np.float64)
+    if valid.any():
+        u = np.clip((arr[valid] - vmin) / (vmax - vmin), 0.0, 1.0)
+        g = (1.0 / (1.0 + np.exp(beta * (alpha - u))) - anchor) / denom
+        res[valid] = np.floor(g * (levels - 1) + 0.5)
+    return {"px": res}
+
+
 def sigmoidal_contrast(tiles: DataFrame, vmin: float, vmax: float,
                        alpha: float = 0.5, beta: float = 10.0,
                        out_levels: int = 256,
@@ -276,36 +275,24 @@ def sigmoidal_contrast(tiles: DataFrame, vmin: float, vmax: float,
     half-up floor absorbs sub-ulp libm differences as long as the
     fixture keeps a margin (pytest asserts >=1e-6 on every pixel).
     Output schema = input schema with stretched float64 pixels."""
-    t = int(tile_size)
-    a = float(alpha)
-    b = float(beta)
-    lv = int(out_levels)
-    anchor = 1.0 / (1.0 + np.exp(b * a))
-    denom = 1.0 / (1.0 + np.exp(b * (a - 1.0))) - anchor
-    if denom == 0.0:
-        raise ValueError("sigmoidal_contrast: degenerate (alpha, beta) — "
-                         "the normalizing denominator is zero")
+    a, b = float(alpha), float(beta)
+    _logistic_norm(a, b)  # fail loud before the plan is built
+    return map_tiles(
+        tiles, partial(k_sigmoidal, vmin=vmin, vmax=vmax, alpha=a, beta=b,
+                       levels=int(out_levels)),
+        tiles.schema)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_px = []
-            for row_t in pdf.itertuples(index=False):
-                arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                        .reshape(t, t).astype(np.float64)
-                valid = ~np.isnan(arr) & (arr != row_t.nodata)
-                res = np.full((t, t), row_t.nodata, dtype=np.float64)
-                if valid.any():
-                    u = np.clip((arr[valid] - vmin) / (vmax - vmin),
-                                0.0, 1.0)
-                    g = (1.0 / (1.0 + np.exp(b * (a - u))) - anchor) / denom
-                    res[valid] = np.floor(g * (lv - 1) + 0.5)
-                out_px.append(res.tobytes())
-            pdf = pdf.copy()
-            pdf["px"] = out_px
-            pdf["dtype"] = "float64"
-            yield pdf
 
-    return tiles.mapInPandas(run, tiles.schema)
+def k_equalize(row: dict, table: dict, vmin: float, vmax: float,
+               nb: int) -> dict:
+    """One tile mapped through its scene's equalized levels ``table``
+    (histogram_equalize)."""
+    arr, valid = _pixels(row)
+    eq = table.get((row["source_id"], int(row["band"])))
+    res = np.full(arr.shape, row["nodata"], dtype=np.float64)
+    if eq is not None and valid.any():
+        res[valid] = eq[_buckets(arr[valid], vmin, vmax, nb)]
+    return {"px": res}
 
 
 def histogram_equalize(tiles: DataFrame, vmin: float, vmax: float,
@@ -330,10 +317,9 @@ def histogram_equalize(tiles: DataFrame, vmin: float, vmax: float,
     constant-small dimension — fail-loud past ``max_cdf_rows``) window-
     cumsummed JVM-side, collected once and closed over a narrow Arrow
     map. Output schema = input schema with equalized float64 pixels."""
-    t = int(tile_size)
     nb = int(nbins)
     lv = int(out_levels)
-    hist = histogram_stats(tiles, vmin, vmax, nbins=nb, tile_size=t)
+    hist = histogram_stats(tiles, vmin, vmax, nbins=nb, tile_size=tile_size)
     w = Window.partitionBy("source_id", "band").orderBy("bucket") \
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     wall = Window.partitionBy("source_id", "band")
@@ -361,28 +347,32 @@ def histogram_equalize(tiles: DataFrame, vmin: float, vmax: float,
             (float(int(r.cum) - int(r.cdf_min)) / float(den))
             * (lv - 1) + 0.5)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_px = []
-            for row_t in pdf.itertuples(index=False):
-                arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                        .reshape(t, t).astype(np.float64)
-                valid = ~np.isnan(arr) & (arr != row_t.nodata)
-                eq = table.get((row_t.source_id, int(row_t.band)))
-                res = np.full((t, t), row_t.nodata, dtype=np.float64)
-                if eq is not None and valid.any():
-                    v = arr[valid]
-                    bucket = np.clip(
-                        np.floor((v - vmin) / (vmax - vmin) * nb),
-                        0.0, float(nb - 1)).astype(np.int64)
-                    res[valid] = eq[bucket]
-                out_px.append(res.tobytes())
-            pdf = pdf.copy()
-            pdf["px"] = out_px
-            pdf["dtype"] = "float64"
-            yield pdf
+    return map_tiles(
+        tiles, partial(k_equalize, table=table, vmin=vmin, vmax=vmax, nb=nb),
+        tiles.schema)
 
-    return tiles.mapInPandas(run, tiles.schema)
+
+def k_value_counts(row: dict) -> list[dict]:
+    """One tile's per-VALUE counts of its valid pixels (percent_clip_stats,
+    histogram_match)."""
+    arr, valid = _pixels(row)
+    vals, cnts = np.unique(arr[valid], return_counts=True)
+    return [{"val": float(v), "cnt": int(c)} for v, c in zip(vals, cnts)]
+
+
+def k_clip_stretch(row: dict, table: dict) -> dict:
+    """One tile's valid count and quantized percent-clip stretch sum
+    against its scene's (lo, hi) in ``table`` (percent_clip_stats)."""
+    arr, valid = _pixels(row)
+    lo, hi = table[(row["source_id"], int(row["band"]))]
+    v = arr[valid]
+    s = np.where(v <= lo, 0.0, np.where(v >= hi, 1.0, (v - lo) / (hi - lo)))
+    return {"n_valid": int(valid.sum()),
+            "q_stretch_sum": int(np.floor(s * 1048576.0 + 0.5)
+                                 .astype(np.int64).sum())}
+
+
+_VALUE_COUNTS_DDL = "source_id string, band int, val double, cnt bigint"
 
 
 def percent_clip_stats(tiles: DataFrame, p_lo: int = 2, p_hi: int = 98,
@@ -407,25 +397,7 @@ def percent_clip_stats(tiles: DataFrame, p_lo: int = 2, p_hi: int = 98,
     zero-shuffle per-tile checksum. Degenerate scenes (hi <= lo) fail
     loud. Output: (source_id, band, col, row, n_valid, q_stretch_sum =
     Σ floor(stretch·2^20 + 0.5))."""
-    t = int(tile_size)
-
-    def counts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                        .reshape(t, t).astype(np.float64)
-                valid = ~np.isnan(arr) & (arr != row_t.nodata)
-                vals, cnts = np.unique(arr[valid], return_counts=True)
-                for v, c in zip(vals, cnts):
-                    out.append({"source_id": row_t.source_id,
-                                "band": int(row_t.band),
-                                "val": float(v), "cnt": int(c)})
-            yield pd.DataFrame(out, columns=["source_id", "band",
-                                             "val", "cnt"])
-
-    cnt = tiles.mapInPandas(
-        counts, "source_id string, band int, val double, cnt bigint") \
+    cnt = map_tiles(tiles, k_value_counts, _VALUE_COUNTS_DDL) \
         .groupBy("source_id", "band", "val") \
         .agg(F.sum("cnt").alias("cnt"))
     w = Window.partitionBy("source_id", "band").orderBy("val") \
@@ -455,32 +427,10 @@ def percent_clip_stats(tiles: DataFrame, p_lo: int = 2, p_hi: int = 98,
                 f"for ({r.source_id}, band {r.band})")
         table[(r.source_id, int(r.band))] = (lo, hi)
 
-    def rollup(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                        .reshape(t, t).astype(np.float64)
-                valid = ~np.isnan(arr) & (arr != row_t.nodata)
-                lo, hi = table[(row_t.source_id, int(row_t.band))]
-                v = arr[valid]
-                s = np.where(v <= lo, 0.0,
-                             np.where(v >= hi, 1.0,
-                                      (v - lo) / (hi - lo)))
-                out.append({"source_id": row_t.source_id,
-                            "band": int(row_t.band),
-                            "col": int(row_t.col), "row": int(row_t.row),
-                            "n_valid": int(valid.sum()),
-                            "q_stretch_sum": int(
-                                np.floor(s * 1048576.0 + 0.5)
-                                .astype(np.int64).sum())})
-            yield pd.DataFrame(out, columns=[
-                "source_id", "band", "col", "row", "n_valid",
-                "q_stretch_sum"])
-
-    return tiles.mapInPandas(
-        rollup, "source_id string, band int, col bigint, row bigint, "
-                "n_valid bigint, q_stretch_sum bigint")
+    return map_tiles(
+        tiles, partial(k_clip_stretch, table=table),
+        "source_id string, band int, col bigint, row bigint, "
+        "n_valid bigint, q_stretch_sum bigint")
 
 
 def histogram_match(tiles: DataFrame, src_id: str, ref_id: str,
@@ -508,27 +458,8 @@ def histogram_match(tiles: DataFrame, src_id: str, ref_id: str,
     rank, ONE per-band window ordered (key DESC, ref-first), running
     MIN over ref values = the smallest qualifying u. No V^2 join, no
     collect."""
-    t = int(tile_size)
-
-    def counts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                        .reshape(t, t).astype(np.float64)
-                valid = ~np.isnan(arr) & (arr != row_t.nodata)
-                vals, cnts = np.unique(arr[valid], return_counts=True)
-                for v, c in zip(vals, cnts):
-                    out.append({"source_id": row_t.source_id,
-                                "band": int(row_t.band),
-                                "val": float(v), "cnt": int(c)})
-            yield pd.DataFrame(out, columns=["source_id", "band",
-                                             "val", "cnt"])
-
-    cnt = (tiles.filter(F.col("source_id").isin([src_id, ref_id]))
-           .mapInPandas(counts,
-                        "source_id string, band int, val double, "
-                        "cnt bigint")
+    cnt = (map_tiles(tiles.filter(F.col("source_id").isin([src_id, ref_id])),
+                     k_value_counts, _VALUE_COUNTS_DDL)
            .groupBy("source_id", "band", "val")
            .agg(F.sum("cnt").alias("cnt")))
     wc = Window.partitionBy("source_id", "band").orderBy("val") \

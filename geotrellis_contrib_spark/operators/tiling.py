@@ -71,10 +71,11 @@ def windows_tiles_join(windows: DataFrame, tiles: DataFrame, zoom: int,
 
 
 def tile_extent_cols(df: DataFrame, zoom_col="zoom", col="col", row="row") -> DataFrame:
-    """Attach the lon/lat extent of each tile key (inverse of assign_tiles)."""
+    """Attach the lon/lat extent of each tile key (inverse of assign_tiles)
+    as txmin, txmax, tymin, tymax (JVM StrictMath)."""
     z = F.col(zoom_col)
     return (df
-            .withColumn("xmin", C.tile_xmin(z, F.col(col)))
-            .withColumn("xmax", C.tile_xmax(z, F.col(col)))
-            .withColumn("ymin", C.tile_ymin(z, F.col(row)))
-            .withColumn("ymax", C.tile_ymax(z, F.col(row))))
+            .withColumn("txmin", C.tile_xmin(z, F.col(col)))
+            .withColumn("txmax", C.tile_xmax(z, F.col(col)))
+            .withColumn("tymin", C.tile_ymin(z, F.col(row)))
+            .withColumn("tymax", C.tile_ymax(z, F.col(row))))

@@ -2,6 +2,7 @@ import os
 import sys
 import uuid
 
+import numpy as np
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -15,7 +16,10 @@ SF_MED = os.path.join(TESTDATA, "sf0.01")
 def spark():
     from geotrellis_contrib_spark.session import get_session
 
-    s = get_session(app_name="gcs-tests", cores=4, shuffle_partitions=8)
+    # a WholeStageCodegen stage that janino cannot compile raises instead
+    # of silently running interpreted
+    s = get_session(app_name="gcs-tests", cores=4, shuffle_partitions=8,
+                    extra_conf={"spark.sql.codegen.fallback": "false"})
     yield s
     s.stop()
 
@@ -45,3 +49,49 @@ def sync_probes(caplog, op):
     per-sync records of ``plans.iterate.fixpoint`` (the test must first
     run ``caplog.set_level(logging.INFO, logger=ITERATE_LOG)``)."""
     return [r.probe for r in caplog.records if getattr(r, "op", None) == op]
+
+
+def assemble_window(rows, bounds) -> np.ndarray:
+    """Stitch ``pixels.read_window`` output rows (one source+band) into a
+    single array over ``bounds`` (NaN where no tile)."""
+    from geotrellis_contrib_spark.operators.pixels import DTYPES
+
+    cmin, rmin, cmax, rmax = bounds
+    out = np.full((rmax - rmin + 1, cmax - cmin + 1), np.nan)
+    for r in rows:
+        dtype = r.asDict()["dtype"]  # Row attribute access would hit Row.dtype
+        arr = np.frombuffer(r.px, dtype=DTYPES[dtype]).reshape(r.h, r.w)
+        out[r.px_row_min - rmin: r.px_row_min - rmin + r.h,
+            r.px_col_min - cmin: r.px_col_min - cmin + r.w] = arr
+    return out
+
+
+def assemble_target(rows, target) -> np.ndarray:
+    """Overlay ``pixels.reproject_to_grid`` output rows (one source+band)
+    onto the full target grid: NaN where no tile owned the pixel; later
+    rows never overwrite earlier non-NaN values (the outputs partition the
+    grid, so order is irrelevant)."""
+    from geotrellis_contrib_spark.operators.pixels import DTYPES
+
+    out = np.full((target.rows, target.cols), np.nan)
+    for r in rows:
+        dtype = r.asDict()["dtype"]
+        win = np.frombuffer(r.px, dtype=DTYPES[dtype]).reshape(r.h, r.w)
+        view = out[r.px_row_min: r.px_row_min + r.h,
+                   r.px_col_min: r.px_col_min + r.w]
+        m = ~np.isnan(win)
+        view[m] = win[m]
+    return out
+
+
+def replay_tiles(rows, kernel, ddl: str):
+    """``pixels.map_tiles`` without Spark: ``rows`` (dicts whose ``px`` is
+    an array) as ONE pandas batch through the driver's own batch body,
+    ``pixels.tile_batch``, with the output columns of the flat DDL."""
+    import pandas as pd
+
+    from geotrellis_contrib_spark.operators import pixels as px
+
+    pdf = pd.DataFrame([{**r, "dtype": r["px"].dtype.name, "px": px.pack(r["px"])}
+                        for r in rows])
+    return px.tile_batch(pdf, kernel, [f.split()[0] for f in ddl.split(",")])

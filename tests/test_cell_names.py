@@ -9,6 +9,19 @@ from pyspark.sql import functions as F
 from geotrellis_contrib_spark.functions import cells as C
 
 
+@pytest.fixture(scope="module", autouse=True)
+def interpreted_fallback(spark):
+    """The one-expression ``C.geohash`` / ``C.quadkey`` re-inline the whole
+    bit-spread tree once per character, and the generated code of a
+    projection of several of them grows past the JVM's 64 KB method
+    limit, so Spark can only run those stages interpreted. This module
+    allows that fallback, which the Tier-1 session otherwise turns off
+    (the staged ``geohash_quadkey_codes`` path the queries use compiles)."""
+    spark.conf.set("spark.sql.codegen.fallback", "true")
+    yield
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+
+
 def test_known_vectors(spark):
     df = spark.createDataFrame(
         [(-5.60302734375, 42.60498046875),  # geohash spec example

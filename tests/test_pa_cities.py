@@ -89,8 +89,8 @@ def test_tile_extent_cols(spark):
 
     from geotrellis_contrib_spark import grid
     xmin, ymin, xmax, ymax = grid.tile_extent(12, np.array([1205]), np.array([1540]))
-    assert r.xmin == xmin[0] and r.xmax == xmax[0]
-    np.testing.assert_allclose([r.ymin, r.ymax], [ymin[0], ymax[0]], rtol=1e-13)
+    assert r.txmin == xmin[0] and r.txmax == xmax[0]
+    np.testing.assert_allclose([r.tymin, r.tymax], [ymin[0], ymax[0]], rtol=1e-13)
 
 
 def test_insert_select_roundtrip_order(spark, cities, tmp_path):

@@ -1,6 +1,8 @@
 """Pixel-payload pipelines vs single-node numpy oracle (the dual-execution
 pattern for the non-SQL-expressible tier; SURVEY.md §5)."""
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -8,6 +10,7 @@ from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark import corpus
 from geotrellis_contrib_spark.operators import pixels as px
+from tests.conftest import assemble_window, replay_tiles
 
 TS = 64
 
@@ -51,10 +54,14 @@ def test_convert_roundtrip(spark, tiles):
     np.testing.assert_array_equal(got, orig.astype(np.float32))
 
 
-def test_resample(spark, tiles):
-    small = px.resample(tiles.limit(4), 16, tile_size=TS)
-    r = small.first()
-    assert px.unpack(r.px, r.dtype, 16).shape == (16, 16)
+def test_resample():
+    """resample's kernel: nearest 64 -> 16 keeps the dtype and samples the
+    source pixel under each target center (every 4th, offset 2)."""
+    arr = np.arange(TS * TS, dtype=np.float32).reshape(TS, TS)
+    out = replay_tiles([{"nodata": -1.0, "px": arr}],
+                       partial(px.k_warp, out_size=16), "dtype string, px binary")
+    assert out["dtype"].tolist() == ["float32"]
+    np.testing.assert_array_equal(px.unpack(out.px[0], "float32", 16), arr[2::4, 2::4])
 
 
 def test_bilinear_kernel_golden():
@@ -107,6 +114,31 @@ def test_read_cells_checksum(spark, tiles):
         exp_cnt = int(sum(v.size for v in valid))
         assert got[s][1] == exp_cnt
         assert abs(got[s][0] - exp_sum) < 1e-6 * max(abs(exp_sum), 1)
+
+
+def test_nodata_rule_is_exact(spark):
+    """NoData is exactly the tile's nodata value (or NaN), never a value
+    near it: -9999.05 beside nodata -9999.0 and 1e-9 beside nodata 0.0 are
+    pixels, which tile_stats and read_cells_checksum count and
+    merge_tiles keeps."""
+    a = np.full((4, 4), -9999.0)
+    a[0, 0], a[0, 1] = -9999.05, 5.0
+    b = np.zeros((4, 4))
+    b[0, 0], b[1, 1] = 7.0, 1e-9
+    tiles = spark.createDataFrame(
+        [("a", 0, 6, 18, 24, 0, "float64", -9999.0, 4, px.pack(a)),
+         ("b", 1, 6, 18, 24, 0, "float64", 0.0, 4, px.pack(b))],
+        "source_id string, source_idx int, zoom int, col bigint, row bigint, "
+        "band int, dtype string, nodata double, tile_size int, px binary")
+    stats = {r.source_idx: (r.px_sum, r.px_count)
+             for r in px.tile_stats(tiles, keys=("source_idx",)).collect()}
+    assert stats == {0: (-9999.05 + 5.0, 2), 1: (7.0 + 1e-9, 2)}
+    cells = {r.source_id: (r.px_sum, r.px_count)
+             for r in px.read_cells_checksum(tiles, tile_size=4).collect()}
+    assert cells == {"a": stats[0], "b": stats[1]}
+    merged = px.unpack(px.merge_tiles(tiles, tile_size=4).first().px, "float64", 4)
+    assert merged[0, 0] == -9999.05 and merged[0, 1] == 5.0
+    assert merged[1, 1] == 1e-9
 
 
 def test_reproject_kernel_identity_and_mask():
@@ -233,7 +265,7 @@ def test_read_window_pixels(spark, tiles):
     # an unaligned window crossing tile edges
     win = (18 * TS + 40, 24 * TS + 10, 19 * TS + 30, 25 * TS + 5)
     rows = px.read_window(scene0, win, grid_bounds=gb, tile_size=TS).collect()
-    got = px.assemble_window(rows, win)
+    got = assemble_window(rows, win)
     assert got.shape == (TS + 5 - 10 + 1, TS + 30 - 40 + 1)
     assert not np.isnan(got).any()
     # oracle: stitch locally from the raw tiles
@@ -249,7 +281,7 @@ def test_read_window_pixels(spark, tiles):
     # clamping: a window poking past the footprint clamps to it
     over = (21 * TS + 32, 27 * TS + 32, 23 * TS, 29 * TS)
     rows = px.read_window(scene0, over, grid_bounds=gb, tile_size=TS).collect()
-    got = px.assemble_window(rows, (21 * TS + 32, 27 * TS + 32, 22 * TS - 1, 28 * TS - 1))
+    got = assemble_window(rows, (21 * TS + 32, 27 * TS + 32, 22 * TS - 1, 28 * TS - 1))
     assert got.shape == (32, 32) and not np.isnan(got).any()
 
     # disjoint window: empty result (clamped) / error (strict)
@@ -257,51 +289,6 @@ def test_read_window_pixels(spark, tiles):
     assert px.read_window(scene0, far, grid_bounds=gb, tile_size=TS).count() == 0
     with pytest.raises(ValueError, match="disjoint"):
         px.read_window(scene0, far, grid_bounds=gb, tile_size=TS, clamp=False)
-
-
-def test_build_pixel_pyramid_level(spark):
-    """Constant fields stay constant; means preserve totals; NoData holes
-    survive the fold; missing children become NoData quadrants."""
-    ts = 32
-    rows = []
-    # one full 2x2 parent block (children at (4..5, 6..7)) + one lone child
-    for c, r in [(4, 6), (5, 6), (4, 7), (5, 7), (8, 2)]:
-        arr = np.full((ts, ts), float(c * 10 + r))
-        if (c, r) == (4, 6):
-            arr[:4, :4] = -9999.0  # a NoData hole
-        rows.append(("s", 0, 6, c, r, 0, "float64", -9999.0, px.pack(arr)))
-    tiles = spark.createDataFrame(
-        rows, "source_id string, source_idx int, zoom int, col bigint, row bigint, "
-              "band int, dtype string, nodata double, px binary")
-    out = {(r.col, r.row): px.unpack(r.px, "float64", ts)
-           for r in px.build_pixel_pyramid_level(tiles, tile_size=ts).collect()}
-    assert set(out) == {(2, 3), (4, 1)}
-    full = out[(2, 3)]
-    # each quadrant holds its child's constant value (means of constants)
-    assert full[0, ts - 1] == 56.0   # child (5,6): top-right quadrant
-    assert full[ts - 1, 0] == 47.0   # child (4,7): bottom-left
-    assert full[ts - 1, ts - 1] == 57.0
-    # the NoData hole downsampled into NoData pixels at the parent
-    assert (full[:2, :2] == -9999.0).all()
-    assert full[3, 3] == 46.0
-    lone = out[(4, 1)]
-    half = ts // 2
-    assert (lone[:half, :half] == 82.0).all()        # child (8,2): quadrant NW
-    assert (lone[half:, :] == -9999.0).all()         # missing children = NoData
-
-
-def test_rasterize_points_pixels(spark):
-    pts = spark.createDataFrame(
-        [(i, -74.2 + (i % 10) * 0.01, 40.5 + (i % 7) * 0.01) for i in range(200)],
-        "doc_id long, lon double, lat double")
-    out = px.rasterize_points_pixels(pts, zoom=8, tile_size=32).collect()
-    assert sum(r.n_points for r in out) == 200
-    total = 0
-    for r in out:
-        grid = px.unpack(r.px, "int32", 32)
-        assert grid.sum() == r.n_points
-        total += grid.sum()
-    assert total == 200
 
 
 def test_retile_round_trip_identity(spark):
@@ -386,7 +373,8 @@ def test_mask_tiles_vs_numpy(spark):
     valid set exactly."""
     tiles = corpus.synth_px_tiles(spark, tile_size=64)
     rows = tiles.collect()
-    boxes = [(-76.5, 48.2, -74.8, 52.9), (-76.0, 50.0, -75.2, 55.1)]
+    # the fixture spans lat 21.9..41.0: both boxes cut through tiles
+    boxes = [(-76.5, 33.2, -74.8, 37.9), (-76.0, 35.0, -75.2, 40.1)]
     bdf = spark.createDataFrame(
         boxes, "xmin double, ymin double, xmax double, ymax double") \
         .select("xmin", "ymin", "xmax", "ymax")
@@ -397,6 +385,10 @@ def test_mask_tiles_vs_numpy(spark):
                                       inverse=inverse).collect()}
         want = _mask_numpy_oracle(rows, boxes, 64, inverse)
         assert got.keys() == want.keys()
+        # some tile is cut: the pixel test ran, not only the no-hit path
+        assert any(0 < (a != -9999.0).sum() < (px.unpack(r.px, r.dtype, 64) != -9999.0).sum()
+                   for r in rows
+                   for a in [got[(r.source_idx, r.band, r.col, r.row)]])
         for k in want:
             np.testing.assert_array_equal(got[k], want[k])
     # partition property: valid(mask) and valid(inverse) are disjoint and
@@ -412,22 +404,22 @@ def test_mask_tiles_vs_numpy(spark):
         np.testing.assert_array_equal(vm | vi, orig != r.nodata)
 
 
-def test_mask_tiles_no_hit_fast_paths(spark):
-    """A tile overlapping no box: inverse passes the BLOB through
-    byte-identical; mask yields the all-NoData tile."""
-    tiles = corpus.synth_px_tiles(spark, tile_size=64)
-    far = spark.createDataFrame([(100.0, 10.0, 101.0, 11.0)],
-                                "xmin double, ymin double, xmax double, "
-                                "ymax double")
-    orig = {(r.source_idx, r.band, r.col, r.row): bytes(r.px)
-            for r in tiles.collect()}
-    inv = {(r.source_idx, r.band, r.col, r.row): bytes(r.px)
-           for r in px.mask_tiles(tiles, far, tile_size=64,
-                                  inverse=True).collect()}
-    assert inv == orig
-    for r in px.mask_tiles(tiles, far, tile_size=64).collect():
-        arr = px.unpack(r.px, r.dtype, 64)
-        assert (arr == r.nodata).all()
+def test_mask_tiles_no_hit_fast_paths():
+    """A tile overlapping no box (mask_tiles' kernel): inverse passes the
+    BLOB through byte-identical; mask yields the all-NoData tile."""
+    rng = np.random.default_rng(7)
+    rows = [{"zoom": 6, "col": c, "row": r, "nodata": -9999.0,
+             "px": rng.uniform(0.0, 100.0, (64, 64)).astype(dt)}
+            for c, r, dt in [(18, 24, np.float64), (21, 27, np.float32),
+                             (19, 25, np.int16)]]
+    far = [(100.0, 10.0, 101.0, 11.0)]
+    ddl = "col bigint, dtype string, nodata double, px binary"
+    inv = replay_tiles(rows, partial(px.k_mask, boxes=far, inverse=True), ddl)
+    assert inv.px.tolist() == [px.pack(r["px"]) for r in rows]
+    masked = replay_tiles(rows, partial(px.k_mask, boxes=far, inverse=False), ddl)
+    for r, m in zip(rows, masked.to_dict("records")):
+        assert m["dtype"] == r["px"].dtype.name
+        assert (px.unpack(m["px"], m["dtype"], 64) == -9999.0).all()
 
 
 def test_mask_tiles_max_boxes_fail_loud(spark):

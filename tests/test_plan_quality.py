@@ -10,6 +10,7 @@ import pytest
 import __spark_entry__ as entrymod
 from geotrellis_contrib_spark import corpus
 from geotrellis_contrib_spark.operators import spatial_join as sj
+from geotrellis_contrib_spark.operators import tiling
 from tests.conftest import SF_SMALL
 
 HOT_QUERIES = ["cell_encode", "tile_assign", "pip_join", "distance_join",
@@ -249,10 +250,16 @@ def test_corpus_pipeline_builds_spans_and_parses_geo_once(spark):
     boxes = spark.createDataFrame(
         [("hot", -74.25, 40.45, -73.75, 40.95)],
         "poly_id string, xmin double, ymin double, xmax double, ymax double")
-    hits = sj.pip_join_boxes(corpus.extract_anchors(corpus.synth_docs(spark, 1000)),
+    hits = sj.pip_join_boxes(corpus.extract_anchors(corpus.synth_docs(spark, 2000)),
                              boxes, zoom=6)
     plan = hits._jdf.queryExecution().optimizedPlan().toString()
     assert "size(" not in plan, "inferred size() filter rebuilds the span array"
     assert not re.search(r"explode\(spans#\d+\)", plan), "Generate over the span struct"
     assert plan.count("split(") == 1, "geo text split more than once"
     assert plan.count("cast(element_at(") == 2, "lon/lat cast more than once each"
+    # the plan string cannot show a stage that janino fails to compile:
+    # run the chain to its per-tile counts (codegen fallback is off in the
+    # test session, so such a stage raises instead of running interpreted)
+    tiles = tiling.assign_tiles(hits, [12])
+    tiles.groupBy("poly_id", "zoom", "col", "row").count() \
+        .write.format("noop").mode("overwrite").save()

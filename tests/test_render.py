@@ -4,10 +4,13 @@ round trip, histogram vs numpy, quantile-break invariants, plan quality
 
 Reference parity: the GeoTrellis ColorRamp/ColorMap/Png render family and
 StreamingHistogram classification breaks fed by RasterSources."""
+from functools import partial
+
 import numpy as np
 
 from geotrellis_contrib_spark import corpus
 from geotrellis_contrib_spark.operators import render as RD
+from tests.conftest import replay_tiles
 
 T = 64
 
@@ -195,31 +198,29 @@ def test_sigmoidal_contrast_brute_force(spark):
     assert all(x <= y for x, y in zip(gs, gs[1:]))
 
 
-def test_sigmoidal_contrast_endpoints_and_guard(spark):
-    """vmin maps to 0 and vmax to 255 exactly; out-of-range inputs clamp;
-    a degenerate (alpha, beta) pair fails loud."""
+def test_sigmoidal_contrast_endpoints_and_guard():
+    """sigmoidal_contrast's kernel: vmin maps to 0 and vmax to 255
+    exactly; out-of-range inputs clamp; a degenerate (alpha, beta) pair
+    fails loud before the operator builds a plan."""
     import pytest
 
-    from geotrellis_contrib_spark.operators.pixels import pack, unpack
-    from geotrellis_contrib_spark.operators.render import \
-        sigmoidal_contrast
+    from geotrellis_contrib_spark.operators.pixels import unpack
+    from geotrellis_contrib_spark.operators.render import (
+        k_sigmoidal, sigmoidal_contrast)
 
     arr = np.full((64, 64), 500.0)
     arr[0, 0] = 0.0       # == vmin -> u=0 -> g=0 -> 0
     arr[0, 1] = 1000.0    # == vmax -> u=1 -> g=1 -> 255
     arr[0, 2] = -50.0     # clamps to vmin
     arr[0, 3] = 2000.0    # clamps to vmax
-    df = spark.createDataFrame(
-        [("u", 0, 6, 0, 0, 0, "float64", -1.0, pack(arr))],
-        "source_id string, source_idx int, zoom int, col bigint, "
-        "row bigint, band int, dtype string, nodata double, px binary")
-    out = sigmoidal_contrast(df, vmin=0.0, vmax=1000.0,
-                             alpha=0.5, beta=10.0, tile_size=64)
-    g = unpack(out.collect()[0].px, "float64", 64)
+    out = replay_tiles([{"nodata": -1.0, "px": arr}],
+                       partial(k_sigmoidal, vmin=0.0, vmax=1000.0, alpha=0.5,
+                               beta=10.0, levels=256), "dtype string, px binary")
+    g = unpack(out.px[0], out["dtype"][0], 64)
     assert g[0, 0] == 0.0 and g[0, 1] == 255.0
     assert g[0, 2] == 0.0 and g[0, 3] == 255.0
     with pytest.raises(ValueError, match="degenerate"):
-        sigmoidal_contrast(df, vmin=0.0, vmax=1000.0, alpha=0.5,
+        sigmoidal_contrast(None, vmin=0.0, vmax=1000.0, alpha=0.5,
                            beta=0.0, tile_size=64)
 
 

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark import corpus, grid
 from geotrellis_contrib_spark.operators import pixels as px
+from tests.conftest import assemble_target
 
 TS = 64
 
@@ -88,7 +89,7 @@ def test_reproject_to_grid_mercator_region_nearest(spark, tiles):
         120, 100)
     out = px.reproject_to_grid(_sel(tiles), target, method="nearest",
                                tile_size=TS, dst_crs=3857)
-    got = px.assemble_target(out.collect(), target)
+    got = assemble_target(out.collect(), target)
     want = _oracle_reproject(target, grid.mercator_to_lonlat)
     assert got.shape == want.shape == (100, 120)
     np.testing.assert_array_equal(np.isnan(got), np.isnan(want))
@@ -109,7 +110,7 @@ def test_reproject_to_grid_4326_regrid(spark, tiles):
     target = grid.resample_to_grid(src_ge, lattice)
     out = px.reproject_to_grid(_sel(tiles), target, method="nearest",
                                tile_size=TS, dst_crs=4326)
-    got = px.assemble_target(out.collect(), target)
+    got = assemble_target(out.collect(), target)
     want = _oracle_reproject(target, _identity)
     np.testing.assert_array_equal(np.isnan(got), np.isnan(want))
     m = ~np.isnan(want)
@@ -146,7 +147,7 @@ def test_reproject_to_grid_bilinear(spark, tiles):
         64, 64)
     out = px.reproject_to_grid(_sel(tiles), target, method="bilinear",
                                tile_size=TS, dst_crs=3857)
-    got = px.assemble_target(out.collect(), target)
+    got = assemble_target(out.collect(), target)
     want = _oracle_reproject(target, grid.mercator_to_lonlat, method="bilinear")
     np.testing.assert_array_equal(np.isnan(got), np.isnan(want))
     m = ~np.isnan(want)
@@ -217,7 +218,7 @@ def test_reproject_to_grid_utm(spark, tiles):
                        & (F.col("col") == 19) & (F.col("row") == 24))
     out = px.reproject_to_grid(one, target, method="nearest",
                                tile_size=TS, dst_crs=32617)
-    got = px.assemble_target(out.collect(), target)
+    got = assemble_target(out.collect(), target)
     want = px.k_reproject_nearest(
         _tile_arr(0, 0, 19, 24), (tx0, ty0, tx1, ty1),
         (target.xmin, target.ymin, target.xmax, target.ymax),
@@ -244,7 +245,7 @@ def test_reproject_to_grid_laea_3035(spark, tiles):
                        & (F.col("col") == 19) & (F.col("row") == 24))
     out = px.reproject_to_grid(one, target, method="nearest",
                                tile_size=TS, dst_crs=3035)
-    got = px.assemble_target(out.collect(), target)
+    got = assemble_target(out.collect(), target)
     want = px.k_reproject_nearest(
         _tile_arr(0, 0, 19, 24), (tx0, ty0, tx1, ty1),
         (target.xmin, target.ymin, target.xmax, target.ymax),
@@ -268,7 +269,7 @@ def test_reproject_to_grid_albers_5070(spark, tiles):
                        & (F.col("col") == 19) & (F.col("row") == 25))
     out = px.reproject_to_grid(one, target, method="bilinear",
                                tile_size=TS, dst_crs=5070)
-    got = px.assemble_target(out.collect(), target)
+    got = assemble_target(out.collect(), target)
     # the engine reads tile extents from the JVM Columns, whose trig can
     # differ from numpy's libm by 1 ulp on some rows (tile_ymax(6,25) does);
     # evaluate the SAME JVM expressions for the oracle so bilinear weights
@@ -308,7 +309,7 @@ def test_reproject_to_grid_lcc_2154(spark, tiles):
                        & (F.col("col") == 19) & (F.col("row") == 24))
     out = px.reproject_to_grid(one, target, method="nearest",
                                tile_size=TS, dst_crs=2154)
-    got = px.assemble_target(out.collect(), target)
+    got = assemble_target(out.collect(), target)
     want = px.k_reproject_nearest(
         _tile_arr(0, 0, 19, 24), (tx0, ty0, tx1, ty1),
         (target.xmin, target.ymin, target.xmax, target.ymax),
