@@ -328,101 +328,16 @@ def morton3_code(col_name: str, row_name: str, t_name: str) -> Column:
 # above: geohash (Gustavo Niemeyer's base32 lat/lon bisection — the
 # MSB-first interleave starts with LONGITUDE) and the Bing Maps quadkey
 # (base-4 digits of the web-mercator (tile_col, tile_row) pair, one
-# digit per zoom level, digit = 2*row_bit + col_bit). Both are emitted
-# as ONE parsed expression from shared SQL text so the engine Column
-# and the DuckDB oracle run the literal same arithmetic; the base32
-# lookup is a SUBSTRING into the alphabet literal (dialect-common).
+# digit per zoom level, digit = 2*row_bit + col_bit). Two steps: the
+# integer code, then its digits from the NAMED code column, so the
+# Morton spread tree is not re-inlined once per character. The engine
+# stages the codes through named columns (geohash_quadkey_codes); the
+# DuckDB oracle runs the same arithmetic from the SQL text below. The
+# base32 lookup is a SUBSTRING into the alphabet literal
+# (dialect-common).
 
 _GEOHASH32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
-
-def _sql_geohash(lon: str, lat: str, precision: int, shift_fmt,
-                 rshift_fmt) -> str:
-    if not 1 <= precision <= 12:
-        raise ValueError(f"geohash precision must be 1..12: {precision}")
-    bits = 5 * precision
-    lonb = (bits + 1) // 2
-    latb = bits // 2
-    gx = (f"CAST(LEAST(GREATEST(FLOOR(({lon} + 180.0) / 360.0 "
-          f"* {float(1 << lonb)!r}), 0), {float((1 << lonb) - 1)!r}) "
-          "AS BIGINT)")
-    gy = (f"CAST(LEAST(GREATEST(FLOOR(({lat} + 90.0) / 180.0 "
-          f"* {float(1 << latb)!r}), 0), {float((1 << latb) - 1)!r}) "
-          "AS BIGINT)")
-    sx, sy = _sql_spread(gx, shift_fmt), _sql_spread(gy, shift_fmt)
-    # even bit total: lon owns the ODD positions (MSB = bit bits-1 is
-    # lon's top bit); odd total: lon owns the EVEN positions
-    code = f"({sy} | {shift_fmt(sx, 1)})" if bits % 2 == 0 \
-        else f"({sx} | {shift_fmt(sy, 1)})"
-    chars = [
-        f"SUBSTRING('{_GEOHASH32}', "
-        f"CAST((({rshift_fmt(code, 5 * (precision - 1 - k))} & 31) + 1) "
-        f"AS INT), 1)"
-        for k in range(precision)]
-    # GREATEST/LEAST silently SKIP NULLs in both dialects (a NULL
-    # coordinate would alias to cell '000...'): guard explicitly
-    return (f"CASE WHEN {lon} IS NULL OR {lat} IS NULL THEN NULL "
-            "ELSE CONCAT(" + ", ".join(chars) + ") END")
-
-
-def sql_geohash_spark(lon: str, lat: str, precision: int) -> str:
-    s = lambda e, n: f"shiftleft({e}, {n})"  # noqa: E731
-    r = lambda e, n: f"shiftright({e}, {n})"  # noqa: E731
-    return _sql_geohash(lon, lat, precision, s, r)
-
-
-def sql_geohash_duckdb(lon: str, lat: str, precision: int) -> str:
-    s = lambda e, n: f"({e} << {n})"  # noqa: E731
-    r = lambda e, n: f"({e} >> {n})"  # noqa: E731
-    return _sql_geohash(lon, lat, precision, s, r)
-
-
-def geohash(lon_name: str, lat_name: str, precision: int = 6) -> Column:
-    """Geohash string of the named lon/lat columns (ONE parsed JVM
-    expression; NULL coordinates propagate to NULL)."""
-    return F.expr(sql_geohash_spark(lon_name, lat_name, precision))
-
-
-def _sql_quadkey(lon: str, lat: str, zoom: int, shift_fmt,
-                 rshift_fmt) -> str:
-    if not 1 <= zoom <= 23:
-        raise ValueError(f"quadkey zoom must be 1..23: {zoom}")
-    tx, ty = sql_tile_col(lon, zoom), sql_tile_row(lat, zoom)
-    code = f"({_sql_spread(tx, shift_fmt)} | " \
-           f"{shift_fmt(_sql_spread(ty, shift_fmt), 1)})"
-    chars = [
-        f"SUBSTRING('0123', "
-        f"CAST((({rshift_fmt(code, 2 * (zoom - 1 - k))} & 3) + 1) "
-        f"AS INT), 1)"
-        for k in range(zoom)]
-    return (f"CASE WHEN {lon} IS NULL OR {lat} IS NULL THEN NULL "
-            "ELSE CONCAT(" + ", ".join(chars) + ") END")
-
-
-def sql_quadkey_spark(lon: str, lat: str, zoom: int) -> str:
-    s = lambda e, n: f"shiftleft({e}, {n})"  # noqa: E731
-    r = lambda e, n: f"shiftright({e}, {n})"  # noqa: E731
-    return _sql_quadkey(lon, lat, zoom, s, r)
-
-
-def sql_quadkey_duckdb(lon: str, lat: str, zoom: int) -> str:
-    s = lambda e, n: f"({e} << {n})"  # noqa: E731
-    r = lambda e, n: f"({e} >> {n})"  # noqa: E731
-    return _sql_quadkey(lon, lat, zoom, s, r)
-
-
-def quadkey(lon_name: str, lat_name: str, zoom: int = 10) -> Column:
-    """Bing Maps quadkey string at ``zoom`` (ONE parsed JVM expression;
-    prefix-of-parent property: quadkey(z-1) = quadkey(z)[:z-1])."""
-    return F.expr(sql_quadkey_spark(lon_name, lat_name, zoom))
-
-
-# Two-step variants: the digit extraction above re-inlines the full
-# Morton `code` expression once PER CHARACTER — a quadkey-10 literal is
-# ~10 copies of a 5-stage spread tree, and Catalyst pays analysis/
-# codegen cost proportional to tree size (measured 3.4s/query warm on
-# 1000 rows vs ~0.3s with the split). Compute the integer code in one
-# projection, then turn the NAMED code column into characters.
 
 def sql_geohash_code(lon: str, lat: str, precision: int,
                      shift_fmt) -> str:
@@ -498,9 +413,10 @@ def spread_bits_staged(df, src: str, out: str):
 def geohash_quadkey_codes(df, lon: str, lat: str, precision: int,
                           zoom: int, gh_out: str, qk_out: str):
     """Geohash + quadkey INTEGER codes as staged named-column spreads
-    (see :func:`spread_bits_staged`) — value-identical to
-    geohash_code/quadkey_code, linear Catalyst tree. NULL coordinates
-    yield NULL codes (explicit guard: GREATEST/LEAST skip NULLs)."""
+    (see :func:`spread_bits_staged`) — value-identical to the
+    ``sql_geohash_code``/``sql_quadkey_code`` text, linear Catalyst tree.
+    NULL coordinates yield NULL codes (explicit guard: GREATEST/LEAST
+    skip NULLs)."""
     if not 1 <= precision <= 12:
         raise ValueError(f"geohash precision must be 1..12: {precision}")
     if not 1 <= zoom <= 23:
@@ -527,16 +443,6 @@ def geohash_quadkey_codes(df, lon: str, lat: str, precision: int,
     return (pre.withColumn(gh_out, F.when(null_in, None).otherwise(gh_code))
             .withColumn(qk_out, F.when(null_in, None).otherwise(qk_code))
             .drop("_ghx", "_ghy", "_qtx", "_qty"))
-
-
-def geohash_code(lon_name: str, lat_name: str, precision: int) -> Column:
-    return F.expr(sql_geohash_code(lon_name, lat_name, precision,
-                                   _SHIFT_SPARK[0]))
-
-
-def quadkey_code(lon_name: str, lat_name: str, zoom: int) -> Column:
-    return F.expr(sql_quadkey_code(lon_name, lat_name, zoom,
-                                   _SHIFT_SPARK[0]))
 
 
 def geohash_chars(code_name: str, precision: int) -> Column:

@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geotrellis_contrib_spark.operators.pixels import pack, unpack
+from geotrellis_contrib_spark.operators.pixels import pack, unpack, valid_px
 
 # case -> list of segments, each ((edgeA, edgeB)); saddle cases 5/10
 # appear as {True: [...], False: [...]} keyed by center > iso.
@@ -131,7 +131,7 @@ def contour_segments(tiles: DataFrame, iso: float,
             rows = []
             for row_t in pdf.itertuples():
                 arr = unpack(row_t.px, row_t.dtype, T).astype(np.float64)
-                arr = np.where(arr == row_t.nodata, np.nan, arr)
+                arr = np.where(valid_px(arr, row_t.nodata), arr, np.nan)
                 col, row = int(row_t.col), int(row_t.row)
                 rows.append((col, row, 0, pack(arr)))                # own
                 rows.append((col - 1, row, 1, pack(arr[:, 0].copy())))   # right strip

@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from geotrellis_contrib_spark.operators.focal import (
     _KEY_DDL, _NEIGHBORS, _assemble_frame, _halo_pieces, _mosaic,
     _scene_small, _span, contract, halo_rounds)
-from geotrellis_contrib_spark.operators.pixels import DTYPES, pack
+from geotrellis_contrib_spark.operators.pixels import DTYPES, pack, valid_px
 from geotrellis_contrib_spark.util import compute_grouped, compute_spread
 
 
@@ -121,8 +121,7 @@ def _cost_rounds(tiles: DataFrame,
             for row_t in pdf.itertuples(index=False):
                 arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
                         .reshape(t, t).astype(np.float64)
-                fric = np.where(
-                    np.isnan(arr) | (arr == row_t.nodata), np.nan, arr)
+                fric = np.where(valid_px(arr, row_t.nodata), arr, np.nan)
                 if not np.all(np.isnan(fric)) \
                         and float(np.nanmin(fric)) <= 0.0:
                     raise ValueError("friction must be positive")

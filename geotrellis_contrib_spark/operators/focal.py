@@ -25,7 +25,7 @@ no neighbor; the tile itself is ``frame[r:r+t, r:r+t]``), the tile size
 and the tile's (col, row); it returns the tile's result columns as a
 dict, or None for "no row" (nothing hit). Halo-only groups — the
 receiving tile does not exist — never reach a kernel and emit no row.
-Quantize-first checksums go through ``_qsum``.
+Quantize-first checksums go through ``qsum``.
 
 Iterative operators (cost_distance, flow_accumulation, fill_sinks) run
 on ``halo_rounds``, the synchronous-rounds sibling of ``focal_map``: the
@@ -74,7 +74,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geotrellis_contrib_spark.operators.pixels import DTYPES, pack
+from geotrellis_contrib_spark.operators.pixels import DTYPES, pack, qsum, valid_px
 from geotrellis_contrib_spark.plans.iterate import (
     border_doubling, fixpoint, flag_clear)
 from geotrellis_contrib_spark.util import compute_grouped
@@ -160,14 +160,8 @@ def _assemble_frame(pdf: pd.DataFrame, r: int, t: int):
         frame[_ring_slot(dr, dc, r, t)] = arr
     if not have_center:
         return None
-    frame[frame == nodata] = np.nan
+    frame[~valid_px(frame, nodata)] = np.nan
     return frame
-
-
-def _qsum(values: np.ndarray, mask: np.ndarray, scale: float = _Q) -> int:
-    """Quantize-first checksum over the ``mask`` cells: floor(v * scale
-    + 0.5) as int64, then an INTEGER sum (order-independent)."""
-    return int(np.floor(values[mask] * scale + 0.5).astype(np.int64).sum())
 
 
 def focal_map(tiles: DataFrame, r: int, t: int, kernel,
@@ -540,7 +534,7 @@ def _mosaic(pdf: pd.DataFrame, t: int):
         arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
                 .reshape(t, t).astype(np.float64)
         ty, tx = (int(row_t.row) - r0) * t, (int(row_t.col) - c0) * t
-        z[ty:ty + t, tx:tx + t] = np.where(arr == row_t.nodata, np.nan, arr)
+        z[ty:ty + t, tx:tx + t] = np.where(valid_px(arr, row_t.nodata), arr, np.nan)
     return z, r0, c0
 
 
@@ -622,7 +616,7 @@ def k_focal_stats(frame, t, col, row, *, r, op, offsets, classify_div):
             focal = np.where(any_valid, (lo + hi) / 2.0, np.nan)
     else:
         focal = ext
-    return {"focal_sum": _qsum(focal, any_valid),
+    return {"focal_sum": qsum(focal, any_valid),
             "focal_count": int(any_valid.sum())}
 
 
@@ -742,8 +736,8 @@ def k_tri_stats(frame, t, col, row):
         mn = np.fmin(np.fmin(np.fmin(np.fmin(a, b), np.fmin(c, d)),
                              np.fmin(np.fmin(e, f), np.fmin(g, h))), i)
         rough = mx - mn
-    return {"tri_sum": _qsum(tri, ok), "tpi_sum": _qsum(tpi, ok),
-            "rough_sum": _qsum(rough, ok), "tri_count": int(ok.sum())}
+    return {"tri_sum": qsum(tri, ok), "tpi_sum": qsum(tpi, ok),
+            "rough_sum": qsum(rough, ok), "tri_count": int(ok.sum())}
 
 
 def tri_stats(tiles: DataFrame, tile_size: int = 64) -> DataFrame:
@@ -778,7 +772,7 @@ def k_terrain_stats(frame, t, col, row, *, dx, dy):
         slope = np.degrees(np.arctan(np.sqrt(p * p + q * q)))
         aspect = (np.degrees(np.arctan2(q, -p)) + 360.0) % 360.0
         aspect = np.where((p == 0.0) & (q == 0.0), 0.0, aspect)
-    return {"slope_sum": _qsum(slope, ok), "aspect_sum": _qsum(aspect, ok),
+    return {"slope_sum": qsum(slope, ok), "aspect_sum": qsum(aspect, ok),
             "terrain_count": int(ok.sum())}
 
 
@@ -828,8 +822,8 @@ def k_curvature_stats(frame, t, col, row, *, L):
             den > 0.0,
             2.0 * (D * H * H + E * G * G - Fc * G * H)
             / safe * 100.0, 0.0)
-    return {"prof_sum": _qsum(prof, ok), "plan_sum": _qsum(plan, ok),
-            "total_sum": _qsum(total, ok), "curv_count": int(ok.sum())}
+    return {"prof_sum": qsum(prof, ok), "plan_sum": qsum(plan, ok),
+            "total_sum": qsum(total, ok), "curv_count": int(ok.sum())}
 
 
 def curvature_stats(tiles: DataFrame, cell: float = 30.0,
@@ -865,7 +859,7 @@ def k_hillshade_stats(frame, t, col, row, *, zen, az, dx, dy):
         sh = 255.0 * np.maximum(
             0.0, np.cos(zen) * np.cos(slope)
             + np.sin(zen) * np.sin(slope) * np.cos(az - aspect))
-    return {"shade_sum": _qsum(sh, ok), "shade_count": int(ok.sum())}
+    return {"shade_sum": qsum(sh, ok), "shade_count": int(ok.sum())}
 
 
 def hillshade_stats(tiles: DataFrame, azimuth: float = 315.0,
@@ -906,7 +900,7 @@ def k_convolve_stats(frame, t, col, row, *, r, weights):
     with np.errstate(invalid="ignore", divide="ignore"):
         focal = np.where(any_valid, acc / np.where(wacc == 0.0, 1.0,
                                                    wacc), np.nan)
-    return {"conv_sum": _qsum(focal, any_valid),
+    return {"conv_sum": qsum(focal, any_valid),
             "conv_count": int(any_valid.sum())}
 
 
@@ -964,7 +958,7 @@ def k_euclidean_distance(frame, t, col, row, *, r, mask_predicate, offs):
     hit = valid & np.isfinite(dist)
     if not hit.any():
         return None
-    return {"dist_qsum": _qsum(dist, hit), "n_within": int(hit.sum())}
+    return {"dist_qsum": qsum(dist, hit), "n_within": int(hit.sum())}
 
 
 def euclidean_distance(tiles: DataFrame, mask_predicate,
@@ -1894,8 +1888,8 @@ def k_tpi_roughness(frame, t, col, row, *, q_tpi):
         mn = np.minimum(mn, np.where(ok, w, np.inf))
     tpi = center - nsum / 8.0
     rough = mx - mn
-    return {"n_valid9": int(ok.sum()), "tpi_qsum": _qsum(tpi, ok, q_tpi),
-            "rough_q4sum": _qsum(rough, ok, 4.0)}
+    return {"n_valid9": int(ok.sum()), "tpi_qsum": qsum(tpi, ok, q_tpi),
+            "rough_q4sum": qsum(rough, ok, 4.0)}
 
 
 def tpi_roughness(tiles: DataFrame, tile_size: int = 64,

@@ -7,13 +7,16 @@ algebra (Tile.combine / localAdd / reclassify families); the contrib tier
 owns exactly this band/tile plumbing (RasterSourceSpec reads multiband
 fixtures and band-subsets them — vlm/src/test/resources).
 
-Spark-first plan (scale posture):
-  * ``local_map`` is embarrassingly parallel — ``mapInPandas`` over the
-    existing partitioning, zero shuffles; Catalyst prunes untouched
-    columns around it.
-  * ``band_combine`` groups the band rows of each tile:
-    ``groupBy(source_id, col, row).applyInPandas`` — ONE co-partitioned
-    shuffle of the raster bytes. At 100 TB a band-interleaved layout (all
+Spark-first plan (scale posture): every operator is a module-level
+numpy kernel on one of the two raster drivers of ``pixels.py``.
+  * ``local_map``, ``local_binary`` (after its join) and
+    ``tile_checksums`` are ``k_<op>(row)`` kernels on ``map_tiles`` —
+    embarrassingly parallel over the existing partitioning, zero
+    shuffles; Catalyst prunes untouched columns around them.
+  * ``band_combine``, ``ndvi_reclass_stats`` and ``crosstab`` are
+    ``k_<op>(stack, valid, key)`` kernels on ``stack_tiles`` over the
+    band rows of each tile — ONE co-partitioned shuffle of the raster
+    bytes. At 100 TB a band-interleaved layout (all
     bands of a tile in one row) would make this shuffle-free; with the
     band-per-row layout, bucketing or Z-order on (col, row) makes it
     near-local. NoData in ANY input band -> NoData out (the GeoTrellis
@@ -28,15 +31,25 @@ int64) then sum integers, so they are order-independent.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from functools import partial
+from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from geotrellis_contrib_spark.operators.pixels import DTYPES, pack
+from geotrellis_contrib_spark.operators.pixels import (
+    DTYPES, map_tiles, qsum, stack_tiles, valid_px)
 
 _Q = 1048576.0  # 2^20, the shared checksum quantization
+
+
+def k_local_map(row, *, fn):
+    """:func:`local_map` of one tile."""
+    arr = row["px"].astype(np.float64)
+    res = fn(np.where(valid_px(arr, row["nodata"]), arr, np.nan))
+    return {"px": np.where(np.isnan(res), row["nodata"], res)
+            .astype(np.float64, copy=False)}
 
 
 def local_map(tiles: DataFrame, fn: Callable[[np.ndarray], np.ndarray],
@@ -45,25 +58,25 @@ def local_map(tiles: DataFrame, fn: Callable[[np.ndarray], np.ndarray],
     per tile — NO shuffle, the map runs on the existing partitioning.
     Returns the same schema with ``px`` replaced (dtype float64, NoData
     round-tripped through the tile's declared nodata value)."""
-    t = int(tile_size)
-    schema = tiles.schema
+    return map_tiles(tiles, partial(k_local_map, fn=fn), tiles.schema)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                        .reshape(t, t).astype(np.float64)
-                arr = np.where(arr == row_t.nodata, np.nan, arr)
-                res = fn(arr)
-                res = np.where(np.isnan(res), row_t.nodata, res)
-                d = row_t._asdict()
-                d["px"] = pack(np.ascontiguousarray(res))
-                d["dtype"] = "float64"
-                out.append(d)
-            yield pd.DataFrame(out, columns=[f.name for f in schema.fields])
 
-    return tiles.mapInPandas(run, schema)
+def _bands(stack, valid, key) -> dict:
+    """One tile's band planes, NaN on NoData, keyed by band number (a
+    repeated band: the later plane)."""
+    return {int(b): np.where(ok, a, np.nan)
+            for b, a, ok in zip(key["band"], stack, valid)}
+
+
+def k_band_combine(stack, valid, key, *, combiner):
+    """:func:`band_combine` of one tile's band stack."""
+    nodatas = dict(zip(key["band"].tolist(), key["nodata"].tolist()))
+    # deterministic output nodata: the MINIMUM band's declaration —
+    # last-row-wins depended on pandas group order (r5 ADVICE)
+    nodata = nodatas[min(nodatas)]
+    res = combiner(_bands(stack, valid, key))
+    return {"band": 0, "nodata": nodata,
+            "px": np.where(np.isnan(res), nodata, res)}
 
 
 def band_combine(tiles: DataFrame,
@@ -74,32 +87,27 @@ def band_combine(tiles: DataFrame,
     ``combiner({band: float64 NaN-masked array}) -> float64 array`` runs
     vectorized per tile. Output: single-band float64 tiles (band = 0,
     NoData = NaN encoded as the group's nodata value)."""
-    t = int(tile_size)
+    return stack_tiles(
+        tiles, ("source_id", "col", "row"),
+        partial(k_band_combine, combiner=combiner),
+        "source_id string, col bigint, row bigint, band int, "
+        "dtype string, nodata double, px binary")
 
-    def combine(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, col, row = key
-        bands = {}
-        nodatas = {}
-        for row_t in pdf.itertuples(index=False):
-            arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                    .reshape(t, t).astype(np.float64)
-            bands[int(row_t.band)] = np.where(arr == row_t.nodata,
-                                              np.nan, arr)
-            nodatas[int(row_t.band)] = float(row_t.nodata)
-        # deterministic output nodata: the MINIMUM band's declaration —
-        # last-row-wins depended on pandas group order (r5 ADVICE)
-        nodata = nodatas[min(nodatas)]
-        res = combiner(bands)
-        res = np.where(np.isnan(res), nodata, res)
-        return pd.DataFrame([{
-            "source_id": source_id, "col": int(col), "row": int(row),
-            "band": 0, "dtype": "float64", "nodata": nodata,
-            "px": pack(np.ascontiguousarray(res)),
-        }])
 
-    return tiles.groupBy("source_id", "col", "row").applyInPandas(
-        combine, "source_id string, col bigint, row bigint, band int, "
-                 "dtype string, nodata double, px binary")
+def k_ndvi_reclass(stack, valid, key, *, breaks):
+    """:func:`ndvi_reclass_stats` of one tile's band stack; no row
+    without both band 0 and band 1."""
+    bands = _bands(stack, valid, key)
+    if 0 not in bands or 1 not in bands:
+        return None
+    a, b = bands[0], bands[1]
+    ok = ~np.isnan(a + b)
+    with np.errstate(invalid="ignore"):
+        nd = (a - b) / (a + b)
+    ok0 = ~np.isnan(a)
+    cls = 1 + sum((a >= br).astype(np.int64) for br in breaks)
+    return {"ndvi_sum": qsum(nd, ok), "ndvi_count": ok.sum(),
+            "class_sum": cls[ok0].sum(), "class_count": ok0.sum()}
 
 
 def ndvi_reclass_stats(tiles: DataFrame, breaks: tuple = (500.0, 1500.0, 2500.0),
@@ -112,41 +120,13 @@ def ndvi_reclass_stats(tiles: DataFrame, breaks: tuple = (500.0, 1500.0, 2500.0)
     ndvi_count, class_sum, class_count)`` with ndvi quantized first
     (floor(v*2^20+0.5) as int64). The ``local_algebra`` SQL oracle mirrors
     the arithmetic term-for-term — change one only with the other."""
-    t = int(tile_size)
     b1, b2, b3 = (float(b) for b in breaks)
-
-    def kern(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, col, row = key
-        cols = ["source_id", "col", "row", "ndvi_sum", "ndvi_count",
-                "class_sum", "class_count"]
-        bands = {}
-        for row_t in pdf.itertuples(index=False):
-            arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                    .reshape(t, t).astype(np.float64)
-            bands[int(row_t.band)] = np.where(arr == row_t.nodata,
-                                              np.nan, arr)
-        if 0 not in bands or 1 not in bands:
-            return pd.DataFrame(columns=cols)
-        a, b = bands[0], bands[1]
-        ok = ~np.isnan(a + b)
-        with np.errstate(invalid="ignore"):
-            nd = (a - b) / (a + b)
-        ok0 = ~np.isnan(a)
-        cls = np.where(ok0,
-                       1 + (a >= b1).astype(np.int64)
-                       + (a >= b2).astype(np.int64)
-                       + (a >= b3).astype(np.int64), 0)
-        qn = np.floor(nd[ok] * _Q + 0.5).astype(np.int64)
-        return pd.DataFrame([{
-            "source_id": source_id, "col": int(col), "row": int(row),
-            "ndvi_sum": int(qn.sum()), "ndvi_count": int(ok.sum()),
-            "class_sum": int(cls[ok0].sum()), "class_count": int(ok0.sum()),
-        }])
-
-    return tiles.groupBy("source_id", "col", "row").applyInPandas(
-        kern, "source_id string, col bigint, row bigint, "
-              "ndvi_sum bigint, ndvi_count bigint, "
-              "class_sum bigint, class_count bigint")
+    return stack_tiles(
+        tiles, ("source_id", "col", "row"),
+        partial(k_ndvi_reclass, breaks=(b1, b2, b3)),
+        "source_id string, col bigint, row bigint, "
+        "ndvi_sum bigint, ndvi_count bigint, "
+        "class_sum bigint, class_count bigint")
 
 
 _BIN_OPS = {
@@ -156,6 +136,17 @@ _BIN_OPS = {
     "min": np.minimum,
     "max": np.maximum,
 }
+
+
+def k_local_binary(row, *, fn):
+    """:func:`local_binary` of one joined tile pair (``b_``-prefixed
+    columns: the second raster)."""
+    va = row["px"].astype(np.float64)
+    vb = np.frombuffer(row["b_px"], dtype=DTYPES[row["b_dtype"]]) \
+        .reshape(va.shape).astype(np.float64)
+    ok = valid_px(va, row["nodata"]) & valid_px(vb, row["b_nodata"])
+    res = fn(va, vb)
+    return {"px": np.where(ok & ~np.isnan(res), res, row["nodata"])}
 
 
 def local_binary(a: DataFrame, b: DataFrame, op: str = "subtract",
@@ -172,37 +163,19 @@ def local_binary(a: DataFrame, b: DataFrame, op: str = "subtract",
     if op not in _BIN_OPS:
         raise ValueError(f"local_binary: unknown op {op!r}; "
                          f"one of {sorted(_BIN_OPS)}")
-    fn = _BIN_OPS[op]
-    t = int(tile_size)
     keys = ["zoom", "col", "row", "band"]
-    from pyspark.sql import functions as F
     bb = b.select(*keys, F.col("dtype").alias("b_dtype"),
                   F.col("nodata").alias("b_nodata"),
                   F.col("px").alias("b_px"))
-    j = a.join(bb, keys)
-    out_cols = [f.name for f in a.schema.fields]
+    return map_tiles(a.join(bb, keys), partial(k_local_binary, fn=_BIN_OPS[op]),
+                     a.schema)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                va = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                       .reshape(t, t).astype(np.float64)
-                vb = np.frombuffer(row_t.b_px,
-                                   dtype=DTYPES[row_t.b_dtype]) \
-                    .reshape(t, t).astype(np.float64)
-                va = np.where(va == row_t.nodata, np.nan, va)
-                vb = np.where(vb == row_t.b_nodata, np.nan, vb)
-                res = fn(va, vb)
-                res = np.where(np.isnan(va) | np.isnan(vb), np.nan, res)
-                d = {k: getattr(row_t, k) for k in out_cols}
-                d["px"] = pack(np.ascontiguousarray(
-                    np.where(np.isnan(res), row_t.nodata, res)))
-                d["dtype"] = "float64"
-                out.append(d)
-            yield pd.DataFrame(out, columns=out_cols)
 
-    return j.mapInPandas(run, a.schema)
+def k_tile_checksum(row, *, q):
+    """:func:`tile_checksums` of one tile."""
+    arr = row["px"].astype(np.float64)
+    valid = valid_px(arr, row["nodata"])
+    return {"n_valid": int(valid.sum()), "q_sum": qsum(arr, valid, q)}
 
 
 def tile_checksums(tiles: DataFrame, q: float = _Q,
@@ -210,29 +183,26 @@ def tile_checksums(tiles: DataFrame, q: float = _Q,
     """Per-tile order-independent checksum rollup: (source_id, zoom,
     col, row, band, n_valid, q_sum = Σ floor(v·q + 0.5) over valid
     cells). Zero shuffle — runs on the existing partitioning."""
-    t = int(tile_size)
+    return map_tiles(tiles, partial(k_tile_checksum, q=q),
+                     "source_id string, zoom int, col bigint, row bigint, "
+                     "band int, n_valid bigint, q_sum bigint")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                        .reshape(t, t).astype(np.float64)
-                valid = ~np.isnan(arr) & (arr != row_t.nodata)
-                out.append({
-                    "source_id": row_t.source_id,
-                    "zoom": int(row_t.zoom), "col": int(row_t.col),
-                    "row": int(row_t.row), "band": int(row_t.band),
-                    "n_valid": int(valid.sum()),
-                    "q_sum": int(np.floor(arr * q + 0.5)[valid]
-                                 .astype(np.int64).sum())})
-            yield pd.DataFrame(out, columns=[
-                "source_id", "zoom", "col", "row", "band",
-                "n_valid", "q_sum"])
 
-    return tiles.mapInPandas(
-        run, "source_id string, zoom int, col bigint, row bigint, "
-             "band int, n_valid bigint, q_sum bigint")
+def k_crosstab(stack, valid, key, *, class_width):
+    """:func:`crosstab` of one tile's band stack: one row per (c0, c1)
+    class pair present; none without both bands or a pixel valid in
+    both."""
+    bands = _bands(stack, valid, key)
+    if 0 not in bands or 1 not in bands:
+        return None
+    a, b = bands[0], bands[1]
+    both = ~np.isnan(a) & ~np.isnan(b)
+    ca = np.floor(a[both] / class_width).astype(np.int64)
+    cb = np.floor(b[both] / class_width).astype(np.int64)
+    pairs, cnts = np.unique(np.stack([ca, cb], axis=1), axis=0,
+                            return_counts=True)
+    return [{"c0": p[0], "c1": p[1], "n_pixels": c}
+            for p, c in zip(pairs, cnts)]
 
 
 def crosstab(tiles: DataFrame, class_width: float = 500.0,
@@ -244,38 +214,13 @@ def crosstab(tiles: DataFrame, class_width: float = 500.0,
     (floor of ONE IEEE division — identical both sides). Returns
     (source_id, c0, c1, n_pixels).
 
-    Plan shape: one zero-shuffle Arrow pass pairs each tile's two band
-    rows (grouped on the tile key) and emits per-tile (c0, c1) counts
-    — at most classes^2 rows per tile, usually far fewer — then ONE
-    map-side-combined rollup. The pixel bytes never shuffle."""
-    t = int(tile_size)
-    cols = ["source_id", "c0", "c1", "n_pixels"]
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id = key[0]
-        by_band = {}
-        for row_t in pdf.itertuples(index=False):
-            arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                    .reshape(t, t).astype(np.float64)
-            by_band[int(row_t.band)] = np.where(
-                arr == row_t.nodata, np.nan, arr)
-        if 0 not in by_band or 1 not in by_band:
-            return pd.DataFrame(columns=cols)
-        a, b = by_band[0], by_band[1]
-        both = ~np.isnan(a) & ~np.isnan(b)
-        if not both.any():
-            return pd.DataFrame(columns=cols)
-        ca = np.floor(a[both] / class_width).astype(np.int64)
-        cb = np.floor(b[both] / class_width).astype(np.int64)
-        pairs, cnts = np.unique(np.stack([ca, cb], axis=1), axis=0,
-                                return_counts=True)
-        return pd.DataFrame(
-            [{"source_id": source_id, "c0": int(p[0]), "c1": int(p[1]),
-              "n_pixels": int(c)} for p, c in zip(pairs, cnts)],
-            columns=cols)
-
-    from pyspark.sql import functions as F
-    part = tiles.groupBy("source_id", "zoom", "col", "row").applyInPandas(
-        run, "source_id string, c0 bigint, c1 bigint, n_pixels bigint")
+    Plan shape: one Arrow pass pairs each tile's two band rows (grouped
+    on the tile key) and emits per-tile (c0, c1) counts — at most
+    classes^2 rows per tile, usually far fewer — then ONE
+    map-side-combined rollup."""
+    part = stack_tiles(
+        tiles, ("source_id", "zoom", "col", "row"),
+        partial(k_crosstab, class_width=class_width),
+        "source_id string, c0 bigint, c1 bigint, n_pixels bigint")
     return part.groupBy("source_id", "c0", "c1").agg(
         F.sum("n_pixels").alias("n_pixels"))

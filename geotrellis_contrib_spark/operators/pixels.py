@@ -4,23 +4,35 @@ The tile table carries packed pixel windows as ``binary`` columns
 (row-major, dtype-tagged), the engine analog of the reference's
 ``Raster[MultibandTile]`` (SURVEY.md §1.1).
 
-One driver: every narrow per-tile operator here and in ``render.py`` is
-a module-level numpy kernel ``k_<op>(row, **params)`` bound with
-``functools.partial`` and run by :func:`map_tiles` — ONE ``mapInPandas``
-stage that owns the Arrow batch loop, the ``px`` unpack/pack and the row
-assembly (:func:`tile_batch`). A payload unpacks to ``h`` x ``w`` when
-its row carries them (a window), else to the square its byte length
+Two drivers. Every narrow per-tile operator here, in ``render.py`` and in
+``local.py`` is a module-level numpy kernel ``k_<op>(row, **params)``
+bound with ``functools.partial`` and run by :func:`map_tiles` — ONE
+``mapInPandas`` stage that owns the Arrow batch loop, the ``px``
+unpack/pack and the row assembly (:func:`tile_batch`). The kernel gets a
+row as a dict with ``px`` unpacked and returns a dict (one row), a list
+of dicts (fan-out) or None (no row). A payload unpacks to ``h`` x ``w``
+when its row carries them (a window), else to the square its byte length
 gives; a ``tile_size`` argument places keys and windows, never the
 unpack. Kernels compose in Python, so a
 reproject∘resample∘convert chain (:func:`k_warp`) costs a single Arrow
 hop — the engine's version of GDAL warp-option fusion
 (/root/reference/gdal/.../GDALRasterSource.scala:114-126, SURVEY.md §2.4).
-Grouped operators (merge, retile assemble, overview assemble, polygon
-burn, the point stamps) stay ``applyInPandas``.
+
+Every operator that reduces a STACK of co-keyed tiles — the temporal
+family over source_idx and the cross-band combiners of ``local.py`` —
+is a module-level ``k_<op>(stack, valid, key, **params)`` run by
+:func:`stack_tiles`, the grouped sibling: ONE ``groupBy(keys)
+.applyInPandas`` stage whose group body (:func:`stack_group`) orders the
+planes by ``source_idx``, unpacks them to a float64 ``(T, t, t)`` stack
+with its :func:`valid_px` mask, and assembles the rows. ``key`` holds
+each grouping column's value and, as an array in plane order, every
+other column but ``px``. A stack kernel returns what a tile kernel
+returns. Merge, the retile and overview assembles (:func:`_paste`), the
+polygon burn and the point stamps stay their own ``applyInPandas``.
 
 One NoData rule (:func:`valid_px`): a pixel is valid iff it is not NaN
 and not EXACTLY the tile's nodata — the rule the SQL oracles spell
-``val <> nodata``.
+``val <> nodata``. Every NoData test in ``operators/`` goes through it.
 
 Semantics ported from observable reference behavior:
   - convert: dtype cast with unsigned-byte clamp+round
@@ -71,6 +83,12 @@ def valid_px(arr: np.ndarray, nodata: float) -> np.ndarray:
     """The raster tier's one NoData rule: valid iff not NaN and not
     exactly ``nodata`` (a NaN nodata leaves only the NaN test)."""
     return ~np.isnan(arr) & (arr != nodata)
+
+
+def qsum(values: np.ndarray, mask: np.ndarray, scale: float = 1048576.0) -> int:
+    """Quantize-first checksum over the ``mask`` cells: floor(v * scale
+    + 0.5) as int64, then an INTEGER sum (order-independent)."""
+    return int(np.floor(values[mask] * scale + 0.5).astype(np.int64).sum())
 
 
 def pixel_centers(xmin: float, ymin: float, xmax: float, ymax: float,
@@ -375,42 +393,84 @@ def _payload(row: dict) -> np.ndarray:
     return a.reshape(t, t)
 
 
+def _records(res, base: dict, names: list[str]) -> list[dict]:
+    """A kernel's result as output records: a dict is one row, a list
+    fans out, None is no row. An output column the kernel does not set
+    is taken from ``base`` by name; an array ``px`` is packed and names
+    the ``dtype``."""
+    out = []
+    for r in [] if res is None else res if isinstance(res, list) else [res]:
+        rec = {c: r[c] if c in r else base[c] for c in names}
+        if isinstance(rec.get("px"), np.ndarray):
+            if "dtype" in rec:
+                rec["dtype"] = rec["px"].dtype.name
+            rec["px"] = pack(rec["px"])
+        out.append(rec)
+    return out
+
+
 def tile_batch(pdf: pd.DataFrame, kernel: Callable, names: list[str]) -> pd.DataFrame:
     """One Arrow batch through ``kernel`` — the body of :func:`map_tiles`,
     callable on any pandas frame. Each row reaches the kernel as a dict of
-    its columns with ``px`` unpacked; the kernel returns a dict (one output
-    row), a list of dicts (fan-out) or None (drop). An output column the
-    kernel does not set is copied from the input row by name; an array
-    ``px`` is packed and names the ``dtype``."""
+    its columns with ``px`` unpacked; the output columns it does not set
+    are copied from that row (:func:`_records`)."""
     out = []
     for row in pdf.to_dict("records"):
         if "px" in row:
             row["px"] = _payload(row)
-        res = kernel(row)
-        if res is None:
-            continue
-        for r in res if isinstance(res, list) else [res]:
-            rec = {c: r[c] if c in r else row[c] for c in names}
-            if isinstance(rec.get("px"), np.ndarray):
-                if "dtype" in rec:
-                    rec["dtype"] = rec["px"].dtype.name
-                rec["px"] = pack(rec["px"])
-            out.append(rec)
+        out += _records(kernel(row), row, names)
     return pd.DataFrame(out, columns=names)
+
+
+def _names(schema: StructType | str) -> list[str]:
+    return (schema if isinstance(schema, StructType)
+            else StructType.fromDDL(schema)).names
 
 
 def map_tiles(tiles: DataFrame, kernel: Callable, schema: StructType | str) -> DataFrame:
     """THE narrow per-tile driver: ONE mapInPandas stage that runs
     ``kernel`` over every row (:func:`tile_batch`) and declares ``schema``
     (a StructType or a DDL string). Narrow, so Catalyst prunes upstream."""
-    names = (schema if isinstance(schema, StructType)
-             else StructType.fromDDL(schema)).names
+    names = _names(schema)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield tile_batch(pdf, kernel, names)
 
     return tiles.mapInPandas(run, schema)
+
+
+def stack_group(group: tuple, pdf: pd.DataFrame, kernel: Callable,
+                keys: list[str], names: list[str]) -> pd.DataFrame:
+    """One group through ``kernel`` — the body of :func:`stack_tiles`,
+    callable on any pandas frame. The planes are ordered by
+    ``source_idx`` (stable; input order without that column) and reach
+    the kernel as a float64 ``(T, t, t)`` stack, its :func:`valid_px`
+    mask and ``key``: each of ``keys`` mapped to its value in ``group``,
+    every other column but ``px`` to an array in plane order.
+    Output columns the kernel does not set are taken from ``key``."""
+    if "source_idx" in pdf:
+        pdf = pdf.sort_values("source_idx", kind="mergesort")
+    stack = np.stack([_payload(r).astype(np.float64)
+                      for r in pdf[["px", "dtype"]].to_dict("records")])
+    valid = valid_px(stack, pdf["nodata"].to_numpy(np.float64)[:, None, None])
+    key = {c: pdf[c].to_numpy() for c in pdf.columns if c != "px"}
+    key.update(zip(keys, group))
+    return pd.DataFrame(_records(kernel(stack, valid, key), key, names),
+                        columns=names)
+
+
+def stack_tiles(tiles: DataFrame, keys: tuple[str, ...], kernel: Callable,
+                schema: StructType | str) -> DataFrame:
+    """THE grouped per-tile driver, the sibling of :func:`map_tiles`: ONE
+    ``groupBy(*keys).applyInPandas`` stage that runs ``kernel`` over every
+    group's plane stack (:func:`stack_group`) and declares ``schema``."""
+    keys, names = list(keys), _names(schema)
+
+    def run(group: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        return stack_group(group, pdf, kernel, keys, names)
+
+    return tiles.groupBy(*keys).applyInPandas(run, schema)
 
 
 def k_warp(row: dict, target: str | None = None, out_size: int | None = None,
@@ -728,6 +788,19 @@ def k_split(row: dict, k: int, dz: int) -> list[dict]:
             for i in range(k) for j in range(k)]
 
 
+def _paste(pdf: pd.DataFrame, n: int, qr: pd.Series, qc: pd.Series) -> np.ndarray:
+    """One group's child tiles pasted into an n x n float64 parent panel,
+    child i at block (qr[i], qc[i]) of its own size, later rows over
+    earlier ones; the first row's nodata where no child landed (the
+    retile and overview assembles)."""
+    panel = np.full((n, n), float(pdf["nodata"].iloc[0]))
+    for rec, r, c in zip(pdf[["px", "dtype"]].to_dict("records"), qr, qc):
+        a = _payload(rec)
+        h = a.shape[0]
+        panel[r * h:(r + 1) * h, c * h:(c + 1) * h] = a
+    return panel
+
+
 def retile(tiles: DataFrame, ts_from: int, ts_to: int) -> DataFrame:
     """Change the tile LAYOUT while keeping the pixel resolution — the
     LayoutTileSource re-tiling the reference grew out of (CHANGELOG.md:26
@@ -765,18 +838,12 @@ def retile(tiles: DataFrame, ts_from: int, ts_to: int) -> DataFrame:
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         first = pdf.iloc[0]
-        panel = np.full((ts_to, ts_to), float(first.nodata))
-        out_dtype = "float64"
-        for r in pdf.itertuples(index=False):
-            arr = unpack(r.px, r.dtype, ts_from).astype(np.float64)
-            qc = int(r.col % k) * ts_from
-            qr = int(r.row % k) * ts_from
-            panel[qr:qr + ts_from, qc:qc + ts_from] = arr
+        panel = _paste(pdf, ts_to, pdf["row"] % k, pdf["col"] % k)
         return pd.DataFrame([{
             "source_id": first.source_id, "source_idx": int(first.source_idx),
             "zoom": int(first.zoom) - dz,
             "col": int(first.p_col), "row": int(first.p_row),
-            "band": int(first.band), "dtype": out_dtype,
+            "band": int(first.band), "dtype": "float64",
             "nodata": float(first.nodata), "px": pack(panel)}])
 
     return keyed.groupBy("source_id", "source_idx", "zoom", "p_col", "p_row", "band") \
@@ -950,7 +1017,7 @@ def rasterize_polygons(polygons: DataFrame, zoom: int, tile_size: int = TILE_SIZ
             out[_polygon_mask(gx, gy, blob)] = float(v)
         return pd.DataFrame([{
             "zoom": zoom, "col": col, "row": row,
-            "px": pack(out), "n_burned": int((out != nodata).sum()),
+            "px": pack(out), "n_burned": int(valid_px(out, nodata).sum()),
         }])
 
     return cov.groupBy("cell_col", "cell_row").applyInPandas(
@@ -1372,24 +1439,14 @@ def build_overview_px(tiles: DataFrame, method: str = "average",
         "source_id string, source_idx int, zoom int, col bigint, "
         "row bigint, band int, qr int, qc int, dtype string, "
         "nodata double, px binary")
-    h = t // 2
 
     def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, zoom, col, row, band = (key[0], int(key[1]),
-                                           int(key[2]), int(key[3]),
-                                           int(key[4]))
-        nodata = float(pdf["nodata"].iloc[0])
-        parent = np.full((t, t), nodata)
-        for row_t in pdf.itertuples(index=False):
-            small = np.frombuffer(row_t.px, dtype=np.float64) \
-                      .reshape(h, h)
-            parent[int(row_t.qr) * h:(int(row_t.qr) + 1) * h,
-                   int(row_t.qc) * h:(int(row_t.qc) + 1) * h] = small
         return pd.DataFrame([{
-            "source_id": source_id,
-            "source_idx": int(pdf["source_idx"].iloc[0]), "zoom": zoom,
-            "col": col, "row": row, "band": band, "dtype": "float64",
-            "nodata": nodata, "px": pack(parent)}])
+            "source_id": key[0], "source_idx": int(pdf["source_idx"].iloc[0]),
+            "zoom": int(key[1]), "col": int(key[2]), "row": int(key[3]),
+            "band": int(key[4]), "dtype": "float64",
+            "nodata": float(pdf["nodata"].iloc[0]),
+            "px": pack(_paste(pdf, t, pdf["qr"], pdf["qc"]))}])
 
     return pieces.groupBy("source_id", "zoom", "col", "row", "band") \
         .applyInPandas(

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark.operators.cluster import connected_components
-from geotrellis_contrib_spark.operators.pixels import DTYPES
+from geotrellis_contrib_spark.operators.pixels import DTYPES, valid_px
 
 
 def _local_labels(mask: np.ndarray, gp: np.ndarray) -> np.ndarray:
@@ -103,7 +103,7 @@ def region_stats(tiles: DataFrame,
             for row_t in pdf.itertuples(index=False):
                 arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
                         .reshape(t, t).astype(np.float64)
-                valid = ~np.isnan(arr) & (arr != row_t.nodata)
+                valid = valid_px(arr, row_t.nodata)
                 gr = (int(row_t.row) * t
                       + np.arange(t).reshape(-1, 1)) * np.ones(
                           (1, t), dtype=np.int64)

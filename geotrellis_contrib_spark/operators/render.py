@@ -120,39 +120,6 @@ def encode_png_rgba(rgba: np.ndarray) -> bytes:
             + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
 
 
-def decode_png_rgba(payload: bytes) -> np.ndarray:
-    """Filter-0 8-bit RGBA PNG -> int64 HxWx4 (this module's encoder
-    output; anything else raises)."""
-    payload = bytes(payload)
-    if payload[:8] != b"\x89PNG\r\n\x1a\n":
-        raise ValueError("not a PNG byte stream")
-    pos, idat = 8, b""
-    w = h = bitdepth = color = None
-    while pos + 8 <= len(payload):
-        (ln,) = struct.unpack(">I", payload[pos:pos + 4])
-        tag = payload[pos + 4:pos + 8]
-        data = payload[pos + 8:pos + 8 + ln]
-        pos += 12 + ln
-        if tag == b"IHDR":
-            w, h, bitdepth, color, _c, _f, _i = struct.unpack(">IIBBBBB",
-                                                              data)
-        elif tag == b"IDAT":
-            idat += data
-        elif tag == b"IEND":
-            break
-    if bitdepth != 8 or color != 6:
-        raise ValueError("only 8-bit RGBA supported")
-    raw = zlib.decompress(idat)
-    stride = w * 4 + 1
-    out = np.empty((h, w, 4), dtype=np.uint8)
-    for r in range(h):
-        if raw[r * stride] != 0:
-            raise ValueError("only filter-0 scanlines supported")
-        out[r] = np.frombuffer(raw[r * stride + 1:(r + 1) * stride],
-                               dtype=np.uint8).reshape(w, 4)
-    return out.astype(np.int64)
-
-
 def k_render_png(row: dict, vmin: float, vmax: float, ramp) -> dict:
     """One tile rendered through the ramp as an RGBA PNG, NoData fully
     transparent (render_png_tiles)."""

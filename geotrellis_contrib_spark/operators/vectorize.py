@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark.operators.cluster import connected_components
-from geotrellis_contrib_spark.operators.pixels import DTYPES
+from geotrellis_contrib_spark.operators.pixels import DTYPES, valid_px
 from geotrellis_contrib_spark.operators.region import _local_labels
 
 # (dr, dc) travel directions; region is on the RIGHT of travel
@@ -209,7 +209,7 @@ def vectorize_regions(tiles: DataFrame,
             for row_t in pdf.itertuples(index=False):
                 arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
                         .reshape(t, t).astype(np.float64)
-                valid = ~np.isnan(arr) & (arr != row_t.nodata)
+                valid = valid_px(arr, row_t.nodata)
                 gr0, gc0 = int(row_t.row) * t, int(row_t.col) * t
                 gr = (gr0 + np.arange(t).reshape(-1, 1)) \
                     * np.ones((1, t), dtype=np.int64)

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 
 from geotrellis_contrib_spark.operators.focal import (
     _mosaic, _scene_small, _span)
-from geotrellis_contrib_spark.operators.pixels import DTYPES
+from geotrellis_contrib_spark.operators.pixels import DTYPES, valid_px
 
 
 def _vs_scene(tiles: DataFrame, observer_fn, height: float,
@@ -190,7 +190,7 @@ def _vs_dist(tiles: DataFrame, observer_fn, height: float,
         arr = np.frombuffer(r.px, dtype=DTYPES[r.dtype]) \
                 .reshape(t, t).astype(np.float64)
         zv = arr[int(r.ogr) - int(r.row) * t, int(r.ogc) - int(r.col) * t]
-        if zv == r.nodata or np.isnan(zv):
+        if not valid_px(zv, r.nodata):
             raise ValueError(f"observer ({r.ogr},{r.ogc}) invalid for "
                              f"{r.source_id}/{r.band}")
         zbase[(r.source_id, int(r.band))] = float(zv) + float(height)
@@ -239,7 +239,7 @@ def _vs_dist(tiles: DataFrame, observer_fn, height: float,
                 if zx is None:
                     a = np.frombuffer(r.px, dtype=DTYPES[r.dtype]) \
                           .reshape(t, t).astype(np.float64)
-                    zx = np.where(a == r.nodata, np.nan, a)
+                    zx = np.where(valid_px(a, r.nodata), a, np.nan)
                     zcache[ck] = zx
                 ogr, ogc = float(r.ogr), float(r.ogc)
                 zb = zbase[(r.source_id, int(r.band))]
@@ -309,7 +309,7 @@ def _vs_dist(tiles: DataFrame, observer_fn, height: float,
                 out.append({"source_id": r.source_id, "band": int(r.band),
                             "col": int(r.col), "row": int(r.row),
                             "kind": 0,
-                            "px": pack(np.where(a == r.nodata, np.nan, a))})
+                            "px": pack(np.where(valid_px(a, r.nodata), a, np.nan))})
             yield pd.DataFrame(out, columns=["source_id", "band", "col",
                                              "row", "kind", "px"])
 

@@ -1263,7 +1263,7 @@ def per_tile_checksum(tiles, quant: float = 4.0):
     the value gate."""
     import pandas as pd
 
-    from geotrellis_contrib_spark.operators.pixels import DTYPES
+    from geotrellis_contrib_spark.operators.pixels import DTYPES, qsum, valid_px
 
     def stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
@@ -1271,13 +1271,10 @@ def per_tile_checksum(tiles, quant: float = 4.0):
             for t in pdf.itertuples(index=False):
                 arr = np.frombuffer(t.px, dtype=DTYPES[t.dtype]) \
                     .astype(np.float64)
-                valid = ~np.isnan(arr) & (arr != t.nodata)
+                valid = valid_px(arr, t.nodata)
                 out.append({"source_id": t.source_id, "band": int(t.band),
                             "col": int(t.col), "row": int(t.row),
-                            "px_qsum": int(np.floor(arr[valid]
-                                                    * float(quant)
-                                                    + 0.5).astype(
-                                np.int64).sum()),
+                            "px_qsum": qsum(arr, valid, float(quant)),
                             "px_count": int(valid.sum())})
             yield pd.DataFrame(out, columns=["source_id", "band", "col",
                                              "row", "px_qsum", "px_count"])

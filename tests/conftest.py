@@ -1,6 +1,8 @@
 import os
+import struct
 import sys
 import uuid
+import zlib
 
 import numpy as np
 import pytest
@@ -39,6 +41,39 @@ def count_jobs(spark, fn):
     # job-start events reach the status store through the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+
+def decode_png_rgba(payload: bytes) -> np.ndarray:
+    """Filter-0 8-bit RGBA PNG -> int64 HxWx4 (``render.encode_png_rgba``
+    output; anything else raises)."""
+    payload = bytes(payload)
+    if payload[:8] != b"\x89PNG\r\n\x1a\n":
+        raise ValueError("not a PNG byte stream")
+    pos, idat = 8, b""
+    w = h = bitdepth = color = None
+    while pos + 8 <= len(payload):
+        (ln,) = struct.unpack(">I", payload[pos:pos + 4])
+        tag = payload[pos + 4:pos + 8]
+        data = payload[pos + 8:pos + 8 + ln]
+        pos += 12 + ln
+        if tag == b"IHDR":
+            w, h, bitdepth, color, _c, _f, _i = struct.unpack(">IIBBBBB",
+                                                              data)
+        elif tag == b"IDAT":
+            idat += data
+        elif tag == b"IEND":
+            break
+    if bitdepth != 8 or color != 6:
+        raise ValueError("only 8-bit RGBA supported")
+    raw = zlib.decompress(idat)
+    stride = w * 4 + 1
+    out = np.empty((h, w, 4), dtype=np.uint8)
+    for r in range(h):
+        if raw[r * stride] != 0:
+            raise ValueError("only filter-0 scanlines supported")
+        out[r] = np.frombuffer(raw[r * stride + 1:(r + 1) * stride],
+                               dtype=np.uint8).reshape(w, 4)
+    return out.astype(np.int64)
 
 
 ITERATE_LOG = "geotrellis_contrib_spark.plans.iterate"
@@ -95,3 +130,21 @@ def replay_tiles(rows, kernel, ddl: str):
     pdf = pd.DataFrame([{**r, "dtype": r["px"].dtype.name, "px": px.pack(r["px"])}
                         for r in rows])
     return px.tile_batch(pdf, kernel, [f.split()[0] for f in ddl.split(",")])
+
+
+def replay_stacks(rows, keys, kernel, ddl: str):
+    """``pixels.stack_tiles`` without Spark: ``rows`` (dicts whose ``px`` is
+    an array) grouped on ``keys`` in pandas, each group through the
+    driver's own group body, ``pixels.stack_group``, with the output
+    columns of the flat DDL."""
+    import pandas as pd
+
+    from geotrellis_contrib_spark.operators import pixels as px
+
+    keys = list(keys)
+    names = [f.split()[0] for f in ddl.split(",")]
+    pdf = pd.DataFrame([{**r, "dtype": r["px"].dtype.name, "px": px.pack(r["px"])}
+                        for r in rows])
+    parts = [px.stack_group(g if isinstance(g, tuple) else (g,), grp, kernel, keys, names)
+             for g, grp in pdf.groupby(keys, sort=True)]
+    return pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(columns=names)

@@ -1,25 +1,22 @@
-"""Geohash/quadkey cell names: canonical known-answer vectors (the
-Wikipedia 'ezs42' geohash example; Bing Maps' documented quadkey
-examples), Spark-vs-DuckDB twin parity, prefix-hierarchy properties,
-NULL propagation, parameter fail-louds."""
+"""Geohash/quadkey cell names, built the way the queries build them
+(staged integer codes from ``geohash_quadkey_codes``, then
+``geohash_chars`` / ``quadkey_chars``): canonical known-answer vectors
+(the Wikipedia 'ezs42' geohash example; Bing Maps' documented quadkey
+examples), parity with the DuckDB oracle's SQL text, prefix-hierarchy
+properties, NULL propagation, parameter fail-louds."""
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark.functions import cells as C
 
 
-@pytest.fixture(scope="module", autouse=True)
-def interpreted_fallback(spark):
-    """The one-expression ``C.geohash`` / ``C.quadkey`` re-inline the whole
-    bit-spread tree once per character, and the generated code of a
-    projection of several of them grows past the JVM's 64 KB method
-    limit, so Spark can only run those stages interpreted. This module
-    allows that fallback, which the Tier-1 session otherwise turns off
-    (the staged ``geohash_quadkey_codes`` path the queries use compiles)."""
-    spark.conf.set("spark.sql.codegen.fallback", "true")
-    yield
-    spark.conf.set("spark.sql.codegen.fallback", "false")
+def _names(df, precision, zoom):
+    """(lon, lat, geohash code, quadkey code, geohash, quadkey) rows."""
+    codes = C.geohash_quadkey_codes(df, "lon", "lat", precision, zoom,
+                                    "ghc", "qkc")
+    return codes.select("lon", "lat", "ghc", "qkc",
+                        C.geohash_chars("ghc", precision).alias("gh"),
+                        C.quadkey_chars("qkc", zoom).alias("qk")).collect()
 
 
 def test_known_vectors(spark):
@@ -28,36 +25,24 @@ def test_known_vectors(spark):
          (13.361389, 52.516667),            # Berlin
          (-122.0, 47.6)],                   # Bing docs Seattle region
         "lon double, lat double")
-    got = df.select(
-        C.geohash("lon", "lat", 5).alias("g5"),
-        C.geohash("lon", "lat", 1).alias("g1"),
-        C.quadkey("lon", "lat", 3).alias("q3"),
-        C.quadkey("lon", "lat", 7).alias("q7")).collect()
-    assert got[0].g5 == "ezs42" and got[0].g1 == "e"
-    assert got[1].g5 == "u33db"
+    g5q3 = _names(df, 5, 3)
+    g1q7 = _names(df, 1, 7)
+    assert g5q3[0].gh == "ezs42" and g1q7[0].gh == "e"
+    assert g5q3[1].gh == "u33db"
     # Bing Maps quadkey docs: the (-122.0, 47.6) area is tile '021' at
     # zoom 3; zoom-3 key is a prefix of the zoom-7 key
-    assert got[2].q3 == "021"
-    assert got[2].q7.startswith("021")
+    assert g5q3[2].qk == "021"
+    assert g1q7[2].qk.startswith("021")
 
 
 def test_twin_parity_and_hierarchy(spark):
     rows = [(float(-179 + i * 29.13), float(-59 + (i * 47) % 119 + 0.37))
             for i in range(12)]
     df = spark.createDataFrame(rows, "lon double, lat double")
-    eng = (df.select(
-        "lon", "lat",
-        C.geohash("lon", "lat", 7).alias("g7"),
-        C.geohash("lon", "lat", 4).alias("g4"),
-        C.geohash("lon", "lat", 3).alias("g3"),
-        C.quadkey("lon", "lat", 11).alias("q11"),
-        C.quadkey("lon", "lat", 5).alias("q5"),
-        C.geohash_code("lon", "lat", 7).alias("gc"),
-        C.quadkey_code("lon", "lat", 11).alias("qc"))
-        .withColumn("g7b", C.geohash_chars("gc", 7))
-        .withColumn("q11b", C.quadkey_chars("qc", 11))).collect()
-    # the two-step (code -> chars) fast path is the one-shot, verbatim
-    assert all(r.g7 == r.g7b and r.q11 == r.q11b for r in eng)
+    eng = _names(df, 7, 11)
+    coarse = {(r.lon, r.lat): r for r in _names(df, 4, 5)}
+    coarser = {(r.lon, r.lat): r for r in _names(df, 3, 5)}
+    shl, shr = C._SHIFT_DUCKDB
     con = duckdb.connect()
     for r in eng:
         # bare decimal literals are DECIMALs in DuckDB — force DOUBLE
@@ -65,25 +50,25 @@ def test_twin_parity_and_hierarchy(spark):
         lo, la = (f"CAST({r.lon!r} AS DOUBLE)",
                   f"CAST({r.lat!r} AS DOUBLE)")
         d = con.execute(
-            f"SELECT {C.sql_geohash_duckdb(lo, la, 7)},"
-            f" {C.sql_quadkey_duckdb(lo, la, 11)}").fetchone()
-        assert (r.g7, r.q11) == d
-        # hierarchy: lower precision/zoom is a prefix (geohash only for
-        # even->even or within the same parity windowing: 4 is a prefix
-        # of 7? geohash prefixes hold for ANY shorter precision)
-        assert r.g7.startswith(r.g4) and r.g4.startswith(r.g3)
-        assert r.q11.startswith(r.q5)
+            f"SELECT g, q, {C.sql_code_chars('g', C._GEOHASH32, 5, 7, shr)},"
+            f" {C.sql_code_chars('q', '0123', 2, 11, shr)} FROM (SELECT"
+            f" {C.sql_geohash_code(lo, la, 7, shl)} AS g,"
+            f" {C.sql_quadkey_code(lo, la, 11, shl)} AS q)").fetchone()
+        assert (r.ghc, r.qkc, r.gh, r.qk) == d
+        # hierarchy: a shorter geohash or a lower-zoom quadkey is a prefix
+        g4, g3 = coarse[(r.lon, r.lat)], coarser[(r.lon, r.lat)]
+        assert r.gh.startswith(g4.gh) and g4.gh.startswith(g3.gh)
+        assert r.qk.startswith(g4.qk)
 
 
 def test_null_and_bad_params(spark):
     df = spark.createDataFrame([(None, None)], "lon double, lat double")
-    r = df.select(C.geohash("lon", "lat", 6).alias("g"),
-                  C.quadkey("lon", "lat", 8).alias("q")).collect()[0]
-    assert r.g is None and r.q is None
+    r = _names(df, 6, 8)[0]
+    assert (r.ghc, r.qkc, r.gh, r.qk) == (None, None, None, None)
     with pytest.raises(ValueError, match="precision"):
-        C.geohash("lon", "lat", 13)
+        C.geohash_quadkey_codes(df, "lon", "lat", 13, 8, "ghc", "qkc")
     with pytest.raises(ValueError, match="zoom"):
-        C.quadkey("lon", "lat", 0)
+        C.geohash_quadkey_codes(df, "lon", "lat", 6, 0, "ghc", "qkc")
 
 
 def test_hex_cell_vs_reference(spark):

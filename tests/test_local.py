@@ -5,14 +5,26 @@ recomputed straight from the fixture closed form.
 Reference parity: GeoTrellis Tile.combine / local-op / reclassify
 families fed by the reference's RasterSources (multiband band-subset
 reads in RasterSourceSpec, vlm/src/test/resources)."""
+from functools import partial
+
 import numpy as np
 
 from geotrellis_contrib_spark import corpus
 from geotrellis_contrib_spark.operators import local as LO
 from geotrellis_contrib_spark.operators.pixels import unpack
+from tests.conftest import count_jobs, replay_stacks, replay_tiles
 
 T = 64
 BREAKS = (500.0, 1500.0, 2250.0)
+TILE_KEY = ("source_id", "col", "row")
+NDVI_DDL = ("source_id string, col bigint, row bigint, ndvi_sum bigint, "
+            "ndvi_count bigint, class_sum bigint, class_count bigint")
+COMBINE_DDL = ("source_id string, col bigint, row bigint, band int, "
+               "dtype string, nodata double, px binary")
+CROSSTAB_DDL = "source_id string, c0 bigint, c1 bigint, n_pixels bigint"
+# Spark jobs one collect of crosstab over the px fixture starts (a
+# driver sync plus the stage jobs adaptive execution submits)
+JOBS_CROSSTAB = 3
 
 
 def _band(s: int, band: int, col: int, row: int) -> np.ndarray:
@@ -104,8 +116,9 @@ def test_crosstab_hand_and_replay(spark):
     from geotrellis_contrib_spark import corpus as corpus_mod
     from geotrellis_contrib_spark.operators.local import crosstab
     tiles = corpus_mod.synth_px_tiles(spark, tile_size=64)
-    got = {(r.source_id, r.c0, r.c1): r.n_pixels
-           for r in crosstab(tiles, class_width=64.0).collect()}
+    jobs, rows = count_jobs(spark, crosstab(tiles, class_width=64.0).collect)
+    assert jobs == JOBS_CROSSTAB
+    got = {(r.source_id, r.c0, r.c1): r.n_pixels for r in rows}
     # numpy replay over the scene mosaics
     exp = {}
     for s in range(3):
@@ -126,3 +139,79 @@ def test_crosstab_hand_and_replay(spark):
                                      moz[0]))).sum())
         assert sum(v for (sid, _, _), v in got.items()
                    if sid == f"scene-{s}") == nv
+
+
+def _band_rows(planes, nodatas, zoom=3):
+    """One tile's band rows as replay rows (band = list position)."""
+    return [{"source_id": "s", "source_idx": 0, "zoom": zoom, "col": 1,
+             "row": 1, "band": b, "nodata": nd, "px": a}
+            for b, (a, nd) in enumerate(zip(planes, nodatas))]
+
+
+# NoData is exact: -9999.05 is valid under nodata -9999.0 (band 0), 1e-9
+# under nodata 0.0 (band 1); only (0, 0) and (1, 1) are valid in both
+ND_BANDS = [np.array([[-9999.05, -9999.0], [1.0, 2.0]]),
+            np.array([[1e-9, 5.0], [0.0, 4.0]])]
+ND_DECL = [-9999.0, 0.0]
+
+
+def test_ndvi_reclass_kernel_nodata_is_exact():
+    g = replay_stacks(_band_rows(ND_BANDS, ND_DECL), TILE_KEY,
+                      partial(LO.k_ndvi_reclass, breaks=(0.0, 1.5, 3.0)),
+                      NDVI_DDL).iloc[0]
+    nd = np.array([(-9999.05 - 1e-9) / (-9999.05 + 1e-9), (2.0 - 4.0) / 6.0])
+    assert (g.ndvi_count, g.class_count) == (2, 3)
+    assert g.ndvi_sum == int(np.floor(nd * LO._Q + 0.5).astype(np.int64).sum())
+    assert g.class_sum == 1 + 2 + 3
+
+
+def test_band_combine_kernel_nodata_is_exact():
+    g = replay_stacks(_band_rows(ND_BANDS, ND_DECL), TILE_KEY,
+                      partial(LO.k_band_combine,
+                              combiner=lambda b: b[1] - b[0]),
+                      COMBINE_DDL).iloc[0]
+    assert (g.band, g["dtype"], g.nodata) == (0, "float64", -9999.0)
+    np.testing.assert_array_equal(unpack(g.px, g["dtype"], 2),
+                                  [[1e-9 - -9999.05, -9999.0], [-9999.0, 2.0]])
+
+
+def test_crosstab_kernel_nodata_is_exact():
+    got = replay_stacks(_band_rows(ND_BANDS, ND_DECL),
+                        ("source_id", "zoom", "col", "row"),
+                        partial(LO.k_crosstab, class_width=1.0), CROSSTAB_DDL)
+    assert sorted(map(tuple, got[["c0", "c1", "n_pixels"]].values.tolist())) \
+        == [(-10000, 0, 1), (2, 4, 1)]
+
+
+def test_stack_kernels_need_both_bands():
+    """A tile with only band 0 gives no ndvi row and no crosstab pair."""
+    rows = _band_rows(ND_BANDS[:1], ND_DECL[:1])
+    assert len(replay_stacks(rows, TILE_KEY, partial(LO.k_ndvi_reclass,
+                                                     breaks=BREAKS),
+                             NDVI_DDL)) == 0
+    assert len(replay_stacks(rows, ("source_id", "zoom", "col", "row"),
+                             partial(LO.k_crosstab, class_width=1.0),
+                             CROSSTAB_DDL)) == 0
+
+
+def test_local_tile_kernels():
+    """local_map, local_binary and tile_checksums kernels on one tile:
+    NaN and exact nodata are NoData, -9999.05 is not; NoData in either
+    input of a binary op is NoData out."""
+    a = np.array([[2.0, -9999.0], [np.nan, -9999.05]])
+    b = np.array([[3.0, 1.0], [1.0, 0.5]])
+    row = {"source_id": "s", "zoom": 3, "col": 1, "row": 1, "band": 0,
+           "nodata": -9999.0, "px": a}
+    ddl = "band int, dtype string, nodata double, px binary"
+    m = replay_tiles([row], partial(LO.k_local_map, fn=lambda v: v * 2.0),
+                     ddl).iloc[0]
+    np.testing.assert_array_equal(unpack(m.px, m["dtype"], 2),
+                                  [[4.0, -9999.0], [-9999.0, -19998.1]])
+    pair = {**row, "b_dtype": "float64", "b_nodata": 1.0, "b_px": b.tobytes()}
+    p = replay_tiles([pair], partial(LO.k_local_binary, fn=np.minimum),
+                     ddl).iloc[0]
+    np.testing.assert_array_equal(unpack(p.px, p["dtype"], 2),
+                                  [[2.0, -9999.0], [-9999.0, -9999.05]])
+    c = replay_tiles([row], partial(LO.k_tile_checksum, q=4.0),
+                     "band int, n_valid bigint, q_sum bigint").iloc[0]
+    assert (c.n_valid, c.q_sum) == (2, 8 + int(np.floor(-9999.05 * 4 + 0.5)))

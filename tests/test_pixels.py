@@ -227,6 +227,25 @@ def test_rasterize_polygons(spark):
     assert (arr2 == 9.0).any()
 
 
+def test_rasterize_polygons_nan_nodata_counts_burned(spark):
+    """With a NaN nodata, n_burned counts the burned pixels only: the
+    unburned ones are NaN, which is NoData whatever the declaration."""
+    from geotrellis_contrib_spark import geom as GM
+
+    ring = [(-71.0, 40.5), (-69.0, 40.5), (-69.0, 41.5), (-71.0, 41.5), (-71.0, 40.5)]
+    polys = spark.createDataFrame(
+        [("b", -71.0, 40.5, -69.0, 41.5,
+          GM.wkb_encode(GM.WKB_POLYGON, [ring], srid=4326), 9.0)],
+        "poly_id string, xmin double, ymin double, xmax double, ymax double, "
+        "wkb binary, burn_val double")
+    rows = px.rasterize_polygons(polys, zoom=6, tile_size=32,
+                                 nodata=float("nan")).collect()
+    assert rows
+    for r in rows:
+        arr = px.unpack(r.px, "float64", 32)
+        assert r.n_burned == int((arr == 9.0).sum()) < 32 * 32
+
+
 def test_zonal_stats_pixels_wkb(spark, tiles):
     """Arbitrary-polygon pixel zonal == box pixel zonal when the polygon IS
     the box; a holed polygon strictly reduces the masked count."""

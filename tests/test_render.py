@@ -10,7 +10,7 @@ import numpy as np
 
 from geotrellis_contrib_spark import corpus
 from geotrellis_contrib_spark.operators import render as RD
-from tests.conftest import replay_tiles
+from tests.conftest import decode_png_rgba, replay_tiles
 
 T = 64
 
@@ -41,7 +41,7 @@ def test_ramp_endpoints_and_midstops():
 def test_png_rgba_roundtrip():
     rng = np.arange(T * T * 4, dtype=np.int64) % 251
     rgba = rng.reshape(T, T, 4).astype(np.uint8)
-    out = RD.decode_png_rgba(RD.encode_png_rgba(rgba))
+    out = decode_png_rgba(RD.encode_png_rgba(rgba))
     assert np.array_equal(out, rgba.astype(np.int64))
 
 
@@ -52,7 +52,7 @@ def test_render_png_tiles_nodata_transparent(spark):
     assert "Exchange" not in plan, plan
     row = out.filter("source_id = 'scene-1' AND band = 0 AND col = 20 "
                      "AND row = 25").collect()[0]
-    rgba = RD.decode_png_rgba(row["png"])
+    rgba = decode_png_rgba(row["png"])
     h0 = (1 * 11) % (T - 16)
     # the nodata hole is fully transparent, everything else opaque
     assert np.all(rgba[h0:h0 + 16, h0:h0 + 16, 3] == 0)

@@ -1,11 +1,48 @@
 """Temporal stack stats: engine vs an independent numpy replay of the
-px fixture, plus a tiny hand-built stack covering NaN nodata, per-scene
-differing nodata declarations, and never-observed pixels."""
+px fixture (one Spark parity test per operator), plus hand-built stacks
+run through the stack driver's group body without Spark
+(``conftest.replay_stacks``) covering NaN nodata, per-scene differing
+nodata declarations, near-nodata values and never-observed pixels."""
+from functools import partial
+
 import numpy as np
+import pytest
 
 from geotrellis_contrib_spark import corpus as corpus_mod
 from geotrellis_contrib_spark.operators import temporal as TE
 from geotrellis_contrib_spark.operators.pixels import pack
+from tests.conftest import count_jobs, replay_stacks, replay_tiles
+
+KEY = ("zoom", "col", "row", "band")
+_K = "zoom int, col bigint, row bigint, band int, "
+STATS_DDL = _K + "n_px bigint, cnt_sum bigint, q_mean_sum bigint, q_range_sum bigint"
+COMPOSITE_DDL = _K + "n_px bigint, q_best_sum bigint, src_sum bigint"
+MK_DDL = _K + "n_px_pairs bigint, p_sum bigint, s_sum bigint"
+THEIL_SEN_DDL = _K + "n_px1 bigint, q_ts_sum bigint"
+MEDIAN_DDL = _K + "n_px bigint, q_med_sum bigint"
+TREND_DDL = _K + "n_px2 bigint, q_slope_sum bigint"
+FILL_DDL = _K + "n_gaps bigint, n_filled bigint, q_fill_sum bigint"
+
+# Spark jobs one collect starts (a driver sync plus the stage jobs
+# adaptive execution submits): temporal_stats over the px fixture, and
+# tile_checksums(local_binary(a, a)) over a one-tile table
+JOBS_TEMPORAL_STATS = 2
+JOBS_LOCAL_BINARY_CHECKSUMS = 3
+
+
+def _stack_rows(planes, nodatas):
+    """One tile key's scenes as replay rows, source_idx = 0, 1, ..."""
+    return [{"source_id": f"s{s}", "source_idx": s, "zoom": 3,
+             "col": 1, "row": 1, "band": 0, "nodata": nd, "px": a}
+            for s, (a, nd) in enumerate(zip(planes, nodatas))]
+
+
+def _replay(kernel, ddl, planes, nodatas, **params):
+    """The one output row of a single-key stack through ``kernel``."""
+    out = replay_stacks(_stack_rows(planes, nodatas), KEY,
+                        partial(kernel, **params), ddl)
+    assert len(out) == 1
+    return out.iloc[0]
 
 
 def _fixture_value(s, col, row, band, r, c):
@@ -15,8 +52,9 @@ def _fixture_value(s, col, row, band, r, c):
 
 def test_temporal_stats_vs_numpy(spark):
     tiles = corpus_mod.synth_px_tiles(spark, tile_size=64)
-    got = {(r.col, r.row, r.band): r
-           for r in TE.temporal_stats(tiles).collect()}
+    jobs, rows = count_jobs(spark, TE.temporal_stats(tiles).collect)
+    assert jobs == JOBS_TEMPORAL_STATS
+    got = {(r.col, r.row, r.band): r for r in rows}
     assert len(got) == 6 * 4 * 2
     r_idx = np.arange(64).reshape(-1, 1)
     c_idx = np.arange(64).reshape(1, -1)
@@ -48,7 +86,7 @@ def test_temporal_stats_vs_numpy(spark):
             np.floor(rng * 4.0 + 0.5)[seen].astype(np.int64).sum())
 
 
-def test_temporal_stats_tiny_stack(spark):
+def test_temporal_stats_tiny_stack():
     # 4x4 tiles, 3 instants; scene 1 declares NaN nodata, scene 2 a
     # sentinel; pixel (3,3) is valid in NO scene
     a0 = np.arange(16, dtype=np.float64).reshape(4, 4)
@@ -59,18 +97,14 @@ def test_temporal_stats_tiny_stack(spark):
     a2 = a0 * 4.0
     a2[1, 1] = -2.0  # scene-2 nodata sentinel
     a2[3, 3] = -2.0
-    rows = [
-        ("s0", 0, 0, 5, 7, 0, "float64", -1.0, pack(a0)),
-        ("s1", 1, 0, 5, 7, 0, "float64", float("nan"), pack(a1)),
-        ("s2", 2, 0, 5, 7, 0, "float64", -2.0, pack(a2)),
-    ]
-    df = spark.createDataFrame(
-        rows, "source_id string, source_idx int, zoom int, col bigint, "
-              "row bigint, band int, dtype string, nodata double, "
-              "px binary")
-    out = TE.temporal_stats(df, tile_size=4).collect()
+    rows = [{"source_id": f"s{s}", "source_idx": s, "zoom": 0, "col": 5,
+             "row": 7, "band": 0, "nodata": nd, "px": a}
+            for s, (a, nd) in enumerate([(a0, -1.0), (a1, float("nan")),
+                                         (a2, -2.0)])]
+    out = replay_stacks(rows, KEY, partial(TE.k_stats, q_mean=1048576.0,
+                                           q_range=4.0), STATS_DDL)
     assert len(out) == 1
-    g = out[0]
+    g = out.iloc[0]
     # counts: 16 px; (3,3) never seen; (0,0) seen 2x; (1,1) seen 2x;
     # the other 13 seen 3x
     assert (g.zoom, g.col, g.row, g.band) == (0, 5, 7, 0)
@@ -139,17 +173,12 @@ def test_temporal_trend_vs_numpy(spark):
     assert nonzero_seen >= 16
 
 
-def test_temporal_trend_tiny_exact_slope(spark):
+def test_temporal_trend_tiny_exact_slope():
     # two instants, constant offset 3.0 -> slope exactly 3.0 everywhere
     a0 = np.full((4, 4), 10.0)
     a1 = a0 + 3.0
-    rows = [("s0", 0, 0, 1, 1, 0, "float64", -9.0, pack(a0)),
-            ("s1", 1, 0, 1, 1, 0, "float64", -9.0, pack(a1))]
-    df = spark.createDataFrame(
-        rows, "source_id string, source_idx int, zoom int, col bigint, "
-              "row bigint, band int, dtype string, nodata double, "
-              "px binary")
-    g = TE.temporal_trend(df, tile_size=4).collect()[0]
+    g = _replay(TE.k_trend, TREND_DDL, [a0, a1], [-9.0, -9.0],
+                q_slope=1048576.0)
     assert g.n_px2 == 16
     assert g.q_slope_sum == 16 * int(np.floor(3.0 * 1048576.0 + 0.5))
 
@@ -239,20 +268,15 @@ def test_theil_sen_vs_numpy_and_even_counts(spark):
             .astype(np.int64).sum())
 
 
-def test_theil_sen_even_pair_count_tiny(spark):
+def test_theil_sen_even_pair_count_tiny():
     # 4 instants, 2x2 tile, one pixel missing one instant -> pair
     # counts {6, 3}: exercises the even-m two-middle average
     vals = [np.array([[1.0, 5.0], [2.0, -3.0]]),
             np.array([[2.0, 4.0], [0.0, -9999.0]]),
             np.array([[4.0, 1.0], [7.0, 5.0]]),
             np.array([[8.0, 0.0], [1.0, 6.0]])]
-    rows = [("s", s, 3, 1, 1, 0, "float64", -9999.0, pack(v))
-            for s, v in enumerate(vals)]
-    df = spark.createDataFrame(
-        rows, "source_id string, source_idx int, zoom int, col bigint, "
-              "row bigint, band int, dtype string, nodata double, "
-              "px binary")
-    got = TE.temporal_theil_sen(df, tile_size=2).collect()[0]
+    got = _replay(TE.k_theil_sen, THEIL_SEN_DDL, vals, [-9999.0] * 4,
+                  q_slope=1048576.0)
     meds = np.zeros((2, 2))
     for r in range(2):
         for c in range(2):
@@ -271,17 +295,14 @@ def test_theil_sen_even_pair_count_tiny(spark):
         np.floor(meds * 1048576.0 + 0.5).astype(np.int64).sum())
 
 
-def test_calibrate_stack_preserves_nodata(spark):
+def test_calibrate_stack_preserves_nodata():
     a = np.array([[1.0, -9999.0], [np.nan, 2.0]])
-    rows = [("s", 0, 3, 1, 1, 0, "float64", -9999.0, pack(a))]
-    df = spark.createDataFrame(
-        rows, "source_id string, source_idx int, zoom int, col bigint, "
-              "row bigint, band int, dtype string, nodata double, "
-              "px binary")
-    out = TE.calibrate_stack(df, {0: 2.0}, {0: 10.0}, tile_size=2) \
-        .collect()[0]
+    out = replay_tiles(_stack_rows([a], [-9999.0]),
+                       partial(TE.k_calibrate, gains={0: 2.0},
+                               offsets={0: 10.0}),
+                       "source_idx int, dtype string, px binary").iloc[0]
     from geotrellis_contrib_spark.operators.pixels import unpack
-    arr = unpack(out.px, out.dtype, 2)
+    arr = unpack(out.px, out["dtype"], 2)
     assert arr[0, 0] == 12.0 and arr[1, 1] == 14.0
     assert arr[0, 1] == -9999.0 and np.isnan(arr[1, 0])
 
@@ -330,18 +351,13 @@ def test_temporal_composite_vs_numpy_with_ties(spark):
     assert tie_seen > 0                 # the tie rule is exercised
 
 
-def test_temporal_composite_tie_earliest(spark):
+def test_temporal_composite_tie_earliest():
     # two scenes, equal value at (0,0): scene 0 must win; strictly
     # larger later value at (1,1): scene 1 wins; nodata-only (0,1)
     a0 = np.array([[5.0, -9999.0], [1.0, 2.0]])
     a1 = np.array([[5.0, -9999.0], [9.0, 1.0]])
-    rows = [("s", s, 3, 1, 1, 0, "float64", -9999.0, pack(v))
-            for s, v in enumerate([a0, a1])]
-    df = spark.createDataFrame(
-        rows, "source_id string, source_idx int, zoom int, col bigint, "
-              "row bigint, band int, dtype string, nodata double, "
-              "px binary")
-    got = TE.temporal_composite(df, tile_size=2).collect()[0]
+    got = _replay(TE.k_composite, COMPOSITE_DDL, [a0, a1], [-9999.0] * 2,
+                  q_best=4.0)
     assert got.n_px == 3
     assert got.q_best_sum == int(4 * (5.0 + 9.0 + 2.0))
     assert got.src_sum == 0 + 1 + 0
@@ -397,7 +413,7 @@ def test_local_binary_ops_and_nodata(spark):
     a = spark.createDataFrame(rows_a, sch)
     b = spark.createDataFrame(rows_b, sch)
     out = LO.local_binary(a, b, op="multiply", tile_size=2).collect()[0]
-    arr = unpack(out.px, out.dtype, 2)
+    arr = unpack(out.px, out["dtype"], 2)
     assert arr[0, 0] == 6.0 and arr[1, 1] == 4.0
     assert arr[0, 1] == -9999.0 and arr[1, 0] == -9999.0  # either-side
     assert out.source_id == "a"
@@ -417,6 +433,12 @@ def test_tile_checksums(spark):
         [("a", 0, 3, 1, 1, 0, "float64", -9999.0, pack(a0))], sch)
     r = LO.tile_checksums(df, q=4.0, tile_size=2).collect()[0]
     assert (r.n_valid, r.q_sum) == (2, int(2.25 * 4 + 4.0 * 4))
+    # the local_binary gate's chain: a join, then two narrow kernels
+    jobs, rows = count_jobs(spark, LO.tile_checksums(
+        LO.local_binary(df, df, op="multiply", tile_size=2), q=4.0,
+        tile_size=2).collect)
+    assert jobs == JOBS_LOCAL_BINARY_CHECKSUMS
+    assert [(r.n_valid, r.q_sum) for r in rows] == [(2, 20 + 64)]  # 5.0625, 16
 
 
 def test_temporal_fill_general_four_planes(spark):
@@ -447,20 +469,75 @@ def test_temporal_fill_general_four_planes(spark):
     assert r.q_fill_sum == exp
 
 
-def test_temporal_fill_absent_plane_not_a_gap(spark):
-    import numpy as np
-    from geotrellis_contrib_spark.operators.pixels import pack
-    from geotrellis_contrib_spark.operators.temporal import temporal_fill
+def test_temporal_fill_absent_plane_not_a_gap():
     t = 4
     # only planes t=0 and t=2 exist (t=1 never covered the tile):
     # fully valid planes -> zero gaps, zero filled
-    a = np.full((t, t), 1.0)
-    b = np.full((t, t), 3.0)
-    rows = [("s", 0, 6, 20, 24, 0, "float64", -9999.0, pack(a)),
-            ("s", 2, 6, 20, 24, 0, "float64", -9999.0, pack(b))]
+    rows = _stack_rows([np.full((t, t), 1.0), np.full((t, t), 3.0)],
+                       [-9999.0] * 2)
+    rows[1]["source_idx"] = 2
+    r = replay_stacks(rows, KEY, partial(TE.k_fill, q_fill=8.0),
+                      FILL_DDL).iloc[0]
+    assert (r.n_gaps, r.n_filled, r.q_fill_sum) == (0, 0, 0)
+
+
+# NoData is exact: -9999.05 is valid under nodata -9999.0, 1e-9 under
+# nodata 0.0; pixel (0, 1) is NoData in both scenes
+ND_PLANES = [np.array([[-9999.05, -9999.0], [1.0, 2.0]]),
+             np.array([[1e-9, 0.0], [3.0, 4.0]])]
+ND_DECL = [-9999.0, 0.0]
+
+
+def _q4(*vals):
+    return int(sum(np.floor(v * 4.0 + 0.5) for v in vals))
+
+
+@pytest.mark.parametrize("kernel, ddl, params, want", [
+    (TE.k_stats, STATS_DDL, {"q_mean": 4.0, "q_range": 4.0},
+     {"n_px": 3, "cnt_sum": 6,
+      "q_mean_sum": _q4((-9999.05 + 1e-9) / 2, 2.0, 3.0),
+      "q_range_sum": _q4(1e-9 + 9999.05, 2.0, 2.0)}),
+    (TE.k_composite, COMPOSITE_DDL, {"q_best": 4.0},
+     {"n_px": 3, "q_best_sum": _q4(1e-9, 3.0, 4.0), "src_sum": 3}),
+    (TE.k_mann_kendall, MK_DDL, {},
+     {"n_px_pairs": 3, "p_sum": 3, "s_sum": 3}),
+    (TE.k_theil_sen, THEIL_SEN_DDL, {"q_slope": 4.0},
+     {"n_px1": 3, "q_ts_sum": _q4(1e-9 + 9999.05, 2.0, 2.0)}),
+    (TE.k_median, MEDIAN_DDL, {"q_med": 4.0},
+     {"n_px": 3, "q_med_sum": _q4((-9999.05 + 1e-9) / 2, 2.0, 3.0)}),
+    (TE.k_trend, TREND_DDL, {"q_slope": 4.0},
+     {"n_px2": 3, "q_slope_sum": _q4(1e-9 + 9999.05, 2.0, 2.0)}),
+    (TE.k_fill, FILL_DDL, {"q_fill": 8.0},
+     {"n_gaps": 2, "n_filled": 0, "q_fill_sum": 0}),
+], ids=["stats", "composite", "mann_kendall", "theil_sen", "median", "trend",
+        "fill"])
+def test_stack_kernel_nodata_is_exact(kernel, ddl, params, want):
+    got = _replay(kernel, ddl, ND_PLANES, ND_DECL, **params)
+    assert {k: int(got[k]) for k in want} == want
+
+
+def test_temporal_mann_kendall_integer_tiles(spark):
+    """Integer tiles are differenced in float64: a uint8 drop from 5 to 3
+    is a falling pair (S = -1), not a wrapped-around rise."""
+    rows = [("s", s, 3, 1, 1, 0, "uint8", 255.0,
+             pack(np.full((2, 2), v, dtype=np.uint8)))
+            for s, v in enumerate([5, 3])]
     df = spark.createDataFrame(
         rows, "source_id string, source_idx int, zoom int, col bigint, "
               "row bigint, band int, dtype string, nodata double, "
               "px binary")
-    r = temporal_fill(df, tile_size=t).collect()[0]
-    assert (r.n_gaps, r.n_filled, r.q_fill_sum) == (0, 0, 0)
+    got = TE.temporal_mann_kendall(df, tile_size=2).collect()[0]
+    assert (got.n_px_pairs, got.p_sum, got.s_sum) == (4, 4, -4)
+
+
+def test_calibrate_stack_integer_tile_is_float64():
+    """A calibrated integer tile is tagged with the dtype of its bytes."""
+    a = np.array([[1, 255], [3, 4]], dtype=np.uint8)
+    out = replay_tiles(_stack_rows([a], [255.0]),
+                       partial(TE.k_calibrate, gains={0: 0.5},
+                               offsets={0: 1.0}),
+                       "dtype string, px binary").iloc[0]
+    from geotrellis_contrib_spark.operators.pixels import unpack
+    assert out["dtype"] == "float64"
+    np.testing.assert_array_equal(unpack(out.px, out["dtype"], 2),
+                                  [[1.5, 255.0], [2.5, 3.0]])

@@ -13,7 +13,7 @@ from geotrellis_contrib_spark import geom as GM
 from geotrellis_contrib_spark import grid
 from geotrellis_contrib_spark.operators import pixels as px
 from geotrellis_contrib_spark.operators import render as RD
-from tests.conftest import replay_tiles
+from tests.conftest import decode_png_rgba, replay_tiles
 
 TS = 64
 ND = -9999.0
@@ -61,6 +61,37 @@ def test_tile_batch_row_contract():
     np.testing.assert_array_equal(_arr(out.iloc[2]), rows[2]["px"].astype(np.float32))
     empty = replay_tiles(rows, lambda row: None, "col bigint, v int")
     assert len(empty) == 0 and list(empty.columns) == ["col", "v"]
+
+
+def test_stack_group_contract():
+    """Planes arrive in source_idx order as a float64 stack with its exact
+    NoData mask; ``key`` holds the grouping values as scalars and every
+    other column as a plane-order array; None drops, a list fans out and
+    unset output columns come from ``key``."""
+    from tests.conftest import replay_stacks
+
+    seen = {}
+
+    def k(stack, valid, key):
+        seen.update(stack=stack, valid=valid, key=key)
+        if key["col"] == 19:
+            return None
+        return [{"v": int(s), "px": stack[i]}
+                for i, s in enumerate(key["source_idx"])]
+
+    rows = [_tile(s=s, col=c, t=32) for c in (18, 19) for s in (2, 0, 1)]
+    rows[0]["px"] = rows[0]["px"].astype(np.float32)
+    out = replay_stacks(rows, ("col",), k,
+                        "col bigint, v int, dtype string, px binary")
+    assert out.col.tolist() == [18] * 3 and out.v.tolist() == [0, 1, 2]
+    assert out.dtype.tolist() == ["float64"] * 3
+    np.testing.assert_array_equal(_arr(out.iloc[2]), rows[0]["px"])
+    key = seen["key"]
+    assert key["col"] == 19 and key["source_idx"].tolist() == [0, 1, 2]
+    assert key["source_id"].tolist() == ["scene-0", "scene-1", "scene-2"]
+    assert "px" not in key and key["dtype"].tolist() == ["float64"] * 3
+    assert seen["stack"].shape == (3, 32, 32) and seen["stack"].dtype == np.float64
+    np.testing.assert_array_equal(seen["valid"], seen["stack"] != ND)
 
 
 def test_k_warp_composes_convert_resample_reproject():
@@ -224,7 +255,7 @@ def test_k_render_png_nodata_transparent_and_checksum():
     hole = t["px"] == ND
     png = replay_tiles([t], partial(RD.k_render_png, vmin=0.0, vmax=2400.0,
                                     ramp=RD.TERRAIN_RAMP), "col bigint, png binary")
-    rgba = RD.decode_png_rgba(png.png[0])
+    rgba = decode_png_rgba(png.png[0])
     assert (rgba[..., 3][hole] == 0).all() and (rgba[..., 3][~hole] == 255).all()
     stats = replay_tiles([t], partial(RD.k_render_stats, vmin=0.0, vmax=2400.0,
                                       ramp=RD.TERRAIN_RAMP),
