@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geotrellis_contrib_spark.operators.pixels import pack, unpack, valid_px
+from geotrellis_contrib_spark.operators.pixels import map_tiles, valid_px
 
 # case -> list of segments, each ((edgeA, edgeB)); saddle cases 5/10
 # appear as {True: [...], False: [...]} keyed by center > iso.
@@ -118,6 +118,19 @@ def marching_squares(grid: np.ndarray, iso: float,
     return out
 
 
+def k_contour_fan(row: dict) -> list[dict]:
+    """A tile's own float64 pixels (NaN = NoData) plus the first column,
+    first row and corner pixel its left, upper and upper-left neighbors
+    need to close their (T+1)^2 grids (roles 0-3)."""
+    arr = row["px"].astype(np.float64)
+    arr = np.where(valid_px(arr, row["nodata"]), arr, np.nan)
+    col, r = row["col"], row["row"]
+    return [{"col": col, "row": r, "role": 0, "px": arr},
+            {"col": col - 1, "row": r, "role": 1, "px": arr[:, 0]},
+            {"col": col, "row": r - 1, "role": 2, "px": arr[0, :]},
+            {"col": col - 1, "row": r - 1, "role": 3, "px": arr[0:1, 0]}]
+
+
 def contour_segments(tiles: DataFrame, iso: float,
                      tile_size: int = 64) -> DataFrame:
     """Iso-contour segments across tile boundaries. Input: one band of
@@ -125,22 +138,8 @@ def contour_segments(tiles: DataFrame, iso: float,
     Output: (gr, gc, seg, qx1, qy1, qx2, qy2) — block global coords,
     segment slot, 2^20-quantized endpoint coordinates."""
     T = tile_size
-
-    def fan_out(pdf_iter):
-        for pdf in pdf_iter:
-            rows = []
-            for row_t in pdf.itertuples():
-                arr = unpack(row_t.px, row_t.dtype, T).astype(np.float64)
-                arr = np.where(valid_px(arr, row_t.nodata), arr, np.nan)
-                col, row = int(row_t.col), int(row_t.row)
-                rows.append((col, row, 0, pack(arr)))                # own
-                rows.append((col - 1, row, 1, pack(arr[:, 0].copy())))   # right strip
-                rows.append((col, row - 1, 2, pack(arr[0, :].copy())))   # bottom strip
-                rows.append((col - 1, row - 1, 3, pack(arr[0:1, 0].copy())))  # corner
-            yield pd.DataFrame(rows, columns=["col", "row", "role", "px"])
-
-    fan = tiles.mapInPandas(
-        fan_out, "col bigint, row bigint, role int, px binary")
+    fan = map_tiles(tiles, k_contour_fan,
+                    "col bigint, row bigint, role int, px binary")
 
     def solve(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         col, row = int(key[0]), int(key[1])

@@ -11,7 +11,7 @@ are exact). NoData friction cells are impassable.
 Spark-first plan — synchronous tile rounds with halo exchange on
 ``focal.halo_rounds`` (the iterative sibling of ``focal.focal_map``):
   round 0: per tile, seed cells get cost 0 and an in-tile vectorized
-    8-way min-relaxation runs to its LOCAL fixpoint (``mapInPandas``,
+    8-way min-relaxation runs to its LOCAL fixpoint (``map_tiles``,
     zero shuffle — cost needs no halo);
   round k: the driver cuts the 1-px edge strips of (cost, friction) of
     every tile that improved last round, plus each tile's own state,
@@ -41,7 +41,7 @@ int64 — exact on dyadic costs) then sums integers."""
 from __future__ import annotations
 
 from functools import partial
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -51,7 +51,8 @@ from pyspark.sql import functions as F
 from geotrellis_contrib_spark.operators.focal import (
     _KEY_DDL, _NEIGHBORS, _assemble_frame, _halo_pieces, _mosaic,
     _scene_small, _span, contract, halo_rounds)
-from geotrellis_contrib_spark.operators.pixels import DTYPES, pack, valid_px
+from geotrellis_contrib_spark.operators.pixels import map_tiles, pack, qsum, valid_px
+from geotrellis_contrib_spark.operators.region import _tile_coords
 from geotrellis_contrib_spark.util import compute_grouped, compute_spread
 
 
@@ -103,6 +104,29 @@ _COST_ROUNDS = dict(
     offers=lambda piece: bool(np.isfinite(piece["cost"]).any()))
 
 
+def k_cost_init(row: dict, seed_predicate, t: int, straight: float,
+                diag: float, max_cost: float | None) -> dict:
+    """Round 0 of the cost_distance rounds: the tile's friction (NaN on
+    NoData; every valid cell must be positive), its seed cells at cost 0
+    and the in-tile relaxation to its local fixpoint."""
+    arr = row["px"].astype(np.float64)
+    fric = np.where(valid_px(arr, row["nodata"]), arr, np.nan)
+    if not np.all(np.isnan(fric)) and float(np.nanmin(fric)) <= 0.0:
+        raise ValueError("friction must be positive")
+    seed = seed_predicate(fric, *_tile_coords(row, t)) & ~np.isnan(fric)
+    cost = _relax(np.where(seed, 0.0, np.inf), fric, straight, diag,
+                  max_cost)
+    return {"friction": pack(fric), "cost": pack(cost)}
+
+
+def k_cost_rollup(row: dict) -> dict:
+    """A converged cost tile's quantize-first checksum over its reached
+    cells (floor(cost * 2 + 0.5), exact on dyadic costs)."""
+    cost = np.frombuffer(row["cost"], dtype=np.float64)
+    fin = np.isfinite(cost)
+    return {"cost_qsum": qsum(cost, fin, 2.0), "n_reached": int(fin.sum())}
+
+
 def _cost_rounds(tiles: DataFrame,
                  seed_predicate: Callable[[np.ndarray, np.ndarray,
                                            np.ndarray], np.ndarray],
@@ -115,33 +139,11 @@ def _cost_rounds(tiles: DataFrame,
     if straight <= 0 or diag <= 0:
         raise ValueError("step distances must be positive")
 
-    def init(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                        .reshape(t, t).astype(np.float64)
-                fric = np.where(valid_px(arr, row_t.nodata), arr, np.nan)
-                if not np.all(np.isnan(fric)) \
-                        and float(np.nanmin(fric)) <= 0.0:
-                    raise ValueError("friction must be positive")
-                gr = (int(row_t.row) * t
-                      + np.arange(t).reshape(-1, 1)) + np.zeros(
-                          (1, t), dtype=np.int64)
-                gc = np.zeros((t, 1), dtype=np.int64) \
-                    + (int(row_t.col) * t + np.arange(t).reshape(1, -1))
-                seed = seed_predicate(fric, gr, gc) & ~np.isnan(fric)
-                cost = np.where(seed, 0.0, np.inf)
-                cost = _relax(cost, fric, straight, diag, max_cost)
-                out.append({"source_id": row_t.source_id,
-                            "band": int(row_t.band),
-                            "col": int(row_t.col), "row": int(row_t.row),
-                            "friction": pack(fric), "cost": pack(cost)})
-            yield pd.DataFrame(out, columns=[
-                "source_id", "band", "col", "row", "friction", "cost"])
-
-    state = compute_spread(tiles).mapInPandas(
-        init, f"{_KEY_DDL}, friction binary, cost binary")
+    state = map_tiles(
+        compute_spread(tiles),
+        partial(k_cost_init, seed_predicate=seed_predicate, t=t,
+                straight=straight, diag=diag, max_cost=max_cost),
+        f"{_KEY_DDL}, friction binary, cost binary")
     return halo_rounds(
         state, t, **_COST_ROUNDS,
         relax=partial(k_cost_relax, straight=straight, diag=diag,
@@ -220,27 +222,9 @@ def cost_distance(tiles: DataFrame,
     state = _adaptive_state(tiles, seed_predicate, t, straight, diag,
                             max_cost, max_iter, scene_max_px)
 
-    def rollup(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                cost = np.frombuffer(row_t.cost,
-                                     dtype=np.float64).reshape(t, t)
-                fin = np.isfinite(cost)
-                out.append({"source_id": row_t.source_id,
-                            "band": int(row_t.band),
-                            "col": int(row_t.col), "row": int(row_t.row),
-                            "cost_qsum": int(np.floor(
-                                cost[fin] * 2.0 + 0.5).astype(
-                                    np.int64).sum()),
-                            "n_reached": int(fin.sum())})
-            yield pd.DataFrame(out, columns=[
-                "source_id", "band", "col", "row", "cost_qsum",
-                "n_reached"])
-
-    return state.mapInPandas(
-        rollup, "source_id string, band int, col bigint, row bigint, "
-                "cost_qsum bigint, n_reached bigint")
+    return map_tiles(state, k_cost_rollup,
+                     "source_id string, band int, col bigint, row bigint, "
+                     "cost_qsum bigint, n_reached bigint")
 
 
 def cost_surface(tiles: DataFrame, seed_predicate,
@@ -412,7 +396,7 @@ def _lcp_dist(tiles: DataFrame, seed_predicate, targets,
         plane_tiles = state.select(
             "source_id", "band", "col", "row", F.col(src).alias("px"),
             F.lit("float64").alias("dtype"), F.lit(nan).alias("nodata"))
-        cut = _halo_pieces(plane_tiles, 1, t) \
+        cut = _halo_pieces(plane_tiles, 1) \
             .withColumn("plane", F.lit(plane))
         planes = cut if planes is None else planes.unionByName(cut)
 

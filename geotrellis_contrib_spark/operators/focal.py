@@ -8,9 +8,10 @@ vlm/src/test/resources, RasterSourceSpec reads it); the contrib layer's
 job is exactly this tiling/halo plumbing.
 
 Spark-first plan (scale posture), owned by ``focal_map``:
-  1. ``mapInPandas`` strip extraction — each tile CUTS the r-wide edge
-     strips its 8 neighbors need BEFORE the shuffle, so shuffle volume is
-     ~(1 + 4r/T) x tile bytes, not 9x (no full-tile replication).
+  1. ``map_tiles`` strip extraction (``k_halo_pieces``) — each tile
+     CUTS the r-wide edge strips its 8 neighbors need BEFORE the
+     shuffle, so shuffle volume is ~(1 + 4r/T) x tile bytes, not 9x (no
+     full-tile replication).
   2. ONE shuffle: ``groupBy(source, band, col, row).applyInPandas`` —
      assemble the (T+2r)^2 padded frame (missing neighbors / NoData ->
      NaN), run the operator's kernel, emit per-tile results.
@@ -74,12 +75,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geotrellis_contrib_spark.operators.pixels import DTYPES, pack, qsum, valid_px
+from geotrellis_contrib_spark.operators.pixels import (
+    DTYPES, map_tiles, pack, qsum, valid_px)
 from geotrellis_contrib_spark.plans.iterate import (
     border_doubling, fixpoint, flag_clear)
 from geotrellis_contrib_spark.util import compute_grouped
-
-_Q = 1048576.0  # 2^20 quantization for the order-independent checksum
 
 # fixed lexicographic neighbor order — the SQL oracle's chained-add order
 _OFFSETS = [(dr, dc) for dr in (-1, 0, 1) for dc in (-1, 0, 1)]
@@ -107,39 +107,27 @@ def _ring_slot(dr: int, dc: int, r: int, t: int) -> tuple[slice, slice]:
     return rows, cols
 
 
-def _piece_cut(r: int, t: int):
-    """Stage 1 of the stencil pattern (a ``mapInPandas`` body): every
-    tile cuts the r-wide edge strips its 8 neighbors need BEFORE the
-    shuffle (no full-tile replication); keyed by the RECEIVING tile."""
-
-    def cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                        .reshape(t, t).astype(np.float64)
-                for dr, dc in _OFFSETS:
-                    piece = arr if (dr == 0 and dc == 0) \
-                        else _strip(arr, dr, dc, r)
-                    out.append({
-                        "source_id": row_t.source_id, "band": row_t.band,
-                        "col": row_t.col + dc, "row": row_t.row + dr,
-                        "dr": dr, "dc": dc, "nodata": row_t.nodata,
-                        "h": piece.shape[0], "w": piece.shape[1],
-                        "px": pack(np.ascontiguousarray(piece)),
-                    })
-            yield pd.DataFrame(out, columns=[
-                "source_id", "band", "col", "row", "dr", "dc", "nodata",
-                "h", "w", "px"])
-
-    return cut
+def k_halo_pieces(row: dict, r: int) -> list[dict]:
+    """Stage 1 of the stencil pattern: a tile cuts the r-wide edge strips
+    its 8 neighbors need BEFORE the shuffle (no full-tile replication),
+    plus its own center piece; each piece is keyed by the RECEIVING tile
+    and carries its (h, w)."""
+    arr = row["px"].astype(np.float64)
+    out = []
+    for dr, dc in _OFFSETS:
+        piece = arr if (dr == 0 and dc == 0) else _strip(arr, dr, dc, r)
+        out.append({"col": row["col"] + dc, "row": row["row"] + dr,
+                    "dr": dr, "dc": dc, "h": piece.shape[0],
+                    "w": piece.shape[1], "px": piece})
+    return out
 
 
-def _halo_pieces(tiles: DataFrame, r: int, t: int) -> DataFrame:
-    return tiles.mapInPandas(
-        _piece_cut(r, t),
-        "source_id string, band int, col bigint, row bigint, "
-        "dr int, dc int, nodata double, h int, w int, px binary")
+_PIECE_DDL = ("source_id string, band int, col bigint, row bigint, "
+              "dr int, dc int, nodata double, h int, w int, px binary")
+
+
+def _halo_pieces(tiles: DataFrame, r: int) -> DataFrame:
+    return map_tiles(tiles, partial(k_halo_pieces, r=r), _PIECE_DDL)
 
 
 def _assemble_frame(pdf: pd.DataFrame, r: int, t: int):
@@ -183,7 +171,7 @@ def focal_map(tiles: DataFrame, r: int, t: int, kernel,
                               "col": int(col), "row": int(row), **out}])
 
     return compute_grouped(
-        _halo_pieces(tiles, r, t), "source_id", "band", "col", "row") \
+        _halo_pieces(tiles, r), "source_id", "band", "col", "row") \
         .applyInPandas(stencil, schema)
 
 
@@ -1095,12 +1083,19 @@ _ACC_SCHEMA = ("source_id string, band int, col bigint, row bigint, "
                "acc_sum bigint, acc_max bigint, n_valid bigint")
 
 
-def _acc_rollup_rows(source_id, band, row_t, up, va):
-    return {"source_id": source_id, "band": band,
-            "col": int(row_t.col), "row": int(row_t.row),
-            "acc_sum": int(up[va].sum()),
+def _acc_stats(up: np.ndarray, va: np.ndarray) -> dict:
+    """A tile's accumulation rollup over its valid cells ``va``."""
+    return {"acc_sum": int(up[va].sum()),
             "acc_max": int(up[va].max()) if va.any() else 0,
             "n_valid": int(va.sum())}
+
+
+def k_acc_rollup(row: dict) -> dict:
+    """The accumulation rollup of one converged flow-rounds state tile
+    (exclusive upstream count = acc - 1 on valid cells)."""
+    va = np.frombuffer(row["chosen"], dtype=np.int8) >= -1
+    acc = np.frombuffer(row["acc"], dtype=np.float64)
+    return _acc_stats(np.where(va, acc - 1.0, 0.0).astype(np.int64), va)
 
 
 def _flow_acc_scene(tiles: DataFrame, t: int) -> DataFrame:
@@ -1122,9 +1117,10 @@ def _flow_acc_scene(tiles: DataFrame, t: int) -> DataFrame:
         for row_t in pdf.itertuples(index=False):
             ty = (int(row_t.row) - r0) * t
             tx = (int(row_t.col) - c0) * t
-            out.append(_acc_rollup_rows(source_id, band, row_t,
-                                        up[ty:ty + t, tx:tx + t],
-                                        valid[ty:ty + t, tx:tx + t]))
+            out.append({"source_id": source_id, "band": band,
+                        "col": int(row_t.col), "row": int(row_t.row),
+                        **_acc_stats(up[ty:ty + t, tx:tx + t],
+                                     valid[ty:ty + t, tx:tx + t])})
         return pd.DataFrame(out, columns=["source_id", "band", "col",
                                           "row", "acc_sum", "acc_max",
                                           "n_valid"])
@@ -1186,26 +1182,8 @@ def _flow_rounds_state(tiles: DataFrame, t: int,
 def _flow_acc_rounds(tiles: DataFrame, t: int, max_iter: int) -> DataFrame:
     """Distributed accumulation rollup over the converged
     :func:`_flow_rounds_state`."""
-    state = _flow_rounds_state(tiles, t, max_iter)
-
-    def rollup(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                ch = np.frombuffer(row_t.chosen,
-                                   dtype=np.int8).reshape(t, t)
-                acc = np.frombuffer(row_t.acc,
-                                    dtype=np.float64).reshape(t, t)
-                va = ch >= -1
-                up = np.where(va, acc - 1.0, 0.0).astype(np.int64)
-                out.append(_acc_rollup_rows(row_t.source_id,
-                                            int(row_t.band), row_t,
-                                            up, va))
-            yield pd.DataFrame(out, columns=["source_id", "band", "col",
-                                             "row", "acc_sum", "acc_max",
-                                             "n_valid"])
-
-    return state.mapInPandas(rollup, _ACC_SCHEMA)
+    return map_tiles(_flow_rounds_state(tiles, t, max_iter), k_acc_rollup,
+                     _ACC_SCHEMA)
 
 
 def flow_accumulation(tiles: DataFrame, tile_size: int = 64,
@@ -1288,7 +1266,7 @@ def _watershed_dist(tiles: DataFrame, t: int, max_rounds: int) -> DataFrame:
     the public label gr*4096+gc is computed once, here, from the
     injective key."""
     rows = contract(
-        _halo_pieces(tiles, 1, t), t, k_d8_tile, max_rounds=max_rounds,
+        _halo_pieces(tiles, 1), t, k_d8_tile, max_rounds=max_rounds,
         name="watershed",
         message=f"watershed border resolution did not settle in "
                 f"{max_rounds} rounds; a flow path crosses more than "
@@ -1406,14 +1384,20 @@ def _fill_gs(wf: np.ndarray, z: np.ndarray, valid: np.ndarray) -> None:
         "fill_sinks: in-frame sweep guard exceeded")  # pragma: no cover
 
 
-def _fill_rollup_row(source_id, band, col, row, w, z, valid, q_fill):
-    filled = valid & (w > z)
-    return {"source_id": source_id, "band": int(band),
-            "col": int(col), "row": int(row),
-            "n_valid": int(valid.sum()),
-            "n_filled": int(filled.sum()),
-            "q_fill_sum": int(np.floor(w * q_fill + 0.5)[valid]
-                              .astype(np.int64).sum())}
+def _fill_stats(w: np.ndarray, z: np.ndarray, valid: np.ndarray,
+                q_fill: float) -> dict:
+    """A tile's fill rollup: valid cells, cells raised above their dem,
+    and the quantize-first sum of the filled surface."""
+    return {"n_valid": int(valid.sum()),
+            "n_filled": int((valid & (w > z)).sum()),
+            "q_fill_sum": qsum(w, valid, q_fill)}
+
+
+def k_fill_rollup(row: dict, q_fill: float) -> dict:
+    """The fill rollup of one converged fill-rounds state tile."""
+    z = np.frombuffer(row["dem"], dtype=np.float64)
+    w = np.frombuffer(row["water"], dtype=np.float64)
+    return _fill_stats(w, z, ~np.isnan(z), q_fill)
 
 
 def _fill_scene(tiles: DataFrame, t: int, q_fill: float) -> DataFrame:
@@ -1433,9 +1417,9 @@ def _fill_scene(tiles: DataFrame, t: int, q_fill: float) -> DataFrame:
             ty = (int(row_t.row) - r0) * t
             tx = (int(row_t.col) - c0) * t
             sl = (slice(ty, ty + t), slice(tx, tx + t))
-            out.append(_fill_rollup_row(source_id, band, row_t.col,
-                                        row_t.row, w[sl], z[sl],
-                                        valid[sl], q_fill))
+            out.append({"source_id": source_id, "band": band,
+                        "col": int(row_t.col), "row": int(row_t.row),
+                        **_fill_stats(w[sl], z[sl], valid[sl], q_fill)})
         return pd.DataFrame(out, columns=["source_id", "band", "col",
                                           "row", "n_valid", "n_filled",
                                           "q_fill_sum"])
@@ -1487,24 +1471,8 @@ def _fill_rounds(tiles: DataFrame, t: int, q_fill: float,
                       f"{_KEY_DDL}, dem binary, water binary")
     state = halo_rounds(state, t, **_FILL_ROUNDS, max_iter=max_iter,
                         name="fill_sinks")
-
-    def rollup(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                z = np.frombuffer(row_t.dem,
-                                  dtype=np.float64).reshape(t, t)
-                w = np.frombuffer(row_t.water,
-                                  dtype=np.float64).reshape(t, t)
-                valid = ~np.isnan(z)
-                out.append(_fill_rollup_row(
-                    row_t.source_id, int(row_t.band), row_t.col,
-                    row_t.row, w, z, valid, q_fill))
-            yield pd.DataFrame(out, columns=["source_id", "band", "col",
-                                             "row", "n_valid",
-                                             "n_filled", "q_fill_sum"])
-
-    return state.mapInPandas(rollup, _FILL_SCHEMA)
+    return map_tiles(state, partial(k_fill_rollup, q_fill=q_fill),
+                     _FILL_SCHEMA)
 
 
 def fill_sinks(tiles: DataFrame, tile_size: int = 64,
@@ -1715,7 +1683,7 @@ def _flow_length_dist(tiles: DataFrame, t: int,
     round (exact — integer addition is associative). Tile total =
     Σ_groups (local sums + cnt · resolved(end))."""
     rows = contract(
-        _halo_pieces(tiles, 1, t), t, k_d8_tile, hops=_FLEN_HOPS,
+        _halo_pieces(tiles, 1), t, k_d8_tile, hops=_FLEN_HOPS,
         max_rounds=max_rounds, name="flow_length",
         message=f"flow_length border resolution did not settle in "
                 f"{max_rounds} rounds")
@@ -1758,55 +1726,41 @@ def flow_length(tiles: DataFrame, tile_size: int = 64,
 # (the flow_length integer-decomposition discipline).
 # ---------------------------------------------------------------------------
 
-_MORAN_SCHEMA = ("source_id string, band int, n bigint, w_pairs bigint, "
-                 "s1 bigint, sdeg bigint, sv bigint, svv bigint")
+def k_morans(frame, t, col, row, *, qf):
+    """:func:`morans_moments` per tile: the tile's integer moments over
+    its rook-adjacent valid pairs, neighbors read from the 1-px halo."""
+    val = ~np.isnan(frame)
+    vq = np.where(val, np.floor(frame * qf + 0.5), 0).astype(np.int64)
+    cen = (slice(1, 1 + t), slice(1, 1 + t))
+    mc, vc = val[cen], vq[cen]
+    deg = np.zeros((t, t), dtype=np.int64)
+    nsum = np.zeros((t, t), dtype=np.int64)
+    for dr, dc in ((-1, 0), (1, 0), (0, -1), (0, 1)):
+        nm = val[1 + dr:1 + t + dr, 1 + dc:1 + t + dc]
+        nv = vq[1 + dr:1 + t + dr, 1 + dc:1 + t + dc]
+        both = mc & nm
+        deg += both
+        nsum += np.where(both, nv, 0)
+    return {"n": int(mc.sum()), "w_pairs": int(deg[mc].sum()),
+            "s1": int((vc * nsum)[mc].sum()),
+            "sdeg": int((deg * vc)[mc].sum()),
+            "sv": int(vc[mc].sum()), "svv": int((vc * vc)[mc].sum())}
 
 
 def morans_moments(tiles: DataFrame, tile_size: int = 64,
                    quant: float = 4.0) -> DataFrame:
     """Per-(scene, band) Moran's I integer moments (module block
     comment): values quantized floor(v*quant + 0.5) to int64 first, so
-    every product and sum is exact. ONE halo-strip shuffle (the
-    stencil template) + a map-side-combined scene rollup; each tile
+    every product and sum is exact. ONE halo-strip shuffle
+    (:func:`focal_map`) + a map-side-combined scene rollup; each tile
     emits a single partial row — constant state per task at any scene
     size."""
-    t = int(tile_size)
-    qf = float(quant)
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band = key[0], int(key[1])
-        cols = ["source_id", "band", "n", "w_pairs", "s1", "sdeg",
-                "sv", "svv"]
-        frame = _assemble_frame(pdf, 1, t)
-        if frame is None:
-            return pd.DataFrame(columns=cols)
-        val = ~np.isnan(frame)
-        vq = np.where(val, np.floor(frame * qf + 0.5), 0).astype(np.int64)
-        cen = (slice(1, 1 + t), slice(1, 1 + t))
-        mc, vc = val[cen], vq[cen]
-        deg = np.zeros((t, t), dtype=np.int64)
-        nsum = np.zeros((t, t), dtype=np.int64)
-        for dr, dc in ((-1, 0), (1, 0), (0, -1), (0, 1)):
-            nm = val[1 + dr:1 + t + dr, 1 + dc:1 + t + dc]
-            nv = vq[1 + dr:1 + t + dr, 1 + dc:1 + t + dc]
-            both = mc & nm
-            deg += both
-            nsum += np.where(both, nv, 0)
-        return pd.DataFrame([{
-            "source_id": source_id, "band": band,
-            "n": int(mc.sum()), "w_pairs": int(deg[mc].sum()),
-            "s1": int((vc * nsum)[mc].sum()),
-            "sdeg": int((deg * vc)[mc].sum()),
-            "sv": int(vc[mc].sum()), "svv": int((vc * vc)[mc].sum()),
-        }], columns=cols)
-
-    parts = _halo_pieces(tiles, 1, t) \
-        .groupBy("source_id", "band", "col", "row") \
-        .applyInPandas(run, _MORAN_SCHEMA)
+    moments = ("n", "w_pairs", "s1", "sdeg", "sv", "svv")
+    parts = focal_map(
+        tiles, 1, int(tile_size), partial(k_morans, qf=float(quant)),
+        ", ".join([_KEY_DDL, *(f"{c} bigint" for c in moments)]))
     return parts.groupBy("source_id", "band").agg(
-        F.sum("n").alias("n"), F.sum("w_pairs").alias("w_pairs"),
-        F.sum("s1").alias("s1"), F.sum("sdeg").alias("sdeg"),
-        F.sum("sv").alias("sv"), F.sum("svv").alias("svv"))
+        *(F.sum(c).alias(c) for c in moments))
 
 
 def k_euclidean_allocation(frame, t, col, row, *, r, mask_predicate, offs):

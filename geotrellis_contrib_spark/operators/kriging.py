@@ -17,9 +17,10 @@ Scale plan: the sample set is a constant-small dimension (dense-solve
 kriging is O(K^3) + O(K) per pixel — fail-loud past ``max_samples``;
 beyond that real systems switch to local-neighborhood kriging, which
 is a different operator). Samples are collected ONCE, the (K+1)^2
-system is inverted DRIVER-side, and (samples, inverse) close over one
-narrow Arrow map across the target tile grid — ZERO shuffle at any
-raster size, the kernel_density/IDW tier's plan shape.
+system is inverted DRIVER-side, and (samples, inverse) are bound to
+the per-tile kernel :func:`k_krige` that ``pixels.map_tiles`` runs over
+the target tile grid — ZERO shuffle at any raster size, the
+kernel_density/IDW tier's plan shape.
 
 Determinism contract (mirrored by the ``kriging`` SQL oracle — change
 one only with the other): the inverse is the ADJUGATE/DETERMINANT
@@ -34,12 +35,13 @@ floor(val * 2^20 + 0.5) and reduce as order-free integer sums.
 from __future__ import annotations
 
 import math
-from typing import Iterator
+from functools import partial
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from geotrellis_contrib_spark.operators.pixels import map_tiles
 
 Q_KRIG = 1048576.0  # 2^20 quantization grid
 
@@ -161,6 +163,35 @@ def kriging_system_inverse(samples: list[tuple[float, float, float]],
     return inv
 
 
+def k_krige(row: dict, t: int, zoom: int, pts: list, inv_np: list,
+            c0: float, c1: float, a: float) -> dict:
+    """One tile of :func:`kriging_interpolate`: the kriged value of every
+    pixel center (weights = inverse system x variogram column, fixed
+    summation order), quantized and summed."""
+    k = len(pts)
+    cx = np.arange(t, dtype=np.float64).reshape(1, -1)
+    cy = np.arange(t, dtype=np.float64).reshape(-1, 1)
+    px = int(row["col"]) * t + cx + 0.5
+    py = int(row["row"]) * t + cy + 0.5
+    b = []
+    for sx, sy, _ in pts:
+        dx = px - sx
+        dy = py - sy
+        h = np.sqrt(dx * dx + dy * dy)
+        b.append(gamma_spherical(h, c0, c1, a))
+    b.append(np.ones((t, t), dtype=np.float64))
+    valpx = None
+    for i in range(k):
+        w = None
+        for j in range(k + 1):
+            term = inv_np[i][j] * b[j]
+            w = term if w is None else w + term
+        term = w * pts[i][2]
+        valpx = term if valpx is None else valpx + term
+    q = np.floor(valpx * Q_KRIG + 0.5).astype(np.int64)
+    return {"zoom": zoom, "ksum": int(q.sum()), "n_px": int(q.size)}
+
+
 def kriging_interpolate(samples: DataFrame, zoom: int,
                         cols: tuple[int, int], rows: tuple[int, int],
                         c0: float = 0.0, c1: float = 1.0,
@@ -194,37 +225,7 @@ def kriging_interpolate(samples: DataFrame, zoom: int,
         (F.lit(c0t) + F.col("id") % nc).alias("col"),
         (F.lit(r0t) + F.floor(F.col("id") / nc)).alias("row"))
 
-    def interp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cx = np.arange(t, dtype=np.float64).reshape(1, -1)
-        cy = np.arange(t, dtype=np.float64).reshape(-1, 1)
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                px = int(row_t.col) * t + cx + 0.5
-                py = int(row_t.row) * t + cy + 0.5
-                b = []
-                for sx, sy, _ in pts:
-                    dx = px - sx
-                    dy = py - sy
-                    h = np.sqrt(dx * dx + dy * dy)
-                    b.append(gamma_spherical(h, c0, c1, a))
-                b.append(np.ones((t, t), dtype=np.float64))
-                valpx = None
-                for i in range(k):
-                    w = None
-                    for j in range(k + 1):
-                        term = inv_np[i][j] * b[j]
-                        w = term if w is None else w + term
-                    term = w * pts[i][2]
-                    valpx = term if valpx is None else valpx + term
-                q = np.floor(valpx * Q_KRIG + 0.5).astype(np.int64)
-                out.append({"zoom": int(zoom), "col": int(row_t.col),
-                            "row": int(row_t.row),
-                            "ksum": int(q.sum()),
-                            "n_px": int(q.size)})
-            yield pd.DataFrame(
-                out, columns=["zoom", "col", "row", "ksum", "n_px"])
-
-    return grid.mapInPandas(
-        interp, "zoom int, col bigint, row bigint, ksum bigint, "
-                "n_px bigint")
+    return map_tiles(
+        grid, partial(k_krige, t=t, zoom=int(zoom), pts=pts, inv_np=inv_np,
+                      c0=c0, c1=c1, a=a),
+        "zoom int, col bigint, row bigint, ksum bigint, n_px bigint")

@@ -5,15 +5,21 @@ The tile table carries packed pixel windows as ``binary`` columns
 ``Raster[MultibandTile]`` (SURVEY.md §1.1).
 
 Two drivers. Every narrow per-tile operator here, in ``render.py`` and in
-``local.py`` is a module-level numpy kernel ``k_<op>(row, **params)``
-bound with ``functools.partial`` and run by :func:`map_tiles` — ONE
-``mapInPandas`` stage that owns the Arrow batch loop, the ``px``
-unpack/pack and the row assembly (:func:`tile_batch`). The kernel gets a
-row as a dict with ``px`` unpacked and returns a dict (one row), a list
-of dicts (fan-out) or None (no row). A payload unpacks to ``h`` x ``w``
-when its row carries them (a window), else to the square its byte length
-gives; a ``tile_size`` argument places keys and windows, never the
-unpack. Kernels compose in Python, so a
+``local.py``, and every narrow loop over tile or tile-state rows of the
+other raster operators (the contour fan-out, the region and vectorize
+scans, viewshed's z planes and pair partials, cost_distance's round 0 and
+rollup, ``focal``'s halo-piece cut and its flow / fill rollups, the
+kriging surface, ``sources.geotiff.per_tile_checksum``) is a module-level
+numpy kernel ``k_<op>(row, **params)`` bound with ``functools.partial``
+and run by :func:`map_tiles` — ONE ``mapInPandas`` stage that owns the
+Arrow batch loop, the ``px`` unpack/pack and the row assembly
+(:func:`tile_batch`). The kernel gets a row as a dict with ``px``
+unpacked and returns a dict (one row), a list of dicts (fan-out) or None
+(no row). A payload unpacks to ``h`` x ``w`` when its row carries them (a
+window), else to the square its byte length gives; a ``tile_size``
+argument places keys and windows, never the unpack. Any other binary
+state column (``cost``, ``chosen``, ``acc``, ...) reaches the kernel as
+bytes and the kernel unpacks it. Kernels compose in Python, so a
 reproject∘resample∘convert chain (:func:`k_warp`) costs a single Arrow
 hop — the engine's version of GDAL warp-option fusion
 (/root/reference/gdal/.../GDALRasterSource.scala:114-126, SURVEY.md §2.4).
@@ -27,8 +33,14 @@ planes by ``source_idx``, unpacks them to a float64 ``(T, t, t)`` stack
 with its :func:`valid_px` mask, and assembles the rows. ``key`` holds
 each grouping column's value and, as an array in plane order, every
 other column but ``px``. A stack kernel returns what a tile kernel
-returns. Merge, the retile and overview assembles (:func:`_paste`), the
-polygon burn and the point stamps stay their own ``applyInPandas``.
+returns.
+
+Grouped bodies that keep their own ``applyInPandas``: merge, the retile
+and overview assembles (:func:`_paste`), the polygon burn and the point
+stamps here; contour's grid assemble; the scene solvers, ``focal_map``'s
+stencil, the halo-round relax and the contraction resolve in ``focal``
+(with the halo-round strip cut, which ``halo_rounds`` owns); viewshed's
+per-tile reduce; the vectorize ring trace.
 
 One NoData rule (:func:`valid_px`): a pixel is valid iff it is not NaN
 and not EXACTLY the tile's nodata — the rule the SQL oracles spell

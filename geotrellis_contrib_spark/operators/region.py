@@ -8,9 +8,10 @@ layers the reference's RasterSources produce (RasterSourceSpec tiling);
 the contrib tier owns the tiling plumbing this operator rides.
 
 Spark-first two-phase plan (the classic distributed CC-on-raster shape):
-  1. ``mapInPandas`` (ZERO shuffle): per tile, evaluate the mask, run a
-     vectorized in-tile min-label propagation (labels = global pixel ids,
-     so local labels are globally unique AND order-stable), emit
+  1. ``map_tiles`` (ZERO shuffle; :func:`k_region_scan`): per tile,
+     evaluate the mask, run a vectorized in-tile min-label propagation
+     (labels = global pixel ids, so local labels are globally unique AND
+     order-stable), emit
        * per-label pixel counts, and
        * the mask pixels on the tile's 1-px border with their labels —
      the only data the merge needs. Shuffle volume is O(border), not
@@ -29,15 +30,15 @@ component; all arithmetic is integer."""
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from functools import partial
+from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark.operators.cluster import connected_components
-from geotrellis_contrib_spark.operators.pixels import DTYPES, valid_px
+from geotrellis_contrib_spark.operators.pixels import map_tiles, valid_px
 
 
 def _local_labels(mask: np.ndarray, gp: np.ndarray) -> np.ndarray:
@@ -56,6 +57,52 @@ def _local_labels(mask: np.ndarray, gp: np.ndarray) -> np.ndarray:
             break
         lab = nxt
     return np.where(mask, lab, -1)
+
+
+def _tile_coords(row: dict, t: int) -> tuple[np.ndarray, np.ndarray]:
+    """(gr, gc) int64 global pixel coordinates of a t x t tile."""
+    rr, cc = np.indices((t, t), dtype=np.int64)
+    return int(row["row"]) * t + rr, int(row["col"]) * t + cc
+
+
+def _border(t: int) -> np.ndarray:
+    """The 1-px border cells of a t x t tile."""
+    b = np.ones((t, t), dtype=bool)
+    b[1:-1, 1:-1] = False
+    return b
+
+
+def _scan_mask(row: dict, predicate, t: int):
+    """(mask, gr, gc) of one tile: ``predicate(values, gr, gc)`` on its
+    valid pixels (float64 values)."""
+    arr = row["px"].astype(np.float64)
+    gr, gc = _tile_coords(row, t)
+    return predicate(arr, gr, gc) & valid_px(arr, row["nodata"]), gr, gc
+
+
+def k_region_scan(row: dict, predicate, t: int, npx: int) -> list[dict]:
+    """The zero-shuffle scan of :func:`region_stats`: the tile's mask
+    labelled in-tile by global pixel id, one kind-0 row per label (count,
+    in-tile adjacent pairs, bbox) and one kind-1 row per mask pixel on
+    the tile's 1-px border."""
+    mask, gr, gc = _scan_mask(row, predicate, t)
+    if not mask.any():
+        return []
+    lab = _local_labels(mask, gr * npx + gc)
+    out = []
+    for lv in np.unique(lab[mask]):
+        sel = lab == lv
+        pairs = int((sel[:, :-1] & sel[:, 1:]).sum()
+                    + (sel[:-1, :] & sel[1:, :]).sum())
+        out.append({"kind": 0, "gr": int(gr[sel].min()),
+                    "gc": int(gc[sel].min()), "gr2": int(gr[sel].max()),
+                    "gc2": int(gc[sel].max()), "n": int(sel.sum()),
+                    "pairs": pairs, "label": int(lv)})
+    for rr, cc in zip(*np.nonzero(mask & _border(t))):
+        out.append({"kind": 1, "gr": int(gr[rr, cc]), "gc": int(gc[rr, cc]),
+                    "gr2": 0, "gc2": 0, "n": 0, "pairs": 0,
+                    "label": int(lab[rr, cc])})
+    return out
 
 
 def region_group(tiles: DataFrame,
@@ -96,58 +143,11 @@ def region_stats(tiles: DataFrame,
     Returns (source_id, band, region_id, n_pixels, perimeter, gr_min,
     gr_max, gc_min, gc_max)."""
     t = int(tile_size)
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                        .reshape(t, t).astype(np.float64)
-                valid = valid_px(arr, row_t.nodata)
-                gr = (int(row_t.row) * t
-                      + np.arange(t).reshape(-1, 1)) * np.ones(
-                          (1, t), dtype=np.int64)
-                gc = np.ones((t, 1), dtype=np.int64) \
-                    * (int(row_t.col) * t + np.arange(t).reshape(1, -1))
-                gr = gr.astype(np.int64)
-                gc = gc.astype(np.int64)
-                mask = predicate(arr, gr, gc) & valid
-                if not mask.any():
-                    continue
-                gp = gr * npx + gc
-                lab = _local_labels(mask, gp)
-                # per-label stats: count, in-tile adjacent pairs, bbox
-                labs = np.unique(lab[mask])
-                for lv in labs:
-                    sel = lab == lv
-                    pairs = int((sel[:, :-1] & sel[:, 1:]).sum()
-                                + (sel[:-1, :] & sel[1:, :]).sum())
-                    out.append({"source_id": row_t.source_id,
-                                "band": int(row_t.band), "kind": 0,
-                                "gr": int(gr[sel].min()),
-                                "gc": int(gc[sel].min()),
-                                "gr2": int(gr[sel].max()),
-                                "gc2": int(gc[sel].max()),
-                                "n": int(sel.sum()), "pairs": pairs,
-                                "label": int(lv)})
-                border = np.zeros((t, t), dtype=bool)
-                border[0, :] = border[-1, :] = True
-                border[:, 0] = border[:, -1] = True
-                bm = mask & border
-                for rr, cc in zip(*np.nonzero(bm)):
-                    out.append({"source_id": row_t.source_id,
-                                "band": int(row_t.band), "kind": 1,
-                                "gr": int(gr[rr, cc]), "gc": int(gc[rr, cc]),
-                                "gr2": 0, "gc2": 0, "n": 0, "pairs": 0,
-                                "label": int(lab[rr, cc])})
-            yield pd.DataFrame(out, columns=[
-                "source_id", "band", "kind", "gr", "gc", "gr2", "gc2",
-                "n", "pairs", "label"])
-
-    rows = tiles.mapInPandas(
-        scan, "source_id string, band bigint, kind int, gr bigint, "
-              "gc bigint, gr2 bigint, gc2 bigint, n bigint, pairs bigint, "
-              "label bigint").cache()
+    rows = map_tiles(
+        tiles, partial(k_region_scan, predicate=predicate, t=t, npx=npx),
+        "source_id string, band bigint, kind int, gr bigint, gc bigint, "
+        "gr2 bigint, gc2 bigint, n bigint, pairs bigint, label bigint") \
+        .cache()
     stats = rows.filter(F.col("kind") == 0) \
         .select("source_id", "band", "label", "n", "pairs",
                 F.col("gr").alias("grmin"), F.col("gc").alias("gcmin"),

@@ -9,12 +9,13 @@ RasterSourceSpec tiling); this is the vector-side closer of the
 raster<->vector pair whose other half is ``pixels.rasterize_*``.
 
 Spark-first plan (every stage O(boundary), never O(pixels)):
-  1. ``mapInPandas`` scan, ZERO shuffle: per tile, in-tile min-label
-     components (region.py machinery), then vectorized numpy shifts
-     emit one row per exposed cell SIDE — resolved immediately where
-     the facing cell is in-tile, and as a CANDIDATE keyed by the
-     geometric unit segment where the facing cell lives in the next
-     tile. Border mask cells ride along for the label merge.
+  1. ``map_tiles`` scan (:func:`k_vectorize_scan`), ZERO shuffle: per
+     tile, in-tile min-label components (region.py machinery), then
+     vectorized numpy shifts emit one row per exposed cell SIDE —
+     resolved immediately where the facing cell is in-tile, and as a
+     CANDIDATE keyed by the geometric unit segment where the facing
+     cell lives in the next tile. Border mask cells ride along for the
+     label merge.
   2. Candidate cancellation: ONE groupBy on the segment key — two
      facing masked cells produce the same key (4-adjacent => same
      region, so the segment is interior: drop both); a lone row is a
@@ -40,7 +41,8 @@ gate is exact); ring/vertex order as above.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from functools import partial
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -48,8 +50,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark.operators.cluster import connected_components
-from geotrellis_contrib_spark.operators.pixels import DTYPES, valid_px
-from geotrellis_contrib_spark.operators.region import _local_labels
+from geotrellis_contrib_spark.operators.pixels import map_tiles
+from geotrellis_contrib_spark.operators.region import (
+    _border, _local_labels, _scan_mask)
 
 # (dr, dc) travel directions; region is on the RIGHT of travel
 _RIGHT = {(0, 1): (1, 0), (1, 0): (0, -1), (0, -1): (-1, 0),
@@ -191,6 +194,58 @@ def _assemble_wkt(edges: list[tuple[int, int, int, int]]) -> tuple:
     return len(rings), n_pixels, len(edges), wkt
 
 
+def k_vectorize_scan(row: dict, predicate, t: int, npx: int) -> list[dict]:
+    """The zero-shuffle scan of :func:`vectorize_regions`: the tile's
+    mask labelled in-tile (region.py machinery), one kind-0 row per
+    exposed cell side whose facing cell is in-tile, one kind-2 candidate
+    per side on a tile edge, and one kind-1 row per border mask cell
+    (``er``/``ec`` carry the CELL coords there) for the label merge."""
+    mask, gr, gc = _scan_mask(row, predicate, t)
+    if not mask.any():
+        return []
+    lab = _local_labels(mask, gr * npx + gc)
+    out = []
+
+    def emit(sel, ekind, er, ec, dr, kind=0):
+        for rr, cc in zip(*np.nonzero(sel)):
+            out.append({"kind": kind, "ekind": ekind, "er": int(er[rr, cc]),
+                        "ec": int(ec[rr, cc]), "dir": dr,
+                        "label": int(lab[rr, cc])})
+
+    # sides resolved in-tile (facing cell visible)
+    top = mask.copy()
+    top[1:, :] &= ~mask[:-1, :]
+    top[0, :] = False
+    bot = mask.copy()
+    bot[:-1, :] &= ~mask[1:, :]
+    bot[-1, :] = False
+    lft = mask.copy()
+    lft[:, 1:] &= ~mask[:, :-1]
+    lft[:, 0] = False
+    rgt = mask.copy()
+    rgt[:, :-1] &= ~mask[:, 1:]
+    rgt[:, -1] = False
+    emit(top, 0, gr, gc, 1)
+    emit(bot, 0, gr + 1, gc, -1)
+    emit(lft, 1, gr, gc, -1)
+    emit(rgt, 1, gr, gc + 1, 1)
+    # tile-edge sides: candidates (facing cell next tile)
+    edge = np.zeros((t, t), dtype=bool)
+    edge[0, :] = True
+    emit(mask & edge, 0, gr, gc, 1, kind=2)
+    edge[:] = False
+    edge[-1, :] = True
+    emit(mask & edge, 0, gr + 1, gc, -1, kind=2)
+    edge[:] = False
+    edge[:, 0] = True
+    emit(mask & edge, 1, gr, gc, -1, kind=2)
+    edge[:] = False
+    edge[:, -1] = True
+    emit(mask & edge, 1, gr, gc + 1, 1, kind=2)
+    emit(mask & _border(t), 0, gr, gc, 0, kind=1)
+    return out
+
+
 def vectorize_regions(tiles: DataFrame,
                       predicate: Callable[[np.ndarray, np.ndarray,
                                            np.ndarray], np.ndarray],
@@ -202,78 +257,10 @@ def vectorize_regions(tiles: DataFrame,
     — see the module docstring for the plan shape and the determinism
     contract the SQL oracle mirrors."""
     t = int(tile_size)
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row_t in pdf.itertuples(index=False):
-                arr = np.frombuffer(row_t.px, dtype=DTYPES[row_t.dtype]) \
-                        .reshape(t, t).astype(np.float64)
-                valid = valid_px(arr, row_t.nodata)
-                gr0, gc0 = int(row_t.row) * t, int(row_t.col) * t
-                gr = (gr0 + np.arange(t).reshape(-1, 1)) \
-                    * np.ones((1, t), dtype=np.int64)
-                gc = np.ones((t, 1), dtype=np.int64) \
-                    * (gc0 + np.arange(t).reshape(1, -1))
-                gr = gr.astype(np.int64)
-                gc = gc.astype(np.int64)
-                mask = predicate(arr, gr, gc) & valid
-                if not mask.any():
-                    continue
-                lab = _local_labels(mask, gr * npx + gc)
-
-                def emit(sel, ekind, er, ec, dr, kind=0):
-                    for rr, cc in zip(*np.nonzero(sel)):
-                        out.append({
-                            "source_id": row_t.source_id,
-                            "band": int(row_t.band), "kind": kind,
-                            "ekind": ekind, "er": int(er[rr, cc]),
-                            "ec": int(ec[rr, cc]), "dir": dr,
-                            "label": int(lab[rr, cc])})
-
-                # sides resolved in-tile (facing cell visible)
-                top = mask.copy()
-                top[1:, :] &= ~mask[:-1, :]
-                top[0, :] = False
-                bot = mask.copy()
-                bot[:-1, :] &= ~mask[1:, :]
-                bot[-1, :] = False
-                lft = mask.copy()
-                lft[:, 1:] &= ~mask[:, :-1]
-                lft[:, 0] = False
-                rgt = mask.copy()
-                rgt[:, :-1] &= ~mask[:, 1:]
-                rgt[:, -1] = False
-                emit(top, 0, gr, gc, 1)
-                emit(bot, 0, gr + 1, gc, -1)
-                emit(lft, 1, gr, gc, -1)
-                emit(rgt, 1, gr, gc + 1, 1)
-                # tile-edge sides: candidates (facing cell next tile)
-                edge = np.zeros((t, t), dtype=bool)
-                edge[0, :] = True
-                emit(mask & edge, 0, gr, gc, 1, kind=2)
-                edge[:] = False
-                edge[-1, :] = True
-                emit(mask & edge, 0, gr + 1, gc, -1, kind=2)
-                edge[:] = False
-                edge[:, 0] = True
-                emit(mask & edge, 1, gr, gc, -1, kind=2)
-                edge[:] = False
-                edge[:, -1] = True
-                emit(mask & edge, 1, gr, gc + 1, 1, kind=2)
-                # border mask cells for the label merge (kind 1; er/ec
-                # carry the CELL coords here)
-                border = np.zeros((t, t), dtype=bool)
-                border[0, :] = border[-1, :] = True
-                border[:, 0] = border[:, -1] = True
-                emit(mask & border, 0, gr, gc, 0, kind=1)
-            yield pd.DataFrame(out, columns=[
-                "source_id", "band", "kind", "ekind", "er", "ec",
-                "dir", "label"])
-
-    rows = tiles.mapInPandas(
-        scan, "source_id string, band bigint, kind int, ekind int, "
-              "er bigint, ec bigint, dir int, label bigint").cache()
+    rows = map_tiles(
+        tiles, partial(k_vectorize_scan, predicate=predicate, t=t, npx=npx),
+        "source_id string, band bigint, kind int, ekind int, er bigint, "
+        "ec bigint, dir int, label bigint").cache()
 
     # candidate cancellation: facing masked cells share the segment key
     # (same region by 4-adjacency) -> interior -> drop both

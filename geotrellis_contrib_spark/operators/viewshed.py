@@ -27,7 +27,7 @@ Output: per-tile (source_id, band, col, row, n_visible, n_valid)."""
 
 from __future__ import annotations
 
-from typing import Callable, Iterator  # noqa: F401
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 
 from geotrellis_contrib_spark.operators.focal import (
     _mosaic, _scene_small, _span)
-from geotrellis_contrib_spark.operators.pixels import DTYPES, valid_px
+from geotrellis_contrib_spark.operators.pixels import DTYPES, map_tiles, valid_px
 
 
 def _vs_scene(tiles: DataFrame, observer_fn, height: float,
@@ -123,6 +123,69 @@ def _vs_scene(tiles: DataFrame, observer_fn, height: float,
                "n_visible bigint, n_valid bigint")
 
 
+def _znorm(row: dict) -> np.ndarray:
+    """A tile's pixels as float64, NaN on NoData."""
+    a = row["px"].astype(np.float64)
+    return np.where(valid_px(a, row["nodata"]), a, np.nan)
+
+
+def k_vs_znorm(row: dict) -> dict:
+    """A target tile's own z plane (kind 0) for the per-tile reduce of
+    :func:`_vs_dist`."""
+    return {"kind": 0, "px": _znorm(row)}
+
+
+def k_vs_partial(row: dict, t: int, zbase: dict) -> dict | None:
+    """Step 3 of :func:`_vs_dist` for one (sample tile X, target tile T)
+    pair row: the max R3 slope of the samples that land in X, per target
+    of T, as a kind-1 partial keyed by T; None when no sample lands."""
+    ii, jj = (a.ravel().astype(np.float64) for a in np.indices((t, t)))
+    koff = np.arange(t + 5, dtype=np.float64)[None, :]
+    zx = _znorm(row)
+    ogr, ogc = float(row["ogr"]), float(row["ogc"])
+    zb = zbase[(row["source_id"], int(row["band"]))]
+    tgr = int(row["trow"]) * t + ii
+    tgc = int(row["tcol"]) * t + jj
+    dgr = tgr - ogr
+    dgc = tgc - ogc
+    n = np.maximum(np.abs(dgr), np.abs(dgc))
+    n_safe = np.maximum(n, 1.0)
+    sr = dgr / n_safe
+    sc = dgc / n_safe
+    # closed-form k-window on the MAJOR axis (|s| == 1), then exact
+    # floor checks on both axes
+    xr0, xr1 = int(row["xrow"]) * t, int(row["xrow"]) * t + t - 1
+    xc0, xc1 = int(row["xcol"]) * t, int(row["xcol"]) * t + t - 1
+    maj_r = np.abs(dgr) >= np.abs(dgc)
+    lo_r = np.where(sr > 0, (xr0 - ogr - 0.5) / np.where(
+        sr == 0, 1, sr), (xr1 + 0.5 - ogr) / np.where(sr == 0, 1, sr))
+    lo_c = np.where(sc > 0, (xc0 - ogc - 0.5) / np.where(
+        sc == 0, 1, sc), (xc1 + 0.5 - ogc) / np.where(sc == 0, 1, sc))
+    ka = np.where(maj_r, lo_r, lo_c)
+    ka = np.floor(ka).astype(np.int64) - 2
+    ka = np.maximum(ka, 1)
+    ks = ka[:, None].astype(np.float64) + koff  # (N, t+5)
+    act = ks <= (n[:, None] - 1.0)
+    # EXACTLY the scene sweep's expression, association and all:
+    # floor(ogr + (k*dgr)/n + 0.5) — k*(dgr/n) could round differently
+    # and break bit parity
+    rr = np.floor(ogr + (ks * dgr[:, None]) / n_safe[:, None] + 0.5)
+    cc = np.floor(ogc + (ks * dgc[:, None]) / n_safe[:, None] + 0.5)
+    inx = (act & (rr >= xr0) & (rr <= xr1) & (cc >= xc0) & (cc <= xc1))
+    if not inx.any():
+        return None
+    zi = zx[np.clip(rr - xr0, 0, t - 1).astype(np.int64),
+            np.clip(cc - xc0, 0, t - 1).astype(np.int64)]
+    with np.errstate(invalid="ignore", divide="ignore"):
+        slope = (zi - zb) / ks
+    slope = np.where(inx & ~np.isnan(zi), slope, -np.inf)
+    ms = slope.max(axis=1)
+    if not np.isfinite(ms).any():
+        return None
+    return {"col": int(row["tcol"]), "row": int(row["trow"]), "kind": 1,
+            "px": ms.reshape(t, t)}
+
+
 def _vs_dist(tiles: DataFrame, observer_fn, height: float,
              tile_size: int) -> DataFrame:
     """Distributed R3 viewshed (NO scene-size bound): the sample-index
@@ -151,8 +214,6 @@ def _vs_dist(tiles: DataFrame, observer_fn, height: float,
     Bit-identical to the scene sweep (pytest parity): same global-floor
     sample rule, same transparent-NoData rule, same >= comparison."""
     from pyspark.sql import functions as F
-
-    from geotrellis_contrib_spark.operators.pixels import pack
 
     t = int(tile_size)
 
@@ -225,95 +286,16 @@ def _vs_dist(tiles: DataFrame, observer_fn, height: float,
                    "kind int, px binary")
 
     # --- 3. per-pair partial max slopes --------------------------------
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ii, jj = np.meshgrid(np.arange(t), np.arange(t), indexing="ij")
-        ii = ii.ravel().astype(np.float64)
-        jj = jj.ravel().astype(np.float64)
-        koff = np.arange(t + 5, dtype=np.float64)[None, :]
-        for pdf in batches:
-            out = []
-            zcache: dict[tuple, np.ndarray] = {}
-            for r in pdf.itertuples(index=False):
-                ck = (r.source_id, int(r.band), int(r.xcol), int(r.xrow))
-                zx = zcache.get(ck)
-                if zx is None:
-                    a = np.frombuffer(r.px, dtype=DTYPES[r.dtype]) \
-                          .reshape(t, t).astype(np.float64)
-                    zx = np.where(valid_px(a, r.nodata), a, np.nan)
-                    zcache[ck] = zx
-                ogr, ogc = float(r.ogr), float(r.ogc)
-                zb = zbase[(r.source_id, int(r.band))]
-                tgr = int(r.trow) * t + ii
-                tgc = int(r.tcol) * t + jj
-                dgr = tgr - ogr
-                dgc = tgc - ogc
-                n = np.maximum(np.abs(dgr), np.abs(dgc))
-                n_safe = np.maximum(n, 1.0)
-                sr = dgr / n_safe
-                sc = dgc / n_safe
-                # closed-form k-window on the MAJOR axis (|s| == 1),
-                # then exact floor checks on both axes
-                xr0, xr1 = int(r.xrow) * t, int(r.xrow) * t + t - 1
-                xc0, xc1 = int(r.xcol) * t, int(r.xcol) * t + t - 1
-                maj_r = np.abs(dgr) >= np.abs(dgc)
-                lo_r = np.where(sr > 0, (xr0 - ogr - 0.5) / np.where(
-                    sr == 0, 1, sr), (xr1 + 0.5 - ogr) / np.where(
-                    sr == 0, 1, sr))
-                lo_c = np.where(sc > 0, (xc0 - ogc - 0.5) / np.where(
-                    sc == 0, 1, sc), (xc1 + 0.5 - ogc) / np.where(
-                    sc == 0, 1, sc))
-                ka = np.where(maj_r, lo_r, lo_c)
-                ka = np.floor(ka).astype(np.int64) - 2
-                ka = np.maximum(ka, 1)
-                ks = ka[:, None].astype(np.float64) + koff  # (N, t+5)
-                act = ks <= (n[:, None] - 1.0)
-                # EXACTLY the scene sweep's expression, association and
-                # all: floor(ogr + (k*dgr)/n + 0.5) — k*(dgr/n) could
-                # round differently and break bit parity
-                rr = np.floor(ogr + (ks * dgr[:, None])
-                              / n_safe[:, None] + 0.5)
-                cc = np.floor(ogc + (ks * dgc[:, None])
-                              / n_safe[:, None] + 0.5)
-                inx = (act & (rr >= xr0) & (rr <= xr1)
-                       & (cc >= xc0) & (cc <= xc1))
-                if not inx.any():
-                    continue
-                zi = zx[np.clip(rr - xr0, 0, t - 1).astype(np.int64),
-                        np.clip(cc - xc0, 0, t - 1).astype(np.int64)]
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    slope = (zi - zb) / ks
-                slope = np.where(inx & ~np.isnan(zi), slope, -np.inf)
-                ms = slope.max(axis=1)
-                if not np.isfinite(ms).any():
-                    continue
-                out.append({"source_id": r.source_id, "band": int(r.band),
-                            "col": int(r.tcol), "row": int(r.trow),
-                            "kind": 1, "px": pack(ms.reshape(t, t))})
-            yield pd.DataFrame(out, columns=["source_id", "band", "col",
-                                             "row", "kind", "px"])
-
     # The pair table is ~1k rows carrying one 32 KB blob each — byte-based
     # AQE folds it into 1-2 partitions and the whole k-sweep runs on one
     # core; spread it to the session parallelism first (r7).
     from geotrellis_contrib_spark.util import compute_grouped, compute_spread
 
-    partials = compute_spread(pairs).mapInPandas(partial, part_schema)
+    partials = map_tiles(compute_spread(pairs),
+                         partial(k_vs_partial, t=t, zbase=zbase), part_schema)
 
     # --- 4. reduce per target tile -------------------------------------
-    def znorm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = np.frombuffer(r.px, dtype=DTYPES[r.dtype]) \
-                      .reshape(t, t).astype(np.float64)
-                out.append({"source_id": r.source_id, "band": int(r.band),
-                            "col": int(r.col), "row": int(r.row),
-                            "kind": 0,
-                            "px": pack(np.where(valid_px(a, r.nodata), a, np.nan))})
-            yield pd.DataFrame(out, columns=["source_id", "band", "col",
-                                             "row", "kind", "px"])
-
-    zt = tiles.mapInPandas(znorm, part_schema)
+    zt = map_tiles(tiles, k_vs_znorm, part_schema)
     allp = zt.unionByName(partials)
 
     def reduce_tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:

@@ -1255,33 +1255,29 @@ def read_catalog_tiles(catalog):
                "px binary")
 
 
+def k_tile_qsum(row: dict, quant: float) -> dict:
+    """One tile's NoData-aware quantize-first checksum and valid count."""
+    from geotrellis_contrib_spark.operators.pixels import qsum, valid_px
+
+    arr = row["px"].astype(np.float64)
+    valid = valid_px(arr, row["nodata"])
+    return {"px_qsum": qsum(arr, valid, quant), "px_count": int(valid.sum())}
+
+
 def per_tile_checksum(tiles, quant: float = 4.0):
     """Per-tile NoData-aware quantized checksum (default quant*value=4v
     is exact int64 on the quarter-multiple fixtures; pass 2^20 for
     quotient-valued tiles) — ZERO shuffle: one output row per input
     tile, so tile placement (col,row) and every decoded byte sit under
     the value gate."""
-    import pandas as pd
+    from functools import partial
 
-    from geotrellis_contrib_spark.operators.pixels import DTYPES, qsum, valid_px
+    from geotrellis_contrib_spark.operators.pixels import map_tiles
 
-    def stats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = []
-            for t in pdf.itertuples(index=False):
-                arr = np.frombuffer(t.px, dtype=DTYPES[t.dtype]) \
-                    .astype(np.float64)
-                valid = valid_px(arr, t.nodata)
-                out.append({"source_id": t.source_id, "band": int(t.band),
-                            "col": int(t.col), "row": int(t.row),
-                            "px_qsum": qsum(arr, valid, float(quant)),
-                            "px_count": int(valid.sum())})
-            yield pd.DataFrame(out, columns=["source_id", "band", "col",
-                                             "row", "px_qsum", "px_count"])
-
-    return tiles.mapInPandas(
-        stats, "source_id string, band int, col bigint, row bigint, "
-               "px_qsum bigint, px_count bigint")
+    return map_tiles(
+        tiles, partial(k_tile_qsum, quant=float(quant)),
+        "source_id string, band int, col bigint, row bigint, "
+        "px_qsum bigint, px_count bigint")
 
 
 def write_scene_geotiffs(tiles, out_dir: str, tile_size: int = 64,

@@ -120,15 +120,15 @@ def assemble_target(rows, target) -> np.ndarray:
 
 
 def replay_tiles(rows, kernel, ddl: str):
-    """``pixels.map_tiles`` without Spark: ``rows`` (dicts whose ``px`` is
-    an array) as ONE pandas batch through the driver's own batch body,
-    ``pixels.tile_batch``, with the output columns of the flat DDL."""
+    """``pixels.map_tiles`` without Spark: ``rows`` (dicts whose ``px``, if
+    any, is an array) as ONE pandas batch through the driver's own batch
+    body, ``pixels.tile_batch``, with the output columns of the flat DDL."""
     import pandas as pd
 
     from geotrellis_contrib_spark.operators import pixels as px
 
     pdf = pd.DataFrame([{**r, "dtype": r["px"].dtype.name, "px": px.pack(r["px"])}
-                        for r in rows])
+                        if "px" in r else r for r in rows])
     return px.tile_batch(pdf, kernel, [f.split()[0] for f in ddl.split(",")])
 
 

@@ -190,3 +190,49 @@ def test_kcore_dense_deterministic_graph(spark, caplog):
     got = {r.node: r.coreness for r in kcore(df).collect()}
     assert got == _peel_coreness(edges)
     _assert_sums_decrease_then_repeat(caplog)
+
+
+def _executed_plans(spark, fn):
+    """Run ``fn()`` and return the final physical plan text of every SQL
+    execution it started, in execution order."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        lst = store.executionsList()
+        return {lst.apply(i).executionId(): lst.apply(i)
+                for i in range(lst.size())}
+
+    before = set(executions())
+    fn()
+    return [e.physicalPlanDescription()
+            for i, e in sorted(executions().items()) if i not in before]
+
+
+@pytest.mark.parametrize("op", ["kcore", "mst_boruvka"])
+def test_iterative_joins_stay_broadcast(spark, op):
+    """kcore and mst_boruvka keep the count that feeds
+    ``broadcast_if_small``: without it Catalyst's size estimate of the
+    iterated frame is far above the broadcast threshold and half their
+    joins turn into sort-merge joins (ROADMAP D8). Every query they
+    execute joins by broadcast."""
+    from geotrellis_contrib_spark import corpus as corpus_mod
+
+    if op == "kcore":
+        df = spark.createDataFrame(corpus_mod.synth_core_edges(),
+                                   "src long, dst long")
+        run = lambda: cl.kcore(df).collect()  # noqa: E731
+    else:
+        pairs = [(a, b) for a in range(18) for b in range(a + 1, 18)
+                 if (a * 5 + b * 3) % 4 == 0]  # test_mst's dense graph
+        edges = [(a, b, 500 + 7 * i) for i, (a, b) in enumerate(pairs, 1)]
+        df = spark.createDataFrame(edges, "src long, dst long, w long")
+        run = lambda: cl.mst_boruvka(df).collect()  # noqa: E731
+    plans = _executed_plans(spark, run)
+    assert len(plans) == 10
+    shuffled = [p for p in plans if any(j in p for j in (
+        "SortMergeJoin", "ShuffledHashJoin", "BroadcastNestedLoopJoin",
+        "CartesianProduct"))]
+    assert not shuffled, shuffled[0]
+    assert sum("BroadcastHashJoin" in p for p in plans) >= 2

@@ -3,6 +3,7 @@ saddle orientations), tiled-vs-stitched equivalence across boundaries,
 NoData suppression, endpoint-on-edge invariants."""
 import numpy as np
 
+from conftest import count_jobs
 from geotrellis_contrib_spark import corpus as corpus_mod
 from geotrellis_contrib_spark.operators import contour as CT
 
@@ -45,8 +46,10 @@ def test_single_block_cases():
 def test_tiled_equals_stitched(spark):
     tiles = (corpus_mod.synth_px_tiles(spark, tile_size=64)
              .filter("source_idx = 0 AND band = 0"))
-    got = sorted(tuple(r) for r in
-                 CT.contour_segments(tiles, iso=240.0625).collect())
+    jobs, rows = count_jobs(
+        spark, CT.contour_segments(tiles, iso=240.0625).collect)
+    assert jobs == 2  # the fan-out and grid solve run in the collect's job
+    got = sorted(tuple(r) for r in rows)
     # stitch the full 256x256 scene and run the kernel once
     full = np.full((257, 257), np.nan)
     r_i = np.arange(64).reshape(-1, 1)

@@ -1,5 +1,5 @@
 """Spark-free replay of ``focal.contract``: the halo cut and the per-tile
-resolve run through pandas (one batch for ``mapInPandas``,
+resolve run through pandas (one batch for ``map_tiles``,
 ``groupby(key)`` for the grouped map), the border table pointer-doubles
 in numpy the way ``plans.iterate.border_doubling`` joins it, and each
 row to resolve joins the border at its chain end. On a 3x4-tile scene
@@ -17,7 +17,7 @@ import pandas as pd
 
 from geotrellis_contrib_spark.operators import costdistance as CD
 from geotrellis_contrib_spark.operators import focal as FO
-from geotrellis_contrib_spark.operators.pixels import pack
+from geotrellis_contrib_spark.operators.pixels import pack, tile_batch
 
 T = 8
 NR, NC = 3, 4
@@ -52,8 +52,8 @@ def _cut(plane, tiles, nodata=NODATA):
                                                  tc * T:(tc + 1) * T]),
                              nodata, a))}
         for c0 in COPIES for tr, tc in tiles])
-    return pd.concat(list(FO._piece_cut(1, T)(iter([table]))),
-                     ignore_index=True)
+    return tile_batch(table, partial(FO.k_halo_pieces, r=1),
+                      [f.split()[0] for f in FO._PIECE_DDL.split(",")])
 
 
 def _border_doubling(border, hops):

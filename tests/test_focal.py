@@ -18,6 +18,7 @@ from geotrellis_contrib_spark.operators import focal as FO
 
 T = 64
 NOD = -9999.0
+Q = 1048576.0  # 2^20, the checksum quantization of the focal operators
 
 
 def _mosaic(s: int, band: int) -> np.ndarray:
@@ -79,7 +80,7 @@ def test_focal_matches_untiled_bruteforce(spark, op):
                 for tr in range(4):
                     blk = focal[tr * T:(tr + 1) * T, tc * T:(tc + 1) * T]
                     m = ~np.isnan(blk)
-                    want_sum = int(np.floor(blk[m] * FO._Q + 0.5)
+                    want_sum = int(np.floor(blk[m] * Q + 0.5)
                                    .astype(np.int64).sum())
                     key = (f"scene-{s}", band, 18 + s + tc, 24 + tr)
                     assert got[key] == (want_sum, int(m.sum())), (op, key)
@@ -95,7 +96,7 @@ def test_focal_radius2_boundary(spark):
     focal, _ = _brute(_mosaic(1, 0), "mean", r=2)
     blk = focal[0:T, T:2 * T]  # tile (col 20, row 24) of scene-1
     m = ~np.isnan(blk)
-    want = int(np.floor(blk[m] * FO._Q + 0.5).astype(np.int64).sum())
+    want = int(np.floor(blk[m] * Q + 0.5).astype(np.int64).sum())
     assert got[("scene-1", 0, 20, 24)] == (want, int(m.sum()))
 
 
@@ -161,7 +162,7 @@ def test_focal_median_matches_untiled_bruteforce(spark):
             for tr in range(4):
                 blk = med[tr * T:(tr + 1) * T, tc * T:(tc + 1) * T]
                 m = ~np.isnan(blk)
-                want = (int(np.floor(blk[m] * FO._Q + 0.5)
+                want = (int(np.floor(blk[m] * Q + 0.5)
                             .astype(np.int64).sum()), int(m.sum()))
                 assert got[(f"scene-{s}", 1, 18 + s + tc, 24 + tr)] == want
 
@@ -202,8 +203,8 @@ def test_terrain_matches_untiled_bruteforce(spark):
                 sl = slope[tr * T:(tr + 1) * T, tc * T:(tc + 1) * T]
                 asp = aspect[tr * T:(tr + 1) * T, tc * T:(tc + 1) * T]
                 m = ok[tr * T:(tr + 1) * T, tc * T:(tc + 1) * T]
-                want = (int(np.floor(sl[m] * FO._Q + 0.5).astype(np.int64).sum()),
-                        int(np.floor(asp[m] * FO._Q + 0.5).astype(np.int64).sum()),
+                want = (int(np.floor(sl[m] * Q + 0.5).astype(np.int64).sum()),
+                        int(np.floor(asp[m] * Q + 0.5).astype(np.int64).sum()),
                         int(m.sum()))
                 assert got[(f"scene-{s}", 1, 18 + s + tc, 24 + tr)] == want
     # slope is nontrivial (the fixture gradient bites) and aspect spans
@@ -239,7 +240,7 @@ def test_tri_tpi_roughness_matches_untiled_bruteforce(spark):
                 m = ok[tr * T:(tr + 1) * T, tc * T:(tc + 1) * T]
                 want = tuple(
                     int(np.floor(x[tr * T:(tr + 1) * T, tc * T:(tc + 1) * T][m]
-                                 * FO._Q + 0.5).astype(np.int64).sum())
+                                 * Q + 0.5).astype(np.int64).sum())
                     for x in (tri, tpi, rough)) + (int(m.sum()),)
                 assert got[(f"scene-{s}", 1, 18 + s + tc, 24 + tr)] == want
     # the kernels must bite: TRI and roughness strictly positive on this
@@ -277,7 +278,7 @@ def test_hillshade_matches_untiled_bruteforce(spark):
         for tr in range(4):
             blk = sh[tr * T:(tr + 1) * T, tc * T:(tc + 1) * T]
             m = ok[tr * T:(tr + 1) * T, tc * T:(tc + 1) * T]
-            want = (int(np.floor(blk[m] * FO._Q + 0.5).astype(np.int64).sum()),
+            want = (int(np.floor(blk[m] * Q + 0.5).astype(np.int64).sum()),
                     int(m.sum()))
             assert got[("scene-1", 0, 19 + tc, 24 + tr)] == want
     # the fixture slopes face a consistent direction — shading must vary
@@ -316,7 +317,7 @@ def test_focal_stddev_matches_untiled_bruteforce(spark):
             for tr in range(4):
                 blk = std[tr * T:(tr + 1) * T, tc * T:(tc + 1) * T]
                 msk = ~np.isnan(blk)
-                want = (int(np.floor(blk[msk] * FO._Q + 0.5)
+                want = (int(np.floor(blk[msk] * Q + 0.5)
                             .astype(np.int64).sum()), int(msk.sum()))
                 assert got[(f"scene-{s}", 0, 18 + s + tc, 24 + tr)] == want
 
@@ -348,7 +349,7 @@ def test_focal_mode_matches_untiled_bruteforce(spark):
         for tr in range(4):
             blk = mode[tr * T:(tr + 1) * T, tc * T:(tc + 1) * T]
             msk = ~np.isnan(blk)
-            want = (int(np.floor(blk[msk] * FO._Q + 0.5)
+            want = (int(np.floor(blk[msk] * Q + 0.5)
                         .astype(np.int64).sum()), int(msk.sum()))
             assert got[(f"scene-{s}", band, 18 + s + tc, 24 + tr)] == want
 
@@ -383,7 +384,7 @@ def test_focal_conv_matches_untiled_bruteforce(spark):
             for tr in range(4):
                 blk = conv[tr * T:(tr + 1) * T, tc * T:(tc + 1) * T]
                 msk = ~np.isnan(blk)
-                want = (int(np.floor(blk[msk] * FO._Q + 0.5)
+                want = (int(np.floor(blk[msk] * Q + 0.5)
                             .astype(np.int64).sum()), int(msk.sum()))
                 assert got[(f"scene-{s}", 0, 18 + s + tc, 24 + tr)] == want
 
@@ -435,7 +436,7 @@ def test_focal_circle_annulus_bruteforce(spark, shape, ir):
                 for tr in range(4):
                     blk = focal[tr * T:(tr + 1) * T, tc * T:(tc + 1) * T]
                     m = ~np.isnan(blk)
-                    want = int(np.floor(blk[m] * FO._Q + 0.5)
+                    want = int(np.floor(blk[m] * Q + 0.5)
                                .astype(np.int64).sum())
                     key = (f"scene-{s}", band, 18 + s + tc, 24 + tr)
                     assert got[key] == (want, int(m.sum())), (shape, key)
@@ -512,7 +513,7 @@ def test_focal_wedge_bruteforce(spark):
                         blk = focal[tr * T:(tr + 1) * T,
                                     tc * T:(tc + 1) * T]
                         m = ~np.isnan(blk)
-                        want = int(np.floor(blk[m] * FO._Q + 0.5)
+                        want = int(np.floor(blk[m] * Q + 0.5)
                                    .astype(np.int64).sum())
                         key = (f"scene-{s}", band, 18 + s + tc, 24 + tr)
                         assert got[key] == (want, int(m.sum())), \
@@ -563,11 +564,11 @@ def test_curvature_matches_untiled_bruteforce(spark):
                       slice(tc * T, (tc + 1) * T))
                 m = ok[sl]
                 want = (
-                    int(np.floor(prof[sl][m] * FO._Q + 0.5)
+                    int(np.floor(prof[sl][m] * Q + 0.5)
                         .astype(np.int64).sum()),
-                    int(np.floor(plan[sl][m] * FO._Q + 0.5)
+                    int(np.floor(plan[sl][m] * Q + 0.5)
                         .astype(np.int64).sum()),
-                    int(np.floor(total[sl][m] * FO._Q + 0.5)
+                    int(np.floor(total[sl][m] * Q + 0.5)
                         .astype(np.int64).sum()),
                     int(m.sum()))
                 assert got[(f"scene-{s}", 0, 18 + s + tc, 24 + tr)] == want

@@ -11,6 +11,7 @@ import zlib
 import numpy as np
 import pytest
 
+from conftest import count_jobs
 from geotrellis_contrib_spark import corpus
 from geotrellis_contrib_spark.sources import geotiff as GT
 
@@ -212,12 +213,16 @@ def test_lzw_catalog_read_parity(tmp_path, spark):
     checksums as the synth_px_tiles parquet path (x4 int32 quantized)."""
     specs = corpus.synth_geotiff_scenes_lzw(str(tmp_path))
     cat = GT.geotiff_tile_catalog(spark, specs)
+    jobs_cat, rows = count_jobs(spark, GT.per_tile_checksum(
+        GT.read_catalog_tiles(cat), quant=1.0).collect)
     got = {(r.source_id, r.band, r.col, r.row): (r.px_qsum, r.px_count)
-           for r in GT.per_tile_checksum(
-               GT.read_catalog_tiles(cat), quant=1.0).collect()}
+           for r in rows}
     tiles = corpus.synth_px_tiles(spark, tile_size=64)
+    jobs_px, rows = count_jobs(
+        spark, GT.per_tile_checksum(tiles, quant=4.0).collect)
     want = {(r.source_id, r.band, r.col, r.row): (r.px_qsum, r.px_count)
-            for r in GT.per_tile_checksum(tiles, quant=4.0).collect()}
+            for r in rows}
+    assert (jobs_cat, jobs_px) == (1, 1)  # zero-shuffle: one job each
     assert got == want and len(got) == 96
 
 

@@ -66,3 +66,21 @@ def test_numpy_replay_and_sign(spark):
             num = (s1 - 2.0 * m * sdeg + m * m * w) / w
             den = (svv - n * m * m) / n
             assert 0.5 < num / den <= 1.001
+
+
+def test_k_morans_tiles_sum_to_scene():
+    """The per-tile kernel on each tile's 1-px halo frame: the tiles'
+    moments add up to the whole scene's (pairs across tile edges are
+    counted once from each side, as in the scene sum)."""
+    rng = np.random.default_rng(5)
+    t = 4
+    z = rng.integers(0, 20, size=(2 * t, 3 * t)) / 4.0
+    z[2, 5] = np.nan
+    zp = np.pad(z, 1, constant_values=np.nan)
+    tot = np.zeros(6, dtype=np.int64)
+    for tr in range(2):
+        for tc in range(3):
+            got = FO.k_morans(zp[tr * t:tr * t + t + 2, tc * t:tc * t + t + 2],
+                              t, tc, tr, qf=4.0)
+            tot += [got[k] for k in ("n", "w_pairs", "s1", "sdeg", "sv", "svv")]
+    assert tuple(int(v) for v in tot) == _moments_np(z)

@@ -8,6 +8,7 @@ from collections import deque
 
 import numpy as np
 
+from conftest import count_jobs
 from geotrellis_contrib_spark import corpus
 from geotrellis_contrib_spark.operators import region as RG
 
@@ -60,6 +61,15 @@ def _brute_regions(s: int, band: int, pred) -> dict:
     return regions
 
 
+def _cached_tiles(spark):
+    """The fixture tiles, cached and materialized: a job pin then counts
+    the operator's own jobs whatever earlier tests left in the cache
+    (test_pixels caches the same plan)."""
+    tiles = corpus.synth_px_tiles(spark, tile_size=T).cache()
+    tiles.count()
+    return tiles
+
+
 def test_region_group_matches_untiled_bfs(spark):
     pred = lambda vals, gr, gc: (gr % 11 < 3) & (gc % 9 < 3)  # noqa: E731
     tiles = corpus.synth_px_tiles(spark, tile_size=T)
@@ -76,8 +86,12 @@ def test_region_group_long_snake(spark):
     # chained multi-tile merges through the doubling CC (not just one
     # boundary hop)
     pred = lambda vals, gr, gc: (gc % 100 == 0)  # noqa: E731
-    tiles = corpus.synth_px_tiles(spark, tile_size=T)
-    out = RG.region_group(tiles, pred, tile_size=T, npx=NPX).collect()
+    tiles = _cached_tiles(spark)
+    jobs, out = count_jobs(spark, lambda: RG.region_group(
+        tiles, pred, tile_size=T, npx=NPX).collect())
+    # AQE submits the label merge's stage jobs asynchronously, so
+    # identical runs read 13 or 15
+    assert 13 <= jobs <= 15
     eng = {r["region_id"]: r["n_pixels"] for r in out
            if r["source_id"] == "scene-1" and r["band"] == 0}
     assert eng == _brute_regions(1, 0, pred)
@@ -97,8 +111,10 @@ def test_region_stats_matches_untiled_bfs(spark):
     cross-tile pair restriction ((gc+1)%t==0 etc.) is exactly what a
     double count would break."""
     pred = lambda vals, gr, gc: (gr % 11 < 3) & (gc % 9 < 3)  # noqa: E731
-    tiles = corpus.synth_px_tiles(spark, tile_size=T)
-    out = RG.region_stats(tiles, pred, tile_size=T, npx=NPX).collect()
+    tiles = _cached_tiles(spark)
+    jobs, out = count_jobs(spark, lambda: RG.region_stats(
+        tiles, pred, tile_size=T, npx=NPX).collect())
+    assert jobs == 21
     for s in range(3):
         for band in range(2):
             eng = {r["region_id"]: (r["n_pixels"], r["perimeter"],

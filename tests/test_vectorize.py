@@ -10,6 +10,7 @@ import re
 import numpy as np
 import pytest
 
+from conftest import count_jobs
 from geotrellis_contrib_spark.operators.pixels import pack
 from geotrellis_contrib_spark.operators.vectorize import (
     _pip, vectorize_regions)
@@ -110,9 +111,10 @@ def test_vectorize_random_masks_fill_exact(spark):
     mask[55:75, 55:75] = False
     mask[60, 60] = True            # island inside the hole
     mask[56, 56] = False           # (already false; keep determinism)
-    rows = vectorize_regions(_tiles_df(spark, mask),
-                             predicate=lambda a, gr, gc: a > 0.5,
-                             tile_size=T).collect()
+    tiles = _tiles_df(spark, mask)
+    jobs, rows = count_jobs(spark, lambda: vectorize_regions(
+        tiles, predicate=lambda a, gr, gc: a > 0.5, tile_size=T).collect())
+    assert jobs == 15
     _check_against_mask(rows, mask)
 
 

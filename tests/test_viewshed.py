@@ -4,6 +4,7 @@ plus ridge-occlusion sanity and fail-loud guards."""
 import numpy as np
 import pytest
 
+from conftest import count_jobs
 from geotrellis_contrib_spark import corpus
 from geotrellis_contrib_spark.operators import viewshed as VS
 
@@ -179,9 +180,12 @@ def test_dist_parity(spark):
     key = lambda r: (r.source_id, r.band, r.col, r.row)  # noqa: E731
     scene = {key(r): (r.n_visible, r.n_valid)
              for r in VS.viewshed(tiles, obs, tile_size=64).collect()}
-    dist = {key(r): (r.n_visible, r.n_valid)
-            for r in VS.viewshed(tiles, obs, tile_size=64,
-                                 max_px=0).collect()}
+    jobs, rows = count_jobs(spark, lambda: VS.viewshed(
+        tiles, obs, tile_size=64, max_px=0).collect())
+    # AQE submits the pair join's stage jobs asynchronously, so identical
+    # runs read 13 or 14
+    assert 13 <= jobs <= 14
+    dist = {key(r): (r.n_visible, r.n_valid) for r in rows}
     assert scene == dist and len(dist) == 96
 
 
