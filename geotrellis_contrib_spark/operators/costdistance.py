@@ -15,7 +15,7 @@ Spark-first plan — synchronous tile rounds with halo exchange on
     zero shuffle — cost needs no halo);
   round k: the driver cuts the 1-px edge strips of (cost, friction) of
     every tile that improved last round, plus each tile's own state,
-    into ONE ``groupBy(source,band,col,row).applyInPandas`` shuffle; the
+    into ONE grouped-map shuffle on the tile key; the
     relax kernel ``k_cost_relax`` re-relaxes each (t+2)^2 frame against
     the neighbor costs (a memory-less ring: NaN friction, +inf cost
     where no strip arrived) and the driver reports whether anything
@@ -44,16 +44,14 @@ from functools import partial
 from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark.operators.focal import (
-    _KEY_DDL, _NEIGHBORS, _assemble_frame, _halo_pieces, _mosaic,
-    _scene_small, _span, contract, halo_rounds)
+    _KEY_DDL, _NEIGHBORS, _assemble_frame, _grid, _halo_pieces, _per_tile,
+    _scene_small, contract, halo_rounds, scene_tiles)
 from geotrellis_contrib_spark.operators.pixels import map_tiles, pack, qsum, valid_px
-from geotrellis_contrib_spark.operators.region import _tile_coords
-from geotrellis_contrib_spark.util import compute_grouped, compute_spread
+from geotrellis_contrib_spark.util import compute_spread
 
 
 def _relax(cost: np.ndarray, fric: np.ndarray, straight: float,
@@ -104,18 +102,36 @@ _COST_ROUNDS = dict(
     offers=lambda piece: bool(np.isfinite(piece["cost"]).any()))
 
 
+def _check_friction(fric: np.ndarray) -> None:
+    """Every valid friction cell must be positive: with zero friction the
+    exact optimality equation holds in both directions and the backtrack
+    can ping-pong between equal-cost cells (r5 ADVICE)."""
+    if not np.all(np.isnan(fric)) and float(np.nanmin(fric)) <= 0.0:
+        raise ValueError("friction must be positive")
+
+
+def _seed_relax(fric: np.ndarray, r0: int, c0: int, t: int, seed_predicate,
+                straight: float, diag: float,
+                max_cost: float | None) -> np.ndarray:
+    """The cost of a friction block (NaN = impassable) whose top-left
+    tile key is (r0, c0): its ``seed_predicate`` cells at cost 0, relaxed
+    to the block's fixpoint. A whole scene for the scene kernels, one
+    tile for round 0 of the rounds."""
+    _check_friction(fric)
+    seed = seed_predicate(fric, *_grid(r0 * t, c0 * t, *fric.shape)) \
+        & ~np.isnan(fric)
+    return _relax(np.where(seed, 0.0, np.inf), fric, straight, diag,
+                  max_cost)
+
+
 def k_cost_init(row: dict, seed_predicate, t: int, straight: float,
                 diag: float, max_cost: float | None) -> dict:
     """Round 0 of the cost_distance rounds: the tile's friction (NaN on
-    NoData; every valid cell must be positive), its seed cells at cost 0
-    and the in-tile relaxation to its local fixpoint."""
+    NoData) relaxed from its own seeds (:func:`_seed_relax`)."""
     arr = row["px"].astype(np.float64)
     fric = np.where(valid_px(arr, row["nodata"]), arr, np.nan)
-    if not np.all(np.isnan(fric)) and float(np.nanmin(fric)) <= 0.0:
-        raise ValueError("friction must be positive")
-    seed = seed_predicate(fric, *_tile_coords(row, t)) & ~np.isnan(fric)
-    cost = _relax(np.where(seed, 0.0, np.inf), fric, straight, diag,
-                  max_cost)
+    cost = _seed_relax(fric, int(row["row"]), int(row["col"]), t,
+                       seed_predicate, straight, diag, max_cost)
     return {"friction": pack(fric), "cost": pack(cost)}
 
 
@@ -151,41 +167,14 @@ def _cost_rounds(tiles: DataFrame,
         max_iter=max_iter, name="cost_distance")
 
 
-def _solve_scene(tiles: DataFrame, seed_predicate, tile_size: int,
-                 straight: float, diag: float,
-                 max_cost: float | None) -> DataFrame:
-    """Small-scene fast path (the viewshed pattern): each (source_id,
-    band) is ONE applyInPandas task that assembles the scene mosaic and
-    relaxes to the global fixpoint directly — the fixpoint is the same
-    min-over-paths value set as the synchronous rounds, so the result is
-    bit-identical, at ONE shuffle instead of 4+ sync rounds."""
-    t = int(tile_size)
-
-    def solve_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band = key[0], int(key[1])
-        fric, r0, c0 = _mosaic(pdf, t)
-        if not np.all(np.isnan(fric)) and float(np.nanmin(fric)) <= 0.0:
-            raise ValueError("friction must be positive")
-        H, W = fric.shape
-        gr = (r0 * t + np.arange(H).reshape(-1, 1)) \
-            + np.zeros((1, W), dtype=np.int64)
-        gc = np.zeros((H, 1), dtype=np.int64) \
-            + (c0 * t + np.arange(W).reshape(1, -1))
-        seed = seed_predicate(fric, gr, gc) & ~np.isnan(fric)
-        cost = np.where(seed, 0.0, np.inf)
-        cost = _relax(cost, fric, straight, diag, max_cost)
-        out = []
-        for row_t in pdf.itertuples(index=False):
-            ty = (int(row_t.row) - r0) * t
-            tx = (int(row_t.col) - c0) * t
-            out.append({"source_id": source_id, "band": band,
-                        "col": int(row_t.col), "row": int(row_t.row),
-                        "cost": pack(cost[ty:ty + t, tx:tx + t])})
-        return pd.DataFrame(out, columns=[
-            "source_id", "band", "col", "row", "cost"])
-
-    return compute_grouped(tiles, "source_id", "band").applyInPandas(
-        solve_group, f"{_KEY_DDL}, cost binary")
+def k_cost_scene(z, r0, c0, key, *, t, seed_predicate, straight, diag,
+                 max_cost):
+    """The cost_distance scene kernel: the whole mosaic relaxed to the
+    global fixpoint — the same min-over-paths value set as the rounds,
+    so bit-identical, at ONE shuffle instead of 4+ sync rounds."""
+    cost = _seed_relax(z, r0, c0, t, seed_predicate, straight, diag,
+                       max_cost)
+    return _per_tile(key, r0, c0, t, lambda sl: {"cost": pack(cost[sl])})
 
 
 def _adaptive_state(tiles: DataFrame, seed_predicate, t: int,
@@ -195,8 +184,11 @@ def _adaptive_state(tiles: DataFrame, seed_predicate, t: int,
     """Pick scene-solve vs synchronous rounds (``focal._scene_small``;
     ``scene_max_px=0`` forces rounds)."""
     if _scene_small(tiles, t, scene_max_px):
-        return _solve_scene(tiles, seed_predicate, t, straight, diag,
-                            max_cost)
+        return scene_tiles(
+            tiles, t, scene_max_px,
+            partial(k_cost_scene, t=t, seed_predicate=seed_predicate,
+                    straight=straight, diag=diag, max_cost=max_cost),
+            f"{_KEY_DDL}, cost binary")
     return _cost_rounds(tiles, seed_predicate, t, straight, diag,
                         max_cost, max_iter)
 
@@ -213,11 +205,11 @@ def cost_distance(tiles: DataFrame,
     quantized rollup ``(source_id, band, col, row, cost_qsum,
     n_reached)`` — zero-shuffle from the converged state.
 
-    Adaptive strategy: when every scene's tile footprint fits
-    ``scene_max_px`` on a side (one cheap agg job to check), each scene
-    is solved in ONE task at the global fixpoint (bit-identical values);
-    otherwise the synchronous halo rounds run. ``scene_max_px=0``
-    forces the rounds path."""
+    Adaptive strategy (:func:`focal.scene_tiles`): when every scene's
+    tile footprint fits ``scene_max_px`` on a side (one cheap agg job to
+    check), each scene is solved in ONE task at the global fixpoint
+    (``k_cost_scene``, bit-identical values); otherwise the synchronous
+    halo rounds run. ``scene_max_px=0`` forces the rounds path."""
     t = int(tile_size)
     state = _adaptive_state(tiles, seed_predicate, t, straight, diag,
                             max_cost, max_iter, scene_max_px)
@@ -265,50 +257,22 @@ def _lcp_walk(cost: np.ndarray, fric: np.ndarray, i: int, j: int,
     return steps
 
 
-def _lcp_scene(tiles: DataFrame, seed_predicate, targets,
-               tile_size: int, straight: float, diag: float,
-               max_px: int) -> DataFrame:
-    """Scene path of :func:`least_cost_path`: one task per (source_id,
-    band) solves the surface and walks the backtrack cell-by-cell."""
-    t = int(tile_size)
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band = key[0], int(key[1])
-        if _span(pdf, t) > max_px:
-            raise ValueError(f"scene {source_id} exceeds max_px={max_px}")
-        fric, r0, c0 = _mosaic(pdf, t)
-        # same guard as _cost_rounds/_solve_scene: with zero friction the exact
-        # optimality equation holds in both directions and the backtrack
-        # can ping-pong between equal-cost cells (r5 ADVICE)
-        if not np.all(np.isnan(fric)) and float(np.nanmin(fric)) <= 0.0:
-            raise ValueError("friction must be positive")
-        H, W = fric.shape
-        gr = (r0 * t + np.arange(H).reshape(-1, 1)) \
-            + np.zeros((1, W), dtype=np.int64)
-        gc = np.zeros((H, 1), dtype=np.int64) \
-            + (c0 * t + np.arange(W).reshape(1, -1))
-        seed = seed_predicate(fric, gr, gc) & ~np.isnan(fric)
-        cost = _relax(np.where(seed, 0.0, np.inf), fric, straight, diag,
-                      None)
-        out = []
-        for tgr, tgc in targets(source_id, band):
-            i, j = int(tgr) - r0 * t, int(tgc) - c0 * t
-            if not (0 <= i < H and 0 <= j < W) \
-                    or not np.isfinite(cost[i, j]):
-                raise ValueError(
-                    f"target ({tgr},{tgc}) unreachable in "
-                    f"{source_id}/{band}")
-            out.append({"source_id": source_id, "band": band,
-                        "tgr": int(tgr), "tgc": int(tgc),
-                        "path_len": _lcp_walk(cost, fric, i, j, straight,
-                                              diag),
-                        "cost_q2": int(np.floor(cost[i, j] * 2.0 + 0.5))})
-        return pd.DataFrame(out, columns=["source_id", "band", "tgr",
-                                          "tgc", "path_len", "cost_q2"])
-
-    return tiles.groupBy("source_id", "band").applyInPandas(
-        run, "source_id string, band int, tgr bigint, tgc bigint, "
-             "path_len bigint, cost_q2 bigint")
+def k_lcp_scene(z, r0, c0, key, *, t, seed_predicate, targets, straight,
+                diag):
+    """The least_cost_path scene kernel: the mosaic's cost surface
+    (:func:`_seed_relax`) and one walked row per target."""
+    cost = _seed_relax(z, r0, c0, t, seed_predicate, straight, diag, None)
+    H, W = z.shape
+    out = []
+    for tgr, tgc in targets(key["source_id"], key["band"]):
+        i, j = int(tgr) - r0 * t, int(tgc) - c0 * t
+        if not (0 <= i < H and 0 <= j < W) or not np.isfinite(cost[i, j]):
+            raise ValueError(f"target ({tgr},{tgc}) unreachable in "
+                             f"{key['source_id']}/{key['band']}")
+        out.append({"tgr": int(tgr), "tgc": int(tgc),
+                    "path_len": _lcp_walk(cost, z, i, j, straight, diag),
+                    "cost_q2": int(np.floor(cost[i, j] * 2.0 + 0.5))})
+    return out
 
 
 def k_lcp_tile(pdf, t, source_id, band, col, row, *, targets, straight,
@@ -324,8 +288,7 @@ def k_lcp_tile(pdf, t, source_id, band, col, row, *, targets, straight,
     if cframe is None or fric is None:
         return None
     cost = np.where(np.isnan(cframe), np.inf, cframe)
-    if not np.all(np.isnan(fric)) and float(np.nanmin(fric)) <= 0.0:
-        raise ValueError("friction must be positive")
+    _check_friction(fric)
     finite = np.isfinite(cost)
     interior = np.zeros((p, p), dtype=bool)
     interior[1:1 + t, 1:1 + t] = True
@@ -431,14 +394,19 @@ def least_cost_path(tiles: DataFrame, seed_predicate, targets,
     floor(cost(target)*2 + 0.5).
 
     Adaptive strategy (NO scene-size refusal anywhere): scenes fitting
-    ``max_px`` on a side solve + walk in ONE task; larger scenes take
+    ``max_px`` on a side solve + walk in ONE task (``k_lcp_scene`` on
+    :func:`focal.scene_tiles`); larger scenes take
     the distributed contraction path (`_lcp_dist` — halo-rounds cost
     state, per-tile pointer collapse, O(perimeter) border doubling).
     ``max_px=0`` forces distributed. Both paths are bit-identical
     (pytest parity on multi-tile fixtures)."""
     t = int(tile_size)
     if _scene_small(tiles, t, max_px):
-        return _lcp_scene(tiles, seed_predicate, targets, t, straight,
-                          diag, max_px)
+        return scene_tiles(
+            tiles, t, max_px,
+            partial(k_lcp_scene, t=t, seed_predicate=seed_predicate,
+                    targets=targets, straight=straight, diag=diag),
+            "source_id string, band int, tgr bigint, tgc bigint, "
+            "path_len bigint, cost_q2 bigint")
     return _lcp_dist(tiles, seed_predicate, targets, t, straight, diag,
                      max_iter, max_rounds)

@@ -53,6 +53,19 @@ live cell of its own 1-px ring and its rows to resolve, all keyed by the
 injective ``_gid``; ``border_doubling`` resolves the O(perimeter) border
 table and each row joins it at its chain end.
 
+The eight scene-or-distributed operators (flow_accumulation, watershed,
+fill_sinks, stream_network, flow_length here; cost_distance and the
+least-cost path in ``costdistance``; viewshed) pick a path with
+``_scene_small``. Their scene path runs on ``scene_tiles``, the grouped
+sibling of ``focal_map`` and the reference's windowed mosaic read
+(``MosaicRasterSource``): ONE ``groupBy(source_id, band)`` stage whose
+body refuses a footprint past ``max_px``, assembles the scene's float64
+mosaic ``z`` (NaN = NoData or no tile) and calls a module-level
+``k_<op>_scene(z, r0, c0, key, **params)``, (r0, c0) = the tile key of
+the mosaic's top-left corner; ``key`` holds the group's ``source_id``
+and ``band`` and its present tiles' ``col``/``row``. The kernel returns
+a list of row dicts; ``_per_tile`` cuts one per present tile.
+
 Determinism contract (mirrored by the ``focal_stats`` SQL oracle in
 ``__spark_entry__.py`` — change one only with the other):
   * the 3x3 accumulation adds the 9 neighbor terms in FIXED lexicographic
@@ -76,7 +89,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark.operators.pixels import (
-    DTYPES, map_tiles, pack, qsum, valid_px)
+    DTYPES, _names, _records, map_tiles, pack, qsum, valid_px)
 from geotrellis_contrib_spark.plans.iterate import (
     border_doubling, fixpoint, flag_clear)
 from geotrellis_contrib_spark.util import compute_grouped
@@ -502,16 +515,8 @@ def _scene_small(tiles: DataFrame, t: int, scene_max_px: int) -> bool:
         and int(ext[0]["m"]) <= int(scene_max_px)
 
 
-def _span(pdf: pd.DataFrame, t: int) -> int:
-    """The longer side, in pixels, of a (source_id, band) group's tile
-    footprint — what the in-task ``max_px`` guards check before
-    :func:`_mosaic` allocates it."""
-    return t * (1 + max(int(pdf["col"].max() - pdf["col"].min()),
-                        int(pdf["row"].max() - pdf["row"].min())))
-
-
 def _mosaic(pdf: pd.DataFrame, t: int):
-    """A scene solver's (source_id, band) tiles as one float64 mosaic,
+    """A scene group's (source_id, band) tiles as one float64 mosaic,
     NaN on NoData and absent tiles: (z, r0, c0), (r0, c0) = the tile
     coordinates of its top-left corner."""
     c0, r0 = int(pdf["col"].min()), int(pdf["row"].min())
@@ -524,6 +529,62 @@ def _mosaic(pdf: pd.DataFrame, t: int):
         ty, tx = (int(row_t.row) - r0) * t, (int(row_t.col) - c0) * t
         z[ty:ty + t, tx:tx + t] = np.where(valid_px(arr, row_t.nodata), arr, np.nan)
     return z, r0, c0
+
+
+def _grid(r: int, c: int, h: int, w: int) -> tuple[np.ndarray, np.ndarray]:
+    """(gr, gc) int64 global pixel coordinates of an h x w block whose
+    top-left pixel is (r, c)."""
+    rr, cc = np.indices((h, w), dtype=np.int64)
+    return r + rr, c + cc
+
+
+def _per_tile(key: dict, r0: int, c0: int, t: int, stats) -> list[dict]:
+    """The per-present-tile cut of a scene kernel: one row per tile of
+    ``key`` (input order), its ``col``/``row`` plus ``stats(sl)``, where
+    ``sl`` is the tile's (rows, cols) slice of the mosaic."""
+    out = []
+    for col, row in zip(key["col"], key["row"]):
+        ty, tx = (int(row) - r0) * t, (int(col) - c0) * t
+        out.append({"col": int(col), "row": int(row),
+                    **stats((slice(ty, ty + t), slice(tx, tx + t)))})
+    return out
+
+
+def scene_group(pdf: pd.DataFrame, t: int, max_px: int, kernel,
+                names: list[str]) -> pd.DataFrame:
+    """One (source_id, band) group through ``kernel`` — the body of
+    :func:`scene_tiles`, callable on any pandas frame. Refuses a
+    footprint longer than ``max_px`` on a side, assembles the
+    :func:`_mosaic` and returns ``kernel(z, r0, c0, key)``'s rows with
+    the ``names`` columns; ``key`` maps ``source_id`` and ``band`` to the
+    group's values and ``col``/``row`` to the present tiles' keys in
+    input order. A column a row does not set is taken from ``key``."""
+    source_id, band = pdf["source_id"].iat[0], int(pdf["band"].iat[0])
+    span = t * (1 + max(int(pdf["col"].max() - pdf["col"].min()),
+                        int(pdf["row"].max() - pdf["row"].min())))
+    if span > max_px:  # checked before _mosaic allocates the footprint
+        raise ValueError(f"scene {source_id} exceeds max_px={max_px}")
+    z, r0, c0 = _mosaic(pdf, t)
+    key = {"source_id": source_id, "band": band,
+           "col": pdf["col"].to_numpy(), "row": pdf["row"].to_numpy()}
+    return pd.DataFrame(_records(kernel(z, r0, c0, key), key, names),
+                        columns=names)
+
+
+def scene_tiles(tiles: DataFrame, t: int, max_px: int, kernel,
+                schema: str) -> DataFrame:
+    """The scene driver of every scene-or-distributed operator (module
+    docstring), the grouped sibling of :func:`focal_map`: ONE
+    ``groupBy(source_id, band).applyInPandas`` stage that runs
+    ``kernel(z, r0, c0, key)`` on each scene's whole mosaic
+    (:func:`scene_group`) and declares ``schema``."""
+    names = _names(schema)
+
+    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
+        return scene_group(pdf, t, max_px, kernel, names)
+
+    return compute_grouped(tiles, "source_id", "band").applyInPandas(
+        solve, schema)
 
 
 def k_focal_stats(frame, t, col, row, *, r, op, offsets, classify_div):
@@ -926,11 +987,7 @@ def convolve_stats(tiles: DataFrame,
 def _mask_frame(frame, t, col, row, r, mask_predicate):
     """Global pixel coords (gr, gc) of a padded frame and the mask of its
     valid cells that satisfy ``mask_predicate(values, gr, gc)``."""
-    p = t + 2 * r
-    gr = (row * t - r + np.arange(p).reshape(-1, 1)) \
-        + np.zeros((1, p), dtype=np.int64)
-    gc = np.zeros((p, 1), dtype=np.int64) \
-        + (col * t - r + np.arange(p).reshape(1, -1))
+    gr, gc = _grid(row * t - r, col * t - r, t + 2 * r, t + 2 * r)
     return gr, gc, mask_predicate(frame, gr, gc) & ~np.isnan(frame)
 
 
@@ -1098,35 +1155,24 @@ def k_acc_rollup(row: dict) -> dict:
     return _acc_stats(np.where(va, acc - 1.0, 0.0).astype(np.int64), va)
 
 
-def _flow_acc_scene(tiles: DataFrame, t: int) -> DataFrame:
-    """Small-scene fast path: one applyInPandas task per (source, band)
-    assembles the mosaic and sweeps to the fixpoint directly."""
+def _scene_acc(z: np.ndarray):
+    """A whole mosaic's D8 directions and accumulation fixpoint (zero
+    inflow from outside it): (chosen, padded acc frame). Shared by the
+    flow-accumulation and stream-network scene kernels."""
+    chosen = _d8_chosen(np.pad(z, 1, constant_values=np.nan))
+    base = np.where(~np.isnan(z), 1.0, 0.0)
+    return chosen, _acc_fixpoint(np.pad(base, 1, constant_values=0.0),
+                                 np.pad(chosen, 1, constant_values=-1), base)
 
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band = key[0], int(key[1])
-        z, r0, c0 = _mosaic(pdf, t)
-        H, W = z.shape
-        valid = ~np.isnan(z)
-        chosen = _d8_chosen(np.pad(z, 1, constant_values=np.nan))
-        base = np.where(valid, 1.0, 0.0)
-        accf = _acc_fixpoint(np.pad(base, 1, constant_values=0.0),
-                             np.pad(chosen, 1, constant_values=-1), base)
-        acc = accf[1:1 + H, 1:1 + W]
-        up = np.where(valid, acc - 1.0, 0.0).astype(np.int64)  # exclusive
-        out = []
-        for row_t in pdf.itertuples(index=False):
-            ty = (int(row_t.row) - r0) * t
-            tx = (int(row_t.col) - c0) * t
-            out.append({"source_id": source_id, "band": band,
-                        "col": int(row_t.col), "row": int(row_t.row),
-                        **_acc_stats(up[ty:ty + t, tx:tx + t],
-                                     valid[ty:ty + t, tx:tx + t])})
-        return pd.DataFrame(out, columns=["source_id", "band", "col",
-                                          "row", "acc_sum", "acc_max",
-                                          "n_valid"])
 
-    return compute_grouped(tiles, "source_id", "band").applyInPandas(
-        run, _ACC_SCHEMA)
+def k_acc_scene(z, r0, c0, key, *, t):
+    """:func:`flow_accumulation`'s scene kernel: the fixpoint swept
+    directly on the mosaic, then the per-tile rollup."""
+    valid = ~np.isnan(z)
+    _, accf = _scene_acc(z)
+    up = np.where(valid, accf[1:-1, 1:-1] - 1.0, 0.0).astype(np.int64)
+    return _per_tile(key, r0, c0, t,
+                     lambda sl: _acc_stats(up[sl], valid[sl]))
 
 
 def k_acc_init(frame, t, col, row):
@@ -1197,15 +1243,16 @@ def flow_accumulation(tiles: DataFrame, tile_size: int = 64,
     (deterministic, mirrored by the SQL oracle's CASE cascade); pits and
     flats have no outflow.
 
-    Adaptive strategy (the cost_distance template): when every scene's
-    tile footprint fits ``scene_max_px`` on a side, each scene solves in
-    ONE task; otherwise — or with ``scene_max_px=0`` forcing it — the
+    Adaptive strategy (:func:`scene_tiles`): when every scene's tile
+    footprint fits ``scene_max_px`` on a side, each scene solves in ONE
+    task; otherwise — or with ``scene_max_px=0`` forcing it — the
     synchronous halo-rounds path runs with NO scene-size bound
     (bit-identical values; r5 verdict task 1). Output per tile:
     (source_id, band, col, row, acc_sum, acc_max, n_valid)."""
     t = int(tile_size)
     if _scene_small(tiles, t, scene_max_px):
-        return _flow_acc_scene(tiles, t)
+        return scene_tiles(tiles, t, scene_max_px,
+                           partial(k_acc_scene, t=t), _ACC_SCHEMA)
     return _flow_acc_rounds(tiles, t, max_iter)
 
 
@@ -1213,35 +1260,22 @@ _WSHED_SCHEMA = ("source_id string, band int, col bigint, row bigint, "
                  "basin_qsum bigint, n_basins bigint, n_valid bigint")
 
 
-def _watershed_scene(tiles: DataFrame, t: int) -> DataFrame:
-    """Small-scene fast path: one task per (source, band) assembles the
-    mosaic and resolves labels by in-memory pointer doubling."""
+def k_watershed_scene(z, r0, c0, key, *, t):
+    """:func:`watershed_labels`' scene kernel: labels resolved by
+    in-memory pointer doubling on the mosaic."""
+    H, W = z.shape
+    valid = ~np.isnan(z)
+    ptr, _ = _collapse(_d8_chosen(np.pad(z, 1, constant_values=np.nan)))
+    gi = (r0 * t + (ptr // W)) * 4096 + (c0 * t + (ptr % W))
+    labels = np.where(valid.ravel(), gi, -1).reshape(H, W)
 
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band = key[0], int(key[1])
-        z, r0, c0 = _mosaic(pdf, t)
-        H, W = z.shape
-        valid = ~np.isnan(z)
-        ptr, _ = _collapse(_d8_chosen(np.pad(z, 1, constant_values=np.nan)))
-        gi = (r0 * t + (ptr // W)) * 4096 + (c0 * t + (ptr % W))
-        labels = np.where(valid.ravel(), gi, -1).reshape(H, W)
-        out = []
-        for row_t in pdf.itertuples(index=False):
-            ty = (int(row_t.row) - r0) * t
-            tx = (int(row_t.col) - c0) * t
-            lab = labels[ty:ty + t, tx:tx + t]
-            va = valid[ty:ty + t, tx:tx + t]
-            out.append({"source_id": source_id, "band": band,
-                        "col": int(row_t.col), "row": int(row_t.row),
-                        "basin_qsum": int(lab[va].sum()),
-                        "n_basins": int(np.unique(lab[va]).size),
-                        "n_valid": int(va.sum())})
-        return pd.DataFrame(out, columns=["source_id", "band", "col",
-                                          "row", "basin_qsum",
-                                          "n_basins", "n_valid"])
+    def stats(sl):
+        lab = labels[sl][valid[sl]]
+        return {"basin_qsum": int(lab.sum()),
+                "n_basins": int(np.unique(lab).size),
+                "n_valid": int(valid[sl].sum())}
 
-    return compute_grouped(tiles, "source_id", "band").applyInPandas(
-        run, _WSHED_SCHEMA)
+    return _per_tile(key, r0, c0, t, stats)
 
 
 def k_d8_tile(pdf, t, source_id, band, col, row):
@@ -1290,7 +1324,7 @@ def watershed_labels(tiles: DataFrame, tile_size: int = 64,
     flat) its single-direction D8 path drains to — same direction rule
     as flow_accumulation (first max positive drop, fixed order).
 
-    Adaptive strategy (the cost_distance template): scenes fitting
+    Adaptive strategy (:func:`scene_tiles`): scenes fitting
     ``scene_max_px`` on a side solve in ONE pointer-doubling task;
     otherwise — or with ``scene_max_px=0`` forcing it — the distributed
     contraction path runs (:func:`contract`): in-tile pointer doubling
@@ -1308,7 +1342,8 @@ def watershed_labels(tiles: DataFrame, tile_size: int = 64,
     injectively)."""
     t = int(tile_size)
     if _scene_small(tiles, t, scene_max_px):
-        return _watershed_scene(tiles, t)
+        return scene_tiles(tiles, t, scene_max_px,
+                           partial(k_watershed_scene, t=t), _WSHED_SCHEMA)
     return _watershed_dist(tiles, t, max_rounds)
 
 
@@ -1400,32 +1435,16 @@ def k_fill_rollup(row: dict, q_fill: float) -> dict:
     return _fill_stats(w, z, ~np.isnan(z), q_fill)
 
 
-def _fill_scene(tiles: DataFrame, t: int, q_fill: float) -> DataFrame:
-    """Small-scene fast path: one task per (source, band) assembles the
-    mosaic and sweeps to the global fixpoint directly."""
-
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band = key[0], int(key[1])
-        z, r0, c0 = _mosaic(pdf, t)
-        valid = ~np.isnan(z)
-        wf = np.full((z.shape[0] + 2, z.shape[1] + 2), -np.inf)
-        wf[1:-1, 1:-1] = np.where(valid, np.inf, -np.inf)
-        _fill_gs(wf, z, valid)
-        w = wf[1:-1, 1:-1]
-        out = []
-        for row_t in pdf.itertuples(index=False):
-            ty = (int(row_t.row) - r0) * t
-            tx = (int(row_t.col) - c0) * t
-            sl = (slice(ty, ty + t), slice(tx, tx + t))
-            out.append({"source_id": source_id, "band": band,
-                        "col": int(row_t.col), "row": int(row_t.row),
-                        **_fill_stats(w[sl], z[sl], valid[sl], q_fill)})
-        return pd.DataFrame(out, columns=["source_id", "band", "col",
-                                          "row", "n_valid", "n_filled",
-                                          "q_fill_sum"])
-
-    return compute_grouped(tiles, "source_id", "band").applyInPandas(
-        run, _FILL_SCHEMA)
+def k_fill_scene(z, r0, c0, key, *, t, q_fill):
+    """:func:`fill_sinks`' scene kernel: the mosaic swept to the global
+    fixpoint directly, then the per-tile rollup."""
+    valid = ~np.isnan(z)
+    wf = np.full((z.shape[0] + 2, z.shape[1] + 2), -np.inf)
+    wf[1:-1, 1:-1] = np.where(valid, np.inf, -np.inf)
+    _fill_gs(wf, z, valid)
+    w = wf[1:-1, 1:-1]
+    return _per_tile(key, r0, c0, t, lambda sl: _fill_stats(
+        w[sl], z[sl], valid[sl], q_fill))
 
 
 def k_fill_init(frame, t, col, row):
@@ -1479,9 +1498,8 @@ def fill_sinks(tiles: DataFrame, tile_size: int = 64,
                scene_max_px: int = 1 << 11, max_iter: int = 64,
                q_fill: float = 4.0) -> DataFrame:
     """Planchon–Darboux sink filling (eps=0, 8-connectivity) — see the
-    block comment above. Adaptive strategy (the cost_distance
-    template): scenes fitting ``scene_max_px`` on a side solve in ONE
-    task; otherwise — or with ``scene_max_px=0`` forcing it — the
+    block comment above. Adaptive strategy (:func:`scene_tiles`):
+    scenes fitting ``scene_max_px`` on a side solve in ONE task; otherwise — or with ``scene_max_px=0`` forcing it — the
     synchronous halo-rounds path runs with no scene-size bound
     (bit-identical: the fill is pure max/min SELECTION over dem
     values). Output per tile: (source_id, band, col, row, n_valid,
@@ -1489,7 +1507,9 @@ def fill_sinks(tiles: DataFrame, tile_size: int = 64,
     Σ floor(W·q + 0.5) over valid cells)."""
     t = int(tile_size)
     if _scene_small(tiles, t, scene_max_px):
-        return _fill_scene(tiles, t, q_fill)
+        return scene_tiles(tiles, t, scene_max_px,
+                           partial(k_fill_scene, t=t, q_fill=q_fill),
+                           _FILL_SCHEMA)
     return _fill_rounds(tiles, t, q_fill, max_iter)
 
 
@@ -1535,39 +1555,23 @@ def _stream_link_terms(stream, streamf, ch, GR, GC):
     return terms
 
 
-def _stream_scene(tiles: DataFrame, t: int, thr: int) -> DataFrame:
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band = key[0], int(key[1])
-        z, r0, c0 = _mosaic(pdf, t)
-        H, W = z.shape
-        chosen = _d8_chosen(np.pad(z, 1, constant_values=np.nan))
-        base = np.where(~np.isnan(z), 1.0, 0.0)
-        accf = _acc_fixpoint(np.pad(base, 1, constant_values=0.0),
-                             np.pad(chosen, 1, constant_values=-1),
-                             base)
-        chf = np.pad(chosen, 1, constant_values=-2)
-        stream, heads, streamf = _stream_cell_arrays(chf, accf, thr)
-        GR = (np.arange(H) + r0 * t).reshape(-1, 1) + np.zeros(
-            (1, W), dtype=np.int64)
-        GC = (np.arange(W) + c0 * t).reshape(1, -1) + np.zeros(
-            (H, 1), dtype=np.int64)
-        terms = _stream_link_terms(stream, streamf, chosen, GR, GC)
-        out = []
-        for row_t in pdf.itertuples(index=False):
-            ty = (int(row_t.row) - r0) * t
-            tx = (int(row_t.col) - c0) * t
-            sl = (slice(ty, ty + t), slice(tx, tx + t))
-            out.append({"source_id": source_id, "band": band,
-                        "col": int(row_t.col), "row": int(row_t.row),
-                        "n_stream": int(stream[sl].sum()),
-                        "n_heads": int(heads[sl].sum()),
-                        "link_qsum": int(terms[sl].sum())})
-        return pd.DataFrame(out, columns=["source_id", "band", "col",
-                                          "row", "n_stream", "n_heads",
-                                          "link_qsum"])
+def _stream_stats(stream, heads, terms) -> dict:
+    """A tile's stream rollup: stream cells, channel heads and the sum
+    of its outgoing link targets."""
+    return {"n_stream": int(stream.sum()), "n_heads": int(heads.sum()),
+            "link_qsum": int(terms.sum())}
 
-    return compute_grouped(tiles, "source_id", "band").applyInPandas(
-        run, _STREAM_SCHEMA)
+
+def k_stream_scene(z, r0, c0, key, *, t, thr):
+    """:func:`stream_network`'s scene kernel: the stream arrays of the
+    mosaic's accumulation, then the per-tile rollup."""
+    chosen, accf = _scene_acc(z)
+    stream, heads, streamf = _stream_cell_arrays(
+        np.pad(chosen, 1, constant_values=-2), accf, thr)
+    terms = _stream_link_terms(stream, streamf, chosen,
+                               *_grid(r0 * t, c0 * t, *z.shape))
+    return _per_tile(key, r0, c0, t, lambda sl: _stream_stats(
+        stream[sl], heads[sl], terms[sl]))
 
 
 def _stream_dist(tiles: DataFrame, t: int, thr: int,
@@ -1594,18 +1598,12 @@ def _stream_dist(tiles: DataFrame, t: int, thr: int,
         chf = frames["chosen"]
         stream, heads, streamf = _stream_cell_arrays(chf, frames["acc"],
                                                      thr)
-        GR = (np.arange(t) + int(row) * t).reshape(-1, 1) \
-            + np.zeros((1, t), dtype=np.int64)
-        GC = (np.arange(t) + int(col) * t).reshape(1, -1) \
-            + np.zeros((t, 1), dtype=np.int64)
-        terms = _stream_link_terms(stream, streamf,
-                                   chf[1:1 + t, 1:1 + t], GR, GC)
+        terms = _stream_link_terms(stream, streamf, chf[1:1 + t, 1:1 + t],
+                                   *_grid(int(row) * t, int(col) * t, t, t))
         return pd.DataFrame([{
             "source_id": source_id, "band": int(band),
             "col": int(col), "row": int(row),
-            "n_stream": int(stream.sum()),
-            "n_heads": int(heads.sum()),
-            "link_qsum": int(terms.sum())}])
+            **_stream_stats(stream, heads, terms)}])
 
     return compute_grouped(
         state.mapInPandas(_halo_cut(t, strips, every=True),
@@ -1620,12 +1618,14 @@ def stream_network(tiles: DataFrame, tile_size: int = 64,
     comment): per tile the count of stream cells (exclusive acc >=
     ``threshold``), channel heads (no upstream stream cell), and the
     exact integer sum of stream->stream link target ids (gr*4096+gc).
-    Adaptive strategy (the cost_distance template); ``scene_max_px=0``
+    Adaptive strategy (:func:`scene_tiles`); ``scene_max_px=0``
     forces the distributed path (bit-identical: thresholding and link
     ids are selection over the SAME converged accumulation state)."""
     t = int(tile_size)
     if _scene_small(tiles, t, scene_max_px):
-        return _stream_scene(tiles, t, int(threshold))
+        return scene_tiles(tiles, t, scene_max_px,
+                           partial(k_stream_scene, t=t, thr=int(threshold)),
+                           _STREAM_SCHEMA)
     return _stream_dist(tiles, t, int(threshold), max_iter)
 
 
@@ -1646,32 +1646,18 @@ _FLEN_HOPS = {"no": [int(not (dr and dc)) for dr, dc in _NEIGHBORS],
               "nd": [int(bool(dr and dc)) for dr, dc in _NEIGHBORS]}
 
 
-def _flow_length_scene(tiles: DataFrame, t: int) -> DataFrame:
-    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band = key[0], int(key[1])
-        z, r0, c0 = _mosaic(pdf, t)
-        H, W = z.shape
-        valid = ~np.isnan(z)
-        _, acc = _collapse(_d8_chosen(np.pad(z, 1, constant_values=np.nan)),
-                           _FLEN_HOPS)
-        no, nd = acc["no"].reshape(H, W), acc["nd"].reshape(H, W)
-        out = []
-        for row_t in pdf.itertuples(index=False):
-            ty = (int(row_t.row) - r0) * t
-            tx = (int(row_t.col) - c0) * t
-            sl = (slice(ty, ty + t), slice(tx, tx + t))
-            va = valid[sl]
-            out.append({"source_id": source_id, "band": band,
-                        "col": int(row_t.col), "row": int(row_t.row),
-                        "n_valid": int(va.sum()),
-                        "orth_sum": int(no[sl][va].sum()),
-                        "diag_sum": int(nd[sl][va].sum())})
-        return pd.DataFrame(out, columns=["source_id", "band", "col",
-                                          "row", "n_valid", "orth_sum",
-                                          "diag_sum"])
-
-    return compute_grouped(tiles, "source_id", "band").applyInPandas(
-        run, _FLEN_SCHEMA)
+def k_flow_length_scene(z, r0, c0, key, *, t):
+    """:func:`flow_length`'s scene kernel: step counts summed along the
+    mosaic's collapsed D8 chains, then the per-tile rollup."""
+    H, W = z.shape
+    valid = ~np.isnan(z)
+    _, acc = _collapse(_d8_chosen(np.pad(z, 1, constant_values=np.nan)),
+                       _FLEN_HOPS)
+    no, nd = acc["no"].reshape(H, W), acc["nd"].reshape(H, W)
+    return _per_tile(key, r0, c0, t, lambda sl: {
+        "n_valid": int(valid[sl].sum()),
+        "orth_sum": int(no[sl][valid[sl]].sum()),
+        "diag_sum": int(nd[sl][valid[sl]].sum())})
 
 
 def _flow_length_dist(tiles: DataFrame, t: int,
@@ -1700,12 +1686,13 @@ def flow_length(tiles: DataFrame, tile_size: int = 64,
     n_valid plus the EXACT integer step decomposition (orth_sum,
     diag_sum) of the summed path lengths to each cell's terminal —
     length = orth·1 + diag·√2 applied by the caller ONCE at the end.
-    Adaptive (the cost_distance template); ``scene_max_px=0`` forces
+    Adaptive (:func:`scene_tiles`); ``scene_max_px=0`` forces
     the distributed contraction (bit-identical: integer addition is
     associative, so pointer doubling cannot change the answer)."""
     t = int(tile_size)
     if _scene_small(tiles, t, scene_max_px):
-        return _flow_length_scene(tiles, t)
+        return scene_tiles(tiles, t, scene_max_px,
+                           partial(k_flow_length_scene, t=t), _FLEN_SCHEMA)
     return _flow_length_dist(tiles, t, max_rounds)
 
 

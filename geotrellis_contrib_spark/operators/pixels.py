@@ -35,12 +35,18 @@ each grouping column's value and, as an array in plane order, every
 other column but ``px``. A stack kernel returns what a tile kernel
 returns.
 
+The eight scene-or-distributed operators solve small scenes on
+``focal.scene_tiles``, the scene driver: ONE ``groupBy(source_id, band)
+.applyInPandas`` stage whose group body (``focal.scene_group``) assembles
+the scene's mosaic and runs a module-level ``k_<op>_scene(z, r0, c0,
+key, **params)`` kernel; its rows go through :func:`_records`.
+
 Grouped bodies that keep their own ``applyInPandas``: merge, the retile
 and overview assembles (:func:`_paste`), the polygon burn and the point
-stamps here; contour's grid assemble; the scene solvers, ``focal_map``'s
-stencil, the halo-round relax and the contraction resolve in ``focal``
-(with the halo-round strip cut, which ``halo_rounds`` owns); viewshed's
-per-tile reduce; the vectorize ring trace.
+stamps here; contour's grid assemble; ``focal_map``'s stencil, the
+halo-round relax and the contraction resolve in ``focal`` (with the
+halo-round strip cut, which ``halo_rounds`` owns); viewshed's per-tile
+reduce; the vectorize ring trace.
 
 One NoData rule (:func:`valid_px`): a pixel is valid iff it is not NaN
 and not EXACTLY the tile's nodata — the rule the SQL oracles spell

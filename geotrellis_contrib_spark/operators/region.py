@@ -34,10 +34,11 @@ from functools import partial
 from typing import Callable
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark.operators.cluster import connected_components
+from geotrellis_contrib_spark.operators.focal import _grid
 from geotrellis_contrib_spark.operators.pixels import map_tiles, valid_px
 
 
@@ -59,12 +60,6 @@ def _local_labels(mask: np.ndarray, gp: np.ndarray) -> np.ndarray:
     return np.where(mask, lab, -1)
 
 
-def _tile_coords(row: dict, t: int) -> tuple[np.ndarray, np.ndarray]:
-    """(gr, gc) int64 global pixel coordinates of a t x t tile."""
-    rr, cc = np.indices((t, t), dtype=np.int64)
-    return int(row["row"]) * t + rr, int(row["col"]) * t + cc
-
-
 def _border(t: int) -> np.ndarray:
     """The 1-px border cells of a t x t tile."""
     b = np.ones((t, t), dtype=bool)
@@ -76,7 +71,7 @@ def _scan_mask(row: dict, predicate, t: int):
     """(mask, gr, gc) of one tile: ``predicate(values, gr, gc)`` on its
     valid pixels (float64 values)."""
     arr = row["px"].astype(np.float64)
-    gr, gc = _tile_coords(row, t)
+    gr, gc = _grid(int(row["row"]) * t, int(row["col"]) * t, t, t)
     return predicate(arr, gr, gc) & valid_px(arr, row["nodata"]), gr, gc
 
 
@@ -103,6 +98,63 @@ def k_region_scan(row: dict, predicate, t: int, npx: int) -> list[dict]:
                     "gr2": 0, "gc2": 0, "n": 0, "pairs": 0,
                     "label": int(lab[rr, cc])})
     return out
+
+
+def _label_merge(tiles: DataFrame, border: DataFrame, t: int, npx: int):
+    """The cross-tile label merge of :func:`region_stats` and
+    ``vectorize.vectorize_regions``. ``border`` holds the scan's mask
+    pixels on tile borders as (source_id, band, gr, gc, label). Returns
+    (cross, root): ``cross`` = (source_id, band, label, label2), one row
+    per 4-adjacent border-pixel pair that crosses a tile edge, and
+    ``root(df, name="root")`` adds column ``name`` = the merged region
+    id of each (source_id, band, label) row of ``df``.
+
+    ONE join on the packed neighbor pixel id finds the pairs (a
+    right-edge cell offers pk+1, a bottom-edge cell pk+npx; a 0-2
+    element explode, not a right/down self-join pair). Labels are
+    packed per (source, band) as (sidx*2 + band)*npx^2 + label for the
+    engine's ``connected_components`` on the label graph; labels in no
+    pair keep themselves."""
+    pk = F.col("gr") * F.lit(npx) + F.col("gc")
+    nbr = F.array_compact(F.array(
+        F.when(((F.col("gc") + 1) % t == 0)
+               & (F.col("gc") + 1 < npx), pk + 1),  # no row-wrap alias
+        F.when((F.col("gr") + 1) % t == 0, pk + F.lit(npx))))
+    b1 = border.select("source_id", "band", "label",
+                       F.explode(nbr).alias("pk_nbr"))
+    b2 = border.select(F.col("source_id").alias("source_id2"),
+                       F.col("band").alias("band2"),
+                       pk.alias("pk_b"), F.col("label").alias("label2"))
+    cross = b1.join(
+        b2, (F.col("source_id") == F.col("source_id2"))
+        & (F.col("band") == F.col("band2"))
+        & (F.col("pk_nbr") == F.col("pk_b"))) \
+        .select("source_id", "band", "label", "label2")
+    src_dim = (tiles.select("source_id").distinct()
+               .withColumn("sidx", F.row_number().over(
+                   Window.orderBy("source_id")) - 1))
+    # python-computed 64-bit literal (npx**2 > int32: a lit*lit product
+    # would constant-fold in 32-bit and overflow under ANSI mode)
+    span = F.lit(int(npx) * int(npx))
+    sbk = (F.col("sidx") * F.lit(2) + F.col("band"))
+    enc = (cross.join(F.broadcast(src_dim), "source_id")
+           .select((sbk * span + F.col("label")).alias("src"),
+                   (sbk * span + F.col("label2")).alias("dst")))
+    # no emptiness probe: connected_components' small-graph path is one
+    # bounded-limit collect that handles the zero-edge case for free
+    comp = connected_components(enc)
+    dec = comp.select(
+        F.floor(F.col("id") / span).alias("sbk"),
+        (F.col("id") % span).alias("label"),
+        (F.col("component") % span).alias("rt"))
+
+    def root(df: DataFrame, name: str = "root") -> DataFrame:
+        return (df.join(F.broadcast(src_dim), "source_id")
+                .withColumn("sbk", sbk)
+                .join(F.broadcast(dec), ["sbk", "label"], "left")
+                .withColumn(name, F.coalesce("rt", "label")))
+
+    return cross, root
 
 
 def region_group(tiles: DataFrame,
@@ -147,7 +199,7 @@ def region_stats(tiles: DataFrame,
         tiles, partial(k_region_scan, predicate=predicate, t=t, npx=npx),
         "source_id string, band bigint, kind int, gr bigint, gc bigint, "
         "gr2 bigint, gc2 bigint, n bigint, pairs bigint, label bigint") \
-        .cache()
+        .localCheckpoint(eager=False)
     stats = rows.filter(F.col("kind") == 0) \
         .select("source_id", "band", "label", "n", "pairs",
                 F.col("gr").alias("grmin"), F.col("gc").alias("gcmin"),
@@ -155,55 +207,10 @@ def region_stats(tiles: DataFrame,
     border = rows.filter(F.col("kind") == 1) \
         .select("source_id", "band", "gr", "gc", "label")
 
-    # ONLY pairs that cross a tile edge (in-tile pairs are already in
-    # the scan's `pairs`). ONE join on the packed neighbor pixel id: a
-    # right-edge cell offers pk+1, a bottom-edge cell offers pk+npx —
-    # a 0-2 element explode replaces the old right/down self-join pair
-    # (half the join codegen, same edges).
-    pk = F.col("gr") * F.lit(npx) + F.col("gc")
-    nbr = F.array_compact(F.array(
-        F.when(((F.col("gc") + 1) % t == 0)
-               & (F.col("gc") + 1 < npx), pk + 1),  # no row-wrap alias
-        F.when((F.col("gr") + 1) % t == 0, pk + F.lit(npx))))
-    b1 = border.select("source_id", "band", "label",
-                       F.explode(nbr).alias("pk_nbr"))
-    b2 = border.select(F.col("source_id").alias("source_id2"),
-                       F.col("band").alias("band2"),
-                       (F.col("gr") * F.lit(npx) + F.col("gc"))
-                       .alias("pk_b"),
-                       F.col("label").alias("label2"))
-    cross = b1.join(
-        b2, (F.col("source_id") == F.col("source_id2"))
-        & (F.col("band") == F.col("band2"))
-        & (F.col("pk_nbr") == F.col("pk_b"))) \
-        .select("source_id", "band", "label", "label2")
-
-    from pyspark.sql import Window
-
-    src_dim = (tiles.select("source_id").distinct()
-               .withColumn("sidx", F.row_number().over(
-                   Window.orderBy("source_id")) - 1))
-    span = F.lit(npx) * F.lit(npx)
-    sbk = (F.col("sidx") * F.lit(2) + F.col("band"))
-    enc = (cross.join(F.broadcast(src_dim), "source_id")
-           .select((sbk * span + F.col("label")).alias("src"),
-                   (sbk * span + F.col("label2")).alias("dst")))
-    st = (stats.join(F.broadcast(src_dim), "source_id")
-          .withColumn("sbk", sbk))
-    # no emptiness probe: connected_components' small-graph path is one
-    # bounded-limit collect that handles the zero-edge case for free
-    comp = connected_components(enc)
-    dec = comp.select(
-        F.floor(F.col("id") / span).alias("sbk"),
-        (F.col("id") % span).alias("label"),
-        (F.col("component") % span).alias("rt"))
-    merged = (st.join(F.broadcast(dec), ["sbk", "label"], "left")
-              .withColumn("root", F.coalesce("rt", "label")))
+    cross, root = _label_merge(tiles, border, t, npx)
+    merged = root(stats)
     # each cross pair belongs to exactly one merged region
-    cp = (cross.join(F.broadcast(src_dim), "source_id")
-          .withColumn("sbk", sbk)
-          .join(F.broadcast(dec), ["sbk", "label"], "left")
-          .withColumn("root", F.coalesce("rt", "label")))
+    cp = root(cross)
     cross_per_root = cp.groupBy("source_id", "band", "root") \
         .agg(F.count(F.lit(1)).alias("xpairs"))
 

@@ -21,8 +21,9 @@ Spark-first plan (every stage O(boundary), never O(pixels)):
      region, so the segment is interior: drop both); a lone row is a
      real boundary edge. Shuffle volume = region boundary on tile
      edges only.
-  3. Label merge: the exact ``region_stats`` cross-tile
-     connected-components join (min-pixel-id roots).
+  3. Label merge: ``region._label_merge``, the cross-tile
+     connected-components join shared with ``region_stats``
+     (min-pixel-id roots).
   4. Ring assembly: edges shuffle ONCE keyed by (source, band, region)
      into ``applyInPandas`` — per-region memory is its perimeter
      (O(sqrt(area)); fail-loud past ``max_edges``). Tracing keeps the
@@ -46,13 +47,12 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geotrellis_contrib_spark.operators.cluster import connected_components
 from geotrellis_contrib_spark.operators.pixels import map_tiles
 from geotrellis_contrib_spark.operators.region import (
-    _border, _local_labels, _scan_mask)
+    _border, _label_merge, _local_labels, _scan_mask)
 
 # (dr, dc) travel directions; region is on the RIGHT of travel
 _RIGHT = {(0, 1): (1, 0), (1, 0): (0, -1), (0, -1): (-1, 0),
@@ -260,7 +260,7 @@ def vectorize_regions(tiles: DataFrame,
     rows = map_tiles(
         tiles, partial(k_vectorize_scan, predicate=predicate, t=t, npx=npx),
         "source_id string, band bigint, kind int, ekind int, er bigint, "
-        "ec bigint, dir int, label bigint").cache()
+        "ec bigint, dir int, label bigint").localCheckpoint(eager=False)
 
     # candidate cancellation: facing masked cells share the segment key
     # (same region by 4-adjacency) -> interior -> drop both
@@ -276,44 +276,12 @@ def vectorize_regions(tiles: DataFrame,
                     "source_id", "band", "ekind", "er", "ec", "dir",
                     "label"))
 
-    # label merge: region_stats' packed-neighbor CC join, verbatim shape
+    # label merge: region_stats' packed-neighbor CC join
     border = rows.filter(F.col("kind") == 1) \
         .select("source_id", "band", F.col("er").alias("gr"),
                 F.col("ec").alias("gc"), "label")
-    pk = F.col("gr") * F.lit(npx) + F.col("gc")
-    nbr = F.array_compact(F.array(
-        F.when(((F.col("gc") + 1) % t == 0)
-               & (F.col("gc") + 1 < npx), pk + 1),
-        F.when((F.col("gr") + 1) % t == 0, pk + F.lit(npx))))
-    b1 = border.select("source_id", "band", "label",
-                       F.explode(nbr).alias("pk_nbr"))
-    b2 = border.select(F.col("source_id").alias("source_id2"),
-                       F.col("band").alias("band2"),
-                       pk.alias("pk_b"), F.col("label").alias("label2"))
-    cross = b1.join(
-        b2, (F.col("source_id") == F.col("source_id2"))
-        & (F.col("band") == F.col("band2"))
-        & (F.col("pk_nbr") == F.col("pk_b"))) \
-        .select("source_id", "band", "label", "label2")
-    src_dim = (tiles.select("source_id").distinct()
-               .withColumn("sidx", F.row_number().over(
-                   Window.orderBy("source_id")) - 1))
-    # python-computed 64-bit literal (npx**2 > int32: a lit*lit product
-    # would constant-fold in 32-bit and overflow under ANSI mode)
-    span = F.lit(int(npx) * int(npx))
-    sbk = (F.col("sidx") * F.lit(2) + F.col("band"))
-    enc = (cross.join(F.broadcast(src_dim), "source_id")
-           .select((sbk * span + F.col("label")).alias("src"),
-                   (sbk * span + F.col("label2")).alias("dst")))
-    comp = connected_components(enc)
-    dec = comp.select(
-        F.floor(F.col("id") / span).alias("sbk"),
-        (F.col("id") % span).alias("label"),
-        (F.col("component") % span).alias("rt"))
-    merged = (edges.join(F.broadcast(src_dim), "source_id")
-              .withColumn("sbk", sbk)
-              .join(F.broadcast(dec), ["sbk", "label"], "left")
-              .withColumn("region_id", F.coalesce("rt", "label")))
+    _, root = _label_merge(tiles, border, t, npx)
+    merged = root(edges, "region_id")
 
     def assemble(key, pdf):
         if len(pdf) > max_edges:

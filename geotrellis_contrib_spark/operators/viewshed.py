@@ -6,8 +6,8 @@ DDA-sampled cells along the sight line.
 
 Viewshed has GLOBAL data dependency (any cell can occlude any ray), so
 the honest Spark plan makes the (source, band) scene the parallel unit:
-ONE ``groupBy(source_id, band).applyInPandas`` assembles the scene
-mosaic and runs a fully vectorized R3 sweep (k-step loop over numpy
+ONE ``groupBy(source_id, band)`` stage (``focal.scene_tiles``) assembles
+the scene mosaic and runs a fully vectorized R3 sweep (k-step loop over numpy
 arrays of all targets at once — no per-target Python loop). At 100 TB
 the corpus is many scenes; each task holds one scene raster (bounded by
 ``max_radius`` cropping for larger-than-memory scenes, fail-loud here).
@@ -34,93 +34,67 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from geotrellis_contrib_spark.operators.focal import (
-    _mosaic, _scene_small, _span)
+    _per_tile, _scene_small, scene_tiles)
 from geotrellis_contrib_spark.operators.pixels import DTYPES, map_tiles, valid_px
 
 
-def _vs_scene(tiles: DataFrame, observer_fn, height: float,
-              tile_size: int, max_px: int,
-              block_rows: int) -> DataFrame:
-    """Scene path of :func:`viewshed`: one task per (source_id, band)
-    assembles the mosaic and runs the row-blocked vectorized R3 sweep
-    (per-task footprint = the z array + ~12 block_rows*W temporaries)."""
-    t = int(tile_size)
+def k_vs_scene(z, r0, c0, key, *, t, observer_fn, height, block_rows):
+    """:func:`viewshed`'s scene kernel: the row-blocked vectorized R3
+    sweep over the mosaic (per-task footprint = the z array + ~12
+    block_rows*W temporaries), then the per-tile counts."""
+    ogr, ogc = observer_fn(key["source_id"], key["band"])
+    oy, ox = int(ogr) - r0 * t, int(ogc) - c0 * t
+    if not (0 <= oy < z.shape[0] and 0 <= ox < z.shape[1]) \
+            or np.isnan(z[oy, ox]):
+        raise ValueError(f"observer ({ogr},{ogc}) invalid for "
+                         f"{key['source_id']}/{key['band']}")
+    zbase = z[oy, ox] + float(height)
 
-    def sweep(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        source_id, band = key[0], int(key[1])
-        if _span(pdf, t) > max_px:
-            raise ValueError(
-                f"scene {source_id} exceeds max_px={max_px}; crop by "
-                "max_radius before viewshed")
-        z, r0, c0 = _mosaic(pdf, t)
-        ogr, ogc = observer_fn(source_id, band)
-        oy, ox = int(ogr) - r0 * t, int(ogc) - c0 * t
-        if not (0 <= oy < z.shape[0] and 0 <= ox < z.shape[1]) \
-                or np.isnan(z[oy, ox]):
-            raise ValueError(f"observer ({ogr},{ogc}) invalid for "
-                             f"{source_id}/{band}")
-        zbase = z[oy, ox] + float(height)
+    # Target-row BLOCKS bound peak memory to z + O(block*W): the
+    # whole-grid sweep holds ~12 H*W float64 temporaries (3.2 GB at
+    # max_px=4096), the blocked one z (one H*W array) + the same
+    # dozen at block*W — so the scene guard is the z array, not the
+    # sweep. Arithmetic per target is ELEMENTWISE identical to the
+    # whole-grid form (broadcasting changes layout, not values), so
+    # the SQL oracle and the block-size parity pytest both hold
+    # bit-for-bit.
+    valid = ~np.isnan(z)
+    visible = np.empty(z.shape, dtype=bool)
+    yy_all = np.arange(z.shape[0], dtype=np.float64)
+    dgc_row = (np.arange(z.shape[1], dtype=np.float64) - ox)[None, :]
+    blk = max(1, int(block_rows))
+    for y0 in range(0, z.shape[0], blk):
+        y1 = min(y0 + blk, z.shape[0])
+        dgr = (yy_all[y0:y1, None] - oy) + np.zeros_like(dgc_row)
+        dgc = dgc_row + np.zeros((y1 - y0, 1))
+        n = np.maximum(np.abs(dgr), np.abs(dgc))
+        n_safe = np.maximum(n, 1.0)
+        ms = np.full(n.shape, -np.inf)
+        for k in range(1, int(n.max()) if n.size else 1):
+            act = n > k  # targets with an intermediate sample at k
+            if not act.any():
+                break
+            kk = float(k)
+            # floor in GLOBAL coordinates (exactly the oracle's
+            # expression — a local-offset base could round a .5 tie
+            # differently), then shift back by the integer origin
+            rr = (np.floor(float(ogr) + (kk * dgr) / n_safe + 0.5)
+                  .astype(np.int64) - r0 * t)
+            cc = (np.floor(float(ogc) + (kk * dgc) / n_safe + 0.5)
+                  .astype(np.int64) - c0 * t)
+            # indices are only meaningful where act (k < n); clamp
+            # the rest so the gather stays in bounds (masked below)
+            zk = z[np.clip(rr, 0, z.shape[0] - 1),
+                   np.clip(cc, 0, z.shape[1] - 1)]
+            slope = (zk - zbase) / kk
+            upd = act & ~np.isnan(zk)
+            np.copyto(ms, np.maximum(ms, slope), where=upd)
+        slope_t = (z[y0:y1] - zbase) / n_safe
+        visible[y0:y1] = valid[y0:y1] & ((n <= 1.0) | (slope_t >= ms))
 
-        # Target-row BLOCKS bound peak memory to z + O(block*W): the
-        # whole-grid sweep holds ~12 H*W float64 temporaries (3.2 GB at
-        # max_px=4096), the blocked one z (one H*W array) + the same
-        # dozen at block*W — so the scene guard is the z array, not the
-        # sweep. Arithmetic per target is ELEMENTWISE identical to the
-        # whole-grid form (broadcasting changes layout, not values), so
-        # the SQL oracle and the block-size parity pytest both hold
-        # bit-for-bit.
-        valid = ~np.isnan(z)
-        visible = np.empty(z.shape, dtype=bool)
-        yy_all = np.arange(z.shape[0], dtype=np.float64)
-        dgc_row = (np.arange(z.shape[1], dtype=np.float64) - ox)[None, :]
-        blk = max(1, int(block_rows))
-        for y0 in range(0, z.shape[0], blk):
-            y1 = min(y0 + blk, z.shape[0])
-            dgr = (yy_all[y0:y1, None] - oy) + np.zeros_like(dgc_row)
-            dgc = dgc_row + np.zeros((y1 - y0, 1))
-            n = np.maximum(np.abs(dgr), np.abs(dgc))
-            n_safe = np.maximum(n, 1.0)
-            ms = np.full(n.shape, -np.inf)
-            for k in range(1, int(n.max()) if n.size else 1):
-                act = n > k  # targets with an intermediate sample at k
-                if not act.any():
-                    break
-                kk = float(k)
-                # floor in GLOBAL coordinates (exactly the oracle's
-                # expression — a local-offset base could round a .5 tie
-                # differently), then shift back by the integer origin
-                rr = (np.floor(float(ogr) + (kk * dgr) / n_safe + 0.5)
-                      .astype(np.int64) - r0 * t)
-                cc = (np.floor(float(ogc) + (kk * dgc) / n_safe + 0.5)
-                      .astype(np.int64) - c0 * t)
-                # indices are only meaningful where act (k < n); clamp
-                # the rest so the gather stays in bounds (masked below)
-                zk = z[np.clip(rr, 0, z.shape[0] - 1),
-                       np.clip(cc, 0, z.shape[1] - 1)]
-                slope = (zk - zbase) / kk
-                upd = act & ~np.isnan(zk)
-                np.copyto(ms, np.maximum(ms, slope), where=upd)
-            slope_t = (z[y0:y1] - zbase) / n_safe
-            visible[y0:y1] = valid[y0:y1] & ((n <= 1.0) | (slope_t >= ms))
-
-        out = []
-        for row_t in pdf.itertuples(index=False):
-            ty = (int(row_t.row) - r0) * t
-            tx = (int(row_t.col) - c0) * t
-            v = visible[ty:ty + t, tx:tx + t]
-            va = valid[ty:ty + t, tx:tx + t]
-            out.append({"source_id": source_id, "band": band,
-                        "col": int(row_t.col), "row": int(row_t.row),
-                        "n_visible": int(v.sum()),
-                        "n_valid": int(va.sum())})
-        return pd.DataFrame(out, columns=["source_id", "band", "col",
-                                          "row", "n_visible", "n_valid"])
-
-    from geotrellis_contrib_spark.util import compute_grouped
-
-    return compute_grouped(tiles, "source_id", "band").applyInPandas(
-        sweep, "source_id string, band int, col bigint, row bigint, "
-               "n_visible bigint, n_valid bigint")
+    return _per_tile(key, r0, c0, t, lambda sl: {
+        "n_visible": int(visible[sl].sum()),
+        "n_valid": int(valid[sl].sum())})
 
 
 def _znorm(row: dict) -> np.ndarray:
@@ -340,7 +314,8 @@ def viewshed(tiles: DataFrame, observer_fn, height: float = 2.0,
     per scene/band (must be a valid cell).
 
     Adaptive strategy (NO scene-size refusal anywhere): scenes fitting
-    ``max_px`` on a side run the one-task row-blocked R3 sweep; larger
+    ``max_px`` on a side run the one-task row-blocked R3 sweep
+    (``k_vs_scene`` on :func:`focal.scene_tiles`); larger
     scenes take the distributed sample-index decomposition (`_vs_dist`
     — per-(sample-tile, target-tile) partial maxima, order-free
     elementwise max reduce). ``max_px=0`` forces distributed. Both paths
@@ -349,6 +324,10 @@ def viewshed(tiles: DataFrame, observer_fn, height: float = 2.0,
     tasks per m-tile scene instead of one scene task."""
     t = int(tile_size)
     if _scene_small(tiles, t, max_px):
-        return _vs_scene(tiles, observer_fn, height, t, max_px,
-                         block_rows)
+        return scene_tiles(
+            tiles, t, max_px,
+            partial(k_vs_scene, t=t, observer_fn=observer_fn,
+                    height=height, block_rows=block_rows),
+            "source_id string, band int, col bigint, row bigint, "
+            "n_visible bigint, n_valid bigint")
     return _vs_dist(tiles, observer_fn, height, t)

@@ -148,3 +148,21 @@ def replay_stacks(rows, keys, kernel, ddl: str):
     parts = [px.stack_group(g if isinstance(g, tuple) else (g,), grp, kernel, keys, names)
              for g, grp in pdf.groupby(keys, sort=True)]
     return pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(columns=names)
+
+
+def replay_scenes(rows, t: int, max_px: int, kernel, ddl: str):
+    """``focal.scene_tiles`` without Spark: ``rows`` (dicts whose ``px`` is
+    an array) grouped on (source_id, band) in pandas, each group through
+    the driver's own group body, ``focal.scene_group``, with the output
+    columns of the flat DDL."""
+    import pandas as pd
+
+    from geotrellis_contrib_spark.operators import focal as fo
+    from geotrellis_contrib_spark.operators import pixels as px
+
+    names = [f.split()[0] for f in ddl.split(",")]
+    pdf = pd.DataFrame([{**r, "dtype": r["px"].dtype.name, "px": px.pack(r["px"])}
+                        for r in rows])
+    parts = [fo.scene_group(grp, t, max_px, kernel, names)
+             for _, grp in pdf.groupby(["source_id", "band"], sort=True)]
+    return pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(columns=names)

@@ -4,12 +4,14 @@ resolve run through pandas (one batch for ``map_tiles``,
 in numpy the way ``plans.iterate.border_doubling`` joins it, and each
 row to resolve joins the border at its chain end. On a 3x4-tile scene
 with an absent tile, an all-NoData tile and a NoData hole, watershed,
-flow_length and the least-cost path must equal the scene arithmetic bit
-for bit: per-cell path following on the scene's D8 directions, and the
-scene's backtrack walk. Two copies of the scene share one (source_id,
-band), the second starting at global pixel column 4096: the public
-watershed label gr*4096 + gc maps its cells onto the first copy's, so
-the contraction's border keys must not."""
+flow_length and the least-cost path must equal bit for bit, per tile:
+per-cell path following on the scene's D8 directions (``_paths``), and
+the least-cost scene kernel run through the scene driver's group body.
+The watershed and flow_length scene kernels are checked against
+``_paths`` too. Two copies of the scene share one (source_id, band),
+the second starting at global pixel column 4096: the public watershed
+label gr*4096 + gc maps its cells onto the first copy's, so the
+contraction's border keys must not."""
 from functools import partial
 
 import numpy as np
@@ -18,6 +20,7 @@ import pandas as pd
 from geotrellis_contrib_spark.operators import costdistance as CD
 from geotrellis_contrib_spark.operators import focal as FO
 from geotrellis_contrib_spark.operators.pixels import pack, tile_batch
+from tests.conftest import replay_scenes
 
 T = 8
 NR, NC = 3, 4
@@ -43,17 +46,31 @@ def _scene():
     return z, tiles
 
 
+def _rows(plane, tiles, nodata=NODATA):
+    """``plane``'s tiles in both copies as rows, NaN written as
+    ``nodata``."""
+    return [{"source_id": "s", "band": 0, "col": c0 + tc, "row": tr,
+             "dtype": "float64", "nodata": nodata,
+             "px": np.where(np.isnan(a := plane[tr * T:(tr + 1) * T,
+                                                tc * T:(tc + 1) * T]),
+                            nodata, a)}
+            for c0 in COPIES for tr, tc in tiles]
+
+
 def _cut(plane, tiles, nodata=NODATA):
     """The halo pieces of ``plane``'s tiles in both copies."""
-    table = pd.DataFrame([
-        {"source_id": "s", "band": 0, "col": c0 + tc, "row": tr,
-         "dtype": "float64", "nodata": nodata,
-         "px": pack(np.where(np.isnan(a := plane[tr * T:(tr + 1) * T,
-                                                 tc * T:(tc + 1) * T]),
-                             nodata, a))}
-        for c0 in COPIES for tr, tc in tiles])
+    table = pd.DataFrame([{**r, "px": pack(r["px"])}
+                          for r in _rows(plane, tiles, nodata)])
     return tile_batch(table, partial(FO.k_halo_pieces, r=1),
                       [f.split()[0] for f in FO._PIECE_DDL.split(",")])
+
+
+def _scene_rollups(z, tiles, kernel, ddl, cols):
+    """``kernel`` through the scene driver's group body on both copies:
+    {(col, row): tuple of ``cols``}."""
+    got = replay_scenes(_rows(z, tiles), T, 1 << 13, kernel, ddl)
+    return {(int(r.col), int(r.row)): tuple(int(getattr(r, c)) for c in cols)
+            for r in got.itertuples()}
 
 
 def _border_doubling(border, hops):
@@ -138,6 +155,9 @@ def test_watershed_replay_matches_path_following():
     want = {k: (sum(v), len(set(v)), len(v)) for k, v in _rollups(
         z, tiles, lambda p, c0: p[0] * 4096 + c0 * T + p[1]).items()}
     assert got == want
+    assert _scene_rollups(z, tiles, partial(FO.k_watershed_scene, t=T),
+                          FO._WSHED_SCHEMA,
+                          ("basin_qsum", "n_basins", "n_valid")) == want
     assert all(got[(c0 + EMPTY[1], EMPTY[0])] == (0, 0, 0)
                for c0 in COPIES)
     # chains really cross tiles, and the scene has several basins
@@ -154,6 +174,9 @@ def test_flow_length_replay_matches_path_following():
     want = {k: (len(v), sum(a for a, _ in v), sum(b for _, b in v))
             for k, v in _rollups(z, tiles, lambda p, c0: p[2:]).items()}
     assert got == want
+    assert _scene_rollups(z, tiles, partial(FO.k_flow_length_scene, t=T),
+                          FO._FLEN_SCHEMA,
+                          ("n_valid", "orth_sum", "diag_sum")) == want
     assert sum(v[2] for v in want.values()) > 0
 
 
@@ -174,9 +197,19 @@ def test_least_cost_path_replay_matches_scene_walk():
     rows = _replay(pieces, kernel, {"steps": [1] * 8}, ("q2", "tgr", "tgc"))
     got = {(int(r.tgr), int(r.tgc)): (int(r.steps), int(r.q2))
            for r in rows.itertuples()}
-    want = {(i, c0 * T + j): (CD._lcp_walk(cost, z, i, j, 1.0, 1.5),
-                              int(np.floor(cost[i, j] * 2.0 + 0.5)))
-            for c0 in COPIES for i, j in cells}
+    scene = replay_scenes(
+        _rows(z, tiles, np.nan), T, 1 << 13,
+        partial(CD.k_lcp_scene, t=T,
+                seed_predicate=lambda f, gr, gc: (
+                    ((gr == 3) & (gc % 4096 == 4))
+                    | ((gr == 12) & (gc % 4096 == 12))
+                    | ((gr == 20) & (gc % 4096 == 17))),
+                targets=lambda sid, band: targets, straight=1.0, diag=1.5),
+        "source_id string, band int, tgr bigint, tgc bigint, "
+        "path_len bigint, cost_q2 bigint")
+    want = {(int(r.tgr), int(r.tgc)): (int(r.path_len), int(r.cost_q2))
+            for r in scene.itertuples()}
+    assert len(want) == len(targets)
     assert got == want
     assert max(s for s, _ in want.values()) > 2 * T  # crosses tiles
 

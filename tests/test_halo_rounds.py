@@ -15,6 +15,7 @@ import pytest
 from geotrellis_contrib_spark.operators import costdistance as CD
 from geotrellis_contrib_spark.operators import focal as FO
 from geotrellis_contrib_spark.operators.pixels import pack
+from tests.conftest import replay_scenes, replay_tiles
 
 T = 8
 NR, NC = 3, 4
@@ -102,27 +103,24 @@ def _replay(op, z, tiles):
     raise AssertionError("replay did not converge")
 
 
-def _scene_solve(op, z):
-    """The scene solvers' arithmetic on the whole mosaic."""
-    valid = ~np.isnan(z)
-    if op == "cost":
-        gr = np.arange(z.shape[0]).reshape(-1, 1) + np.zeros(
-            (1, z.shape[1]), int)
-        gc = np.arange(z.shape[1]).reshape(1, -1) + np.zeros(
-            (z.shape[0], 1), int)
-        seed = _seed(z, gr, gc) & valid
-        return "cost", CD._relax(np.where(seed, 0.0, np.inf), z, 1.0, 1.5,
-                                 None)
-    if op == "flow":
-        chosen = FO._d8_chosen(np.pad(z, 1, constant_values=np.nan))
-        base = np.where(valid, 1.0, 0.0)
-        accf = FO._acc_fixpoint(np.pad(base, 1, constant_values=0.0),
-                                np.pad(chosen, 1, constant_values=-1), base)
-        return "acc", accf[1:-1, 1:-1]
-    wf = np.full((z.shape[0] + 2, z.shape[1] + 2), -np.inf)
-    wf[1:-1, 1:-1] = np.where(valid, np.inf, -np.inf)
-    FO._fill_gs(wf, z, valid)
-    return "water", wf[1:-1, 1:-1]
+# per op: the scene kernel, its output DDL, and the distributed rollup
+# that turns a converged state tile into the same row (None: the state
+# plane itself is the output)
+SCENE = {
+    "cost": (partial(CD.k_cost_scene, t=T, seed_predicate=_seed,
+                     straight=1.0, diag=1.5, max_cost=None),
+             f"{FO._KEY_DDL}, cost binary", None),
+    "flow": (partial(FO.k_acc_scene, t=T), FO._ACC_SCHEMA, FO.k_acc_rollup),
+    "fill": (partial(FO.k_fill_scene, t=T, q_fill=4.0), FO._FILL_SCHEMA,
+             partial(FO.k_fill_rollup, q_fill=4.0)),
+}
+
+
+def _tile_rows(z, tiles):
+    return [{"source_id": "s", "band": 0, "col": tc, "row": tr,
+             "nodata": np.nan,
+             "px": z[tr * T:(tr + 1) * T, tc * T:(tc + 1) * T]}
+            for tr, tc in tiles]
 
 
 @pytest.mark.parametrize("op", OPS)
@@ -131,12 +129,14 @@ def test_replay_matches_scene_solve(op):
     state, rounds = _replay(op, z, tiles)
     assert rounds >= 3  # strips really cross several tile seams
     assert sorted(zip(state["row"], state["col"])) == sorted(tiles)
-    plane, want = _scene_solve(op, z)
-    for row_t in state.itertuples(index=False):
-        tr, tc = int(row_t.row), int(row_t.col)
-        got = np.frombuffer(getattr(row_t, plane)).reshape(T, T)
-        assert np.array_equal(
-            got, want[tr * T:(tr + 1) * T, tc * T:(tc + 1) * T]), (tr, tc)
+    kernel, ddl, rollup = SCENE[op]
+    want = replay_scenes(_tile_rows(z, tiles), T, 1 << 11, kernel, ddl)
+    got = state[want.columns] if rollup is None else replay_tiles(
+        state.to_dict("records"), rollup, ddl)
+    got = got.sort_values(["row", "col"], ignore_index=True)
+    want = want.sort_values(["row", "col"], ignore_index=True)
+    assert len(want) == len(tiles)
+    assert got.astype(object).equals(want.astype(object))
 
 
 @pytest.mark.parametrize("op", OPS)

@@ -7,10 +7,12 @@ NoData-hole splits)."""
 from collections import deque
 
 import numpy as np
+import pytest
 
 from conftest import count_jobs
 from geotrellis_contrib_spark import corpus
 from geotrellis_contrib_spark.operators import region as RG
+from geotrellis_contrib_spark.operators.vectorize import vectorize_regions
 
 T = 64
 NPX = 4096
@@ -61,13 +63,14 @@ def _brute_regions(s: int, band: int, pred) -> dict:
     return regions
 
 
-def _cached_tiles(spark):
-    """The fixture tiles, cached and materialized: a job pin then counts
-    the operator's own jobs whatever earlier tests left in the cache
-    (test_pixels caches the same plan)."""
+@pytest.fixture
+def cached_tiles(spark):
+    """The fixture tiles, cached and materialized for one test and
+    released after it: a job pin then counts the operator's own jobs."""
     tiles = corpus.synth_px_tiles(spark, tile_size=T).cache()
     tiles.count()
-    return tiles
+    yield tiles
+    tiles.unpersist()
 
 
 def test_region_group_matches_untiled_bfs(spark):
@@ -81,12 +84,12 @@ def test_region_group_matches_untiled_bfs(spark):
             assert eng == _brute_regions(s, band, pred), (s, band)
 
 
-def test_region_group_long_snake(spark):
+def test_region_group_long_snake(spark, cached_tiles):
     # a full-height 1-px column crosses ALL FOUR tile rows — exercises
     # chained multi-tile merges through the doubling CC (not just one
     # boundary hop)
     pred = lambda vals, gr, gc: (gc % 100 == 0)  # noqa: E731
-    tiles = _cached_tiles(spark)
+    tiles = cached_tiles
     jobs, out = count_jobs(spark, lambda: RG.region_group(
         tiles, pred, tile_size=T, npx=NPX).collect())
     # AQE submits the label merge's stage jobs asynchronously, so
@@ -106,15 +109,16 @@ def test_region_group_empty_mask(spark):
     assert out == []
 
 
-def test_region_stats_matches_untiled_bfs(spark):
+def test_region_stats_matches_untiled_bfs(spark, cached_tiles):
     """Perimeter/bbox/count per region vs the BFS brute force — the
     cross-tile pair restriction ((gc+1)%t==0 etc.) is exactly what a
     double count would break."""
     pred = lambda vals, gr, gc: (gr % 11 < 3) & (gc % 9 < 3)  # noqa: E731
-    tiles = _cached_tiles(spark)
+    tiles = cached_tiles
     jobs, out = count_jobs(spark, lambda: RG.region_stats(
         tiles, pred, tile_size=T, npx=NPX).collect())
-    assert jobs == 21
+    # 21 while the scan was cached in the session: caching it ran 2 jobs
+    assert jobs == 19
     for s in range(3):
         for band in range(2):
             eng = {r["region_id"]: (r["n_pixels"], r["perimeter"],
@@ -162,3 +166,40 @@ def test_region_stats_matches_untiled_bfs(spark):
                             min(gc[a, b] for a, b in comp),
                             max(gc[a, b] for a, b in comp))
             assert eng == want, (s, band)
+
+
+def test_region_group_default_npx_matches_small_npx(spark):
+    """The default npx = 2^22 packs labels past int32 (npx^2 = 2^44): the
+    same regions as npx = 4096, ids decoded to their (gr, gc) pixel."""
+    pred = lambda vals, gr, gc: (gr % 11 < 3) & (gc % 9 < 3)  # noqa: E731
+    tiles = corpus.synth_px_tiles(spark, tile_size=T)
+
+    def regions(**npx):
+        n = npx.get("npx", 1 << 22)
+        return sorted((r.source_id, r.band, r.region_id // n,
+                       r.region_id % n, r.n_pixels)
+                      for r in RG.region_group(tiles, pred, tile_size=T,
+                                               **npx).collect())
+
+    small = regions(npx=NPX)
+    assert len(small) > 100
+    assert regions() == small
+
+
+@pytest.mark.parametrize("op", [RG.region_stats, vectorize_regions])
+def test_scan_reuse_is_scoped_to_the_call(spark, op):
+    """The scan rows are reused inside one call's plan only: nothing is
+    left in the session's cache, so a second identical call runs the
+    same jobs as the first instead of reading the first call's scan."""
+    pred = lambda vals, gr, gc: gc % 100 == 0  # noqa: E731
+    tiles = corpus.synth_px_tiles(spark, tile_size=T)
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    first, rows = count_jobs(spark, lambda: op(
+        tiles, pred, tile_size=T, npx=NPX).collect())
+    assert cache.isEmpty()
+    second, again = count_jobs(spark, lambda: op(
+        tiles, pred, tile_size=T, npx=NPX).collect())
+    assert cache.isEmpty()
+    assert second == first
+    assert sorted(again) == sorted(rows)

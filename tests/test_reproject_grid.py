@@ -15,7 +15,9 @@ TS = 64
 
 @pytest.fixture(scope="module")
 def tiles(spark):
-    return corpus.synth_px_tiles(spark, tile_size=TS).cache()
+    tiles = corpus.synth_px_tiles(spark, tile_size=TS).cache()
+    yield tiles
+    tiles.unpersist()
 
 
 def _tile_arr(source_idx, band, col, row):

@@ -114,7 +114,8 @@ def test_vectorize_random_masks_fill_exact(spark):
     tiles = _tiles_df(spark, mask)
     jobs, rows = count_jobs(spark, lambda: vectorize_regions(
         tiles, predicate=lambda a, gr, gc: a > 0.5, tile_size=T).collect())
-    assert jobs == 15
+    # 15 while the scan was cached in the session: caching it ran 1 job
+    assert jobs == 14
     _check_against_mask(rows, mask)
 
 
